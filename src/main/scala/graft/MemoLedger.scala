@@ -2,14 +2,16 @@ package graft
 
 /** Aggregate driver-heap accounting for the per-session bounded-model memos.
   *
-  * The engine memoizes every bounded driver model per canonicalized input
-  * plan (landed stages, GlobalRank models, prefix-sum bucket totals, BPE /
-  * WordPiece rules, union-find label arrays, PQ/IVF seeds, …). Each family
-  * is individually bounded and documents its bound at the declaration —
-  * but nothing gated the AGGREGATE footprint across a 366-query session
-  * (r13 verdict, "Next" #5). This ledger closes that: every memo family
-  * registers a snapshot supplier at object-init, [[printLedger]] emits one
-  * `[memo]` line per family at the end of a PlanAudit run, and
+  * The engine memoizes every bounded driver model per input plan through
+  * [[PlanMemo]] (landed stages, GlobalRank models, prefix-sum bucket totals,
+  * BPE / WordPiece rules, union-find label arrays, PQ/IVF seeds, …). Each
+  * family is individually bounded and documents its bound at the
+  * declaration — but nothing gated the AGGREGATE footprint across a
+  * 366-query session (r13 verdict, "Next" #5). This ledger closes that:
+  * every memo family (each [[PlanMemo]], plus the string/session-keyed
+  * registries) registers a snapshot supplier at construction,
+  * [[printLedger]] emits one `[memo]` line per family at the end of a
+  * PlanAudit run, and
   * `tools/close_round.sh` refuses entry counts above the per-family bounds
   * in `tools/memo_bounds.json` (growth requires editing the committed
   * bounds file with a reason — the `PlanAudit.scanBounds` discipline).

@@ -5,22 +5,21 @@ import org.apache.spark.sql.SparkSession
 /** Dev tool: time stream_* rows in isolation under the bench session shape,
   * repeated, so the per-row fixed constants (query startup, per-trigger
   * incremental planning, state-store commits, sink drain) can be attributed
-  * and tuned. Args: [substring filter] [reps]. Env knobs mirror Bench.
+  * and tuned. Args: [substring filter] [reps], or `phases <query> [reps]`,
+  * `jobs <query> [reps]`, `micro`. Env knobs mirror Bench.
   */
 object StreamProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val filter = args.headOption.getOrElse("stream_")
     // lazy: in "jobs" mode args(1) is a query name, not a rep count
     def reps = args.lift(1).map(_.toInt).getOrElse(2)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    if ((filter == "phases" || filter == "jobs") && args.length < 2) {
+      System.err.println(s"usage: runMain graft.StreamProbe $filter <query> [reps]")
+      return
+    }
+    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     if (filter == "micro") { micro(spark, sfDir); spark.stop(); return }
     // "phases <query> [reps]": per-trigger durationMs + state-operator

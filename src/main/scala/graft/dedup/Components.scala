@@ -87,9 +87,8 @@ object Components {
     // as Dedup.probeDictionary; no prior count job, no cache) replaces
     // O(log diameter) driver-synchronous rounds of jobs. The result is
     // IDENTICAL (min id per component; union by min root is
-    // edge-order-independent). The computed labels are MEMOIZED per
-    // canonicalized edge plan — the Stages.materialize discipline applied
-    // to a bounded driver model — so a same-session re-run (the bench's
+    // edge-order-independent). The computed labels are MEMOIZED per edge
+    // plan — a bounded driver model — so a same-session re-run (the bench's
     // second interleaved pass) issues ZERO extra jobs: on a contended
     // driver every synchronous job launch costs a scheduling/GC pause, and
     // this query class pays each one once per session, not once per run
@@ -110,18 +109,14 @@ object Components {
       // default cap = ~4 MB of (long, long) rows collected
       if (driverEdgeCap > 0 && driverEdgeCap < Int.MaxValue - 1 &&
           integral(idType) && integral(symBase.schema("dst").dataType)) {
-        val memoKey = (symBase.queryExecution.analyzed.canonicalized,
-          symBase.schema.toString)
-        val labelArr: Array[(Long, Long)] = {
-          val hit = unionFindMemo.get(memoKey)
-          if (hit != null) hit
+        val labelArr = unionFindMemo.get(symBase, ()).orElse {
           // a failed probe is memoized too: a same-session re-run of a
           // big graph goes straight to the iterative path instead of
           // repaying the cap+1 collect every run. Keyed by the CAP as
           // well: overflow under cap=1000 says nothing about the default
           // cap, and a plan-only key would permanently route larger-cap
           // calls (whose probe would succeed) to the iterative path
-          else if (overflowMemo.containsKey((memoKey, driverEdgeCap))) null
+          if (overflowMemo.get(symBase, driverEdgeCap).isDefined) None
           else {
             val cached = symBase.cache()
             probeCached = Some(cached)
@@ -138,8 +133,7 @@ object Components {
               cached.unpersist(); probeCached = None; throw t
             }
             if (es.length > driverEdgeCap) {
-              overflowMemo.put((memoKey, driverEdgeCap),
-                java.lang.Boolean.TRUE); null
+              overflowMemo.put(symBase, driverEdgeCap, ()); None
             }
             else {
               val parent = new java.util.HashMap[Long, Long]()
@@ -160,16 +154,16 @@ object Components {
               }
               val endpoints = es.iterator.map(_._1).toArray.distinct
               val arr = endpoints.map(e => (e, find(e)))
-              unionFindMemo.put(memoKey, arr)
-              arr
+              unionFindMemo.put(symBase, (), arr)
+              Some(arr)
             }
           }
         }
-        if (labelArr != null) {
+        if (labelArr.nonEmpty) {
           // the result is driver-local label rows — the cache is done
           probeCached.foreach(_.unpersist())
           val spark = nodes.sparkSession
-          val labelRows = labelArr.map { case (e, c) =>
+          val labelRows = labelArr.get.map { case (e, c) =>
             org.apache.spark.sql.Row(e, c) }
           val labelsDf = spark.createDataFrame(
             java.util.Arrays.asList(labelRows: _*),
@@ -320,36 +314,22 @@ object Components {
       .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
   }
 
-  /** (canonicalized symmetric-edge plan, schema) -> union-find labels.
-    * Bounded: values are ≤ 2·driverEdgeCap (id, comp) pairs per DISTINCT
-    * edge plan a session runs, keys are plan trees — the same
-    * per-session-memo contract as `Stages.materialize` (callers must not
-    * mutate a plan's source files in-place mid-session). Only the bounded
-    * union-find path reads or writes it; `driverEdgeCap = 0` (the tests'
-    * force-iterative switch) bypasses the memo entirely, so the two paths
-    * stay independently exercised.
+  /** symmetric-edge plan -> union-find labels: ≤ 2·driverEdgeCap (id,
+    * comp) pairs per distinct edge plan. Only the bounded union-find path
+    * reads or writes it; `driverEdgeCap = 0` (the tests' force-iterative
+    * switch) bypasses the memo entirely, so the two paths stay
+    * independently exercised.
     */
-  private val unionFindMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, String),
-    Array[(Long, Long)]]()
+  private val unionFindMemo = new graft.PlanMemo[Unit, Array[(Long, Long)]](
+    "components.unionFind", a => 16L + 48L * a.length)
 
-  /** (edge plan key, driverEdgeCap) pairs whose bounded probe OVERFLOWED —
-    * a re-run under the SAME cap dispatches straight to the iterative path
+  /** (edge plan, driverEdgeCap) pairs whose bounded probe OVERFLOWED — a
+    * re-run under the SAME cap dispatches straight to the iterative path
     * without repaying the cap+1 collect; a larger cap probes fresh (its
-    * probe may succeed). Bounded like [[unionFindMemo]].
+    * probe may succeed).
     */
-  private val overflowMemo = new java.util.concurrent.ConcurrentHashMap[
-    ((org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, String), Long),
-    java.lang.Boolean]()
-
-  graft.MemoLedger.register("components.unionFind") { () =>
-    import scala.jdk.CollectionConverters._
-    (unionFindMemo.size.toLong,
-      unionFindMemo.values.asScala.map(a => 16L + 48L * a.length).sum)
-  }
-  graft.MemoLedger.register("components.overflow") { () =>
-    (overflowMemo.size.toLong, 16L * overflowMemo.size)
-  }
+  private val overflowMemo =
+    new graft.PlanMemo[Long, Unit]("components.overflow", _ => 16L)
 
   /** Incremental connected components: fold a batch of NEW edges/nodes into
     * an existing labeling without recomputing history. The previous labels

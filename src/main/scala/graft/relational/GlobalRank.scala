@@ -33,49 +33,39 @@ object GlobalRank {
               maxCellShare: Int = 4): (DataFrame, Long) = {
     require(numBuckets > 0)
     // The rank model — (n, lo, hi, per-cell counts) — is MEMOIZED per
-    // (canonicalized input plan, valueCol, numBuckets): the two
-    // driver-synchronous model jobs (bounds head + cell-count collect) run
-    // once per session per distinct input, the Stages.materialize
-    // discipline applied to a bounded driver model. A same-session re-rank
-    // of the same frame (the bench's second interleaved pass; multi-query
-    // histogram consumers) issues only its final job — on a contended
-    // driver each synchronous job launch costs a scheduling/GC pause, and
-    // this was most of the r11 equidepth_histogram driver-bench outlier.
+    // (input plan, valueCol, numBuckets): the two driver-synchronous model
+    // jobs (bounds head + cell-count collect) run once per session per
+    // distinct input. A same-session re-rank of the same frame (the bench's
+    // second interleaved pass; multi-query histogram consumers) issues only
+    // its final job — on a contended driver each synchronous job launch
+    // costs a scheduling/GC pause, and this was most of the r11
+    // equidepth_histogram driver-bench outlier.
     // Loud-refusal checks (non-null cast, maxCellShare) re-run from the
     // memoized scalars on every call, so the contract holds per call site.
-    val memoKey = (df.queryExecution.analyzed.canonicalized, valueCol, numBuckets)
-    val model: (Long, Double, Double, Array[(Long, Long)]) = {
-      val hit = modelMemo.get(memoKey)
-      if (hit != null) hit
+    val (n, lo, hi, cellCounts) = modelMemo(df, (valueCol, numBuckets)) {
+      val bounds = df.agg(
+        min(col(valueCol).cast("double")).as("lo"),
+        max(col(valueCol).cast("double")).as("hi"),
+        count(lit(1)).as("n"),
+        count(col(valueCol).cast("double")).as("nn")).head()
+      if (bounds.getLong(2) == 0L)
+        (0L, 0.0, 0.0, Array.empty[(Long, Long)])
       else {
-        val bounds = df.agg(
-          min(col(valueCol).cast("double")).as("lo"),
-          max(col(valueCol).cast("double")).as("hi"),
-          count(lit(1)).as("n"),
-          count(col(valueCol).cast("double")).as("nn")).head()
-        val m =
-          if (bounds.getLong(2) == 0L)
-            (0L, 0.0, 0.0, Array.empty[(Long, Long)])
-          else {
-            require(bounds.getLong(3) == bounds.getLong(2),
-              s"globalRank: $valueCol must be numeric and non-null — " +
-                s"${bounds.getLong(2) - bounds.getLong(3)} of " +
-                s"${bounds.getLong(2)} rows cast to null")
-            val lo0 = bounds.getDouble(0)
-            val span0 = bounds.getDouble(1) - lo0 + 1.0
-            val cell0 = least(lit(numBuckets - 1),
-              floor((col(valueCol).cast("double") - lit(lo0)) / lit(span0) * numBuckets))
-            // numBuckets scalars — the bounded-model-collect class
-            val cc = df.withColumn("__cell", cell0)
-              .groupBy(col("__cell")).agg(count(lit(1)).as("__c"))
-              .collect().map(r => r.getLong(0) -> r.getLong(1)).sortBy(_._1)
-            (bounds.getLong(2), lo0, bounds.getDouble(1), cc)
-          }
-        modelMemo.put(memoKey, m)
-        m
+        require(bounds.getLong(3) == bounds.getLong(2),
+          s"globalRank: $valueCol must be numeric and non-null — " +
+            s"${bounds.getLong(2) - bounds.getLong(3)} of " +
+            s"${bounds.getLong(2)} rows cast to null")
+        val lo0 = bounds.getDouble(0)
+        val span0 = bounds.getDouble(1) - lo0 + 1.0
+        val cell0 = least(lit(numBuckets - 1),
+          floor((col(valueCol).cast("double") - lit(lo0)) / lit(span0) * numBuckets))
+        // numBuckets scalars — the bounded-model-collect class
+        val cc = df.withColumn("__cell", cell0)
+          .groupBy(col("__cell")).agg(count(lit(1)).as("__c"))
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).sortBy(_._1)
+        (bounds.getLong(2), lo0, bounds.getDouble(1), cc)
       }
     }
-    val (n, lo, hi, cellCounts) = model
     if (n == 0L) return (df.withColumn(outCol, lit(0L)), 0L)
     val span = hi - lo + 1.0
     val cell = least(lit(numBuckets - 1),
@@ -139,60 +129,50 @@ object GlobalRank {
       s"globalRank.byValues: ${k} value columns exceeds the supported bound " +
         "of 16 — grouping_id bit arithmetic wraps at 64 and the Expand cost " +
         "grows k-fold; split the signals across two calls instead")
-    val memoKey = (df.queryExecution.analyzed.canonicalized,
-      valueCols, numBuckets)
     // n, per-column (lo, hi), per-column sorted (cell -> count)
-    val model: (Long, Array[(Double, Double)], Array[Array[(Long, Long)]]) = {
-      val hit = multiMemo.get(memoKey)
-      if (hit != null) hit
+    val (n, bounds, cellsByCol) = multiMemo(df, (valueCols, numBuckets)) {
+      val aggs = valueCols.flatMap { c => Seq(
+        min(col(c).cast("double")), max(col(c).cast("double")),
+        count(col(c).cast("double"))) } :+ count(lit(1))
+      val b = df.agg(aggs.head, aggs.tail: _*).head()
+      val n0 = b.getLong(3 * k)
+      if (n0 == 0L)
+        (0L, Array.empty[(Double, Double)],
+          Array.empty[Array[(Long, Long)]])
       else {
-        val aggs = valueCols.flatMap { c => Seq(
-          min(col(c).cast("double")), max(col(c).cast("double")),
-          count(col(c).cast("double"))) } :+ count(lit(1))
-        val b = df.agg(aggs.head, aggs.tail: _*).head()
-        val n0 = b.getLong(3 * k)
-        val m =
-          if (n0 == 0L)
-            (0L, Array.empty[(Double, Double)],
-              Array.empty[Array[(Long, Long)]])
-          else {
-            valueCols.zipWithIndex.foreach { case (c, i) =>
-              require(b.getLong(3 * i + 2) == n0,
-                s"globalRank: $c must be numeric and non-null — " +
-                  s"${n0 - b.getLong(3 * i + 2)} of $n0 rows cast to null")
-            }
-            val bounds = valueCols.indices.map(i =>
-              (b.getDouble(3 * i), b.getDouble(3 * i + 1))).toArray
-            val withCells = valueCols.zipWithIndex.foldLeft(df) {
-              case (d, (c, i)) =>
-                val (lo0, hi0) = bounds(i)
-                d.withColumn(s"__cell_$i", least(lit(numBuckets - 1),
-                  floor((col(c).cast("double") - lit(lo0)) /
-                    lit(hi0 - lo0 + 1.0) * numBuckets)))
-            }
-            val cellCols = valueCols.indices.map(i => col(s"__cell_$i"))
-            // grouping_id bit i is SET when __cell_i is aggregated; the
-            // single-column set {__cell_i} therefore has gid =
-            // (2^k − 1) − 2^(k−1−i). Sets are distinct by construction
-            // (one per column), so no Expand duplication is possible.
-            val rows = withCells
-              .groupingSets(cellCols.map(Seq(_)), cellCols: _*)
-              .agg(grouping_id().as("__gid"), count(lit(1)).as("__c"))
-              .collect()
-            val all = (1L << k) - 1L
-            val byCol = valueCols.indices.map { i =>
-              val gid = all - (1L << (k - 1 - i))
-              rows.filter(_.getAs[Long]("__gid") == gid)
-                .map(r => r.getAs[Long](s"__cell_$i") -> r.getAs[Long]("__c"))
-                .sortBy(_._1)
-            }.toArray
-            (n0, bounds, byCol)
-          }
-        multiMemo.put(memoKey, m)
-        m
+        valueCols.zipWithIndex.foreach { case (c, i) =>
+          require(b.getLong(3 * i + 2) == n0,
+            s"globalRank: $c must be numeric and non-null — " +
+              s"${n0 - b.getLong(3 * i + 2)} of $n0 rows cast to null")
+        }
+        val bounds = valueCols.indices.map(i =>
+          (b.getDouble(3 * i), b.getDouble(3 * i + 1))).toArray
+        val withCells = valueCols.zipWithIndex.foldLeft(df) {
+          case (d, (c, i)) =>
+            val (lo0, hi0) = bounds(i)
+            d.withColumn(s"__cell_$i", least(lit(numBuckets - 1),
+              floor((col(c).cast("double") - lit(lo0)) /
+                lit(hi0 - lo0 + 1.0) * numBuckets)))
+        }
+        val cellCols = valueCols.indices.map(i => col(s"__cell_$i"))
+        // grouping_id bit i is SET when __cell_i is aggregated; the
+        // single-column set {__cell_i} therefore has gid =
+        // (2^k − 1) − 2^(k−1−i). Sets are distinct by construction
+        // (one per column), so no Expand duplication is possible.
+        val rows = withCells
+          .groupingSets(cellCols.map(Seq(_)), cellCols: _*)
+          .agg(grouping_id().as("__gid"), count(lit(1)).as("__c"))
+          .collect()
+        val all = (1L << k) - 1L
+        val byCol = valueCols.indices.map { i =>
+          val gid = all - (1L << (k - 1 - i))
+          rows.filter(_.getAs[Long]("__gid") == gid)
+            .map(r => r.getAs[Long](s"__cell_$i") -> r.getAs[Long]("__c"))
+            .sortBy(_._1)
+        }.toArray
+        (n0, bounds, byCol)
       }
     }
-    val (n, bounds, cellsByCol) = model
     if (n == 0L)
       return (outCols.foldLeft(df)((d, o) => d.withColumn(o, lit(0L))), 0L)
     val spark = df.sparkSession
@@ -224,36 +204,20 @@ object GlobalRank {
     (valueCols.indices.foldLeft(out)((d, i) => d.drop(s"__cell_$i")), n)
   }
 
-  /** (canonicalized input plan, valueCols, numBuckets) -> the [[byValues]]
-    * model. Bounded: ≤ k·numBuckets scalars per distinct ranked input a
-    * session sees; same per-session-memo contract as `Stages.materialize`.
+  /** (valueCols, numBuckets) -> the [[byValues]] model: ≤ k·numBuckets
+    * scalars per distinct ranked input.
     */
-  private val multiMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      Seq[String], Int),
-    (Long, Array[(Double, Double)], Array[Array[(Long, Long)]])]()
+  private val multiMemo = new graft.PlanMemo[(Seq[String], Int),
+    (Long, Array[(Double, Double)], Array[Array[(Long, Long)]])](
+    "globalrank.byValues", m =>
+      8L + 16L * m._2.length + m._3.iterator.map(a => 16L + 32L * a.length).sum)
 
-  /** (canonicalized input plan, valueCol, numBuckets) -> (n, lo, hi,
-    * per-cell counts). Bounded: ≤ numBuckets scalars per distinct ranked
-    * input a session sees; same per-session-memo contract as
-    * `Stages.materialize` (source files immutable mid-session).
+  /** (valueCol, numBuckets) -> (n, lo, hi, per-cell counts): ≤ numBuckets
+    * scalars per distinct ranked input.
     */
-  private val modelMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, String, Int),
-    (Long, Double, Double, Array[(Long, Long)])]()
-
-  graft.MemoLedger.register("globalrank.byValue") { () =>
-    import scala.jdk.CollectionConverters._
-    (modelMemo.size.toLong,
-      modelMemo.values.asScala.map(m => 24L + 32L * m._4.length).sum)
-  }
-  graft.MemoLedger.register("globalrank.byValues") { () =>
-    import scala.jdk.CollectionConverters._
-    (multiMemo.size.toLong,
-      multiMemo.values.asScala.map { m =>
-        8L + 16L * m._2.length + m._3.iterator.map(a => 16L + 32L * a.length).sum
-      }.sum)
-  }
+  private val modelMemo = new graft.PlanMemo[(String, Int),
+    (Long, Double, Double, Array[(Long, Long)])](
+    "globalrank.byValue", m => 24L + 32L * m._4.length)
 
   /** DuckDB-convention ntile from an exact 1-based rank: with q = n div k
     * and r = n mod k, the FIRST r tiles hold q+1 rows (verified identical

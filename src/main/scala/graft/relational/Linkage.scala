@@ -66,41 +66,32 @@ object Linkage {
     // per-field u aggregation, the hot-block probe) — on a contended driver
     // each synchronous job launch costs a scheduling/GC pause (the r11
     // er_entity_clusters driver-bench outlier), so the probe model is also
-    // MEMOIZED per canonicalized input plan (the Stages.materialize
-    // discipline): a same-session re-run issues zero probe jobs. The loud
-    // guards re-run from the memoized scalars on every call.
+    // MEMOIZED per input plan: a same-session re-run issues zero probe
+    // jobs. The loud guards re-run from the memoized scalars on every call.
     val probeCols = (fieldCols ++ blockCols).distinct
     // grouping_id bit vector: first grouped column = most significant bit,
     // bit SET when the column is aggregated (not in the row's set)
     def gidOf(set: Set[String]): Long = probeCols.zipWithIndex.map {
       case (c, i) => if (set.contains(c)) 0L
         else 1L << (probeCols.length - 1 - i) }.sum
-    val memoKey = (records.queryExecution.analyzed.canonicalized,
-      fieldCols, blockCols)
-    val byGid: Map[Long, (Long, Long, Long)] = {
-      val hit = probeMemo.get(memoKey)
-      if (hit != null) hit
-      else {
-        // DEDUPED sets: when blockCols == Seq(f) the block set and the
-        // field set are ONE set with one gid — gidOf maps both consumers to
-        // it, so the lookup stays correct without Expand ever duplicating
-        val setKeys: Seq[Seq[String]] =
-          (fieldCols.map(Seq(_)) :+ blockCols :+ Seq.empty[String])
-            .map(_.sorted).distinct
-        val sets: Seq[Seq[org.apache.spark.sql.Column]] =
-          setKeys.map(_.map(col))
-        val m = records.groupingSets(sets, probeCols.map(col): _*)
-          .agg(grouping_id().as("__gid"), count(lit(1)).as("__c"))
-          .groupBy(col("__gid")).agg(
-            sum(col("__c") * col("__c")).as("__ss"),
-            max(col("__c")).as("__mx"),
-            sum(col("__c")).as("__tot"))
-          .collect()
-          .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
-          .toMap
-        probeMemo.put(memoKey, m)
-        m
-      }
+    val byGid = probeMemo(records, (fieldCols, blockCols)) {
+      // DEDUPED sets: when blockCols == Seq(f) the block set and the
+      // field set are ONE set with one gid — gidOf maps both consumers to
+      // it, so the lookup stays correct without Expand ever duplicating
+      val setKeys: Seq[Seq[String]] =
+        (fieldCols.map(Seq(_)) :+ blockCols :+ Seq.empty[String])
+          .map(_.sorted).distinct
+      val sets: Seq[Seq[org.apache.spark.sql.Column]] =
+        setKeys.map(_.map(col))
+      records.groupingSets(sets, probeCols.map(col): _*)
+        .agg(grouping_id().as("__gid"), count(lit(1)).as("__c"))
+        .groupBy(col("__gid")).agg(
+          sum(col("__c") * col("__c")).as("__ss"),
+          max(col("__c")).as("__mx"),
+          sum(col("__c")).as("__tot"))
+        .collect()
+        .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
+        .toMap
     }
     val n = byGid(gidOf(Set.empty))._3
     require(n > 1, "linkage needs at least two records")
@@ -142,19 +133,9 @@ object Linkage {
       .withColumn("ratio_permille", expr("(1000L * score_num) div score_den"))
   }
 
-  /** (canonicalized records plan, fieldCols, blockCols) -> grouping_id →
-    * (Σc², max c, Σc). Bounded: F+2 scalar triples per distinct linkage
-    * input a session sees; same per-session-memo contract as
-    * `Stages.materialize` (source files immutable mid-session).
+  /** (fieldCols, blockCols) -> grouping_id → (Σc², max c, Σc): F+2 scalar
+    * triples per distinct linkage input.
     */
-  private val probeMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      Seq[String], Seq[String]),
-    Map[Long, (Long, Long, Long)]]()
-
-  graft.MemoLedger.register("linkage.probe") { () =>
-    import scala.jdk.CollectionConverters._
-    (probeMemo.size.toLong,
-      probeMemo.values.asScala.map(m => 16L + 56L * m.size).sum)
-  }
+  private val probeMemo = new graft.PlanMemo[(Seq[String], Seq[String]),
+    Map[Long, (Long, Long, Long)]]("linkage.probe", m => 16L + 56L * m.size)
 }

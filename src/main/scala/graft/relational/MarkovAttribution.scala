@@ -98,20 +98,13 @@ object MarkovAttribution {
       s"markov: ${channels.size} channels > maxStates=$maxStates")
     val spark = trans.sparkSession
     val cap = (maxStates + 3) * (maxStates + 3)
-    // the bounded transition matrix is MEMOIZED per canonicalized input
-    // plan (the GlobalRank/PrefixSum driver-model discipline): the collect
-    // job runs once per session per distinct journey pipeline, not once
-    // per run — measured 1.3 s/run at sf0.1 otherwise (the r12 bench diff)
-    val memoKey = (trans.queryExecution.analyzed.canonicalized, cap)
-    val rows = {
-      val hit = transMemo.get(memoKey)
-      if (hit != null) hit
-      else {
-        val r = trans.select(col("src"), col("dst"), col("cnt").cast("long"))
-          .limit(cap + 1).collect()
-        transMemo.put(memoKey, r)
-        r
-      }
+    // the bounded transition matrix is MEMOIZED per input plan (the
+    // GlobalRank/PrefixSum driver-model discipline): the collect job runs
+    // once per session per distinct journey pipeline, not once per run —
+    // measured 1.3 s/run at sf0.1 otherwise (the r12 bench diff)
+    val rows = transMemo(trans, cap) {
+      trans.select(col("src"), col("dst"), col("cnt").cast("long"))
+        .limit(cap + 1).collect()
     }
     require(rows.length <= cap,
       s"markov: > $cap transition cells — the state universe is not " +
@@ -161,17 +154,7 @@ object MarkovAttribution {
       .orderBy(col("channel"))
   }
 
-  /** (canonicalized transition plan, cap) -> collected transition rows.
-    * Bounded: ≤ cap+1 rows per distinct journey pipeline a session runs;
-    * same per-session-memo contract as `Stages.materialize`.
-    */
-  private val transMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int),
-    Array[org.apache.spark.sql.Row]]()
-
-  graft.MemoLedger.register("markov.transitions") { () =>
-    import scala.jdk.CollectionConverters._
-    (transMemo.size.toLong,
-      transMemo.values.asScala.map(a => 16L + 128L * a.length).sum)
-  }
+  /** (transition plan, cap) -> ≤ cap+1 collected transition rows. */
+  private val transMemo = new graft.PlanMemo[Int, Array[org.apache.spark.sql.Row]](
+    "markov.transitions", a => 16L + 128L * a.length)
 }

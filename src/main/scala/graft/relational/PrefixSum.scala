@@ -76,53 +76,43 @@ object PrefixSum {
     val valueCols = valueOutCols.map(_._1)
     val k = valueCols.size
     // The prefix model — (n, lo, hi, per-bucket per-column totals) — is
-    // memoized per (canonicalized input plan, idCol, valueCols, numParts),
-    // the same bounded-model-collect discipline as GlobalRank.byValues: the
-    // two driver-synchronous model jobs run once per session per distinct
+    // memoized per (input plan, idCol, valueCols, numParts), the same
+    // bounded-model-collect discipline as GlobalRank.byValues: the two
+    // driver-synchronous model jobs run once per session per distinct
     // input (a contended driver pays each job launch once, not per run);
     // the loud non-null contract re-checks from the memoized scalars.
-    val memoKey = (df.queryExecution.analyzed.canonicalized,
-      idCol, valueCols, numParts)
-    val model: (Long, Double, Double, Map[Int, Seq[Long]]) = {
-      val hit = modelMemo.get(memoKey)
-      if (hit != null) hit
+    val (nRows, lo, hi, totals) = modelMemo(df, (idCol, valueCols, numParts)) {
+      val bounds = df.agg(
+        min(col(idCol).cast("double")).as("lo"),
+        max(col(idCol).cast("double")).as("hi"),
+        count(lit(1)).as("n"),
+        count(col(idCol).cast("double")).as("nn")).head()
+      if (bounds.getLong(2) == 0L)
+        (0L, 0.0, 0.0, Map.empty[Int, Seq[Long]])
       else {
-        val bounds = df.agg(
-          min(col(idCol).cast("double")).as("lo"),
-          max(col(idCol).cast("double")).as("hi"),
-          count(lit(1)).as("n"),
-          count(col(idCol).cast("double")).as("nn")).head()
-        val m =
-          if (bounds.getLong(2) == 0L)
-            (0L, 0.0, 0.0, Map.empty[Int, Seq[Long]])
-          else {
-            // a non-empty frame whose ids cast to null would otherwise ride
-            // the empty-input path and silently return outCol = 0 everywhere
-            require(bounds.getLong(3) == bounds.getLong(2),
-              s"$idCol must be numeric and non-null: " +
-                s"${bounds.getLong(2) - bounds.getLong(3)} of " +
-                s"${bounds.getLong(2)} rows have ids that cast to null")
-            val lo0 = bounds.getDouble(0)
-            val span0 = bounds.getDouble(1) - lo0 + 1.0
-            val bucket0 = least(lit(numParts - 1),
-              floor((col(idCol).cast("double") - lit(lo0)) / lit(span0) * numParts))
-              .cast("int")
-            val t = df.withColumn("__b", bucket0)
-              .groupBy(col("__b"))
-              .agg(valueCols.map(c => sum(col(c)).as(s"__t_$c")).head,
-                valueCols.map(c => sum(col(c)).as(s"__t_$c")).tail: _*)
-              .collect()
-              .map(r => r.getInt(0) ->
-                valueCols.indices.map(i =>
-                  if (r.isNullAt(i + 1)) 0L else r.getLong(i + 1)))
-              .toMap
-            (bounds.getLong(2), lo0, bounds.getDouble(1), t)
-          }
-        modelMemo.put(memoKey, m)
-        m
+        // a non-empty frame whose ids cast to null would otherwise ride
+        // the empty-input path and silently return outCol = 0 everywhere
+        require(bounds.getLong(3) == bounds.getLong(2),
+          s"$idCol must be numeric and non-null: " +
+            s"${bounds.getLong(2) - bounds.getLong(3)} of " +
+            s"${bounds.getLong(2)} rows have ids that cast to null")
+        val lo0 = bounds.getDouble(0)
+        val span0 = bounds.getDouble(1) - lo0 + 1.0
+        val bucket0 = least(lit(numParts - 1),
+          floor((col(idCol).cast("double") - lit(lo0)) / lit(span0) * numParts))
+          .cast("int")
+        val t = df.withColumn("__b", bucket0)
+          .groupBy(col("__b"))
+          .agg(valueCols.map(c => sum(col(c)).as(s"__t_$c")).head,
+            valueCols.map(c => sum(col(c)).as(s"__t_$c")).tail: _*)
+          .collect()
+          .map(r => r.getInt(0) ->
+            valueCols.indices.map(i =>
+              if (r.isNullAt(i + 1)) 0L else r.getLong(i + 1)))
+          .toMap
+        (bounds.getLong(2), lo0, bounds.getDouble(1), t)
       }
     }
-    val (nRows, lo, hi, totals) = model
     if (nRows == 0L) {
       // empty input: zero rows — just type the output columns
       return (valueOutCols.foldLeft(df)((d, vo) => d.withColumn(vo._2, lit(0L))),
@@ -228,20 +218,10 @@ object PrefixSum {
       .drop("__b", "__g", "__ob", "__off")
   }
 
-  /** (canonicalized input plan, idCol, valueCols, numParts) -> (n, lo, hi,
-    * per-bucket per-column totals). Bounded: ≤ numParts × k scalars per
-    * distinct summed input a session sees; same per-session-memo contract
-    * as `Stages.materialize` (source files immutable mid-session).
+  /** (idCol, valueCols, numParts) -> (n, lo, hi, per-bucket per-column
+    * totals): ≤ numParts × k scalars per distinct summed input.
     */
-  private val modelMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, String, Seq[String], Int),
-    (Long, Double, Double, Map[Int, Seq[Long]])]()
-
-  graft.MemoLedger.register("prefixsum.model") { () =>
-    import scala.jdk.CollectionConverters._
-    (modelMemo.size.toLong,
-      modelMemo.values.asScala.map { m =>
-        32L + m._4.valuesIterator.map(v => 24L + 8L * v.size).sum
-      }.sum)
-  }
+  private val modelMemo = new graft.PlanMemo[(String, Seq[String], Int),
+    (Long, Double, Double, Map[Int, Seq[Long]])](
+    "prefixsum.model", m => 32L + m._4.valuesIterator.map(v => 24L + 8L * v.size).sum)
 }

@@ -95,19 +95,11 @@ object Privacy {
       df.groupBy((qiCols :+ sensitiveCol).map(col): _*)
         .agg(count(lit(1)).as("__c")), "tclose_gv")
     val glob = gv.groupBy(col(sensitiveCol)).agg(sum(col("__c")).as("__cv"))
-    // bounded domain probe, memoized per canonicalized plan (the
-    // GlobalRank/PrefixSum driver-model discipline — one probe job per
-    // session per distinct input, not one per run)
-    val probeKey = (glob.queryExecution.analyzed.canonicalized, maxDomain)
-    val domSize: Int = {
-      val hit = domProbeMemo.get(probeKey)
-      if (hit != null) hit.intValue
-      else {
-        val n = glob.select(col(sensitiveCol)).limit(maxDomain + 1)
-          .collect().length
-        domProbeMemo.put(probeKey, Integer.valueOf(n))
-        n
-      }
+    // bounded domain probe, memoized per plan (the GlobalRank/PrefixSum
+    // driver-model discipline — one probe job per session per distinct
+    // input, not one per run)
+    val domSize = domProbeMemo(glob, maxDomain) {
+      glob.select(col(sensitiveCol)).limit(maxDomain + 1).collect().length
     }
     require(domSize <= maxDomain,
       s"tCloseness: sensitive domain exceeds $maxDomain distinct values — " +
@@ -211,14 +203,7 @@ object Privacy {
     }.reduce(_ unionByName _)
   }
 
-  /** (canonicalized global-distribution plan, maxDomain) -> probed domain
-    * size. Bounded scalars; same per-session-memo contract as
-    * `Stages.materialize`.
-    */
-  private val domProbeMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int), Integer]()
-
-  graft.MemoLedger.register("privacy.domainProbe") { () =>
-    (domProbeMemo.size.toLong, 16L * domProbeMemo.size)
-  }
+  /** (global-distribution plan, maxDomain) -> probed domain size. */
+  private val domProbeMemo =
+    new graft.PlanMemo[Int, Int]("privacy.domainProbe", _ => 16L)
 }

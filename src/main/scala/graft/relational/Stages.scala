@@ -38,24 +38,6 @@ import org.apache.spark.sql.{Column, DataFrame}
 object Stages {
   def anchor(df: DataFrame, key: Column): DataFrame = df.repartition(key)
 
-  /** GUARANTEED stage boundary: write the stage output to parquet and read
-    * it back. This is what a production multi-job pipeline does between
-    * stages (each stage lands a table; the next job reads it), expressed as
-    * an operator: downstream consumers scan the compact materialized columns
-    * instead of re-deriving the whole upstream, so composed pipeline cost is
-    * ADDITIVE in the stages rather than multiplicative in their consumer
-    * counts.
-    *
-    * Use it when [[anchor]]'s best-effort plan sharing is not enough: the
-    * exchange-reuse [[anchor]] relies on is defeated whenever Catalyst
-    * prunes the branches differently (a consumer that reads fewer columns
-    * gets its OWN copy of the stage subtree with a narrower aggregate —
-    * observed, not hypothetical), while a durable write is shared
-    * unconditionally. Costs one write + n reads of the stage's own
-    * (answer-sized) output; lineage-safe under executor loss (the files ARE
-    * the lineage); no executor storage pinned. The temp location stands in
-    * for the warehouse table path a cluster deployment would use.
-    */
   /** Memory-landed stage boundary for ANSWER-SIZED frames in iterative
     * loops: localCheckpoint (eager — truncates lineage, pins the rows in
     * executor storage) re-exposed through a FRESH leaf so the checkpoint's
@@ -76,44 +58,42 @@ object Stages {
     ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
   }
 
+  /** GUARANTEED stage boundary: write the stage output to parquet and read
+    * it back. This is what a production multi-job pipeline does between
+    * stages (each stage lands a table; the next job reads it), expressed as
+    * an operator: downstream consumers scan the compact materialized columns
+    * instead of re-deriving the whole upstream, so composed pipeline cost is
+    * ADDITIVE in the stages rather than multiplicative in their consumer
+    * counts.
+    *
+    * Use it when [[anchor]]'s best-effort plan sharing is not enough: the
+    * exchange-reuse [[anchor]] relies on is defeated whenever Catalyst
+    * prunes the branches differently (a consumer that reads fewer columns
+    * gets its OWN copy of the stage subtree with a narrower aggregate —
+    * observed, not hypothetical), while a durable write is shared
+    * unconditionally. Costs one write + n reads of the stage's own
+    * (answer-sized) output; lineage-safe under executor loss (the files ARE
+    * the lineage); no executor storage pinned. The temp location stands in
+    * for the warehouse table path a cluster deployment would use.
+    */
   def materialize(df: DataFrame, tag: String): DataFrame = {
-    // Memoized per SEMANTIC plan: repeated materialize calls over the same
-    // logical stage (the tf frame feeding sparse_cosine_pairs,
-    // dedup_components, and dedup_canonical_docs is one identical subtree)
-    // land the files once and re-read them, exactly like a warehouse stage
-    // table written by the first job of the day and scanned by every
-    // downstream job. The key is the CANONICALIZED analyzed plan (exact —
-    // not a 32-bit hash that could silently alias two different stages), so
-    // stages differing in source path, filter, or column set never collide;
-    // the value is just a path (files clean up at JVM exit). Callers must
-    // not mutate a landed stage's source files in-place mid-session — same
-    // contract as any warehouse stage table.
-    // the plan NODE, not its toString: LocalRelation's string form omits its
-    // rows, so two different in-memory fixtures would alias under a string
-    // key; structural equality on the canonicalized tree includes them
-    val key = (df.queryExecution.analyzed.canonicalized, df.schema.toString)
-    val hit = landed.get(key)
-    if (hit != null) return df.sparkSession.read.parquet(hit)
-    val dir = java.nio.file.Files.createTempDirectory(s"graft_stage_$tag")
-    dir.toFile.deleteOnExit()
-    val path = dir.resolve("data.parquet").toString
-    df.write.mode("overwrite").parquet(path)
-    // last-write-wins on a race is benign: both paths hold the same rows
-    landed.put(key, path)
-    java.nio.file.Files.walk(dir).forEach(p => p.toFile.deleteOnExit())
+    // Memoized per plan: repeated materialize calls over the same logical
+    // stage (the tf frame feeding sparse_cosine_pairs, dedup_components, and
+    // dedup_canonical_docs is one identical subtree) land the files once and
+    // re-read them, exactly like a warehouse stage table written by the
+    // first job of the day and scanned by every downstream job. The value is
+    // just a path (files clean up at JVM exit).
+    val path = landed(df, ()) {
+      val dir = java.nio.file.Files.createTempDirectory(s"graft_stage_$tag")
+      dir.toFile.deleteOnExit()
+      val p = dir.resolve("data.parquet").toString
+      df.write.mode("overwrite").parquet(p)
+      java.nio.file.Files.walk(dir).forEach(f => f.toFile.deleteOnExit())
+      p
+    }
     df.sparkSession.read.parquet(path)
   }
 
-  /** (canonicalized plan, schema) -> landed parquet path. Bounded by the
-    * number of distinct stage plans a session runs (the query suite), not by
-    * data volume — the values are paths, the keys plan trees.
-    */
-  private val landed = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, String), String]()
-
-  graft.MemoLedger.register("stages.landed") { () =>
-    import scala.jdk.CollectionConverters._
-    (landed.size.toLong,
-      landed.values.asScala.map(p => 48L + 2L * p.length).sum)
-  }
+  private val landed =
+    new graft.PlanMemo[Unit, String]("stages.landed", p => 48L + 2L * p.length)
 }

@@ -41,23 +41,50 @@ private[routing] object JsonCse {
 
   /** Function names (unresolved-API view) whose evaluation parses JSON /
     * variant text — expensive enough to hoist, NULL-safe to run eagerly.
+    * The throwing forms (`parse_json`, `variant_get`, `schema_of_variant`)
+    * are left out: hoisted, they would run on rows the CASE never sends
+    * them to and fail the batch there. `from_json` / `from_csv` stay:
+    * their default PERMISSIVE mode yields NULL on malformed text, and the
+    * routing constraints pass no `mode` option.
     */
   private val jsonFnNames = Set(
     "get_json_object", "json_object_keys", "from_json", "try_parse_json",
-    "parse_json", "schema_of_variant", "try_variant_get", "variant_get",
-    "schema_of_json", "json_array_length", "from_csv")
+    "try_variant_get", "schema_of_json", "json_array_length", "from_csv")
 
   /** Post-substitution class names for the same family (some builders emit
     * catalyst nodes directly rather than UnresolvedFunction).
     */
   private val jsonNodeClasses = Set(
-    "JsonToStructs", "GetJsonObject", "JsonObjectKeys", "ParseJson",
-    "TryParseJson", "VariantGet", "SchemaOfVariant", "LengthOfJsonArray",
-    "CsvToStructs")
+    "JsonToStructs", "GetJsonObject", "JsonObjectKeys", "TryParseJson",
+    "LengthOfJsonArray", "CsvToStructs")
 
   private def isJsonDerivation(e: Expression): Boolean = e match {
     case f: UnresolvedFunction => jsonFnNames.contains(f.nameParts.last.toLowerCase)
     case _ => jsonNodeClasses.contains(e.getClass.getSimpleName)
+  }
+
+  /** Hoisted-column budget per predicate: a fixpoint that still finds
+    * repeated derivations after this many hoists logs one warning and
+    * leaves the rest inline.
+    */
+  private val MaxHoisted = 16
+
+  /** Name prefix of the hoisted columns (`__graft_route_cse0`, …). */
+  val ColPrefix = "__graft_route_cse"
+
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** Lambda-free JSON derivations occurring at least twice in `e`, in
+    * deterministic first-seen order (so ties in size pick stably).
+    */
+  private def repeatedDerivations(e: Expression): Seq[Expression] = {
+    val counts = new java.util.LinkedHashMap[Expression, Integer]()
+    e.foreach { x =>
+      if (isJsonDerivation(x) && lambdaFree(x))
+        counts.merge(x, Integer.valueOf(1), (a, b) => Integer.valueOf(a + b))
+    }
+    import scala.jdk.CollectionConverters._
+    counts.asScala.collect { case (x, c) if c >= 2 => x }.toSeq
   }
 
   /** A subtree that references a lambda variable cannot be hoisted out of
@@ -85,27 +112,19 @@ private[routing] object JsonCse {
     var cur: Expression = GraftBridge.expression(pred)
     var out = df
     val names = scala.collection.mutable.ArrayBuffer.empty[String]
-    var changed = true
-    while (changed && names.size < 16) {
-      changed = false
-      // deterministic first-seen order so ties in size pick stably
-      val counts = new java.util.LinkedHashMap[Expression, Integer]()
-      cur.foreach { e =>
-        if (isJsonDerivation(e) && lambdaFree(e))
-          counts.merge(e, Integer.valueOf(1), (a, b) => Integer.valueOf(a + b))
-      }
-      import scala.jdk.CollectionConverters._
-      val repeated = counts.asScala.collect { case (e, c) if c >= 2 => e }.toSeq
-      if (repeated.nonEmpty) {
-        val pick = repeated.minBy(treeSize)
-        val name = s"__graft_route_cse${names.size}"
-        out = out.withColumn(name,
-          org.apache.spark.sql.functions.when(gate, GraftBridge.column(pick)))
-        cur = cur.transform { case e if e == pick => UnresolvedAttribute(Seq(name)) }
-        names += name
-        changed = true
-      }
+    var repeated = repeatedDerivations(cur)
+    while (repeated.nonEmpty && names.size < MaxHoisted) {
+      val pick = repeated.minBy(treeSize)
+      val name = s"$ColPrefix${names.size}"
+      out = out.withColumn(name,
+        org.apache.spark.sql.functions.when(gate, GraftBridge.column(pick)))
+      cur = cur.transform { case e if e == pick => UnresolvedAttribute(Seq(name)) }
+      names += name
+      repeated = repeatedDerivations(cur)
     }
+    if (repeated.nonEmpty)
+      log.warn(s"JsonCse: hoist limit of $MaxHoisted columns reached; " +
+        s"${repeated.size} repeated JSON derivations stay inline")
     (out, GraftBridge.column(cur), names.toSeq)
   }
 }

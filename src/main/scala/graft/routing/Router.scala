@@ -43,6 +43,9 @@ object Router {
   val Skipped = "skipped"
   def branch(schemaId: String): String = s"branch:$schemaId"
 
+  /** Per-row branch index [[tag]] computes and drops. */
+  private val BranchCol = "__graft_route_branch"
+
   /** A handler registration: payload constraints + the transformation to
     * apply to that branch (the reference's `registerSchemaMethodPair`,
     * lib/kinesisHandler.js:91-99).
@@ -81,6 +84,17 @@ object Router {
     * source scan regardless of registry size (spec-pinned).
     */
   def tag(df: DataFrame, config: Config): DataFrame = {
+    // the working columns below are added and dropped by name: an input
+    // column of the same name (case-insensitively, as Spark resolves it)
+    // would be silently overwritten, then dropped
+    val clashes = df.columns.filter { c =>
+      val n = c.toLowerCase
+      n == TagCol || n == ReasonCol || n == BranchCol || n.startsWith(JsonCse.ColPrefix)
+    }
+    require(clashes.isEmpty,
+      s"Router.tag: input already has routing working column(s) " +
+        s"${clashes.mkString(", ")}; drop or rename them before tagging " +
+        s"(re-tagging a tagged frame: drop $TagCol and $ReasonCol first)")
     val ev = col(config.eventCol)
     val dataSchema = ev.getField("data").getField("schema")
     val registeredIds = config.registry.keys.toSeq
@@ -124,20 +138,19 @@ object Router {
       }.get
       .when(payloadBadCse, lit(pre.size + 1))
       .otherwise(lit(0))
-    val tmp = "__graft_route_branch"
     val reasons = pre.map(_._2) :+ "invalid payload"
-    prepped.withColumn(tmp, idxCse)
+    prepped.withColumn(BranchCol, idxCse)
       .withColumn(TagCol,
-        when(col(tmp) === 0, concat(lit("branch:"), dataSchema))
-          .when(col(tmp) === skipIdx, lit(Skipped))
+        when(col(BranchCol) === 0, concat(lit("branch:"), dataSchema))
+          .when(col(BranchCol) === skipIdx, lit(Skipped))
           .otherwise(lit(BadMessage)))
       .withColumn(ReasonCol,
         reasons.zipWithIndex.foldLeft(Option.empty[Column]) {
           case (acc, (r, i)) =>
-            Some(acc.fold(when(col(tmp) === (i + 1), lit(r)))(
-              _.when(col(tmp) === (i + 1), lit(r))))
+            Some(acc.fold(when(col(BranchCol) === (i + 1), lit(r)))(
+              _.when(col(BranchCol) === (i + 1), lit(r))))
         }.get.otherwise(lit(null).cast("string")))
-      .drop((tmp +: cseCols): _*)
+      .drop((BranchCol +: cseCols): _*)
   }
 
   private def payloadValid(ev: Column, config: Config): Column = {

@@ -80,26 +80,21 @@ object Bpe {
     * total, so training is deterministic and oracle-replayable.
     */
   def trainMerges(words: DataFrame, rounds: Int): (Seq[MergeRule], DataFrame) = {
-    val base = words.select(col("w"), col("ct"), initSym(col("w")).as("sym"))
     // The learned rules are a bounded driver model (rounds × 4 scalars) —
-    // memoized per canonicalized histogram plan like every other bounded
-    // model since r12 (GlobalRank, Linkage, union-find): four declared
-    // queries train on the same histogram, and the driver loop is
-    // `rounds` sequential argmax collects that a warm re-run should never
-    // repay. Same source-immutability contract as Stages.materialize.
-    // check-then-act on the CHM is a benign race (same contract as
-    // Stages.materialize): two concurrent first calls both train, the loop
-    // is deterministic (total argmax order) so both compute IDENTICAL rules,
-    // and last-write-wins costs only duplicate work — never a wrong memo.
-    // computeIfAbsent is deliberately NOT used: it would hold the map's bin
-    // lock across a rounds-long sequence of Spark jobs.
-    val memoKey = (words.queryExecution.analyzed.canonicalized, rounds)
-    val memoHit = mergeMemo.get(memoKey)
-    if (memoHit != null) {
-      val sym = memoHit.foldLeft(initSym(col("w")))(
-        (c, m) => applyRule(c, m.lhs, m.rhs))
-      return (memoHit, words.select(col("w"), col("ct"), sym.as("sym")))
+    // memoized per histogram plan like every other bounded model since r12
+    // (GlobalRank, Linkage, union-find): four declared queries train on the
+    // same histogram, and the driver loop is `rounds` sequential argmax
+    // collects that a warm re-run should never repay. Training is
+    // deterministic (total argmax order), so concurrent first calls compute
+    // identical rules.
+    val rules = mergeMemo(words, rounds) {
+      train(words.select(col("w"), col("ct"), initSym(col("w")).as("sym")), rounds)
     }
+    val sym = rules.foldLeft(initSym(col("w")))((c, m) => applyRule(c, m.lhs, m.rhs))
+    (rules, words.select(col("w"), col("ct"), sym.as("sym")))
+  }
+
+  private def train(base: DataFrame, rounds: Int): Seq[MergeRule] = {
     val hist = base.persist()
     try {
       var learned = List.empty[MergeRule]
@@ -130,28 +125,14 @@ object Bpe {
         val row = best(0)
         learned = MergeRule(r, row.getString(0), row.getString(1), row.getLong(2)) :: learned
       }
-      val rules = learned.reverse
-      mergeMemo.put(memoKey, rules)
-      val finalSym = rules.foldLeft(col("sym")) { (c, m) => applyRule(c, m.lhs, m.rhs) }
-      (rules, base.withColumn("sym", finalSym))
+      learned.reverse
     } finally {
       hist.unpersist(blocking = false)
       ()
     }
   }
 
-  /** (canonicalized word-histogram plan, rounds) -> learned merge rules.
-    * Bounded: `rounds` small rules per distinct histogram a session trains
-    * on; same per-session-memo contract as `Stages.materialize`.
-    */
-  private val mergeMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int),
-    Seq[MergeRule]]()
-
-  graft.MemoLedger.register("bpe.rules") { () =>
-    import scala.jdk.CollectionConverters._
-    (mergeMemo.size.toLong,
-      mergeMemo.values.asScala.map(rs =>
-        rs.map(r => 48L + 2L * (r.lhs.length + r.rhs.length)).sum).sum)
-  }
+  /** (word-histogram plan, rounds) -> `rounds` learned merge rules. */
+  private val mergeMemo = new graft.PlanMemo[Int, Seq[MergeRule]]("bpe.rules",
+    rs => rs.map(r => 48L + 2L * (r.lhs.length + r.rhs.length)).sum)
 }

@@ -84,19 +84,18 @@ object WordPiece {
     * Returns the learned rules and the final (w, ct, sym) segmentation
     * frame with all rules folded in as literal expressions over the
     * UNCACHED input — one scan when consumed, nothing pinned. Same
-    * bounded-driver-model memo contract as [[Bpe.trainMerges]] (and the
-    * same deliberate check-then-act benign race — training is deterministic,
-    * so concurrent first calls compute identical rules).
+    * bounded-driver-model memo as [[Bpe.trainMerges]] (training is
+    * deterministic, so concurrent first calls compute identical rules).
     */
   def trainMerges(words: DataFrame, rounds: Int): (Seq[WpRule], DataFrame) = {
-    val base = words.select(col("w"), col("ct"), initSym(col("w")).as("sym"))
-    val memoKey = (words.queryExecution.analyzed.canonicalized, rounds)
-    val memoHit = ruleMemo.get(memoKey)
-    if (memoHit != null) {
-      val sym = memoHit.foldLeft(initSym(col("w")))(
-        (c, m) => applyRule(c, m.lhs, m.rhs))
-      return (memoHit, words.select(col("w"), col("ct"), sym.as("sym")))
+    val rules = ruleMemo(words, rounds) {
+      train(words.select(col("w"), col("ct"), initSym(col("w")).as("sym")), rounds)
     }
+    val sym = rules.foldLeft(initSym(col("w")))((c, m) => applyRule(c, m.lhs, m.rhs))
+    (rules, words.select(col("w"), col("ct"), sym.as("sym")))
+  }
+
+  private def train(base: DataFrame, rounds: Int): Seq[WpRule] = {
     val hist = base.persist()
     try {
       var learned = List.empty[WpRule]
@@ -137,12 +136,7 @@ object WordPiece {
         learned = WpRule(r, row.getAs[String]("a"), row.getAs[String]("b"),
           row.getAs[Long]("wt"), row.getAs[Long]("score_fp")) :: learned
       }
-      val rules = learned.reverse
-      ruleMemo.put(memoKey, rules)
-      val finalSym = rules.foldLeft(col("sym")) { (c, m) =>
-        applyRule(c, m.lhs, m.rhs)
-      }
-      (rules, base.withColumn("sym", finalSym))
+      learned.reverse
     } finally {
       hist.unpersist(blocking = false)
       ()
@@ -239,18 +233,7 @@ object WordPiece {
         st.getField("cnt").as("n_pieces"), st.getField("unk").as("unk")))
   }
 
-  /** (canonicalized word-histogram plan, rounds) -> learned rules. Bounded:
-    * `rounds` small rules per distinct histogram a session trains on; same
-    * per-session-memo contract as `Stages.materialize`.
-    */
-  private val ruleMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int),
-    Seq[WpRule]]()
-
-  graft.MemoLedger.register("wordpiece.rules") { () =>
-    import scala.jdk.CollectionConverters._
-    (ruleMemo.size.toLong,
-      ruleMemo.values.asScala.map(rs =>
-        rs.map(r => 56L + 2L * (r.lhs.length + r.rhs.length)).sum).sum)
-  }
+  /** (word-histogram plan, rounds) -> `rounds` learned rules. */
+  private val ruleMemo = new graft.PlanMemo[Int, Seq[WpRule]]("wordpiece.rules",
+    rs => rs.map(r => 56L + 2L * (r.lhs.length + r.rhs.length)).sum)
 }

@@ -156,28 +156,15 @@ object Similarity {
     * same COUNT(*).
     */
   def scaledPlanes(candidates: DataFrame, cidCol: String): Int = {
-    val key = (candidates.queryExecution.analyzed.canonicalized, cidCol)
-    val hit = nlistMemo.get(key)
-    val n: Long =
-      if (hit != null) hit.longValue
-      else {
-        val c = candidates.select(col(cidCol)).count()
-        nlistMemo.put(key, java.lang.Long.valueOf(c))
-        c
-      }
+    val n = nlistMemo(candidates, cidCol)(candidates.select(col(cidCol)).count())
     require(n >= 1, "scaledPlanes: empty candidate frame has no buckets")
     // ceil(log2 n) via bit length of n-1 (n = 1 → 0 bits handled as 1)
     val bits = 64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, n - 1))
     math.min(16, bits / 2)
   }
 
-  private val nlistMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, String),
-    java.lang.Long]()
-
-  graft.MemoLedger.register("similarity.nlist") { () =>
-    (nlistMemo.size.toLong, 8L * nlistMemo.size)
-  }
+  /** (candidates plan, cidCol) -> candidate count. */
+  private val nlistMemo = new graft.PlanMemo[String, Long]("similarity.nlist", _ => 8L)
 
   /** The nlist lowest-id vectors as literal IVF seeds — the deterministic
     * untrained coarse quantizer [[ivfTopK]] defaults to, exposed so index
@@ -493,33 +480,18 @@ object Similarity {
     */
   private def seedVectors(candidates: DataFrame, cidCol: String,
                           vecCol: String, n: Int): Seq[(Long, Seq[Double])] = {
-    val memoKey = (candidates.queryExecution.analyzed.canonicalized,
-      cidCol, vecCol, n)
-    val hit = seedsMemo.get(memoKey)
-    if (hit != null) hit
-    else {
-      val s = candidates
+    seedsMemo(candidates, (cidCol, vecCol, n)) {
+      candidates
         .select(col(cidCol).cast("long").as("sid"),
           col(vecCol).cast("array<double>").as("svec"))
         .orderBy(col("sid")).limit(n).collect()
         .toSeq.map(r => (r.getLong(0), r.getSeq[Double](1)))
-      seedsMemo.put(memoKey, s)
-      s
     }
   }
 
-  /** (canonicalized candidates plan, cidCol, vecCol, n) -> seed rows.
-    * Bounded: ≤ n (id, dim-vector) rows per distinct corpus/width a session
-    * sees; same per-session-memo contract as `Stages.materialize`.
+  /** (cidCol, vecCol, n) -> ≤ n (id, dim-vector) seed rows per distinct
+    * corpus/width.
     */
-  private val seedsMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, String, String, Int),
-    Seq[(Long, Seq[Double])]]()
-
-  graft.MemoLedger.register("similarity.seeds") { () =>
-    import scala.jdk.CollectionConverters._
-    (seedsMemo.size.toLong,
-      seedsMemo.values.asScala.map(rows =>
-        rows.map(r => 40L + 16L * r._2.size).sum).sum)
-  }
+  private val seedsMemo = new graft.PlanMemo[(String, String, Int), Seq[(Long, Seq[Double])]](
+    "similarity.seeds", rows => rows.map(r => 40L + 16L * r._2.size).sum)
 }

@@ -102,4 +102,20 @@ class GlobalRankSpec extends SparkSpec {
     assert(n === 0L)
     assert(ranked.columns.contains("r") && ranked.count() === 0L)
   }
+
+  test("a source rewritten in place is re-ranked against its new model") {
+    // the model memo keys the plan's file versions: re-reading a rewritten
+    // directory must not reuse the model of the files it replaced
+    val dir = java.nio.file.Files.createTempDirectory("globalrank_spec_rewrite").toString
+    (1L to 3L).map(i => (i, i * 10L)).toDF("id", "v")
+      .write.mode("overwrite").parquet(dir)
+    val (_, n1) = GlobalRank.byValue(spark.read.parquet(dir), "v", "id", "r")
+    assert(n1 === 3L)
+    (1L to 8L).map(i => (i, i * 100L)).toDF("id", "v")
+      .write.mode("overwrite").parquet(dir)
+    val (ranked, n2) = GlobalRank.byValue(spark.read.parquet(dir), "v", "id", "r")
+    assert(n2 === 8L)
+    assert(ranked.select("id", "r").as[(Long, Long)].collect().sorted.toSeq ===
+      (1L to 8L).map(i => (i, i)))
+  }
 }

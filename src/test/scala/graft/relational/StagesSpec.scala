@@ -52,4 +52,28 @@ class StagesSpec extends SparkSpec {
     assert(a.as[(Long, Long)].collect().toSeq === Seq((1L, 1L)))
     assert(b.as[(Long, Long)].collect().toSeq === Seq((9L, 9L)))
   }
+
+  test("source versions: a parquet dir rewritten in place re-lands its new rows") {
+    val dir = java.nio.file.Files.createTempDirectory("stages_spec_rewrite").toString
+    Seq((1L, 1L)).toDF("id", "v").write.mode("overwrite").parquet(dir)
+    val a = Stages.materialize(spark.read.parquet(dir), "spec_rewrite")
+    assert(a.as[(Long, Long)].collect().toSeq === Seq((1L, 1L)))
+    Seq((2L, 2L), (3L, 3L)).toDF("id", "v").write.mode("overwrite").parquet(dir)
+    val b = Stages.materialize(spark.read.parquet(dir), "spec_rewrite")
+    assert(b.as[(Long, Long)].collect().sorted.toSeq === Seq((2L, 2L), (3L, 3L)))
+  }
+
+  test("source versions: a file rewritten under the same name re-lands") {
+    // same path, so only the file's length / modification time can tell
+    // the two versions apart
+    val dir = java.nio.file.Files.createTempDirectory("stages_spec_samename")
+    val file = dir.resolve("part.json")
+    def read = spark.read.schema("id LONG").json(dir.toString)
+    java.nio.file.Files.writeString(file, "{\"id\":1}\n")
+    val a = Stages.materialize(read, "spec_samename")
+    assert(a.as[Long].collect().toSeq === Seq(1L))
+    java.nio.file.Files.writeString(file, "{\"id\":2}\n{\"id\":3}\n")
+    val b = Stages.materialize(read, "spec_samename")
+    assert(b.as[Long].collect().sorted.toSeq === Seq(2L, 3L))
+  }
 }

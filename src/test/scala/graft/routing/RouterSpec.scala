@@ -193,6 +193,15 @@ class RouterSpec extends SparkSpec {
     assert(got("both fine") === ("branch:t/1", null))
   }
 
+  test("tag refuses input columns that collide with its working columns") {
+    Seq(Router.TagCol, Router.ReasonCol, "__graft_route_branch",
+      "__graft_route_cse3", "__Route").foreach { c =>
+      val e = intercept[IllegalArgumentException](
+        Router.tag(decoded.withColumn(c, lit("user data")), config))
+      assert(e.getMessage.contains(c), e.getMessage)
+    }
+  }
+
   test("SchemaId renders and parses vendor/name/version") {
     assert(SchemaId("com.nordstrom", "retail-stream", "1-0-0").render ===
       "com.nordstrom/retail-stream/1-0-0")
