@@ -5,16 +5,7 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Warm the JVM/codegen/parquet-reader paths so the first measured query
-    // doesn't absorb session startup cost, and pin the input tables in the
-    // block-manager cache (engine buffer pool): Spark's CacheManager matches
-    // each query's scan against these plans, so measured times reflect
-    // compute rather than repeated cold parquet reads.
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem", "events", "documents", "embeddings").foreach { t =>
-      val f = new java.io.File(s"$sfDir/$t.parquet")
-      if (f.exists()) spark.read.parquet(f.getPath).cache().count()
-    }
+    warmTables(spark, sfDir)
     // JIT warmup at the smallest scale factor: each measured query runs
     // exactly once, so whole-stage-codegen compilation (Janino) and
     // interpreter-path JIT otherwise land inside the measured wall-clock of
@@ -141,4 +132,17 @@ object Bench {
     println(shortJson)
     spark.stop()
   }
+
+  /** Warm the JVM/codegen/parquet-reader paths so the first measured query
+    * doesn't absorb session startup cost, and pin the input tables in the
+    * block-manager cache (engine buffer pool): Spark's CacheManager matches
+    * each query's scan against these plans, so measured times reflect
+    * compute rather than repeated cold parquet reads. `Probe time` shares it.
+    */
+  def warmTables(spark: org.apache.spark.sql.SparkSession, sfDir: String): Unit =
+    Seq("region", "nation", "customer", "supplier", "part", "orders",
+      "lineitem", "events", "documents", "embeddings").foreach { t =>
+      val f = new java.io.File(s"$sfDir/$t.parquet")
+      if (f.exists()) spark.read.parquet(f.getPath).cache().count()
+    }
 }

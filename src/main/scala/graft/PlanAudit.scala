@@ -209,7 +209,7 @@ object PlanAudit {
     // Capture EVERY execution the query triggers (landing writes, cardinality
     // probes, the final collect) — the final plan alone cannot see scans that
     // happened inside eagerly-executed side jobs. Listener delivery is async;
-    // a sentinel query + poll flushes it deterministically per query.
+    // draining the listener bus after each query makes it deterministic.
     val events = java.util.Collections.synchronizedList(
       new java.util.ArrayList[org.apache.spark.sql.execution.QueryExecution]())
     spark.listenerManager.register(new org.apache.spark.sql.util.QueryExecutionListener {
@@ -228,28 +228,6 @@ object PlanAudit {
     // after the declared query drains it.
     graft.streaming.StreamCapture.enable()
     graft.streaming.StreamCapture.attach(spark)
-    var sentinelSeq = 0L
-    def flushListener(): Unit = {
-      sentinelSeq += 1
-      val marker = s"__planaudit_sentinel_$sentinelSeq"
-      spark.range(1).select(org.apache.spark.sql.functions.lit(marker)).collect()
-      val deadline = System.currentTimeMillis + 30000
-      def sentinelSeen: Boolean = {
-        val snap = events.synchronized {
-          scala.jdk.CollectionConverters.ListHasAsScala(events).asScala.toList }
-        snap.exists(_.analyzed.toString.contains(marker))
-      }
-      while (System.currentTimeMillis < deadline && !sentinelSeen)
-        Thread.sleep(10)
-      // A silent fall-through here would under-count auxiliary events —
-      // auxover/locbad would pass the close gate on PARTIAL data, the exact
-      // blind-spot class the aux gate exists to close. Throwing surfaces as
-      // a FAILED row, which close_round.sh refuses.
-      if (!sentinelSeen) throw new IllegalStateException(
-        "flushListener: sentinel not observed within 30s — listener " +
-          "delivery lagged and auxiliary scan counts would be incomplete")
-    }
-
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(n.contains) }
       .foreach { case (name, fn) =>
@@ -285,15 +263,16 @@ object PlanAudit {
           val scanDetail = scans.toSeq.sortBy(-_._2)
             .map { case (t, n) => s"$t:$n" }.mkString(",")
           // Auxiliary jobs: everything the listener saw for this query except
-          // the final collect itself and the flush sentinel. Each aux job's
-          // plan is gated INDEPENDENTLY (a landing that scans a base table 3×
-          // is the same recompute defect whether or not the final plan sees
-          // it). locbad sums regex/raw Location mismatches over ALL plans.
-          flushListener()
+          // the final collect itself. Each aux job's plan is gated
+          // INDEPENDENTLY (a landing that scans a base table 3× is the same
+          // recompute defect whether or not the final plan sees it). locbad
+          // sums regex/raw Location mismatches over ALL plans. A drain that
+          // times out throws, which surfaces as a FAILED row rather than a
+          // gate passed on partial data.
+          org.apache.spark.sql.graftbridge.GraftBridge.drainListeners(spark)
           val auxQes = events.synchronized {
             scala.jdk.CollectionConverters.ListHasAsScala(events).asScala.toList }
             .filter(qe => !(qe eq df.queryExecution))
-            .filterNot(_.analyzed.toString.contains("__planaudit_sentinel_"))
           val auxPlans = auxQes.map(
             _.executedPlan.toString.split("== Initial Plan ==")(0))
           val auxScans = auxPlans.map(tableScans)
@@ -328,13 +307,6 @@ object PlanAudit {
             } catch {
               case _: NoSuchMethodException => sReflBad += 1; None
             }
-          }
-          if (sys.env.contains("GRAFT_AUDIT_DEBUG") && sq.nonEmpty) {
-            System.err.println(s"[dbg] $name sq=${sq.size} classes=" +
-              sq.map(_.getClass.getName).mkString(",") +
-              s" plans=${sPlans.size}")
-            sPlans.foreach(p => System.err.println(
-              "[dbg-plan] " + p.take(2500)))
           }
           val sBad = (sStarted - sq.size) + sReflBad
           val sScans = sPlans.map(tableScans)

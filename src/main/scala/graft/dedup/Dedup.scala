@@ -17,13 +17,6 @@ import graft.text.TextFunctions
   */
 object Dedup {
 
-  /** Exact duplicate groups by content hash: (fp, n, keep_id) — keep_id is
-    * the canonical survivor (min id).
-    */
-  def exactGroups(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    docs.groupBy(TextFunctions.fingerprint(col(textCol)).as("fp"))
-      .agg(count(lit(1)).as("n"), min(col(idCol)).as("keep_id"))
-
   /** One-row-per-duplicate-set dedup: keeps the min-id row per distinct
     * content fingerprint. The distributed form of `DISTINCT ON`.
     */

@@ -26,7 +26,7 @@ import org.apache.spark.sql.{Column, DataFrame}
   * independently — a consumer that reads fewer columns gets a narrower
   * aggregate below "its" exchange — and any divergence breaks the subtree
   * identity ReuseExchange matches on, silently restoring the recompute
-  * (final-plan `ReusedExchange` count is the ground truth; `PlanReuse` is
+  * (final-plan `ReusedExchange` count is the ground truth; `Probe plan` is
   * the dev tool that reports it). When the upstream is expensive and the
   * sharing MUST happen, use [[materialize]].
   *

@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
 
 /** Audit hook for per-trigger streaming plan capture (dev-tool support for
-  * `graft.PlanAudit`; a normal run never enables it and never registers a
-  * listener).
+  * `graft.PlanAudit` and `graft.Probe phases`; a normal run never enables it
+  * and never registers a listener).
   *
   * Why it exists: Structured Streaming's per-trigger `IncrementalExecution`s
   * are not delivered through `QueryExecutionListener`, so PlanAudit's aux-job
@@ -18,6 +18,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
   * attaches this capture to every clone it creates while capture is enabled;
   * `onQueryStarted` is delivered synchronously with the starting thread, so
   * a bounded drain is always captured before the declared query returns.
+  * Per-trigger progress needs no buffer here: each captured query's own
+  * `recentProgress` is filled on its stream thread before the drain's
+  * `awaitTermination` returns.
   */
 object StreamCapture {
 
@@ -25,20 +28,12 @@ object StreamCapture {
   private val startCount = new java.util.concurrent.atomic.AtomicInteger(0)
   private val queries = java.util.Collections.synchronizedList(
     new java.util.ArrayList[StreamingQuery]())
-  // per-trigger progress events (r16): the phase decomposition StreamProbe's
-  // "phases" mode prints — durationMs + state-operator metrics per trigger
-  private val progresses = java.util.Collections.synchronizedList(
-    new java.util.ArrayList[org.apache.spark.sql.streaming.StreamingQueryProgress]())
 
   def enabled: Boolean = on
   def enable(): Unit = { on = true }
 
   /** Clear the per-declared-query window. */
-  def reset(): Unit = { startCount.set(0); queries.clear(); progresses.clear() }
-
-  def progressSnapshot: List[org.apache.spark.sql.streaming.StreamingQueryProgress] =
-    progresses.synchronized {
-      scala.jdk.CollectionConverters.ListHasAsScala(progresses).asScala.toList }
+  def reset(): Unit = { startCount.set(0); queries.clear() }
 
   /** (queries started since reset, queries captured since reset) — a
     * mismatch means a started query escaped capture and its triggers went
@@ -65,8 +60,7 @@ object StreamCapture {
         val q = ss.streams.get(e.id)
         if (q != null) queries.add(q)
       }
-      override def onQueryProgress(e: QueryProgressEvent): Unit =
-        if (on) { progresses.add(e.progress); () }
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
       override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
     })
   }

@@ -44,13 +44,6 @@ object LineDedup {
         col("__s.t").as("seg_text"), col("__s.n").as("n_words"))
   }
 
-  /** Distinct-document frequency per segment fingerprint: (fp, df). */
-  def segmentDocFrequency(segs: DataFrame, idCol: String): DataFrame =
-    segs
-      .select(md5(col("seg_text")).as("fp"), col(idCol))
-      .groupBy(col("fp"))
-      .agg(countDistinct(col(idCol)).as("df"))
-
   /** Distinct-document frequency as a window column over segment-occurrence
     * rows — the ONE-PASS alternative to aggregate-then-join-back: dense_rank
     * over (fp, id) reaches count-distinct-ids at the partition's end, and an

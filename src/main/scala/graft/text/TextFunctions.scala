@@ -43,11 +43,6 @@ object TextFunctions {
   def stopwordRatio(text: Column, stops: Seq[String]): Column =
     stopwordCount(text, stops).cast("double") / tokenCount(text).cast("double")
 
-  /** Punctuation character ratio over total characters. */
-  def punctRatio(text: Column): Column =
-    (length(text) - length(regexp_replace(text, """[\p{Punct}]""", "")))
-      .cast("double") / length(text).cast("double")
-
   /** Composite quality score in [0,1]: rewards vocabulary richness, adequate
     * length, and low stopword fraction. All inputs are exact-integer-derived
     * doubles ⇒ deterministic.
@@ -110,12 +105,6 @@ object TextFunctions {
       acc.when(s === best, lit(lang))
     }.otherwise(lit("und"))
   }
-
-  /** 60-bit rolling document fingerprint from the md5 hex prefix — stable
-    * across engines (md5 is md5 everywhere), sortable, join-safe.
-    */
-  def fingerprint60(text: Column): Column =
-    graft.functions.HashFunctions.md5Bits60(text)
 
   /** Hashing-trick feature index for a token: 32 uniform bits from the md5
     * hex prefix, folded into [0, dim). Engine-portable (md5 everywhere), so

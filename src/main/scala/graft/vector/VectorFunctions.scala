@@ -45,10 +45,6 @@ object VectorFunctions {
   def cosineFold(a: Column, b: Column): Column =
     dotFold(a, b) / (norm(a) * norm(b))
 
-  /** Squared L2 distance. */
-  def l2Sq(a: Column, b: Column): Column =
-    foldSum(zip_with(asDouble(a), asDouble(b), (x, y) => (x - y) * (x - y)))
-
   /** Sign-bit binary quantization: bit i = [v[i] > 0], packed into one 64-bit
     * code (dim ≤ 64). The serving-side representation is 8 bytes per vector —
     * at 10⁹ vectors the candidate scan reads 8 GB of codes instead of 256 GB

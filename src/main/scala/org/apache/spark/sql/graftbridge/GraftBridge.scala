@@ -4,11 +4,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.SparkStrategy
 
-/** Minimal accessors for two `private[sql]` seams an extension library
-  * needs: materializing a DataFrame over a custom LogicalPlan
-  * (`Dataset.ofRows`) and injecting a planner strategy at runtime
-  * (`experimental.extraStrategies`). Lives under `org.apache.spark.sql`
-  * only to satisfy the access qualifier; contains no engine logic.
+/** Minimal accessors for the `private[sql]`/`private[spark]` seams an
+  * extension library needs: materializing a DataFrame over a custom
+  * LogicalPlan (`Dataset.ofRows`), injecting a planner strategy at runtime
+  * (`experimental.extraStrategies`) and draining the listener bus. Lives
+  * under `org.apache.spark.sql` only to satisfy the access qualifiers;
+  * contains no engine logic.
   */
 object GraftBridge {
 
@@ -29,6 +30,13 @@ object GraftBridge {
   def column(e: org.apache.spark.sql.catalyst.expressions.Expression)
       : org.apache.spark.sql.Column =
     org.apache.spark.sql.classic.ExpressionUtils.column(e)
+
+  /** Block until Spark's listener bus has delivered every event posted so
+    * far — job starts and `QueryExecutionListener` callbacks included. The
+    * bus is `private[spark]`.
+    */
+  def drainListeners(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 
   /** Idempotently append a planner strategy to the session. */
   def addStrategy(spark: SparkSession, strategy: SparkStrategy): Unit = {
