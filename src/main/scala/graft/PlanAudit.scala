@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-shape audit (dev tool): prints physical-plan diagnostics per declared
   * query — exchange (shuffle) count, broadcast joins, parquet pushdown — so
   * plan regressions are visible without reading full explains.

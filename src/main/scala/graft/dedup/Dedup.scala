@@ -1,6 +1,6 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.text.TextFunctions
 
@@ -76,7 +76,6 @@ object Dedup {
     // cross-term collision (≈vocab²/2⁶⁰) produces the same result in both
     // engines instead of a silent one-sided perturbation (the accepted-risk
     // class the earlier xxhash64 key carried).
-    graft.functions.GraftFunctions.register(tf.sparkSession)
     // native fused slice (functions.Md5Bits60): same value as
     // conv(substring(md5(t),1,15),16,10) with no hex-string intermediate
     val postings0 = tf.select(col("id"),
@@ -143,7 +142,6 @@ object Dedup {
   }
 
   private def denseFromTf(tf: DataFrame, terms: Seq[String], threshold: Double): DataFrame = {
-    graft.functions.GraftFunctions.register(tf.sparkSession)
     val v = terms.size
     // term -> 1-based dense index as ONE map literal: no dictionary join, no
     // global-order window — the dictionary came back with the probe job
@@ -248,7 +246,6 @@ object Dedup {
 
   private def shingleIndex(docs: DataFrame, idCol: String, textCol: String,
                            shingleN: Int, blockCols: Seq[String]): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     graft.relational.Stages.materialize(shingleIndexPlan(
       docs, idCol, textCol, shingleN, blockCols), "shingle_index")
   }

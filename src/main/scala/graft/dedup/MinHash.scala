@@ -231,7 +231,6 @@ object MinHash {
     */
   private def portableHashes(docs: DataFrame, idCol: String, textCol: String,
                              shingleN: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     // single-slice keys use the NATIVE fused digest slice (same value as
     // conv(substring(md5,1,15),16,10), no hex-string intermediate)
     def fp60(c: Column): Column = graft.functions.HashFunctions.md5Bits60(c)

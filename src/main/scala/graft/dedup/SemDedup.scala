@@ -59,7 +59,6 @@ object SemDedup {
   def semanticDedup(emb: DataFrame, idCol: String, vecCol: String,
                     nlist: Int, threshold: Double,
                     trainedSeeds: Option[Seq[(Long, Seq[Double])]] = None): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     val data = emb.select(col(idCol).cast("long").as("id"),
       col(vecCol).cast("array<double>").as("v"))
 

@@ -72,7 +72,6 @@ object SimHash {
     * SimHashSpec's SWAR-vs-64-column test.
     */
   def fingerprintsPortable(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     def fp60(c: Column): Column = graft.functions.HashFunctions.md5Bits60(c)
     val hashed = docs.select(col(idCol).as("id"),
       explode(array_distinct(split(col(textCol), " "))).as("t"))

@@ -20,8 +20,8 @@ import org.apache.spark.sql.types._
   * embedding benchmarks).
   *
   * Users who write the idiomatic fold form — or port pipelines that do —
-  * get the fast path without code changes. Installed automatically by
-  * [[GraftFunctions.register]] and [[GraftExtensions]].
+  * get the fast path without code changes. Installed by [[GraftExtensions]],
+  * which every session from [[graft.GraftSession.builder]] carries.
   */
 object FuseVectorFolds extends Rule[LogicalPlan] {
 
@@ -45,7 +45,7 @@ object FuseVectorFolds extends Rule[LogicalPlan] {
 
   private def fuseCosine(e: Expression): Expression = e.transformUp {
     case Divide(
-        dot @ DotProduct(a, b),
+        DotProduct(a, b),
         Multiply(Sqrt(DotProduct(a2, b2)), Sqrt(DotProduct(a3, b3)), _), _)
       if a.semanticEquals(a2) && a2.semanticEquals(b2) &&
         b.semanticEquals(a3) && a3.semanticEquals(b3) =>

@@ -1,8 +1,10 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.graftbridge.GraftBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -62,15 +64,13 @@ case class Md5Bits60(child: Expression, part: Expression)
 }
 
 object HashFunctions {
-  /** The portable 60-bit md5 slice as a Column. Callers must have run
-    * [[GraftFunctions.register]] on the frame's session (every library
-    * entry point does). Use for SINGLE-slice keys; a consumer of both
-    * slices of one digest (the minhash mixes) stays on the shared-hex
-    * formulation, which digests once.
+  /** The portable 60-bit md5 slice as a Column, built as the [[Md5Bits60]]
+    * node so it resolves on any session. Use for SINGLE-slice keys; a
+    * consumer of both slices of one digest (the minhash mixes) stays on the
+    * shared-hex formulation, which digests once.
     */
-  def md5Bits60(c: org.apache.spark.sql.Column, part: Int = 0): org.apache.spark.sql.Column =
-    org.apache.spark.sql.functions.call_function("md5_bits60",
-      c, org.apache.spark.sql.functions.lit(part))
+  def md5Bits60(c: Column, part: Int = 0): Column =
+    GraftBridge.column(Md5Bits60(GraftBridge.expression(c), Literal(part)))
 }
 
 object Md5Bits60 {

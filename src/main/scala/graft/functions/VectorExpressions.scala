@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -152,35 +151,12 @@ case class CosineSimilarity(left: Expression, right: Expression) extends VecBina
     copy(left = l, right = r)
 }
 
-/** Registration: makes `vec_dot`/`vec_cosine` resolvable by name in any
-  * session (used by [[graft.vector.VectorFunctions]] via `call_function`).
-  */
-object GraftFunctions {
-  private val registered = java.util.Collections.newSetFromMap(
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, java.lang.Boolean]())
-
-  graft.MemoLedger.register("functions.sessions", planKeyed = false) { () =>
-    (registered.size.toLong, 16L * registered.size)
-  }
-
-  def register(spark: SparkSession): Unit = if (registered.add(spark)) {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("vec_dot",
-      exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("vec_cosine",
-      exprs => CosineSimilarity(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("md5_bits60",
-      exprs => Md5Bits60(exprs(0), exprs(1)), "built-in")
-    if (!spark.experimental.extraOptimizations.contains(FuseVectorFolds)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ FuseVectorFolds
-    }
-  }
-}
-
-/** Production wiring: `SparkSession.builder().withExtensions(new GraftExtensions)`
-  * (or `spark.sql.extensions=graft.functions.GraftExtensions`) injects the
-  * vector functions at session build time.
+/** The one wiring point for the SQL names `vec_dot`, `vec_cosine` and
+  * `md5_bits60` and the [[FuseVectorFolds]] rule. [[graft.GraftSession.builder]]
+  * installs it; any other builder can add `.withExtensions(new GraftExtensions)`
+  * or set `spark.sql.extensions=graft.functions.GraftExtensions`. `newSession()`
+  * clones inherit it. The DataFrame API ([[graft.vector.VectorFunctions]],
+  * [[HashFunctions]]) builds the nodes directly and needs none of this.
   */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
@@ -195,6 +171,8 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
     ext.injectFunction((FunctionIdentifier("md5_bits60"),
       new ExpressionInfo(classOf[Md5Bits60].getName, "md5_bits60"),
       (exprs: Seq[Expression]) => Md5Bits60(exprs(0), exprs(1))))
-    ext.injectOptimizerRule(_ => FuseVectorFolds)
+    // a once-per-plan batch: as an operator-optimization rule it would rerun
+    // on every fixed-point iteration (measured: routing plan time doubled)
+    ext.injectPreCBORule(_ => FuseVectorFolds)
   }
 }

@@ -62,7 +62,6 @@ object AlignmentFilter {
   def ledger(pairs: DataFrame, idCol: String, groupCol: String,
              textVec: Column, imageVec: Column,
              minAlignMilli: Long): DataFrame = {
-    graft.functions.GraftFunctions.register(pairs.sparkSession)
     ledgerScored(
       pairs.withColumn("__align",
         floor(graft.vector.VectorFunctions.cosine(textVec, imageVec)

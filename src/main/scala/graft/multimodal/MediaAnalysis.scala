@@ -40,7 +40,6 @@ object MediaAnalysis {
   def silenceTrimStub(df: DataFrame, idCol: String, mediaCol: String = "media",
                       windowTokens: Int = 8,
                       silenceThreshold: Long = 30L): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val toks = df.select(col(idCol).as("id"),
       posexplode(split(col(mediaCol).cast("string"), " ")).as(Seq("pos", "t")))
     val amp = toks.select(col("id"),
@@ -70,7 +69,6 @@ object MediaAnalysis {
     */
   def frameSignaturesStub(df: DataFrame, idCol: String,
                           mediaCol: String = "media"): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val meta = Multimodal.decodeStub(
       df.select(col(idCol).as("id"), col(mediaCol).as("media")), "media")
     meta.select(col("id"),

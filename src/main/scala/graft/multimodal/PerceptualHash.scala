@@ -46,7 +46,6 @@ object PerceptualHash {
     */
   def pixelGridStub(df: DataFrame, idCol: String,
                     mediaCol: String = "media"): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val toks = df.select(col(idCol).as("id"),
       explode(split(col(mediaCol).cast("string"), " ")).as("t"))
       .select(col("id"),

@@ -955,7 +955,7 @@ object AuditQueries {
     // multiply chains, no pow) that the oracle receives VERBATIM, so both
     // engines run the identical IEEE sequence and the doubles hash-match.
     DeclaredQuery("lsh_scurve_plan",
-      (s, dir) => graft.dedup.LshPlan.sCurve(s),
+      (s, _) => graft.dedup.LshPlan.sCurve(s),
       Some(s"""WITH cfg AS (SELECT * FROM (VALUES (16, 1), (8, 2), (4, 4), (2, 8)) c(bands, rpb)),
         sg AS (SELECT 50 + 50 * r.i AS s_permille FROM range(19) r(i)),
         d AS (SELECT bands, rpb, s_permille,

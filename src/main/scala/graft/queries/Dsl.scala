@@ -35,10 +35,8 @@ final case class DeclaredQuery(
   *    to long to match DuckDB's BIGINT defaults.
   */
 object Dsl {
-  def tbl(s: SparkSession, dir: String, name: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
+  def tbl(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
-  }
 
   /** Normalized view of the events table: `ts` as µs TimestampType whatever
     * the generator wrote. Earlier driver fixtures carried TIMESTAMP(NANOS)
@@ -74,7 +72,6 @@ object Dsl {
   def streamSession(s: SparkSession, parts: Int = 4): SparkSession = {
     val ss = s.newSession()
     ss.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    graft.functions.GraftFunctions.register(ss)
     // the clone's StreamingQueryManager is its own — PlanAudit's
     // per-trigger scan gate can only see this session's queries if the
     // capture hook rides the clone factory (no-op outside an audit run)

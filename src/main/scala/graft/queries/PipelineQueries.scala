@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import graft.text.TextFunctions._
 import graft.text.Sampling
 import graft.dedup.{Dedup, MinHash, SimHash}
-import graft.vector.{Similarity, VectorFunctions}
+import graft.vector.Similarity
 import graft.multimodal.Multimodal
 import Dsl._
 
@@ -122,7 +122,6 @@ object PipelineQueries {
     */
   private def clipScoredLanded(s: org.apache.spark.sql.SparkSession,
                                dir: String): org.apache.spark.sql.DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val emb = tbl(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val img = graft.multimodal.AlignmentFilter
@@ -1471,7 +1470,6 @@ object PipelineQueries {
     // scores bit-for-bit.
     DeclaredQuery("sq8_cosine_topk",
       (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         val z = tbl(s, dir, "embeddings")
           .withColumn("ma", array_max(transform(col("embedding"), x => abs(x.cast("double")))))
           .filter(col("ma") > 0)
@@ -2130,7 +2128,6 @@ object PipelineQueries {
     // every ranking step is bounded by K.
     DeclaredQuery("hybrid_rrf_topk",
       (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         val k = 100
         // the lexical arm IS bm25_topk's landed shortlist (one landing per
         // session shared by both queries — plan-keyed materialize memo)

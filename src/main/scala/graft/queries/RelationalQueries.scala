@@ -539,7 +539,6 @@ object RelationalQueries {
         // session (the streamSession discipline)
         val ss = s.newSession()
         ss.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        graft.functions.GraftFunctions.register(ss)
         val liT = graft.relational.Bucketing.ensureBucketed(
           tbl(ss, dir, "lineitem")
             .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount")),

@@ -1,6 +1,6 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Bradley–Terry preference-strength fitting (Bradley & Terry 1952;

@@ -114,7 +114,6 @@ object Correlation {
   def kendallTau(df0: DataFrame, xCol: String, yCol: String,
                  maxCells: Int = 4096): DataFrame = {
     val spark = df0.sparkSession
-    import spark.implicits._
     Seq(xCol, yCol).foreach { c =>
       val dt = df0.schema(c).dataType
       val integral = dt == ByteType || dt == ShortType ||

@@ -1,6 +1,6 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, Column}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Ordered-funnel conversion — the event-analytics staple: how many users

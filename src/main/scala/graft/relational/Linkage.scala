@@ -1,6 +1,6 @@
 package graft.relational
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Fellegi–Sunter record-linkage scoring (Fellegi & Sunter 1969, JASA) over

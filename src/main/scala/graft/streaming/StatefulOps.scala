@@ -107,7 +107,7 @@ object StatefulOps {
     * would overflow: refuses loudly (production charts re-window — the
     * period belongs in the key, e.g. key = type‖week).
     */
-  def ewmaPerBatch[T: Encoder](ds: Dataset[T])(
+  def ewmaPerBatch[T](ds: Dataset[T])(
       key: T => String): Dataset[(String, Long, Long, Long, Long)] = {
     implicit val outEnc: Encoder[(String, Long, Long, Long, Long)] =
       Encoders.tuple(Encoders.STRING, Encoders.scalaLong,
@@ -150,7 +150,7 @@ object StatefulOps {
     * Emits (seq, n_a, n_b, chi2_micro, srm_flag) per trigger; a bounded
     * replay is batch-SQL-replayable via the standard row-range slicing.
     */
-  def srmPerBatch[T: Encoder](ds: Dataset[T])(
+  def srmPerBatch[T](ds: Dataset[T])(
       arm: T => Long): Dataset[(Long, Long, Long, Long, Boolean)] = {
     implicit val outEnc: Encoder[(Long, Long, Long, Long, Boolean)] =
       Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong,
@@ -258,7 +258,7 @@ object StatefulOps {
     * per trigger, forecast = level + trend (one step ahead), truncating
     * milli division.
     */
-  def holtPerBatch[T: Encoder](ds: Dataset[T])(
+  def holtPerBatch[T](ds: Dataset[T])(
       key: T => String): Dataset[(String, Long, Long, Long, Long, Long)] = {
     implicit val outEnc: Encoder[(String, Long, Long, Long, Long, Long)] =
       Encoders.product[(String, Long, Long, Long, Long, Long)]
@@ -333,7 +333,7 @@ object StatefulOps {
       }
   }
 
-  def cusumPerBatch[T: Encoder](ds: Dataset[T], allowance: Long)(
+  def cusumPerBatch[T](ds: Dataset[T], allowance: Long)(
       key: T => String): Dataset[(String, Long, Long, Long)] = {
     implicit val outEnc: Encoder[(String, Long, Long, Long)] =
       Encoders.tuple(Encoders.STRING, Encoders.scalaLong,
@@ -418,7 +418,7 @@ object StatefulOps {
   /** Per-key running counters across micro-batches (`mapGroupsWithState`):
     * emits (key, totalSoFar) once per batch per active key.
     */
-  def runningCounts[T: Encoder](ds: Dataset[T])(key: T => String): Dataset[(String, Long)] = {
+  def runningCounts[T](ds: Dataset[T])(key: T => String): Dataset[(String, Long)] = {
     implicit val enc: Encoder[(String, Long)] = Encoders.tuple(Encoders.STRING, Encoders.scalaLong)
     ds.groupByKey(key)(Encoders.STRING)
       .mapGroupsWithState[Long, (String, Long)](GroupStateTimeout.NoTimeout()) {

@@ -52,7 +52,6 @@ object DomainCuration {
     * split trains on one copy and tests on its sibling).
     */
   def groupedSplit(df: DataFrame, domainCol: String): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val bucket = pmod(
       graft.functions.HashFunctions.md5Bits60(col(domainCol)), lit(10L))
     df.withColumn("split",
@@ -79,7 +78,6 @@ object DomainCuration {
   def ledger(docs: DataFrame, idCol: String, urlCol: String, textCol: String,
              tokens: Column, maxDocsPerDomain: Long, blocklist: Seq[String],
              maxDomains: Int = 5000000): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val base = docs.select(col(idCol).as("id"),
       registrableDomain(host(col(urlCol))).as("domain"),
       tokens.cast("long").as("tok"),

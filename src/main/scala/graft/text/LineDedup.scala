@@ -1,6 +1,6 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -118,7 +118,7 @@ object LineDedup {
       .select(col(idCol),
         when(col("__bad").isNull, col("__segs"))
           .otherwise(filter(col("__segs"),
-            (s, i) => !array_contains(col("__bad"), i))).as("__kept"))
+            (_, i) => !array_contains(col("__bad"), i))).as("__kept"))
       .filter(size(col("__kept")) > 0)
       .select(col(idCol), array_join(col("__kept"), " ").as(textCol))
   }

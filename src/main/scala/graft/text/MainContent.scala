@@ -1,6 +1,6 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Main-content extraction — the boilerplate-DOM-removal pass (the
@@ -53,7 +53,6 @@ object MainContent {
                   sourceCol: String, blockWords: Int = 8,
                   minGoodWords: Int = 6): DataFrame = {
     require(blockWords > 0 && minGoodWords > 0)
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val bw = blockWords
     val ws = split(col(textCol), " ")
     val segd = docs.select(col(idCol).as("id"), col(sourceCol).as("source"),

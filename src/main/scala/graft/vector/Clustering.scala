@@ -49,7 +49,6 @@ object Clustering {
 
   def kmeans(df: DataFrame, idCol: String, vecCol: String,
              k: Int, dim: Int, iters: Int): KMeansResult = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val data = df.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
 
     // deterministic init: the k lowest-id vectors
@@ -96,7 +95,7 @@ object Clustering {
     val data = df.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
     val withCell = assign(data, "v", centroids)
     val cmap = centroids.toMap
-    val dists = centroids.map { case (cid, cv) =>
+    val dists = centroids.map { case (cid, _) =>
       when(col("cell") === cid,
         VectorFunctions.dot(col("v"), col("v")) + reducedDist(col("v"), cmap(cid)))
     }.reduceRight(_ otherwise _) // right-assoc: each when() gets one otherwise

@@ -34,7 +34,6 @@ object Mining {
                     k: Int, loBand: Double, hiBand: Double): DataFrame = {
     require(k > 0 && loBand < hiBand,
       s"hardNegatives: need k>0 and loBand<hiBand, got k=$k [$loBand,$hiBand)")
-    graft.functions.GraftFunctions.register(anchors.sparkSession)
     val q = anchors.select(col(qidCol).as("qid"), col(vecCol).as("qvec"))
     val c = corpus.select(col(cidCol).as("cid"), col(vecCol).as("cvec"))
     val banded = c.crossJoin(broadcast(q))

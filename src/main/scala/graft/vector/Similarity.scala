@@ -35,7 +35,6 @@ object Similarity {
   def bruteForceTopK(queries: DataFrame, qidCol: String,
                      candidates: DataFrame, cidCol: String,
                      vecCol: String, k: Int, excludeSelf: Boolean = true): DataFrame = {
-    graft.functions.GraftFunctions.register(queries.sparkSession)
     val q = queries.select(col(qidCol).as("qid"), col(vecCol).as("qvec"))
     val c = candidates.select(col(cidCol).as("cid"), col(vecCol).as("cvec"))
     val scored = c.crossJoin(broadcast(q))
@@ -63,7 +62,6 @@ object Similarity {
               candidates: DataFrame, cidCol: String,
               vecCol: String, k: Int, numPlanes: Int, dim: Int,
               seed: Long = 42L): DataFrame = {
-    graft.functions.GraftFunctions.register(queries.sparkSession)
     val planes = hyperplaneValues(numPlanes, dim, seed)
     val q = withBucket(queries.select(col(qidCol).as("qid"), col(vecCol).as("qvec")), "qvec", planes)
       .withColumn("bucket", explode(concat(array(col("bucket")),
@@ -87,7 +85,6 @@ object Similarity {
   def cosineNearDupPairs(df: DataFrame, idCol: String, vecCol: String,
                          threshold: Double, numPlanes: Int, dim: Int,
                          seed: Long = 42L): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val planes = hyperplaneValues(numPlanes, dim, seed)
     val b = withBucket(df.select(col(idCol).as("id"), col(vecCol).as("vec")), "vec", planes)
     // multi-probe one side with 1-bit flips so pairs differing in a single
@@ -188,7 +185,6 @@ object Similarity {
     */
   def assignCells(df: DataFrame, vecCol: String,
                   seeds: Seq[(Long, Seq[Double])]): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val perSeed = seeds.map { case (sid, svec) =>
       struct((-VectorFunctions.cosine(col(vecCol), array(svec.map(lit): _*))).as("nscore"),
         lit(sid).as("sid"))
@@ -201,7 +197,6 @@ object Similarity {
               candidates: DataFrame, cidCol: String,
               vecCol: String, k: Int, nlist: Int, nprobe: Int,
               trainedSeeds: Option[Seq[(Long, Seq[Double])]] = None): DataFrame = {
-    graft.functions.GraftFunctions.register(queries.sparkSession)
     // Index build: the nlist seed vectors come to the driver once (an IVF
     // centroid table is nlist rows — tiny at any data scale) and become
     // per-row literals. Cell assignment is then a shuffle-free map over the
@@ -271,7 +266,6 @@ object Similarity {
              candidates: DataFrame, cidCol: String,
              vecCol: String, k: Int, m: Int, ncode: Int, dim: Int,
              trainedCodebooks: Option[IndexedSeq[IndexedSeq[Seq[Double]]]] = None): DataFrame = {
-    graft.functions.GraftFunctions.register(queries.sparkSession)
     require(dim % m == 0, "dim must be divisible by m")
     val ds = dim / m
 
@@ -359,7 +353,6 @@ object Similarity {
                 m: Int, ncode: Int, dim: Int,
                 trainedSeeds: Option[Seq[(Long, Seq[Double])]] = None,
                 trainedCodebooks: Option[IndexedSeq[IndexedSeq[Seq[Double]]]] = None): DataFrame = {
-    graft.functions.GraftFunctions.register(queries.sparkSession)
     require(dim % m == 0, "dim must be divisible by m")
     val ds = dim / m
 
@@ -438,7 +431,6 @@ object Similarity {
   def bqTopK(queries: DataFrame, qidCol: String,
              candidates: DataFrame, cidCol: String,
              vecCol: String, k: Int, rerank: Int, dim: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(queries.sparkSession)
     val q = queries.select(col(qidCol).as("qid"), col(vecCol).as("qvec"))
       .withColumn("qcode", VectorFunctions.signBits(col("qvec"), dim))
     // candidate side carries ONLY (cid, code) past this projection

@@ -1,7 +1,9 @@
 package graft.vector
 
+import graft.functions.{CosineSimilarity, DotProduct}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftBridge
 
 /** Vector math over `array<float>` embedding columns using only built-in
   * higher-order functions — fully codegen'd, no UDFs, no MLlib.
@@ -20,11 +22,11 @@ object VectorFunctions {
   def foldSum(arr: Column): Column =
     aggregate(arr, lit(0.0), (acc, x) => acc + x)
 
-  /** Dot product in double precision — codegen'd native expression
-    * (requires [[graft.functions.GraftFunctions.register]] on the session;
-    * every library entry point does this).
+  /** Dot product in double precision — the codegen'd [[DotProduct]] node,
+    * built directly so it resolves on any session.
     */
-  def dot(a: Column, b: Column): Column = call_function("vec_dot", a, b)
+  def dot(a: Column, b: Column): Column =
+    GraftBridge.column(DotProduct(GraftBridge.expression(a), GraftBridge.expression(b)))
 
   /** HOF-fold dot product: same bitwise result as [[dot]], kept as the
     * composable reference implementation and for parity tests.
@@ -38,8 +40,9 @@ object VectorFunctions {
     sqrt(foldSum(zip_with(d, d, (x, y) => x * y)))
   }
 
-  /** Cosine similarity in double precision — fused codegen'd expression. */
-  def cosine(a: Column, b: Column): Column = call_function("vec_cosine", a, b)
+  /** Cosine similarity in double precision — the fused [[CosineSimilarity]] node. */
+  def cosine(a: Column, b: Column): Column =
+    GraftBridge.column(CosineSimilarity(GraftBridge.expression(a), GraftBridge.expression(b)))
 
   /** HOF-fold cosine: same bitwise result as [[cosine]] (reference/tests). */
   def cosineFold(a: Column, b: Column): Column =

@@ -13,7 +13,6 @@ object SparkSpec {
   lazy val session: SparkSession = {
     val s = GraftSession.builder("local[4]", 4).appName("graft-test").getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(s)
     s
   }
 }

@@ -10,15 +10,20 @@ class FuseVectorFoldsSpec extends SparkSpec {
   private lazy val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
 
   test("optimizer fuses HOF dot/cosine folds into native expressions") {
-    val pairs = emb.select(col("embedding").as("a"))
-      .crossJoin(emb.limit(3).select(col("embedding").as("b")))
-    val folded = pairs.select(
-      VectorFunctions.dotFold(col("a"), col("b")).as("d"),
-      VectorFunctions.cosineFold(col("a"), col("b")).as("c"))
-    val optimized = folded.queryExecution.optimizedPlan.toString
-    assert(optimized.contains("vec_cosine"), s"cosine fold not fused:\n$optimized")
-    assert(!optimized.contains("aggregate(zip_with"),
-      s"HOF fold survived optimization:\n$optimized")
+    // newSession() clones (the stream and bucketing sessions) inherit the
+    // rule from the session's extensions
+    Seq(spark, spark.newSession()).foreach { s =>
+      val e = s.read.parquet(s"$sf0001/embeddings.parquet")
+      val pairs = e.select(col("embedding").as("a"))
+        .crossJoin(e.limit(3).select(col("embedding").as("b")))
+      val folded = pairs.select(
+        VectorFunctions.dotFold(col("a"), col("b")).as("d"),
+        VectorFunctions.cosineFold(col("a"), col("b")).as("c"))
+      val optimized = folded.queryExecution.optimizedPlan.toString
+      assert(optimized.contains("vec_cosine"), s"cosine fold not fused:\n$optimized")
+      assert(!optimized.contains("aggregate(zip_with"),
+        s"HOF fold survived optimization:\n$optimized")
+    }
   }
 
   test("fused plan returns bitwise-identical results") {

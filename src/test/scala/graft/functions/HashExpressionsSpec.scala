@@ -1,6 +1,9 @@
 package graft.functions
 
 import graft.SparkSpec
+import graft.relational.{Hll, Rendezvous}
+import graft.vector.{Projection, VectorFunctions}
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 class HashExpressionsSpec extends SparkSpec {
@@ -45,5 +48,33 @@ class HashExpressionsSpec extends SparkSpec {
       df.select(call_function("md5_bits60", col("s"), lit(2))).collect()
     }
     assert(e.getMessage.toLowerCase.contains("part"))
+  }
+
+  test("graft columns resolve on a session built without the graft extensions") {
+    // a fresh session on the shared SparkContext; it is neither the active
+    // nor the default session, and nothing registered the graft SQL names
+    val plain = SparkSession.builder().create()
+    val e = intercept[Exception] {
+      plain.range(1).select(call_function("vec_dot", array(lit(1.0)), array(lit(1.0))))
+        .collect()
+    }
+    assert(e.getMessage.contains("vec_dot"))
+    val signs = Projection.rademacherSigns(3, 2, "plain")
+    def rows(s: SparkSession): Seq[Seq[Row]] = {
+      val df = s.createDataFrame(Seq(
+        (1L, 0L, "a", Seq(1.0, 2.0, 0.5), Seq(0.5, -1.0, 2.0)),
+        (2L, 0L, "é中", Seq(-3.0, 0.0, 1.0), Seq(1.0, 1.0, 1.0)),
+        (3L, 1L, "", Seq(2.0, 2.0, -2.0), Seq(4.0, 0.5, 0.0))))
+        .toDF("id", "g", "t", "a", "b")
+      Seq(
+        df.select(col("id"),
+          HashFunctions.md5Bits60(col("t")), HashFunctions.md5Bits60(col("t"), 1),
+          Rendezvous.shardOf(col("t"), 8),
+          VectorFunctions.cosine(col("a"), col("b")),
+          Projection.project(col("a"), signs)).orderBy("id"),
+        Hll.registers(df, "g", "id").orderBy("g", "r"))
+        .map(_.collect().toSeq)
+    }
+    assert(rows(plain) === rows(spark))
   }
 }
