@@ -294,8 +294,6 @@ object Components {
       done = changed == 0
       lastChanged = changed
       it += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc-round] it=$it changed=$changed")
     }
     sym.unpersist()
     // The scaladoc promises the deterministic fixpoint (min id per

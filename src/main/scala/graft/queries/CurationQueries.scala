@@ -529,11 +529,7 @@ object CurationQueries {
     // OR smaller id in batch" = "smaller-id qualifying doc exists").
     DeclaredQuery("stream_ingest_dedup",
       (s, dir) => {
-        val stream = streamSession(s).readStream
-          .format(classOf[graft.sources.ReplayStreamSource].getName)
-          .option("path", s"$dir/documents.parquet")
-          .option("numBatches", "4")
-          .load()
+        val stream = replay(s, dir, "documents", 4)
         val toks = split(col("text"), " ")
         val enriched = stream.select(
           col("doc_id").cast("long").as("id"),

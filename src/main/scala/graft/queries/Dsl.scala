@@ -80,6 +80,18 @@ object Dsl {
     ss
   }
 
+  /** Bounded replay of `$dir/$table.parquet` on a [[streamSession]] clone,
+    * cut into `numBatches` micro-batches whatever the scale factor: the one
+    * reader every declared stream query opens. `ts` is left raw; callers
+    * that window on it wrap the stream in [[normalizeTs]].
+    */
+  def replay(s: SparkSession, dir: String, table: String, numBatches: Int): DataFrame =
+    streamSession(s).readStream
+      .format("graft.sources.ReplayStreamSource")
+      .option("path", s"$dir/$table.parquet")
+      .option("numBatches", numBatches.toString)
+      .load()
+
   /** The ONE k=3 IVF kNN edge frame every graph query consumes — PageRank,
     * triangle census, k-core peeling, LPA communities. Built via
     * `Similarity.ivfTopK` (equi-keyed cell join, no O(n²) stage) and landed

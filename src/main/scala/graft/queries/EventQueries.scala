@@ -379,29 +379,16 @@ object EventQueries {
     // so sink-level aggregation equals the all-at-once batch answer.
     DeclaredQuery("stream_windowed_route_counts",
       (s, dir) => {
-        val stream = streamSession(s).readStream
-          .format(classOf[graft.sources.ReplayStreamSource].getName)
-          .option("path", s"$dir/events.parquet")
-          .option("numBatches", "2")
-          .load()
-        val evs = Dsl.normalizeTs(stream)
+        val evs = Dsl.normalizeTs(replay(s, dir, "events", 2))
           .withColumn("event", struct(
             lit(envelopeId).as("schema"),
             struct(
               col("event_type").as("schema"),
               get_json_object(col("props"), "$.k").cast("long").as("k")).as("data")))
         val config = Router.Config(envelopeId, RegisteredSchema(envelopeId, Nil), registry)
-        val out = java.nio.file.Files.createTempDirectory("graft_stream_route")
-        val outDir = out.resolve("sink").toString
-        val ckpt = out.resolve("ckpt").toString
-        graft.streaming.StreamingRouter.drainRoutedToParquet(
-          evs, config, keepCols = Seq("ts"), outDir, ckpt)
-        // the returned frame reads the sink LAZILY, so the only safe delete
-        // point is JVM exit; deleteOnExit runs in reverse registration
-        // order, so the top-down walk (dirs before their files) deletes
-        // files first, dirs after
-        java.nio.file.Files.walk(out).forEach(p => p.toFile.deleteOnExit())
-        s.read.parquet(outDir)
+        val sink = graft.streaming.StreamingRouter.drainRoutedToTemp(
+          evs, config, keepCols = Seq("ts"), "route")
+        s.read.parquet(sink)
           .groupBy(col(Router.TagCol).as("route"),
             date_trunc("hour", col("ts")).cast("timestamp_ntz").as("hour"))
           .agg(count(lit(1)).as("n"))
@@ -416,28 +403,15 @@ object EventQueries {
     // Watermarked tumbling-window counts computed STATEFULLY across the
     // replay stream's micro-batches (each batch updates window state; the
     // fixture's ts is monotone in replay order, so the watermark drops
-    // nothing and the final state equals the batch answer). Complete-mode
-    // memory sink: with Trigger.AvailableNow the last emission is the full
-    // deterministic result — Append would hold back every window newer than
-    // the final watermark. Unique sink name per invocation (the driver and
-    // specs run a query repeatedly in one session).
+    // nothing and the final state equals the batch answer), drained by
+    // drainComplete.
     DeclaredQuery("stream_hourly_counts",
       (s, dir) => {
-        val stream = streamSession(s).readStream
-          .format(classOf[graft.sources.ReplayStreamSource].getName)
-          .option("path", s"$dir/events.parquet")
-          .option("numBatches", "2")
-          .load()
-        val evs = Dsl.normalizeTs(stream)
+        val evs = Dsl.normalizeTs(replay(s, dir, "events", 2))
         val counts = graft.streaming.StreamingRouter.windowedCounts(
           evs, "ts", watermark = "2 hours", size = "1 hour", slide = "1 hour",
           "event_type")
-        val name = "stream_hourly_" + java.lang.Long.toHexString(System.nanoTime())
-        val q = counts.writeStream.format("memory").queryName(name)
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete())
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        graft.streaming.StreamingRouter.drainMemoryToLocal(q, name)
+        graft.streaming.StreamingRouter.drainComplete(counts, "stream_hourly")
           .select(col("window.start").cast("timestamp_ntz").as("hour"),
             col("event_type"), col("n"))
           .orderBy(col("hour"), col("event_type"))
@@ -456,21 +430,11 @@ object EventQueries {
     // answer-sized frame. An alerting consumer thresholds delta_permille.
     DeclaredQuery("stream_drift_windows",
       (s, dir) => {
-        val stream = streamSession(s).readStream
-          .format(classOf[graft.sources.ReplayStreamSource].getName)
-          .option("path", s"$dir/events.parquet")
-          .option("numBatches", "2")
-          .load()
-        val evs = Dsl.normalizeTs(stream)
+        val evs = Dsl.normalizeTs(replay(s, dir, "events", 2))
         val counts = graft.streaming.StreamingRouter.windowedCounts(
           evs, "ts", watermark = "2 hours", size = "1 hour", slide = "1 hour",
           "event_type")
-        val name = "stream_drift_" + java.lang.Long.toHexString(System.nanoTime())
-        val q = counts.writeStream.format("memory").queryName(name)
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete())
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        val hourly = graft.streaming.StreamingRouter.drainMemoryToLocal(q, name)
+        val hourly = graft.streaming.StreamingRouter.drainComplete(counts, "stream_drift")
           .select(col("window.start").cast("timestamp_ntz").as("hour"),
             col("event_type"), col("n"))
         // r16 (guide §2.4): the hour total rides a full-partition window
@@ -581,12 +545,8 @@ object EventQueries {
     DeclaredQuery("stream_union_effectively_once",
       (s, dir) => {
         import s.implicits._
-        def replay() = streamSession(s).readStream
-          .format(classOf[graft.sources.ReplayStreamSource].getName)
-          .option("path", s"$dir/events.parquet")
-          .option("numBatches", "2")
-          .load()
-        val union = replay().unionByName(replay())
+        val union = replay(s, dir, "events", 2)
+          .unionByName(replay(s, dir, "events", 2))
           .select(col("event_id").cast("long"), col("event_type"))
           .as[(Long, String)]
         val once = graft.streaming.StatefulOps.firstOccurrenceBy(union)(
@@ -615,12 +575,7 @@ object EventQueries {
     DeclaredQuery("stream_dedup_firstseen",
       (s, dir) => {
         import s.implicits._
-        val stream = streamSession(s).readStream
-          .format(classOf[graft.sources.ReplayStreamSource].getName)
-          .option("path", s"$dir/documents.parquet")
-          .option("numBatches", "2")
-          .load()
-        val ds = stream
+        val ds = replay(s, dir, "documents", 2)
           .select(col("doc_id").cast("long"), md5(col("text")).as("fp"),
             col("source"))
           .as[(Long, String, String)]
@@ -643,15 +598,12 @@ object EventQueries {
 
     DeclaredQuery("stream_attribution_join",
       (s, dir) => {
-        def replay(tp: String) = Dsl.normalizeTs(streamSession(s).readStream
-          .format(classOf[graft.sources.ReplayStreamSource].getName)
-          .option("path", s"$dir/events.parquet")
-          .option("numBatches", "2")
-          .load()).filter(col("event_type") === tp)
-        val clicks = replay("click")
+        def ofType(tp: String) = Dsl.normalizeTs(replay(s, dir, "events", 2))
+          .filter(col("event_type") === tp)
+        val clicks = ofType("click")
           .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
           .withWatermark("c_ts", "3 hours")
-        val buys = replay("purchase")
+        val buys = ofType("purchase")
           .select(col("event_id"), col("user_id").as("p_user"), col("ts").as("p_ts"))
           .withWatermark("p_ts", "3 hours")
         val joined = buys.join(clicks, expr(
@@ -685,20 +637,11 @@ object EventQueries {
     // replay is the same partition (bounded keys: users).
     DeclaredQuery("stream_session_counts",
       (s, dir) => {
-        val stream = Dsl.normalizeTs(streamSession(s).readStream
-          .format(classOf[graft.sources.ReplayStreamSource].getName)
-          .option("path", s"$dir/events.parquet")
-          .option("numBatches", "2")
-          .load())
+        val stream = Dsl.normalizeTs(replay(s, dir, "events", 2))
         val sess = graft.streaming.StreamingRouter.sessionCounts(
           stream.select(col("user_id"), col("ts")),
           "ts", watermark = "2 hours", gap = "30 minutes", "user_id")
-        val name = "stream_sess_" + java.lang.Long.toHexString(System.nanoTime())
-        val q = sess.writeStream.format("memory").queryName(name)
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete())
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        graft.streaming.StreamingRouter.drainMemoryToLocal(q, name)
+        graft.streaming.StreamingRouter.drainComplete(sess, "stream_sess")
           .groupBy(col("user_id"))
           .agg(count(lit(1)).as("n_sessions"), max(col("n")).as("max_session"),
             sum(col("n")).as("n_events"))
@@ -736,25 +679,15 @@ object EventQueries {
     // construction at any corpus scale).
     DeclaredQuery("stream_static_enrichment",
       (s, dir) => {
-        val stream = Dsl.normalizeTs(streamSession(s).readStream
-          .format(classOf[graft.sources.ReplayStreamSource].getName)
-          .option("path", s"$dir/events.parquet")
-          .option("numBatches", "2")
-          .load())
+        val stream = Dsl.normalizeTs(replay(s, dir, "events", 2))
         val dim = broadcast(tbl(s, dir, "customer")
           .select(col("c_custkey"), col("c_mktsegment")))
         val joined = stream
           .filter(col("event_type") === "purchase")
           .join(dim, col("c_custkey") === col("user_id") + 1)
-        val name = "stream_enrich_" + java.lang.Long.toHexString(System.nanoTime())
-        val q = joined
-          .groupBy(col("c_mktsegment"))
+        val totals = joined.groupBy(col("c_mktsegment"))
           .agg(count(lit(1)).as("n"), sum(dec2(col("value"))).as("__sv"))
-          .writeStream.format("memory").queryName(name)
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete())
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        graft.streaming.StreamingRouter.drainMemoryToLocal(q, name)
+        graft.streaming.StreamingRouter.drainComplete(totals, "stream_enrich")
           .select(col("c_mktsegment"), col("n"),
             col("__sv").cast("double").as("sum_value"))
           .orderBy(col("c_mktsegment"))
@@ -794,12 +727,7 @@ object EventQueries {
     DeclaredQuery("stream_ewma_alarm",
       (s, dir) => {
         import s.implicits._
-        val stream = streamSession(s).readStream
-          .format(classOf[graft.sources.ReplayStreamSource].getName)
-          .option("path", s"$dir/events.parquet")
-          .option("numBatches", "3")
-          .load()
-        val ds = stream.select(col("event_type")).as[String]
+        val ds = replay(s, dir, "events", 3).select(col("event_type")).as[String]
         val out = graft.streaming.StatefulOps.ewmaPerBatch(ds)(identity)
         graft.streaming.StreamingRouter.drainToParquet(
           out.toDF("event_type", "seq", "n_events", "ewma_milli",
@@ -840,12 +768,7 @@ object EventQueries {
     DeclaredQuery("stream_cusum_alarm",
       (s, dir) => {
         import s.implicits._
-        val stream = streamSession(s).readStream
-          .format(classOf[graft.sources.ReplayStreamSource].getName)
-          .option("path", s"$dir/events.parquet")
-          .option("numBatches", "5")
-          .load()
-        val ds = stream.select(col("event_type")).as[String]
+        val ds = replay(s, dir, "events", 5).select(col("event_type")).as[String]
         val out = graft.streaming.StatefulOps.cusumPerBatch(ds, 450L)(identity)
         graft.streaming.StreamingRouter.drainToParquet(
           out.toDF("event_type", "seq", "n_events", "cusum"), "cusum")
@@ -883,12 +806,7 @@ object EventQueries {
     DeclaredQuery("stream_srm_guard",
       (s, dir) => {
         import s.implicits._
-        val stream = streamSession(s).readStream
-          .format(classOf[graft.sources.ReplayStreamSource].getName)
-          .option("path", s"$dir/events.parquet")
-          .option("numBatches", "3")
-          .load()
-        val arms = stream.select(
+        val arms = replay(s, dir, "events", 3).select(
           graft.relational.Experiment.arm(col("user_id"), "exp1").as("arm"))
           .as[Long]
         val out = graft.streaming.StatefulOps.srmPerBatch(arms)(identity)
@@ -928,12 +846,7 @@ object EventQueries {
     DeclaredQuery("stream_holt_forecast",
       (s, dir) => {
         import s.implicits._
-        val stream = streamSession(s).readStream
-          .format(classOf[graft.sources.ReplayStreamSource].getName)
-          .option("path", s"$dir/events.parquet")
-          .option("numBatches", "5")
-          .load()
-        val ds = stream.select(col("event_type")).as[String]
+        val ds = replay(s, dir, "events", 5).select(col("event_type")).as[String]
         val out = graft.streaming.StatefulOps.holtPerBatch(ds)(identity)
         graft.streaming.StreamingRouter.drainToParquet(
           out.toDF("event_type", "seq", "n_events", "level_milli",
@@ -987,12 +900,7 @@ object EventQueries {
     DeclaredQuery("stream_growth_accounting",
       (s, dir) => {
         import s.implicits._
-        val stream = streamSession(s).readStream
-          .format(classOf[graft.sources.ReplayStreamSource].getName)
-          .option("path", s"$dir/events.parquet")
-          .option("numBatches", "3")
-          .load()
-        val evs = Dsl.normalizeTs(stream)
+        val evs = Dsl.normalizeTs(replay(s, dir, "events", 3))
           .select(col("user_id"),
             expr("unix_micros(ts) div 86400000000").as("eday"))
           .as[(Long, Long)]
@@ -1053,11 +961,7 @@ object EventQueries {
     DeclaredQuery("stream_domain_caps",
       (s, dir) => {
         import s.implicits._
-        val stream = streamSession(s).readStream
-          .format(classOf[graft.sources.ReplayStreamSource].getName)
-          .option("path", s"$dir/events.parquet")
-          .option("numBatches", "3")
-          .load()
+        val stream = replay(s, dir, "events", 3)
         val url = concat(lit("https://www."), col("event_type"), lit("-"),
           when(pmod(col("user_id"), lit(16L)) < 8L, lit("a"))
             .when(pmod(col("user_id"), lit(16L)) < 12L, lit("b"))
@@ -1114,12 +1018,7 @@ object EventQueries {
     DeclaredQuery("stream_active_coverage",
       (s, dir) => {
         import s.implicits._
-        val stream = streamSession(s).readStream
-          .format(classOf[graft.sources.ReplayStreamSource].getName)
-          .option("path", s"$dir/events.parquet")
-          .option("numBatches", "3")
-          .load()
-        val evs = Dsl.normalizeTs(stream)
+        val evs = Dsl.normalizeTs(replay(s, dir, "events", 3))
           .select(col("user_id"), expr("unix_micros(ts) div 1000000").as("sec"))
           .as[(Long, Long)]
         val out = graft.streaming.StatefulOps.coveragePerBatch(evs, 1800L)
@@ -1161,17 +1060,12 @@ object EventQueries {
     DeclaredQuery("stream_observed_batches",
       (s, dir) => {
         import s.implicits._
-        val stream = streamSession(s).readStream
-          .format(classOf[graft.sources.ReplayStreamSource].getName)
-          .option("path", s"$dir/events.parquet")
-          // numBatches (not batchSize) pins the TRIGGER COUNT at every
-          // scale factor: a fixed batchSize metered 13 triggers at sf0.1
-          // (~1.7 s of pure per-trigger constant in the bench) while the
-          // observability semantics — per-batch numInputRows accounting —
-          // need only "several deterministic batches", which 4 is at any sf
-          .option("numBatches", "4")
-          .load()
-        val q = stream.writeStream.format("noop")
+        // numBatches (not batchSize) pins the TRIGGER COUNT at every
+        // scale factor: a fixed batchSize metered 13 triggers at sf0.1
+        // (~1.7 s of pure per-trigger constant in the bench) while the
+        // observability semantics — per-batch numInputRows accounting —
+        // need only "several deterministic batches", which 4 is at any sf
+        val q = replay(s, dir, "events", 4).writeStream.format("noop")
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
         graft.streaming.StreamingRouter.awaitBounded(q)
@@ -1649,12 +1543,7 @@ object EventQueries {
     DeclaredQuery("stream_distinct_kmv",
       (s, dir) => {
         import s.implicits._
-        val stream = streamSession(s).readStream
-          .format(classOf[graft.sources.ReplayStreamSource].getName)
-          .option("path", s"$dir/events.parquet")
-          .option("numBatches", "3")
-          .load()
-        val ds = stream.select(col("event_type"),
+        val ds = replay(s, dir, "events", 3).select(col("event_type"),
           graft.functions.HashFunctions.md5Bits60(
             col("user_id").cast("string")).as("h"))
           .as[(String, Long)]
@@ -1742,12 +1631,7 @@ object EventQueries {
     DeclaredQuery("stream_lateness_profile",
       (s, dir) => {
         import s.implicits._
-        val stream = streamSession(s).readStream
-          .format(classOf[graft.sources.ReplayStreamSource].getName)
-          .option("path", s"$dir/events.parquet")
-          .option("numBatches", "3")
-          .load()
-        val ds = Dsl.normalizeTs(stream)
+        val ds = Dsl.normalizeTs(replay(s, dir, "events", 3))
           .select(col("event_type"),
             (col("ts").cast("long") -
               pmod(graft.functions.HashFunctions.md5Bits60(
@@ -1951,12 +1835,7 @@ object EventQueries {
     DeclaredQuery("stream_value_quantiles",
       (s, dir) => {
         import s.implicits._
-        val stream = streamSession(s).readStream
-          .format(classOf[graft.sources.ReplayStreamSource].getName)
-          .option("path", s"$dir/events.parquet")
-          .option("numBatches", "3")
-          .load()
-        val ds = stream.select(col("event_type"),
+        val ds = replay(s, dir, "events", 3).select(col("event_type"),
           expr("CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)").as("cents"))
           .as[(String, Long)]
         val out = graft.streaming.StatefulOps.ddsketchPerBatch(ds)

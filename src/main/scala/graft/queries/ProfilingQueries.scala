@@ -679,21 +679,11 @@ object ProfilingQueries {
     // over on it.
     DeclaredQuery("stream_hot_keys",
       (s, dir) => {
-        val stream = streamSession(s).readStream
-          .format(classOf[graft.sources.ReplayStreamSource].getName)
-          .option("path", s"$dir/events.parquet")
-          .option("numBatches", "2")
-          .load()
-        val evs = Dsl.normalizeTs(stream)
+        val evs = Dsl.normalizeTs(replay(s, dir, "events", 2))
         val counts = graft.streaming.StreamingRouter.windowedCounts(
           evs, "ts", watermark = "2 hours", size = "1 hour", slide = "1 hour",
           "user_id")
-        val name = "stream_hotkeys_" + java.lang.Long.toHexString(System.nanoTime())
-        val q = counts.writeStream.format("memory").queryName(name)
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete())
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        val hourly = graft.streaming.StreamingRouter.drainMemoryToLocal(q, name)
+        val hourly = graft.streaming.StreamingRouter.drainComplete(counts, "stream_hotkeys")
           .select(col("window.start").cast("timestamp_ntz").as("hour"),
             col("user_id"), col("n"))
         // r16 (guide §2.4): rank, hour totals, and key counts all ride ONE

@@ -32,13 +32,7 @@ object StatefulOps {
     * bound.
     */
   def firstOccurrences[T: Encoder](ds: Dataset[T])(key: T => String): Dataset[T] =
-    ds.groupByKey(key)(Encoders.STRING)
-      .flatMapGroupsWithState[Boolean, T](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (_: String, rows: Iterator[T], state: GroupState[Boolean]) =>
-          if (state.exists) Iterator.empty
-          else { state.update(true); rows.take(1) }
-      }
+    firstOccurrenceBy(ds)(key, (a, _) => a)
 
   /** Deterministic cross-batch first occurrence: within each micro-batch
     * the per-key rows reduce through `better` (a total order's min), and
@@ -82,20 +76,6 @@ object StatefulOps {
           }
       }
 
-  /** Per-key streaming CUSUM over micro-batch volumes — the
-    * [[graft.relational.Changepoint]] alarm running INSIDE the stream,
-    * exactly as Page intended it (a sequential test): state per key is
-    * the running excess sum P and its minimum, three longs, and each
-    * trigger folds that batch's count in and emits (key, seq, n_events,
-    * cusum) — S = P − min(0, min P), the same closed form the batch twin
-    * uses, so a bounded replay's output is batch-SQL-replayable row for
-    * row. `allowance` is the expected per-batch rate (the textbook
-    * streaming CUSUM runs against a FIXED reference rate — there is no
-    * "global mean" in an unbounded stream).
-    *
-    * State is O(1) per key forever — no TTL needed; keys are enum-like
-    * routing types in the gated use.
-    */
   /** Per-key streaming dyadic EWMA over micro-batch volumes — the
     * [[graft.relational.Ewma]] control chart running INSIDE the stream:
     * state per key is (seq, S) where S is the λ = 1/2 dyadic numerator
@@ -333,6 +313,20 @@ object StatefulOps {
       }
   }
 
+  /** Per-key streaming CUSUM over micro-batch volumes — the
+    * [[graft.relational.Changepoint]] alarm running INSIDE the stream,
+    * exactly as Page intended it (a sequential test): state per key is
+    * the running excess sum P and its minimum, three longs, and each
+    * trigger folds that batch's count in and emits (key, seq, n_events,
+    * cusum) — S = P − min(0, min P), the same closed form the batch twin
+    * uses, so a bounded replay's output is batch-SQL-replayable row for
+    * row. `allowance` is the expected per-batch rate (the textbook
+    * streaming CUSUM runs against a FIXED reference rate — there is no
+    * "global mean" in an unbounded stream).
+    *
+    * State is O(1) per key forever — no TTL needed; keys are enum-like
+    * routing types in the gated use.
+    */
   def cusumPerBatch[T](ds: Dataset[T], allowance: Long)(
       key: T => String): Dataset[(String, Long, Long, Long)] = {
     implicit val outEnc: Encoder[(String, Long, Long, Long)] =

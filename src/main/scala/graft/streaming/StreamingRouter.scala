@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.Row
 import graft.routing.Router
 
@@ -75,7 +75,7 @@ object StreamingRouter {
         .coalesce(filesPerBatch)
         .write.mode("append").parquet(outDir)
     }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpointDir)
       .start()
     awaitBounded(q)
@@ -91,22 +91,52 @@ object StreamingRouter {
     * ordinary batch SQL over the sink, the same pattern as
     * [[drainRoutedToParquet]].
     */
-  def drainToParquet(df: DataFrame, tag: String): DataFrame = {
+  def drainToParquet(df: DataFrame, tag: String): DataFrame =
+    df.sparkSession.read.parquet(drainToTemp(tag) { (sinkDir, ckpt) =>
+      awaitBounded(df.writeStream.format("parquet")
+        .option("path", sinkDir)
+        .option("checkpointLocation", ckpt)
+        .outputMode(OutputMode.Append())
+        .trigger(Trigger.AvailableNow())
+        .start())
+    })
+
+  /** [[drainRoutedToParquet]] into a fresh temp sink; returns the sink
+    * directory for the caller to read back in whichever session it runs
+    * its batch SQL.
+    */
+  def drainRoutedToTemp(stream: DataFrame, config: Router.Config,
+                        keepCols: Seq[String], tag: String): String =
+    drainToTemp(tag)(drainRoutedToParquet(stream, config, keepCols, _, _))
+
+  /** Run `drain(sinkDir, checkpointDir)` under a fresh temp root and return
+    * the sink directory. Frames over the sink read it lazily, so the only
+    * safe delete point is JVM exit (deleteOnExit runs in reverse
+    * registration order, so the top-down walk removes files before their
+    * dirs).
+    */
+  private def drainToTemp(tag: String)(drain: (String, String) => Unit): String = {
     val root = java.nio.file.Files.createTempDirectory(s"graft_stream_$tag")
     val sinkDir = root.resolve("sink").toString
-    val ckpt = root.resolve("ckpt").toString
-    val q = df.writeStream.format("parquet")
-      .option("path", sinkDir)
-      .option("checkpointLocation", ckpt)
-      .outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    awaitBounded(q)
-    // the returned frame reads the sink lazily; only safe delete point is
-    // JVM exit (deleteOnExit runs in reverse registration order, so the
-    // top-down walk removes files before their dirs)
+    drain(sinkDir, root.resolve("ckpt").toString)
     java.nio.file.Files.walk(root).forEach(p => p.toFile.deleteOnExit())
-    df.sparkSession.read.parquet(sinkDir)
+    sinkDir
+  }
+
+  /** Drain an answer-sized aggregate through a Complete-mode memory sink
+    * under a query name unique to this call (Verify, Bench and the specs
+    * run a query repeatedly in one session), and return its final result
+    * as a local relation (see [[drainMemoryToLocal]]). With
+    * `Trigger.AvailableNow` the last emission is the full deterministic
+    * result; Append would hold back every window newer than the final
+    * watermark.
+    */
+  def drainComplete(df: DataFrame, tag: String): DataFrame = {
+    val name = s"${tag}_" + java.lang.Long.toHexString(System.nanoTime())
+    drainMemoryToLocal(df.writeStream.format("memory").queryName(name)
+      .outputMode(OutputMode.Complete())
+      .trigger(Trigger.AvailableNow())
+      .start(), name)
   }
 
   /** Drain a bounded Complete-mode memory-sink query and hand back its final

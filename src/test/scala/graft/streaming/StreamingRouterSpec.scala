@@ -85,21 +85,42 @@ class StreamingRouterSpec extends SparkSpec {
     assert(metrics("total_value").asInstanceOf[Double] > 0.0)
   }
 
-  test("metrics listener captures per-batch aggregates, not payloads") {
+  test("recentProgress captures per-batch aggregates, not payloads") {
     implicit val sqlCtx = spark.sqlContext
-    val listener = MetricsListener.attach(spark)
     val input = MemoryStream[Int]
     val q = input.toDF().writeStream.format("memory").queryName("metrics_probe")
       .outputMode(OutputMode.Append()).start()
     input.addData(1 to 100: _*)
     q.processAllAvailable()
     q.stop()
-    spark.streams.removeListener(listener)
-    // listener events are async — wait briefly for delivery
-    val deadline = System.currentTimeMillis() + 10000
-    while (listener.batches.isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(100)
-    assert(listener.batches.exists(b => b.inputRows === 100L),
-      s"expected a 100-row batch in ${listener.batches}")
+    // the query's own progress buffer is filled before processAllAvailable
+    // returns, so no listener and no wait for async delivery
+    val rows = q.recentProgress.map(_.numInputRows).toSeq
+    assert(rows.contains(100L), s"expected a 100-row batch in $rows")
+  }
+
+  test("Dsl.replay delivers every row in numBatches non-empty triggers") {
+    val stream = graft.queries.Dsl.replay(spark, sf0001, "events", 3)
+    val q = stream.writeStream.format("noop")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    StreamingRouter.awaitBounded(q)
+    val rows = q.recentProgress.map(_.numInputRows).filter(_ > 0L).toSeq
+    assert(rows.size === 3, s"expected 3 non-empty triggers, got $rows")
+    assert(rows.sum === 1000L, "every fixture row replayed exactly once")
+  }
+
+  test("drainComplete twice in one session: equal rows, no temp view left") {
+    val counts = graft.queries.Dsl.replay(spark, sf0001, "events", 2)
+      .groupBy(col("event_type")).agg(count(lit(1)).as("n"))
+    def drain() = StreamingRouter.drainComplete(counts, "drain_twice")
+      .as[(String, Long)].collect().toSet
+    val first = drain()
+    assert(first.toSeq.map(_._2).sum === 1000L)
+    assert(drain() === first)
+    // the memory sink's view lives in the replay clone's catalog
+    val views = counts.sparkSession.catalog.listTables().collect()
+      .map(_.name).filter(_.startsWith("drain_twice"))
+    assert(views.isEmpty, s"memory-sink views left behind: ${views.toSeq}")
   }
 
   test("windowed counts with watermark drop late rows") {
