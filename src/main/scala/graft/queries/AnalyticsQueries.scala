@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import Dsl._
+import OracleSql._
 
 /** Round-6 event-analytics + training-order additions: ordered funnel
   * conversion (O41), event transition matrix (O42), distribution-drift
@@ -21,7 +22,7 @@ object AnalyticsQueries {
         .conversion(events(s, dir), "user_id", "event_type", "ts",
           Seq("view", "click", "purchase"))
         .orderBy(col("stage_idx")),
-      Some("""WITH f1 AS (SELECT user_id, MIN(ts) AS t FROM events
+      Some(s"""WITH f1 AS (SELECT user_id, MIN(ts) AS t FROM events
                  WHERE event_type = 'view' GROUP BY 1),
         f2 AS (SELECT e.user_id, MIN(e.ts) AS t FROM events e
                JOIN f1 ON e.user_id = f1.user_id
@@ -29,14 +30,7 @@ object AnalyticsQueries {
         f3 AS (SELECT e.user_id, MIN(e.ts) AS t FROM events e
                JOIN f2 ON e.user_id = f2.user_id
                WHERE e.event_type = 'purchase' AND e.ts >= f2.t GROUP BY 1),
-        c AS (SELECT CAST(1 AS BIGINT) AS stage_idx, 'view' AS stage,
-                COUNT(*) AS n_users FROM f1
-              UNION ALL SELECT 2, 'click', COUNT(*) FROM f2
-              UNION ALL SELECT 3, 'purchase', COUNT(*) FROM f3)
-        SELECT stage_idx, stage, n_users,
-          (1000 * n_users) // (SELECT n_users FROM c WHERE stage_idx = 1)
-            AS conv_permille
-        FROM c ORDER BY stage_idx""")),
+        $funnelReport""")),
 
     // O41 with conversion windows: each transition must land within 2 h of
     // the previous frontier (earliest-in-window becomes the next anchor).
@@ -45,7 +39,7 @@ object AnalyticsQueries {
         .conversion(events(s, dir), "user_id", "event_type", "ts",
           Seq("view", "click", "purchase"), maxGapSeconds = Some(7200L))
         .orderBy(col("stage_idx")),
-      Some("""WITH f1 AS (SELECT user_id, MIN(ts) AS t FROM events
+      Some(s"""WITH f1 AS (SELECT user_id, MIN(ts) AS t FROM events
                  WHERE event_type = 'view' GROUP BY 1),
         f2 AS (SELECT e.user_id, MIN(e.ts) AS t FROM events e
                JOIN f1 ON e.user_id = f1.user_id
@@ -55,14 +49,7 @@ object AnalyticsQueries {
                JOIN f2 ON e.user_id = f2.user_id
                WHERE e.event_type = 'purchase' AND e.ts >= f2.t
                  AND e.ts <= f2.t + INTERVAL 2 HOUR GROUP BY 1),
-        c AS (SELECT CAST(1 AS BIGINT) AS stage_idx, 'view' AS stage,
-                COUNT(*) AS n_users FROM f1
-              UNION ALL SELECT 2, 'click', COUNT(*) FROM f2
-              UNION ALL SELECT 3, 'purchase', COUNT(*) FROM f3)
-        SELECT stage_idx, stage, n_users,
-          (1000 * n_users) // (SELECT n_users FROM c WHERE stage_idx = 1)
-            AS conv_permille
-        FROM c ORDER BY stage_idx""")),
+        $funnelReport""")),
 
     // ---- O42: event transition matrix -------------------------------------
     // Per-user next-event pairs (deterministic (ts, event_id) order), row
@@ -164,30 +151,11 @@ object AnalyticsQueries {
           size(split(col("text"), " ")).cast("long").as("y"))
         graft.relational.Correlation.spearman(d, "x", "y")
       },
-      Some("""WITH d AS (SELECT CAST(n_chars AS BIGINT) AS x,
+      Some(s"""WITH d AS (SELECT CAST(n_chars AS BIGINT) AS x,
                CAST(length(text) - length(replace(text, ' ', '')) + 1
                  AS BIGINT) AS y
              FROM documents),
-        gx AS (SELECT x AS v, CAST(COUNT(*) AS BIGINT) AS c FROM d GROUP BY 1),
-        rx AS (SELECT v, 2 * (SUM(c) OVER (ORDER BY v) - c) + c + 1 AS r2
-               FROM gx),
-        gy AS (SELECT y AS v, CAST(COUNT(*) AS BIGINT) AS c FROM d GROUP BY 1),
-        ry AS (SELECT v, 2 * (SUM(c) OVER (ORDER BY v) - c) + c + 1 AS r2
-               FROM gy),
-        j AS (SELECT rx.r2 AS rx, ry.r2 AS ry FROM d
-              JOIN rx ON d.x = rx.v JOIN ry ON d.y = ry.v),
-        a AS (SELECT CAST(COUNT(*) AS HUGEINT) AS n,
-                CAST(SUM(rx) AS HUGEINT) AS sx,
-                CAST(SUM(ry) AS HUGEINT) AS sy,
-                CAST(SUM(rx * rx) AS HUGEINT) AS sxx,
-                CAST(SUM(ry * ry) AS HUGEINT) AS syy,
-                CAST(SUM(rx * ry) AS HUGEINT) AS sxy
-              FROM j)
-        SELECT CAST(n AS BIGINT) AS n,
-          CAST(n * sxy - sx * sy AS DOUBLE) /
-            (sqrt(CAST(n * sxx - sx * sx AS DOUBLE)) *
-              sqrt(CAST(n * syy - sy * sy AS DOUBLE))) AS spearman_rho
-        FROM a""")),
+        $spearmanRho""")),
 
     // ---- O87: A-Priori frequent pairs --------------------------------------
     // Co-purchase mining on lineitem baskets: the frequent-item cut runs
@@ -753,7 +721,7 @@ object AnalyticsQueries {
     DeclaredQuery("leadlag_click_purchase",
       (s, dir) => graft.relational.Autocorr.dailyXcf(
         events(s, dir), "ts", "event_type", "click", "purchase", maxLag = 7),
-      Some("""WITH d AS (SELECT CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day,
+      Some(s"""WITH d AS (SELECT CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day,
                  event_type AS t
                FROM events WHERE event_type IN ('click', 'purchase')),
         c AS (SELECT day,
@@ -763,18 +731,7 @@ object AnalyticsQueries {
         lg AS (SELECT l.i AS lag, cc.day + l.i AS dk, cc.a AS x
                FROM c cc CROSS JOIN range(-7, 8) l(i)),
         p AS (SELECT lag, x, b2.b AS y FROM lg JOIN c b2 ON b2.day = lg.dk),
-        s AS (SELECT lag, CAST(COUNT(*) AS HUGEINT) AS n,
-                CAST(SUM(x) AS HUGEINT) AS sx, CAST(SUM(y) AS HUGEINT) AS sy,
-                CAST(SUM(x * x) AS HUGEINT) AS sxx,
-                CAST(SUM(y * y) AS HUGEINT) AS syy,
-                CAST(SUM(x * y) AS HUGEINT) AS sxy
-              FROM p GROUP BY 1)
-        SELECT CAST(lag AS BIGINT) AS lag, CAST(n AS BIGINT) AS n_pairs,
-          CASE WHEN (n * sxx - sx * sx) > 0 AND (n * syy - sy * sy) > 0 THEN
-            CAST(n * sxy - sx * sy AS DOUBLE) /
-              (sqrt(CAST(n * sxx - sx * sx AS DOUBLE)) *
-                sqrt(CAST(n * syy - sy * sy AS DOUBLE)))
-          ELSE NULL END AS xcf
+        $lagCorrelation AS xcf
         FROM s ORDER BY lag""")),
 
     // ---- O123: Kendall τ-b signal agreement --------------------------------
@@ -1429,14 +1386,11 @@ object AnalyticsQueries {
         events(s, dir), "user_id",
         col("event_type") === "purchase" &&
           expr("CAST(value AS DECIMAL(12,2)) > 200"), salt = "exp1"),
-      Some("""WITH u AS (SELECT user_id AS u,
-                 MAX(CASE WHEN event_type = 'purchase'
-                   AND CAST(value AS DECIMAL(12,2)) > 200
-                   THEN 1 ELSE 0 END) AS converted
+      Some(s"""WITH u AS (SELECT user_id AS u,
+                 $converted
                FROM events GROUP BY 1),
         a AS (SELECT u, converted,
-                CAST(('0x' || substring(md5('exp1:' || CAST(u AS VARCHAR)), 1, 15))
-                  AS BIGINT) % 2 AS arm
+                ${md5Bits60("'exp1:' || CAST(u AS VARCHAR)")} % 2 AS arm
               FROM u),
         t AS (SELECT
                 CAST(SUM(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
@@ -1482,7 +1436,7 @@ object AnalyticsQueries {
           .select("arm", "x", "y")
         graft.relational.Experiment.cupedAdjustedLift(per)
       },
-      Some("""WITH pu AS (SELECT user_id,
+      Some(s"""WITH pu AS (SELECT user_id,
                  CAST(SUM(CASE WHEN CAST(ts AS DATE) <= DATE '2024-01-15'
                    THEN 1 ELSE 0 END) AS BIGINT) AS x,
                  CAST(SUM(CASE WHEN CAST(ts AS DATE) > DATE '2024-01-15'
@@ -1490,8 +1444,7 @@ object AnalyticsQueries {
                    THEN CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)
                    ELSE 0 END) AS BIGINT) AS y
                FROM events GROUP BY 1),
-        a AS (SELECT CAST(('0x' || substring(md5('exp1:' || CAST(user_id AS VARCHAR)), 1, 15))
-                AS BIGINT) % 2 AS arm, x, y FROM pu),
+        a AS (SELECT ${md5Bits60("'exp1:' || CAST(user_id AS VARCHAR)")} % 2 AS arm, x, y FROM pu),
         g AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(x) AS BIGINT) AS sx,
                 CAST(SUM(y) AS BIGINT) AS sy,
                 SUM(CAST(x AS HUGEINT) * x) AS sxx,
@@ -1546,7 +1499,7 @@ object AnalyticsQueries {
             col("y"))
         graft.relational.Experiment.postStratifiedLift(per)
       },
-      Some("""WITH pu AS (SELECT user_id,
+      Some(s"""WITH pu AS (SELECT user_id,
                  CAST(SUM(CASE WHEN CAST(ts AS DATE) <= DATE '2024-01-15'
                    THEN 1 ELSE 0 END) AS BIGINT) AS x,
                  CAST(SUM(CASE WHEN CAST(ts AS DATE) > DATE '2024-01-15'
@@ -1554,8 +1507,7 @@ object AnalyticsQueries {
                    THEN CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)
                    ELSE 0 END) AS BIGINT) AS y
                FROM events GROUP BY 1),
-        a AS (SELECT CAST(('0x' || substring(md5('exp1:' || CAST(user_id AS VARCHAR)), 1, 15))
-                AS BIGINT) % 2 AS arm,
+        a AS (SELECT ${md5Bits60("'exp1:' || CAST(user_id AS VARCHAR)")} % 2 AS arm,
                 LEAST(GREATEST(x // 10, 2), 4) AS s, y FROM pu),
         bs AS (SELECT s, CAST(COUNT(*) AS BIGINT) AS n_s,
                  CAST(SUM(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_sa,
@@ -1600,14 +1552,13 @@ object AnalyticsQueries {
           .select(col("cluster"), col("arm"), col("y"))
         graft.relational.Experiment.clusterRandomizedLift(per)
       },
-      Some("""WITH pu AS (SELECT user_id,
+      Some(s"""WITH pu AS (SELECT user_id,
                  CAST(SUM(CASE WHEN event_type = 'purchase'
                    THEN CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)
                    ELSE 0 END) AS BIGINT) AS y
                FROM events GROUP BY 1),
         cu AS (SELECT user_id // 20 AS cluster, y,
-                CAST(('0x' || substring(md5('clu:' || CAST(user_id // 20 AS VARCHAR)), 1, 15))
-                  AS BIGINT) % 2 AS arm
+                ${md5Bits60("'clu:' || CAST(user_id // 20 AS VARCHAR)")} % 2 AS arm
               FROM pu),
         bc AS (SELECT cluster, arm, CAST(COUNT(*) AS BIGINT) AS n_c,
                  CAST(SUM(y) AS BIGINT) AS sy_c
@@ -1644,10 +1595,9 @@ object AnalyticsQueries {
         "user_id", "event_id",
         expr("CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)"),
         salt = "exp1"),
-      Some("""WITH e AS (SELECT CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS v,
+      Some(s"""WITH e AS (SELECT CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS v,
                  event_id,
-                 CAST(('0x' || substring(md5('exp1:' || CAST(user_id AS VARCHAR)), 1, 15))
-                   AS BIGINT) % 2 AS arm
+                 ${md5Bits60("'exp1:' || CAST(user_id AS VARCHAR)")} % 2 AS arm
                FROM events WHERE event_type = 'purchase'),
         r AS (SELECT arm, v,
                 ROW_NUMBER() OVER (PARTITION BY arm ORDER BY v, event_id) AS rn,
@@ -1673,9 +1623,8 @@ object AnalyticsQueries {
     DeclaredQuery("hash_uniformity_audit",
       (s, dir) => graft.relational.Experiment.hashUniformityAudit(
         events(s, dir), "user_id", salt = "exp1"),
-      Some("""WITH u AS (SELECT DISTINCT user_id AS u FROM events),
-        bc AS (SELECT CAST(('0x' || substring(md5('exp1:' || CAST(u AS VARCHAR)), 1, 15))
-                 AS BIGINT) % 16 AS b, CAST(COUNT(*) AS BIGINT) AS o
+      Some(s"""WITH u AS (SELECT DISTINCT user_id AS u FROM events),
+        bc AS (SELECT ${md5Bits60("'exp1:' || CAST(u AS VARCHAR)")} % 16 AS b, CAST(COUNT(*) AS BIGINT) AS o
                FROM u GROUP BY 1),
         f AS (SELECT r.range AS b, COALESCE(bc.o, 0) AS o
               FROM range(16) r LEFT JOIN bc ON bc.b = r.range),
@@ -1744,14 +1693,11 @@ object AnalyticsQueries {
         col("event_type") === "purchase" &&
           expr("CAST(value AS DECIMAL(12,2)) > 200"),
         salt = "exp1", targetLiftPermille = 50L),
-      Some("""WITH u AS (SELECT user_id AS u,
-                 MAX(CASE WHEN event_type = 'purchase'
-                   AND CAST(value AS DECIMAL(12,2)) > 200
-                   THEN 1 ELSE 0 END) AS converted
+      Some(s"""WITH u AS (SELECT user_id AS u,
+                 $converted
                FROM events GROUP BY 1),
         a AS (SELECT u, converted,
-                CAST(('0x' || substring(md5('exp1:' || CAST(u AS VARCHAR)), 1, 15))
-                  AS BIGINT) % 2 AS arm
+                ${md5Bits60("'exp1:' || CAST(u AS VARCHAR)")} % 2 AS arm
               FROM u),
         g AS (SELECT
                 CAST(SUM(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
@@ -1785,25 +1731,19 @@ object AnalyticsQueries {
         col("event_type") === "purchase" &&
           expr("CAST(value AS DECIMAL(12,2)) > 200"),
         "ts", salt = "exp1").orderBy(col("look")),
-      Some("""WITH b AS (SELECT (MIN(epoch_us(ts)) + MAX(epoch_us(ts))) // 2 AS mid
+      Some(s"""WITH b AS (SELECT (MIN(epoch_us(ts)) + MAX(epoch_us(ts))) // 2 AS mid
                 FROM events),
         u1 AS (SELECT user_id AS u,
-                 MAX(CASE WHEN event_type = 'purchase'
-                   AND CAST(value AS DECIMAL(12,2)) > 200
-                   THEN 1 ELSE 0 END) AS converted
+                 $converted
                FROM events WHERE epoch_us(ts) < (SELECT mid FROM b)
                GROUP BY 1),
         u2 AS (SELECT user_id AS u,
-                 MAX(CASE WHEN event_type = 'purchase'
-                   AND CAST(value AS DECIMAL(12,2)) > 200
-                   THEN 1 ELSE 0 END) AS converted
+                 $converted
                FROM events GROUP BY 1),
         a1 AS (SELECT converted,
-                 CAST(('0x' || substring(md5('exp1:' || CAST(u AS VARCHAR)), 1, 15))
-                   AS BIGINT) % 2 AS arm FROM u1),
+                 ${md5Bits60("'exp1:' || CAST(u AS VARCHAR)")} % 2 AS arm FROM u1),
         a2 AS (SELECT converted,
-                 CAST(('0x' || substring(md5('exp1:' || CAST(u AS VARCHAR)), 1, 15))
-                   AS BIGINT) % 2 AS arm FROM u2),
+                 ${md5Bits60("'exp1:' || CAST(u AS VARCHAR)")} % 2 AS arm FROM u2),
         g1 AS (SELECT
                  CAST(SUM(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
                  CAST(SUM(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_b,
@@ -1852,10 +1792,9 @@ object AnalyticsQueries {
           .otherwise(graft.relational.Experiment.arm(col("user_id"), "fdr1")),
         critMicroByRank = Seq(6634897L, 5411894L, 4709292L, 4217885L, 3841459L))
         .orderBy(col("bh_rank")),
-      Some("""WITH su AS (SELECT DISTINCT event_type AS segment, user_id AS u,
+      Some(s"""WITH su AS (SELECT DISTINCT event_type AS segment, user_id AS u,
                  CASE WHEN event_type = 'purchase' THEN 0 ELSE
-                   CAST(('0x' || substring(md5('fdr1:' || CAST(user_id AS VARCHAR)), 1, 15))
-                     AS BIGINT) % 2 END AS arm
+                   ${md5Bits60("'fdr1:' || CAST(user_id AS VARCHAR)")} % 2 END AS arm
                FROM events),
         ps AS (SELECT segment,
                  CAST(SUM(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
@@ -1894,13 +1833,12 @@ object AnalyticsQueries {
           .select("arm", "x", "y")
         graft.relational.Experiment.ratioMetricDelta(per)
       },
-      Some("""WITH pu AS (SELECT user_id, CAST(COUNT(*) AS BIGINT) AS x,
+      Some(s"""WITH pu AS (SELECT user_id, CAST(COUNT(*) AS BIGINT) AS x,
                  CAST(SUM(CASE WHEN event_type = 'purchase'
                    THEN CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)
                    ELSE 0 END) AS BIGINT) AS y
                FROM events GROUP BY 1),
-        a AS (SELECT CAST(('0x' || substring(md5('exp1:' || CAST(user_id AS VARCHAR)), 1, 15))
-                AS BIGINT) % 2 AS arm, x, y FROM pu),
+        a AS (SELECT ${md5Bits60("'exp1:' || CAST(user_id AS VARCHAR)")} % 2 AS arm, x, y FROM pu),
         g AS (SELECT
                 CAST(SUM(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
                 CAST(SUM(CASE WHEN arm = 0 THEN x ELSE 0 END) AS BIGINT) AS sx_a,
@@ -1951,10 +1889,9 @@ object AnalyticsQueries {
         "user_id", "event_id",
         expr("CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)"),
         salt = "exp1", capPermille = 950L),
-      Some("""WITH e AS (SELECT CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS v,
+      Some(s"""WITH e AS (SELECT CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS v,
                  event_id,
-                 CAST(('0x' || substring(md5('exp1:' || CAST(user_id AS VARCHAR)), 1, 15))
-                   AS BIGINT) % 2 AS arm
+                 ${md5Bits60("'exp1:' || CAST(user_id AS VARCHAR)")} % 2 AS arm
                FROM events WHERE event_type = 'purchase'),
         r AS (SELECT v, ROW_NUMBER() OVER (ORDER BY v, event_id) AS rn,
                 COUNT(*) OVER () AS n FROM e),

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import Dsl._
+import OracleSql._
 
 /** Round-8 audit wave: spectral/feature statistics and corpus-analysis
   * operators that report on the data rather than transform it — the
@@ -31,12 +32,8 @@ object AuditQueries {
         .upperTriangle(tbl(s, dir, "embeddings")
           .filter(size(col("embedding")) === 64), "embedding", dim = 64)
         .orderBy(col("dim_i"), col("dim_j")),
-      Some("""WITH e AS (SELECT list_transform(CAST(embedding AS DOUBLE[]),
-                 x -> CAST(floor(x * 10000) AS BIGINT)) AS q FROM embeddings
-                 WHERE len(embedding) = 64),
-        pos AS (SELECT unnest(range(1, 65)) AS i),
-        p AS (SELECT a.i AS i, b.i AS j, q[a.i] * q[b.i] AS prod
-              FROM e CROSS JOIN pos a CROSS JOIN pos b WHERE a.i <= b.i)
+      Some(s"""WITH $quantizedEmbeddings,
+        $gramProducts
         SELECT CAST(i - 1 AS BIGINT) AS dim_i, CAST(j - 1 AS BIGINT) AS dim_j,
           COUNT(*) AS n, CAST(SUM(prod) AS BIGINT) AS gram
         FROM p GROUP BY 1, 2 ORDER BY 1, 2""")),
@@ -63,12 +60,8 @@ object AuditQueries {
           m$r AS (SELECT MAX(ABS(w)) AS m FROM w$r),
           v$r AS (SELECT i, (1000000 * w) // m AS v FROM w$r CROSS JOIN m$r)"""
         }.mkString(",\n        ")
-        s"""WITH e AS (SELECT list_transform(CAST(embedding AS DOUBLE[]),
-                 x -> CAST(floor(x * 10000) AS BIGINT)) AS q FROM embeddings
-                 WHERE len(embedding) = 64),
-        pos AS (SELECT unnest(range(1, 65)) AS i),
-        p AS (SELECT a.i AS i, b.i AS j, q[a.i] * q[b.i] AS prod
-              FROM e CROSS JOIN pos a CROSS JOIN pos b WHERE a.i <= b.i),
+        s"""WITH $quantizedEmbeddings,
+        $gramProducts,
         gc AS (SELECT i - 1 AS gi, j - 1 AS gj, CAST(SUM(prod) AS HUGEINT) AS g
                FROM p GROUP BY 1, 2),
         gf AS (SELECT gi, gj, g FROM gc
@@ -100,12 +93,8 @@ object AuditQueries {
           m$r AS (SELECT MAX(ABS(w)) AS m FROM w$r),
           v$r AS (SELECT i, (1000000 * w) // m AS v FROM w$r CROSS JOIN m$r)"""
         }.mkString(",\n        ")
-        s"""WITH e AS (SELECT list_transform(CAST(embedding AS DOUBLE[]),
-                 x -> CAST(floor(x * 10000) AS BIGINT)) AS q FROM embeddings
-                 WHERE len(embedding) = 64),
-        pos AS (SELECT unnest(range(1, 65)) AS i),
-        p AS (SELECT a.i AS i, b.i AS j, q[a.i] * q[b.i] AS prod
-              FROM e CROSS JOIN pos a CROSS JOIN pos b WHERE a.i <= b.i),
+        s"""WITH $quantizedEmbeddings,
+        $gramProducts,
         gc AS (SELECT i - 1 AS gi, j - 1 AS gj, CAST(SUM(prod) AS HUGEINT) AS g
                FROM p GROUP BY 1, 2),
         gf AS (SELECT gi, gj, g FROM gc
@@ -131,10 +120,7 @@ object AuditQueries {
     DeclaredQuery("embedding_anisotropy",
       (s, dir) => graft.vector.Anisotropy
         .audit(tbl(s, dir, "embeddings"), "embedding", dim = 64),
-      Some("""WITH e AS (SELECT list_transform(CAST(embedding AS DOUBLE[]),
-                 x -> CAST(floor(x * 10000) AS BIGINT)) AS q FROM embeddings
-                 WHERE len(embedding) = 64),
-        pos AS (SELECT unnest(range(1, 65)) AS i),
+      Some(s"""WITH $quantizedEmbeddings,
         d AS (SELECT pos.i, q[pos.i] AS v FROM e CROSS JOIN pos),
         pd AS (SELECT i, SUM(CAST(v AS HUGEINT)) AS sd,
                  SUM(CAST(v AS HUGEINT) * v) AS sq,
@@ -161,8 +147,7 @@ object AuditQueries {
       (s, dir) => graft.text.Collocations
         .pmiTopPairs(tbl(s, dir, "documents"), "doc_id", "text",
           minCount = 5L, topK = 20),
-      Some("""WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS t,
-               generate_subscripts(string_split(text, ' '), 1) AS pos FROM documents),
+      Some(s"""WITH tok AS (${tokenPositions("t")}),
         u AS (SELECT t, CAST(COUNT(*) AS HUGEINT) AS c FROM tok GROUP BY 1),
         l AS (SELECT doc_id, t, LEAD(t, 1) OVER (PARTITION BY doc_id ORDER BY pos) AS t1 FROM tok),
         b AS (SELECT t AS x, t1 AS y, CAST(COUNT(*) AS HUGEINT) AS c_xy
@@ -205,15 +190,13 @@ object AuditQueries {
           .select(col("cell"), col("n_old"), col("n_new"), col("growth_x_permille"))
           .orderBy(col("cell"))
       },
-      Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      Some(s"""WITH $embeddingsCte,
         seeds AS (SELECT vec_id AS sid, v AS sv FROM e WHERE vec_id < 250
-                  ORDER BY vec_id LIMIT (SELECT 1 << least(16, length(bin(CAST(COUNT(*) AS BIGINT) - 1)) // 2) FROM e WHERE vec_id < 250)),
+                  ORDER BY vec_id LIMIT $scaledNlistSnapshot),
         ass AS (SELECT vec_id, sid, is_old FROM (
             SELECT e.vec_id, s.sid, e.vec_id < 250 AS is_old,
               ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-                list_reduce(list_transform(list_zip(e.v, s.sv), x -> x[1] * x[2]), (a, b) -> a + b)
-                / (sqrt(list_reduce(list_transform(list_zip(e.v, e.v), x -> x[1] * x[2]), (a, b) -> a + b))
-                 * sqrt(list_reduce(list_transform(list_zip(s.sv, s.sv), x -> x[1] * x[2]), (a, b) -> a + b)))
+                ${cosine("e.v", "s.sv")}
                 DESC, s.sid) AS rn
             FROM e CROSS JOIN seeds s) t WHERE rn = 1),
         per AS (SELECT sid AS cell,
@@ -316,7 +299,7 @@ object AuditQueries {
             coalesce(col("r2"), lit(0L)).as("two_hop_reach"))
           .orderBy(col("id"))
       },
-      Some(s"""WITH ${Dsl.knnUndCte},
+      Some(s"""WITH $knnUndCte,
         adj AS (SELECT a AS u, b AS v FROM und
                 UNION ALL SELECT b, a FROM und),
         two AS (SELECT DISTINCT x.u AS id, y.v AS w
@@ -351,7 +334,7 @@ object AuditQueries {
           .select(col("du"), col("dv"))
         graft.relational.Correlation.spearman(pairs, "du", "dv")
       },
-      Some(s"""WITH ${Dsl.knnUndCte},
+      Some(s"""WITH $knnUndCte,
         adj AS (SELECT a AS u, b AS v FROM und
                 UNION ALL SELECT b, a FROM und),
         deg AS (SELECT u AS id, CAST(COUNT(*) AS BIGINT) AS d
@@ -359,26 +342,7 @@ object AuditQueries {
         d AS (SELECT da.d AS x, db.d AS y
               FROM adj JOIN deg da ON adj.u = da.id
               JOIN deg db ON adj.v = db.id),
-        gx AS (SELECT x AS v, CAST(COUNT(*) AS BIGINT) AS c FROM d GROUP BY 1),
-        rx AS (SELECT v, 2 * (SUM(c) OVER (ORDER BY v) - c) + c + 1 AS r2
-               FROM gx),
-        gy AS (SELECT y AS v, CAST(COUNT(*) AS BIGINT) AS c FROM d GROUP BY 1),
-        ry AS (SELECT v, 2 * (SUM(c) OVER (ORDER BY v) - c) + c + 1 AS r2
-               FROM gy),
-        j AS (SELECT rx.r2 AS rx, ry.r2 AS ry FROM d
-              JOIN rx ON d.x = rx.v JOIN ry ON d.y = ry.v),
-        a AS (SELECT CAST(COUNT(*) AS HUGEINT) AS n,
-                CAST(SUM(rx) AS HUGEINT) AS sx,
-                CAST(SUM(ry) AS HUGEINT) AS sy,
-                CAST(SUM(rx * rx) AS HUGEINT) AS sxx,
-                CAST(SUM(ry * ry) AS HUGEINT) AS syy,
-                CAST(SUM(rx * ry) AS HUGEINT) AS sxy
-              FROM j)
-        SELECT CAST(n AS BIGINT) AS n,
-          CAST(n * sxy - sx * sy AS DOUBLE) /
-            (sqrt(CAST(n * sxx - sx * sx AS DOUBLE)) *
-              sqrt(CAST(n * syy - sy * sy AS DOUBLE))) AS spearman_rho
-        FROM a""")),
+        $spearmanRho""")),
 
     // ---- O109: chi-square independence audit -------------------------------
     // Pearson's χ² (1900) between event type and ISO weekday — the
@@ -467,14 +431,9 @@ object AuditQueries {
             coalesce(col("tokens_saved"), lit(0L)).as("tokens_saved"))
           .orderBy(col("threshold_permille"))
       },
-      Some("""WITH tk AS (SELECT doc_id, string_split(text, ' ') AS ts FROM documents),
-        sh AS (SELECT doc_id,
-            list_distinct(list_transform(range(1, len(ts) - 1), i -> array_to_string(list_slice(ts, i, i + 2), ' '))) AS sh
-          FROM tk WHERE len(ts) >= 3),
-        p AS (SELECT a.doc_id AS id1, b.doc_id AS id2,
-            CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) AS inter,
-            CAST(len(a.sh) AS DOUBLE) AS na, CAST(len(b.sh) AS DOUBLE) AS nb
-          FROM sh a JOIN sh b ON a.doc_id < b.doc_id),
+      Some(s"""WITH tk AS (SELECT doc_id, string_split(text, ' ') AS ts FROM documents),
+        $shingleSets,
+        $shinglePairs,
         pj AS (SELECT id1, id2, inter / (na + nb - inter) AS j FROM p
                WHERE inter / (na + nb - inter) >= 0.5),
         thr AS (SELECT 500 + 100 * i AS t FROM range(5) r(i)),
@@ -533,17 +492,11 @@ object AuditQueries {
             coalesce(col("tokens_saved"), lit(0L)).as("tokens_saved"))
           .orderBy(col("threshold_permille"))
       },
-      Some("""WITH d AS (SELECT doc_id, text FROM documents
-          WHERE (CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 15))
-                 AS BIGINT) % 2) = 0),
+      Some(s"""WITH d AS (SELECT doc_id, text FROM documents
+          WHERE (${md5Bits60("CAST(doc_id AS VARCHAR)")} % 2) = 0),
         tk AS (SELECT doc_id, string_split(text, ' ') AS ts FROM d),
-        sh AS (SELECT doc_id,
-            list_distinct(list_transform(range(1, len(ts) - 1), i -> array_to_string(list_slice(ts, i, i + 2), ' '))) AS sh
-          FROM tk WHERE len(ts) >= 3),
-        p AS (SELECT a.doc_id AS id1, b.doc_id AS id2,
-            CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) AS inter,
-            CAST(len(a.sh) AS DOUBLE) AS na, CAST(len(b.sh) AS DOUBLE) AS nb
-          FROM sh a JOIN sh b ON a.doc_id < b.doc_id),
+        $shingleSets,
+        $shinglePairs,
         pj AS (SELECT id1, id2, inter / (na + nb - inter) AS j FROM p
                WHERE inter / (na + nb - inter) >= 0.5),
         thr AS (SELECT 500 + 100 * i AS t FROM range(5) r(i)),
@@ -821,24 +774,13 @@ object AuditQueries {
     DeclaredQuery("daily_count_acf",
       (s, dir) => graft.relational.Autocorr
         .dailyAcf(events(s, dir), "ts", maxLag = 7),
-      Some("""WITH d AS (SELECT CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day
+      Some(s"""WITH d AS (SELECT CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day
                FROM events),
         c AS (SELECT day, CAST(COUNT(*) AS BIGINT) AS c FROM d GROUP BY 1),
         lg AS (SELECT l.i AS lag, a.day + l.i AS dk, a.c AS x
                FROM c a CROSS JOIN range(1, 8) l(i)),
         p AS (SELECT lag, x, b.c AS y FROM lg JOIN c b ON b.day = lg.dk),
-        s AS (SELECT lag, CAST(COUNT(*) AS HUGEINT) AS n,
-                CAST(SUM(x) AS HUGEINT) AS sx, CAST(SUM(y) AS HUGEINT) AS sy,
-                CAST(SUM(x * x) AS HUGEINT) AS sxx,
-                CAST(SUM(y * y) AS HUGEINT) AS syy,
-                CAST(SUM(x * y) AS HUGEINT) AS sxy
-              FROM p GROUP BY 1)
-        SELECT CAST(lag AS BIGINT) AS lag, CAST(n AS BIGINT) AS n_pairs,
-          CASE WHEN (n * sxx - sx * sx) > 0 AND (n * syy - sy * sy) > 0 THEN
-            CAST(n * sxy - sx * sy AS DOUBLE) /
-              (sqrt(CAST(n * sxx - sx * sx AS DOUBLE)) *
-                sqrt(CAST(n * syy - sy * sy AS DOUBLE)))
-          ELSE NULL END AS acf
+        $lagCorrelation AS acf
         FROM s ORDER BY lag""")),
 
     // ---- O119: hash-weight bootstrap CI ------------------------------------
@@ -852,12 +794,12 @@ object AuditQueries {
       (s, dir) => graft.relational.Bootstrap.meanCi(
         events(s, dir), "event_type", "event_id", col("value"),
         replicates = 32),
-      Some("""WITH base AS (SELECT event_type AS g,
+      Some(s"""WITH base AS (SELECT event_type AS g,
                  CAST(event_id AS VARCHAR) AS id,
                  CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS c
                FROM events),
         reps AS (SELECT g, c, r.i AS b,
-                 CAST(('0x' || substring(md5(id || ':' || CAST(r.i AS VARCHAR)), 1, 15)) AS BIGINT) % 3 AS w
+                 ${md5Bits60("id || ':' || CAST(r.i AS VARCHAR)")} % 3 AS w
                FROM base CROSS JOIN range(32) r(i)),
         cell AS (SELECT g, b, CAST(SUM(w) AS BIGINT) AS sw,
                    CAST(SUM(w * c) AS BIGINT) AS swc
@@ -897,40 +839,18 @@ object AuditQueries {
           .select(col("qid").cast("long").as("qid"), col("cid"), col("rank"))
         graft.vector.RankEval.ndcg(exact, approx, k = 10)
       },
-      Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      Some(s"""WITH $embeddingsCte,
         q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 10),
-        xsc AS (SELECT qid, e.vec_id AS cid,
-            list_reduce(list_transform(list_zip(qv, v), x -> x[1] * x[2]), (a, b) -> a + b)
-            / (sqrt(list_reduce(list_transform(list_zip(qv, qv), x -> x[1] * x[2]), (a, b) -> a + b))
-             * sqrt(list_reduce(list_transform(list_zip(v, v), x -> x[1] * x[2]), (a, b) -> a + b))) AS score
-          FROM e CROSS JOIN q WHERE e.vec_id <> qid),
+        ${exactScores("xsc")},
         xt AS MATERIALIZED (SELECT qid, cid, rk FROM (
             SELECT qid, cid, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY score DESC, cid) AS rk
             FROM xsc) t WHERE rk <= 10),
-        seeds AS (SELECT vec_id AS sid, v AS sv FROM e ORDER BY vec_id LIMIT (SELECT 1 << least(16, length(bin(CAST(COUNT(*) AS BIGINT) - 1)) // 2) FROM e)),
-        cass AS (
-          SELECT vec_id, v, sid FROM (
-            SELECT e.vec_id, e.v, s.sid,
-              ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-                list_reduce(list_transform(list_zip(e.v, s.sv), x -> x[1] * x[2]), (a, b) -> a + b)
-                / (sqrt(list_reduce(list_transform(list_zip(e.v, e.v), x -> x[1] * x[2]), (a, b) -> a + b))
-                 * sqrt(list_reduce(list_transform(list_zip(s.sv, s.sv), x -> x[1] * x[2]), (a, b) -> a + b)))
-                DESC, s.sid) AS rn
-            FROM e CROSS JOIN seeds s) t WHERE rn = 1),
-        qass AS (
-          SELECT qid, qv2, sid FROM (
-            SELECT e.vec_id AS qid, e.v AS qv2, s.sid,
-              ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-                list_reduce(list_transform(list_zip(e.v, s.sv), x -> x[1] * x[2]), (a, b) -> a + b)
-                / (sqrt(list_reduce(list_transform(list_zip(e.v, e.v), x -> x[1] * x[2]), (a, b) -> a + b))
-                 * sqrt(list_reduce(list_transform(list_zip(s.sv, s.sv), x -> x[1] * x[2]), (a, b) -> a + b)))
-                DESC, s.sid) AS rn
-            FROM e CROSS JOIN seeds s WHERE e.vec_id < 10) t WHERE rn <= 4),
+        $ivfSeeds,
+        $ivfCass,
+        ${ivfQass("qv2", 10)},
         isc AS (
           SELECT DISTINCT q2.qid, c.vec_id AS cid,
-            list_reduce(list_transform(list_zip(q2.qv2, c.v), x -> x[1] * x[2]), (a, b) -> a + b)
-            / (sqrt(list_reduce(list_transform(list_zip(q2.qv2, q2.qv2), x -> x[1] * x[2]), (a, b) -> a + b))
-             * sqrt(list_reduce(list_transform(list_zip(c.v, c.v), x -> x[1] * x[2]), (a, b) -> a + b))) AS score
+            ${cosine("q2.qv2", "c.v")} AS score
           FROM qass q2 JOIN cass c USING (sid) WHERE c.vec_id <> q2.qid),
         it AS (SELECT qid, cid, rk FROM (
             SELECT qid, cid, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY score DESC, cid) AS rk
@@ -979,8 +899,8 @@ object AuditQueries {
     DeclaredQuery("kmv_distinct_estimate",
       (s, dir) => graft.relational.Kmv.distinctAudit(
         events(s, dir), "event_type", "user_id", k = 64),
-      Some("""WITH h AS (SELECT DISTINCT event_type AS g,
-                 CAST(('0x' || substring(md5(CAST(user_id AS VARCHAR)), 1, 15)) AS BIGINT) AS h
+      Some(s"""WITH h AS (SELECT DISTINCT event_type AS g,
+                 ${md5Bits60("CAST(user_id AS VARCHAR)")} AS h
                FROM events),
         rk AS (SELECT g, h, ROW_NUMBER() OVER (PARTITION BY g ORDER BY h) AS rn
                FROM h),
@@ -1010,8 +930,8 @@ object AuditQueries {
     DeclaredQuery("hll_distinct_estimate",
       (s, dir) => graft.relational.Hll.distinctAudit(
         events(s, dir), "event_type", "user_id"),
-      Some("""WITH h AS (SELECT event_type AS g,
-                 CAST(('0x' || substring(md5(CAST(user_id AS VARCHAR)), 1, 15)) AS BIGINT) AS h
+      Some(s"""WITH h AS (SELECT event_type AS g,
+                 ${md5Bits60("CAST(user_id AS VARCHAR)")} AS h
                FROM events),
         rg AS (SELECT g, h // 18014398509481984 AS r,
                  h % 18014398509481984 AS w
@@ -1019,17 +939,7 @@ object AuditQueries {
         rr AS (SELECT g, r,
                  MAX(CASE WHEN w = 0 THEN 55 ELSE 55 - length(bin(w)) END) AS mj
                FROM rg GROUP BY 1, 2),
-        sm AS (SELECT g,
-                 CAST(SUM(CAST(1 AS BIGINT) << (55 - mj)) +
-                   (64 - COUNT(*)) * (CAST(1 AS BIGINT) << 55) AS BIGINT) AS s,
-                 CAST(64 - COUNT(*) AS BIGINT) AS empty_registers
-               FROM rr GROUP BY 1),
-        ex AS (SELECT g, CAST(COUNT(DISTINCT h) AS BIGINT) AS exact_distinct
-               FROM h GROUP BY 1),
-        est AS (SELECT ex.g, exact_distinct, empty_registers,
-                  CAST((CAST(709 AS HUGEINT) * 4096 * (CAST(1 AS HUGEINT) << 55))
-                    // (1000 * CAST(s AS HUGEINT)) AS BIGINT) AS hll_estimate
-                FROM ex JOIN sm USING (g))
+        $hllEstimate
         SELECT g AS event_type, exact_distinct, empty_registers, hll_estimate,
           hll_estimate <= 160 AND empty_registers > 0 AS small_range,
           CAST((1000 * (hll_estimate - exact_distinct)) // exact_distinct AS BIGINT)
@@ -1060,23 +970,13 @@ object AuditQueries {
           .orderBy(col("g"))
       },
       Some(s"""WITH h AS (SELECT event_type || '|' || CAST(CAST(ts AS DATE) AS VARCHAR) AS g,
-                 CAST(('0x' || substring(md5(CAST(user_id AS VARCHAR)), 1, 15)) AS BIGINT) AS h
+                 ${md5Bits60("CAST(user_id AS VARCHAR)")} AS h
                FROM events),
         rr AS (SELECT g, h // 18014398509481984 AS r,
                  MAX(CASE WHEN h % 18014398509481984 = 0 THEN 55
                      ELSE 55 - length(bin(h % 18014398509481984)) END) AS mj
                FROM h GROUP BY 1, 2),
-        sm AS (SELECT g,
-                 CAST(SUM(CAST(1 AS BIGINT) << (55 - mj)) +
-                   (64 - COUNT(*)) * (CAST(1 AS BIGINT) << 55) AS BIGINT) AS s,
-                 CAST(64 - COUNT(*) AS BIGINT) AS empty_registers
-               FROM rr GROUP BY 1),
-        ex AS (SELECT g, CAST(COUNT(DISTINCT h) AS BIGINT) AS exact_distinct
-               FROM h GROUP BY 1),
-        est AS (SELECT ex.g, exact_distinct, empty_registers,
-                  CAST((CAST(709 AS HUGEINT) * 4096 * (CAST(1 AS HUGEINT) << 55))
-                    // (1000 * CAST(s AS HUGEINT)) AS BIGINT) AS hll_estimate
-                FROM ex JOIN sm USING (g)),
+        $hllEstimate,
         lut(v, lc) AS (VALUES ${graft.relational.Hll.linearCountingValuesSql}),
         jc AS (SELECT est.*,
                  hll_estimate <= 160 AND empty_registers > 0 AS small_range,
@@ -1102,8 +1002,8 @@ object AuditQueries {
     DeclaredQuery("kmv_shard_merge",
       (s, dir) => graft.relational.Kmv.mergeAudit(
         events(s, dir), "event_type", "user_id", k = 64, shards = 4),
-      Some("""WITH h AS (SELECT DISTINCT event_type AS g,
-                 CAST(('0x' || substring(md5(CAST(user_id AS VARCHAR)), 1, 15)) AS BIGINT) AS h
+      Some(s"""WITH h AS (SELECT DISTINCT event_type AS g,
+                 ${md5Bits60("CAST(user_id AS VARCHAR)")} AS h
                FROM events),
         sh AS (SELECT g, h, h % 4 AS shard FROM h),
         ps AS (SELECT g, h FROM (

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import Dsl._
+import OracleSql._
 
 /** Round-6 corpus-curation additions: Gopher repetition rules (O37),
   * eval-benchmark n-gram decontamination (O38), k-center greedy coreset
@@ -83,10 +84,8 @@ object CorpusQueries {
           col("ttr_permille"), col("top_bigram_permille"),
           col("dup_trigram_permille"), col("keep"))
         .orderBy(col("doc_id")),
-      Some("""WITH tok AS (
-          SELECT doc_id, unnest(string_split(text, ' ')) AS t,
-                 generate_subscripts(string_split(text, ' '), 1) AS pos
-          FROM documents),
+      Some(s"""WITH tok AS (
+          ${tokenPositions("t")}),
         l AS (SELECT doc_id, pos, t, LEAD(t, 1) OVER w AS t1, LEAD(t, 2) OVER w AS t2
               FROM tok WINDOW w AS (PARTITION BY doc_id ORDER BY pos)),
         ws AS (SELECT doc_id, COUNT(*) AS n_words,
@@ -124,9 +123,7 @@ object CorpusQueries {
     DeclaredQuery("decontaminate_ngram_overlap",
       (s, dir) => ngramReport(s, dir).orderBy(col("doc_id")),
       Some(s"""WITH tok AS (
-          SELECT doc_id, unnest(string_split(text, ' ')) AS t,
-                 generate_subscripts(string_split(text, ' '), 1) AS pos
-          FROM documents),
+          ${tokenPositions("t")}),
         g0 AS (SELECT doc_id, t, $dkLeads
                FROM tok WINDOW w AS (PARTITION BY doc_id ORDER BY pos)),
         g AS (SELECT DISTINCT doc_id, substring(md5($dkGram), 1, 16) AS fp
@@ -199,9 +196,7 @@ object CorpusQueries {
         }.reduce(_ unionByName _).orderBy(col("threshold_milli"))
       },
       Some(s"""WITH tok AS (
-          SELECT doc_id, unnest(string_split(text, ' ')) AS t,
-                 generate_subscripts(string_split(text, ' '), 1) AS pos
-          FROM documents),
+          ${tokenPositions("t")}),
         g0 AS (SELECT doc_id, t, $dkLeads
                FROM tok WINDOW w AS (PARTITION BY doc_id ORDER BY pos)),
         g AS (SELECT DISTINCT doc_id, substring(md5($dkGram), 1, 16) AS fp
@@ -217,13 +212,11 @@ object CorpusQueries {
                       ELSE (1000 * pd.n_hit) // pd.n_grams >= 200 END AS ngflag
                FROM documents d LEFT JOIN pd ON d.doc_id = pd.doc_id
                WHERE d.doc_id % 10 <> 7),
-        e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+        $embeddingsCte,
         qv AS (SELECT v AS q FROM e WHERE vec_id % 10 = 7),
         cv AS (SELECT vec_id, v FROM e WHERE vec_id % 10 <> 7),
         mx AS (SELECT vec_id AS doc_id,
-            MAX(list_reduce(list_transform(list_zip(v, q), x -> x[1] * x[2]), (a, b) -> a + b)
-              / (sqrt(list_reduce(list_transform(list_zip(v, v), x -> x[1] * x[2]), (a, b) -> a + b))
-               * sqrt(list_reduce(list_transform(list_zip(q, q), x -> x[1] * x[2]), (a, b) -> a + b)))) AS m
+            MAX(${cosine("v", "q")}) AS m
           FROM cv CROSS JOIN qv GROUP BY 1),
         j AS (SELECT ng.doc_id, ng.ngflag, mx.m FROM ng JOIN mx USING (doc_id)),
         one AS (SELECT CAST(900 AS BIGINT) AS threshold_milli,
@@ -263,8 +256,8 @@ object CorpusQueries {
         "n_words", "ttr_permille")
         .select(col("doc_id"), col("n_words"), col("ttr_permille"))
         .orderBy(col("doc_id")),
-      Some("""WITH tok AS (
-          SELECT doc_id, unnest(string_split(text, ' ')) AS t FROM documents),
+      Some(s"""WITH tok AS (
+          $tokenize),
         ws AS (SELECT doc_id, COUNT(*) AS n_words, COUNT(DISTINCT t) AS ndw
                FROM tok GROUP BY 1),
         s AS (SELECT doc_id, n_words, (1000 * ndw) // n_words AS ttr FROM ws),
@@ -306,20 +299,11 @@ object CorpusQueries {
           .select(col("lang"), col("pred"), col("n"), col("recall_permille"))
           .orderBy(col("lang"), col("pred"))
       },
-      Some("""WITH h AS (SELECT doc_id, lang,
-          len(list_filter(string_split(text, ' '), t -> t IN ('the', 'a', 'of', 'and', 'is'))) AS s_en,
-          len(list_filter(string_split(text, ' '), t -> t IN ('el', 'la', 'de', 'que', 'es'))) AS s_es,
-          len(list_filter(string_split(text, ' '), t -> t IN ('le', 'la', 'de', 'et', 'est'))) AS s_fr,
-          len(list_filter(string_split(text, ' '), t -> t IN ('der', 'die', 'das', 'und', 'ist'))) AS s_de,
-          len(list_filter(string_split(text, ' '), t -> t IN ('的', '是', '在', '了', '和'))) AS s_zh
+      Some(s"""WITH h AS (SELECT doc_id, lang,
+          $langScores
         FROM documents),
         p AS (SELECT lang,
-          CASE WHEN greatest(s_en, s_es, s_fr, s_de, s_zh) <= 0 THEN 'und'
-               WHEN s_en = greatest(s_en, s_es, s_fr, s_de, s_zh) THEN 'en'
-               WHEN s_es = greatest(s_en, s_es, s_fr, s_de, s_zh) THEN 'es'
-               WHEN s_fr = greatest(s_en, s_es, s_fr, s_de, s_zh) THEN 'fr'
-               WHEN s_de = greatest(s_en, s_es, s_fr, s_de, s_zh) THEN 'de'
-               ELSE 'zh' END AS pred
+          $langPick
           FROM h),
         c AS (SELECT lang, pred, COUNT(*) AS n FROM p GROUP BY 1, 2),
         t AS (SELECT lang, SUM(n) AS tt FROM c GROUP BY 1)
@@ -426,36 +410,7 @@ object CorpusQueries {
               .otherwise(lit(0L)).as("clustering_permille"))
           .orderBy(col("id"))
       },
-      Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        seeds AS (SELECT vec_id AS sid, v AS sv FROM e ORDER BY vec_id LIMIT (SELECT 1 << least(16, length(bin(CAST(COUNT(*) AS BIGINT) - 1)) // 2) FROM e)),
-        cass AS (
-          SELECT vec_id, v, sid FROM (
-            SELECT e.vec_id, e.v, s.sid,
-              ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-                list_reduce(list_transform(list_zip(e.v, s.sv), x -> x[1] * x[2]), (a, b) -> a + b)
-                / (sqrt(list_reduce(list_transform(list_zip(e.v, e.v), x -> x[1] * x[2]), (a, b) -> a + b))
-                 * sqrt(list_reduce(list_transform(list_zip(s.sv, s.sv), x -> x[1] * x[2]), (a, b) -> a + b)))
-                DESC, s.sid) AS rn
-            FROM e CROSS JOIN seeds s) t WHERE rn = 1),
-        qass AS (
-          SELECT qid, qv, sid FROM (
-            SELECT e.vec_id AS qid, e.v AS qv, s.sid,
-              ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-                list_reduce(list_transform(list_zip(e.v, s.sv), x -> x[1] * x[2]), (a, b) -> a + b)
-                / (sqrt(list_reduce(list_transform(list_zip(e.v, e.v), x -> x[1] * x[2]), (a, b) -> a + b))
-                 * sqrt(list_reduce(list_transform(list_zip(s.sv, s.sv), x -> x[1] * x[2]), (a, b) -> a + b)))
-                DESC, s.sid) AS rn
-            FROM e CROSS JOIN seeds s) t WHERE rn <= 4),
-        scored AS MATERIALIZED (
-          SELECT DISTINCT q.qid, c.vec_id AS cid,
-            list_reduce(list_transform(list_zip(q.qv, c.v), x -> x[1] * x[2]), (a, b) -> a + b)
-            / (sqrt(list_reduce(list_transform(list_zip(q.qv, q.qv), x -> x[1] * x[2]), (a, b) -> a + b))
-             * sqrt(list_reduce(list_transform(list_zip(c.v, c.v), x -> x[1] * x[2]), (a, b) -> a + b))) AS score
-          FROM qass q JOIN cass c USING (sid) WHERE c.vec_id <> q.qid),
-        knn AS MATERIALIZED (SELECT qid, cid FROM (
-            SELECT qid, cid, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY score DESC, cid) AS rk
-            FROM scored) t WHERE rk <= 3),
-        und AS MATERIALIZED (SELECT DISTINCT LEAST(qid, cid) AS a, GREATEST(qid, cid) AS b FROM knn),
+      Some(s"""WITH $knnUndCte,
         tri AS (SELECT e1.a AS x, e1.b AS y, e2.b AS z
                 FROM und e1 JOIN und e2 ON e2.a = e1.b
                 WHERE EXISTS (SELECT 1 FROM und u WHERE u.a = e1.a AND u.b = e2.b)),

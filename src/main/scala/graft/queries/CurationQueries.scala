@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.queries.Dsl._
+import OracleSql._
 import graft.dedup.{Components, Dedup}
 import graft.relational.{HeavyHitters, IntervalJoin, Skew}
 import graft.text.{LineDedup, Packing, Sampling, TextFunctions}
@@ -12,34 +13,6 @@ import graft.text.{LineDedup, Packing, Sampling, TextFunctions}
   * bucketized interval joins. Every query is DuckDB-oracle hash-checked.
   */
 object CurationQueries {
-
-  /** Recursive-CTE connected components over sparse-cosine >= 0.9 edges —
-    * shared by the canonical-doc oracle (mirrors `dedup_components`).
-    */
-  private val componentsCte =
-    """WITH tf AS (
-        SELECT doc_id, t, COUNT(*) AS tf FROM (
-          SELECT doc_id, unnest(string_split(text, ' ')) AS t FROM documents)
-        GROUP BY 1, 2),
-      p AS (SELECT doc_id, CAST(('0x' || substring(md5(t), 1, 15)) AS BIGINT) AS tk, tf FROM tf),
-      dots AS (
-        SELECT a.doc_id AS id1, b.doc_id AS id2, SUM(a.tf * b.tf) AS dot
-        FROM p a JOIN p b USING (tk) WHERE a.doc_id < b.doc_id GROUP BY 1, 2),
-      norms AS (SELECT doc_id, CAST(SUM(tf * tf) AS BIGINT) AS s2 FROM tf GROUP BY 1),
-      pairs AS (
-        SELECT id1, id2 FROM dots
-        JOIN norms n1 ON n1.doc_id = id1
-        JOIN norms n2 ON n2.doc_id = id2
-        WHERE CAST(dot AS DOUBLE) / (sqrt(CAST(n1.s2 AS DOUBLE)) * sqrt(CAST(n2.s2 AS DOUBLE))) >= 0.9),
-      edges AS (SELECT id1 AS src, id2 AS dst FROM pairs
-                UNION ALL SELECT id2, id1 FROM pairs),
-      nodes AS (SELECT DISTINCT doc_id AS id FROM documents),
-      r AS (
-        WITH RECURSIVE rr(id, reach) AS (
-          SELECT id, id FROM nodes
-          UNION
-          SELECT rr.id, e.dst FROM rr JOIN edges e ON e.src = rr.reach)
-        SELECT id, MIN(reach) AS comp FROM rr GROUP BY id)"""
 
   /** Deterministic URL synthesis shared by the O181/O187/O188 domain rows
     * (the fixture has no URL column): subdomain/port/path variation from
@@ -163,7 +136,7 @@ object CurationQueries {
           blocklist = Seq("src3.com", "src7.com"))
           .orderBy(col("domain"))
       },
-      Some("""WITH u AS (SELECT doc_id, text, source, lang,
+      Some(s"""WITH u AS (SELECT doc_id, text, source, lang,
                'https://' ||
                CASE WHEN doc_id % 3 = 0 THEN 'www.'
                     WHEN doc_id % 3 = 1 THEN 'cdn.' ELSE '' END ||
@@ -180,7 +153,7 @@ object CurationQueries {
                 CASE WHEN len(string_split(host, '.')) <= 2 THEN host
                      ELSE string_split(host, '.')[-2] || '.' ||
                           string_split(host, '.')[-1] END AS domain,
-                CAST(('0x' || substring(md5(text), 1, 15)) AS BIGINT) AS fp
+                ${md5Bits60("text")} AS fp
               FROM h),
         r AS (SELECT *, domain IN ('src3.com', 'src7.com') AS blocked,
                 ROW_NUMBER() OVER (PARTITION BY domain ORDER BY doc_id) AS rn
@@ -237,23 +210,8 @@ object CurationQueries {
             expr("(1000L * __sm) div n_docs").as("mean_margin_milli"))
           .orderBy(col("domain"))
       },
-      Some(s"""WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS t
-               FROM documents),
-        lab AS (SELECT doc_id, lang = 'en' AS pos FROM documents),
-        tf AS (SELECT doc_id, t, COUNT(*) AS cnt FROM tok GROUP BY 1, 2),
-        cc AS (SELECT t,
-                 CAST(SUM(CASE WHEN l.pos THEN cnt ELSE 0 END) AS BIGINT) AS cpos,
-                 CAST(SUM(CASE WHEN l.pos THEN 0 ELSE cnt END) AS BIGINT) AS cneg
-               FROM tf JOIN lab l USING (doc_id) GROUP BY t),
-        tot AS (SELECT CAST(SUM(cpos) AS BIGINT) AS tp, CAST(SUM(cneg) AS BIGINT) AS tn,
-                 COUNT(*) AS v FROM cc),
-        wt AS (SELECT t, length(bin((tp + v) // (cpos + 1))) - 1 AS bp,
-                 length(bin((tn + v) // (cneg + 1))) - 1 AS bn
-               FROM cc CROSS JOIN tot),
-        sc AS (SELECT tf.doc_id,
-                 CAST(SUM(cnt * bp) AS BIGINT) AS bits_pos,
-                 CAST(SUM(cnt * bn) AS BIGINT) AS bits_neg
-               FROM tf JOIN wt USING (t) GROUP BY 1),
+      Some(s"""WITH $nbWeights,
+        $nbBits,
         $domainCtes,
         j AS (SELECT dom.domain,
                 sc.bits_neg - sc.bits_pos AS margin,
@@ -289,7 +247,7 @@ object CurationQueries {
       },
       Some(s"""WITH $domainCtes,
         b AS (SELECT doc_id, text, domain,
-                CAST(('0x' || substring(md5(domain), 1, 15)) AS BIGINT) % 10
+                ${md5Bits60("domain")} % 10
                   AS bucket
               FROM dom),
         sp AS (SELECT CASE WHEN bucket < 8 THEN 'train'
@@ -492,7 +450,7 @@ object CurationQueries {
             col("kept_new_docs"),
             col("label_mismatches"))
       },
-      Some(s"""$componentsCte,
+      Some(s"""WITH $dedupComponents,
         $urlVariantCanonCtes,
         iuk AS (SELECT MIN(doc_id) AS doc_id FROM ucanon
                 WHERE doc_id >= 250 GROUP BY c),
@@ -551,9 +509,7 @@ object CurationQueries {
             uc.c AS url_c, md5(d.text) AS fp,
             list_min(list_transform(
               range(1, greatest(len(string_split(d.text, ' ')) - 2, 1) + 1),
-              i -> CAST(('0x' || substring(md5(array_to_string(
-                     list_slice(string_split(d.text, ' '), i, i + 2), ' ')),
-                   1, 15)) AS BIGINT))) AS bk
+              i -> ${md5Bits60("array_to_string(list_slice(string_split(d.text, ' '), i, i + 2), ' ')")})) AS bk
           FROM documents d JOIN ucanon uc USING (doc_id) CROSS JOIN inn),
         iu AS (SELECT *, doc_id > MIN(doc_id) OVER (PARTITION BY url_c)
                  AS url_dup FROM ibase),
@@ -611,10 +567,8 @@ object CurationQueries {
       (s, dir) => LineDedup.dedupStats(tbl(s, dir, "documents"),
         "doc_id", "text", segWords = 3, maxDocs = 2)
         .orderBy(col("doc_id")),
-      Some("""WITH w AS (
-          SELECT doc_id, unnest(string_split(text, ' ')) AS word,
-                 generate_subscripts(string_split(text, ' '), 1) AS pos
-          FROM documents),
+      Some(s"""WITH w AS (
+          ${tokenPositions("word")}),
         seg AS (
           SELECT doc_id, (pos - 1) // 3 AS seg,
                  string_agg(word, ' ' ORDER BY pos) AS seg_text,
@@ -772,10 +726,8 @@ object CurationQueries {
         HeavyHitters.exactHeavyHitters(bigrams, "bigram", k = 900)
           .orderBy(col("bigram"))
       },
-      Some("""WITH w AS (
-          SELECT doc_id, unnest(string_split(text, ' ')) AS word,
-                 generate_subscripts(string_split(text, ' '), 1) AS pos
-          FROM documents),
+      Some(s"""WITH w AS (
+          ${tokenPositions("word")}),
         bg AS (
           SELECT a.word || ' ' || b.word AS bigram
           FROM w a JOIN w b ON b.doc_id = a.doc_id AND b.pos = a.pos + 1),
@@ -799,7 +751,7 @@ object CurationQueries {
           .withColumnRenamed("canonical_score", "canonical_chars")
           .orderBy(col("comp"))
       },
-      Some(componentsCte + """,
+      Some(s"""WITH $dedupComponents,
         j AS (SELECT r.comp, r.id, d.n_chars
               FROM r JOIN documents d ON d.doc_id = r.id),
         rk AS (SELECT comp, id, n_chars,
@@ -874,7 +826,7 @@ object CurationQueries {
             ((-col("__q.nid")) =!= (-col("__l.nid"))).as("picks_differ"))
           .orderBy(col("comp"))
       },
-      Some(componentsCte + """,
+      Some(s"""WITH $dedupComponents,
         lab AS (SELECT doc_id, lang = 'en' AS pos FROM documents),
         cc2 AS (SELECT t,
                   CAST(SUM(CASE WHEN l.pos THEN tf ELSE 0 END) AS BIGINT) AS cpos,
@@ -999,8 +951,8 @@ object CurationQueries {
             col("sum_rank").cast("double") / col("n_tokens").cast("double"))
           .orderBy(col("doc_id"))
       },
-      Some("""WITH w AS (
-          SELECT doc_id, unnest(string_split(text, ' ')) AS t FROM documents),
+      Some(s"""WITH w AS (
+          $tokenize),
         r AS (
           SELECT t, ROW_NUMBER() OVER (ORDER BY COUNT(*) DESC, t) AS rank
           FROM w GROUP BY t)
@@ -1090,10 +1042,8 @@ object CurationQueries {
             min(col("doc_id")).as("first_doc"), max(col("doc_id")).as("last_doc"))
           .orderBy(col("chunk_id"))
       },
-      Some("""WITH w AS (
-          SELECT doc_id, unnest(string_split(text, ' ')) AS word,
-                 generate_subscripts(string_split(text, ' '), 1) AS pos
-          FROM documents),
+      Some(s"""WITH w AS (
+          ${tokenPositions("word")}),
         seg AS (
           SELECT doc_id, (pos - 1) // 3 AS seg,
                  string_agg(word, ' ' ORDER BY pos) AS seg_text,
@@ -1201,14 +1151,13 @@ object CurationQueries {
         tbl(s, dir, "documents"), "doc_id", "text", "source",
         blockWords = 8, minGoodWords = 6)
         .orderBy(col("source")),
-      Some("""WITH w AS (SELECT doc_id, source,
+      Some(s"""WITH w AS (SELECT doc_id, source,
                  unnest(string_split(text, ' ')) AS word,
                  generate_subscripts(string_split(text, ' '), 1) AS pos
                FROM documents),
         blk AS (SELECT doc_id, source, (pos - 1) // 8 AS b,
                   CAST(COUNT(*) AS BIGINT) AS nw,
-                  CAST(SUM(CASE WHEN CAST(('0x' || substring(md5(word), 1, 15))
-                      AS BIGINT) % 5 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS nl
+                  CAST(SUM(CASE WHEN ${md5Bits60("word")} % 5 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS nl
                 FROM w GROUP BY 1, 2, 3),
         cls AS (SELECT doc_id, source, b, nw,
                   CASE WHEN 2 * nl >= nw THEN 0
@@ -1258,8 +1207,7 @@ object CurationQueries {
           FROM documents),
         hs AS MATERIALIZED (SELECT DISTINCT id,
             unnest(list_distinct(list_transform(range(1, len(ts) - 1),
-              i -> CAST(('0x' || substring(md5(array_to_string(
-                list_slice(ts, i, i + 2), ' ')), 1, 15)) AS BIGINT)))) AS key
+              i -> ${md5Bits60("array_to_string( list_slice(ts, i, i + 2), ' ')")}))) AS key
           FROM tk WHERE len(ts) >= 3),
         $rounds,
         u AS ($union)

@@ -14,8 +14,8 @@ final case class DeclaredQuery(
     fn: (SparkSession, String) => DataFrame,
     oracle: Option[String])
 
-/** Shared helpers enforcing the oracle-determinism rules:
-  *
+/** Shared helpers enforcing the oracle-determinism rules (the oracle side
+  * builds its DuckDB text from the [[OracleSql]] fragments):
   *  - money doubles in the test tables are exactly 2-decimal, so casting the
   *    RAW column to DECIMAL(12,2) is unambiguous in both engines; all
   *    arithmetic then stays in exact decimal, and only the final aggregate is
@@ -112,17 +112,6 @@ object Dsl {
       "knn_edges")
   }
 
-  /** DuckDB twin of `Similarity.scaledNlist` over a CTE named `e`:
-    * 2^(⌈log₂ n⌉ div 2) cells — √n within √2, integer-exact in both
-    * engines, = the historical literal 16 at the sf0.01 gate (n = 500).
-    * Interpolate as the LIMIT of every IVF `seeds` CTE so the oracle
-    * derives the cell count from the SAME COUNT(*) the Spark side counts,
-    * instead of pinning a literal that is only right at one scale factor
-    * (the r14 sf1.0 stress finding: fixed nlist makes IVF quadratic).
-    */
-  val sqlScaledNlist: String =
-    "(SELECT 1 << least(16, length(bin(CAST(COUNT(*) AS BIGINT) - 1)) // 2) FROM e)"
-
   /** Symmetrized-distinct view of [[knnEdges]] (a < b canonical order) —
     * the undirected graph the triangle/k-core/LPA kernels run on. Also
     * landed (its input is the landed edge scan, so the distinct runs over
@@ -135,43 +124,6 @@ object Dsl {
         least(col("qid"), col("cid")).as("a"),
         greatest(col("qid"), col("cid")).as("b")).distinct(),
       "knn_und")
-
-  /** DuckDB CTE chain replaying [[knnUndirected]] (IVF nlist=scaledNlist(n) nprobe=4
-    * k=3, cosine, symmetrized-distinct) — the shared oracle prefix for
-    * graph-metric queries over the kNN graph. Interpolate as
-    * `s"WITH ${Dsl.knnUndCte}, ..."`; it ends with the `und(a, b)` CTE.
-    */
-  val knnUndCte: String =
-    """e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        seeds AS (SELECT vec_id AS sid, v AS sv FROM e ORDER BY vec_id LIMIT (SELECT 1 << least(16, length(bin(CAST(COUNT(*) AS BIGINT) - 1)) // 2) FROM e)),
-        cass AS (
-          SELECT vec_id, v, sid FROM (
-            SELECT e.vec_id, e.v, s.sid,
-              ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-                list_reduce(list_transform(list_zip(e.v, s.sv), x -> x[1] * x[2]), (a, b) -> a + b)
-                / (sqrt(list_reduce(list_transform(list_zip(e.v, e.v), x -> x[1] * x[2]), (a, b) -> a + b))
-                 * sqrt(list_reduce(list_transform(list_zip(s.sv, s.sv), x -> x[1] * x[2]), (a, b) -> a + b)))
-                DESC, s.sid) AS rn
-            FROM e CROSS JOIN seeds s) t WHERE rn = 1),
-        qass AS (
-          SELECT qid, qv, sid FROM (
-            SELECT e.vec_id AS qid, e.v AS qv, s.sid,
-              ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-                list_reduce(list_transform(list_zip(e.v, s.sv), x -> x[1] * x[2]), (a, b) -> a + b)
-                / (sqrt(list_reduce(list_transform(list_zip(e.v, e.v), x -> x[1] * x[2]), (a, b) -> a + b))
-                 * sqrt(list_reduce(list_transform(list_zip(s.sv, s.sv), x -> x[1] * x[2]), (a, b) -> a + b)))
-                DESC, s.sid) AS rn
-            FROM e CROSS JOIN seeds s) t WHERE rn <= 4),
-        scored AS MATERIALIZED (
-          SELECT DISTINCT q.qid, c.vec_id AS cid,
-            list_reduce(list_transform(list_zip(q.qv, c.v), x -> x[1] * x[2]), (a, b) -> a + b)
-            / (sqrt(list_reduce(list_transform(list_zip(q.qv, q.qv), x -> x[1] * x[2]), (a, b) -> a + b))
-             * sqrt(list_reduce(list_transform(list_zip(c.v, c.v), x -> x[1] * x[2]), (a, b) -> a + b))) AS score
-          FROM qass q JOIN cass c USING (sid) WHERE c.vec_id <> q.qid),
-        knn AS MATERIALIZED (SELECT qid, cid FROM (
-            SELECT qid, cid, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY score DESC, cid) AS rk
-            FROM scored) t WHERE rk <= 3),
-        und AS MATERIALIZED (SELECT DISTINCT LEAST(qid, cid) AS a, GREATEST(qid, cid) AS b FROM knn)"""
 
   /** The `ts`-normalization above for ANY frame carrying a raw fixture `ts`
     * (the streaming replay source reads the same parquet footers, so its

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types._
 import graft.routing._
 import graft.relational.AsOfJoin
 import Dsl._
+import OracleSql._
 
 /** Event-stream surface: the reference's schema-routing semantics exercised
   * over the `events` table (routing key = `event_type`, payload = `props`
@@ -736,13 +737,7 @@ object EventQueries {
             col("seq") =!= 1L && abs(col("dev_permille")) > 250L)
           .orderBy(col("event_type"), col("seq"))
       },
-      Some("""WITH o AS (SELECT event_type,
-               row_number() OVER (ORDER BY ts, event_id) - 1 AS rn
-             FROM events),
-        n AS (SELECT COUNT(*) AS nn FROM o),
-        c AS (SELECT event_type, rn // ((nn + 2) // 3) AS batch,
-                CAST(COUNT(*) AS BIGINT) AS x
-              FROM o CROSS JOIN n GROUP BY 1, 2),
+      Some(s"""WITH ${batchCounts(3)},
         q AS (SELECT event_type, x,
                 CAST(ROW_NUMBER() OVER (PARTITION BY event_type
                   ORDER BY batch) AS BIGINT) AS seq
@@ -775,13 +770,7 @@ object EventQueries {
           .withColumn("alarm", col("cusum") > 1800L)
           .orderBy(col("event_type"), col("seq"))
       },
-      Some("""WITH o AS (SELECT event_type,
-               row_number() OVER (ORDER BY ts, event_id) - 1 AS rn
-             FROM events),
-        n AS (SELECT COUNT(*) AS nn FROM o),
-        c AS (SELECT event_type, rn // ((nn + 4) // 5) AS batch,
-                CAST(COUNT(*) AS BIGINT) AS x
-              FROM o CROSS JOIN n GROUP BY 1, 2),
+      Some(s"""WITH ${batchCounts(5)},
         p AS (SELECT event_type, batch, x,
                 CAST(ROW_NUMBER() OVER (PARTITION BY event_type
                   ORDER BY batch) AS BIGINT) AS seq,
@@ -814,9 +803,8 @@ object EventQueries {
           out.toDF("seq", "n_a", "n_b", "chi2_micro", "srm_flag"), "srm")
           .orderBy(col("seq"))
       },
-      Some("""WITH o AS (SELECT
-               CAST(('0x' || substring(md5('exp1:' || CAST(user_id AS VARCHAR)), 1, 15))
-                 AS BIGINT) % 2 AS arm,
+      Some(s"""WITH o AS (SELECT
+               ${md5Bits60("'exp1:' || CAST(user_id AS VARCHAR)")} % 2 AS arm,
                row_number() OVER (ORDER BY ts, event_id) - 1 AS rn
              FROM events),
         n AS (SELECT COUNT(*) AS nn FROM o),
@@ -853,13 +841,7 @@ object EventQueries {
             "trend_milli", "forecast_milli"), "holt")
           .orderBy(col("event_type"), col("seq"))
       },
-      Some("""WITH o AS (SELECT event_type,
-               row_number() OVER (ORDER BY ts, event_id) - 1 AS rn
-             FROM events),
-        n AS (SELECT COUNT(*) AS nn FROM o),
-        c AS (SELECT event_type, rn // ((nn + 4) // 5) AS batch,
-                CAST(COUNT(*) AS BIGINT) AS x
-              FROM o CROSS JOIN n GROUP BY 1, 2),
+      Some(s"""WITH ${batchCounts(5)},
         s AS (SELECT event_type, x,
                 CAST(ROW_NUMBER() OVER (PARTITION BY event_type
                   ORDER BY batch) AS BIGINT) AS seq
@@ -1245,9 +1227,8 @@ object EventQueries {
             col("asof_click_id").as("click_id"), col("asof_value").as("click_value"))
           .orderBy(col("event_id"))
       },
-      Some("""SELECT p.event_id, p.user_id, c.event_id AS click_id, c.value AS click_value
-        FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-        ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
+      Some(s"""SELECT p.event_id, p.user_id, c.event_id AS click_id, c.value AS click_value
+        $purchaseAsofClick
           ON p.user_id = c.user_id AND p.ts >= c.ts
         ORDER BY p.event_id""")),
 
@@ -1273,9 +1254,8 @@ object EventQueries {
             col("asof_click_id").as("click_id"), col("asof_value").as("click_value"))
           .orderBy(col("event_id"))
       },
-      Some("""SELECT p.event_id, p.user_id, c.event_id AS click_id, c.value AS click_value
-        FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-        ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
+      Some(s"""SELECT p.event_id, p.user_id, c.event_id AS click_id, c.value AS click_value
+        $purchaseAsofClick
           ON p.user_id = c.user_id AND p.ts >= c.ts
         ORDER BY p.event_id""")),
 
@@ -1295,10 +1275,9 @@ object EventQueries {
             col("asof_click_id").as("click_id"))
           .orderBy(col("event_id"))
       },
-      Some("""SELECT p.event_id, p.user_id,
+      Some(s"""SELECT p.event_id, p.user_id,
           CASE WHEN p.ts - c.ts <= INTERVAL 30 MINUTE THEN c.event_id END AS click_id
-        FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-        ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
+        $purchaseAsofClick
           ON p.user_id = c.user_id AND p.ts >= c.ts
         ORDER BY p.event_id""")),
 
@@ -1318,9 +1297,8 @@ object EventQueries {
             col("asof_click_id").as("click_id"), col("asof_value").as("click_value"))
           .orderBy(col("event_id"))
       },
-      Some("""SELECT p.event_id, p.user_id, c.event_id AS click_id, c.value AS click_value
-        FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-        ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
+      Some(s"""SELECT p.event_id, p.user_id, c.event_id AS click_id, c.value AS click_value
+        $purchaseAsofClick
           ON p.user_id = c.user_id AND p.ts <= c.ts
         ORDER BY p.event_id""")),
 
@@ -1341,9 +1319,8 @@ object EventQueries {
             col("asof_click_id").as("click_id"), col("asof_value").as("click_value"))
           .orderBy(col("event_id"))
       },
-      Some("""SELECT p.event_id, p.user_id, c.event_id AS click_id, c.value AS click_value
-        FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-        ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
+      Some(s"""SELECT p.event_id, p.user_id, c.event_id AS click_id, c.value AS click_value
+        $purchaseAsofClick
           ON p.user_id = c.user_id AND p.ts <= c.ts
         ORDER BY p.event_id""")),
 
@@ -1370,10 +1347,9 @@ object EventQueries {
               col("n_purchases").cast("double")).as("conversion_rate"))
           .orderBy(col("user_id"))
       },
-      Some("""WITH j AS (
+      Some(s"""WITH j AS (
           SELECT p.user_id, p.event_id, p.ts, c.ts AS click_ts
-          FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-          ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
+          $purchaseAsofClick
             ON p.user_id = c.user_id AND p.ts >= c.ts),
         f AS (
           SELECT user_id,
@@ -1552,12 +1528,12 @@ object EventQueries {
           out.toDF("event_type", "seq", "m", "kth_min", "estimate"), "kmv")
           .orderBy(col("event_type"), col("seq"))
       },
-      Some("""WITH o AS (SELECT event_type, user_id,
+      Some(s"""WITH o AS (SELECT event_type, user_id,
                row_number() OVER (ORDER BY ts, event_id) - 1 AS rn
              FROM events),
         nn AS (SELECT COUNT(*) AS cnt FROM o),
         wb AS MATERIALIZED (SELECT event_type,
-              CAST(('0x' || substring(md5(CAST(user_id AS VARCHAR)), 1, 15)) AS BIGINT) AS h,
+              ${md5Bits60("CAST(user_id AS VARCHAR)")} AS h,
               rn // ((cnt + 2) // 3) AS batch
             FROM o CROSS JOIN nn),
         pb AS (SELECT DISTINCT event_type, batch FROM wb),
@@ -1643,13 +1619,13 @@ object EventQueries {
             "max_ts"), "lateness")
           .orderBy(col("event_type"), col("seq"))
       },
-      Some("""WITH o AS (SELECT event_type, ts, event_id,
+      Some(s"""WITH o AS (SELECT event_type, ts, event_id,
                row_number() OVER (ORDER BY ts, event_id) - 1 AS rn
              FROM events),
         nn AS (SELECT COUNT(*) AS cnt FROM o),
         wb AS MATERIALIZED (SELECT event_type,
               CAST(floor(epoch(ts)) AS BIGINT) -
-                (CAST(('0x' || substring(md5(CAST(event_id AS VARCHAR)), 1, 15)) AS BIGINT) % 7200) AS sec,
+                (${md5Bits60("CAST(event_id AS VARCHAR)")} % 7200) AS sec,
               rn // ((cnt + 2) // 3) AS batch
             FROM o CROSS JOIN nn),
         bm AS (SELECT event_type, batch, MAX(sec) AS bmax,
@@ -1769,11 +1745,11 @@ object EventQueries {
             expr("(1000L * (hll_estimate - wau)) div wau").as("err_permille"))
           .orderBy(col("day"))
       },
-      Some("""WITH ud AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day
+      Some(s"""WITH ud AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day
                FROM events),
         mx AS (SELECT MAX(day) AS mxd FROM ud),
         h AS (SELECT day,
-                CAST(('0x' || substring(md5(CAST(user_id AS VARCHAR)), 1, 15)) AS BIGINT) AS h
+                ${md5Bits60("CAST(user_id AS VARCHAR)")} AS h
               FROM ud),
         rg AS (SELECT day, h // 18014398509481984 AS r,
                  MAX(CASE WHEN h % 18014398509481984 = 0 THEN 55

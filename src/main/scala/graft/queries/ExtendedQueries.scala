@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.vector.VectorFunctions
 import Dsl._
+import OracleSql._
 
 /** Second-wave relational coverage: classic TPC-H shapes (cross-nation
   * volume, returned-item revenue), the min-per-group join-back idiom, SQL
@@ -55,8 +56,8 @@ object ExtendedQueries {
             dsum(revenue(col("l_extendedprice"), col("l_discount"))).as("rev"))
           .orderBy(col("cust_nation"), col("supp_nation"))
       },
-      Some("""SELECT n1.n_name AS cust_nation, n2.n_name AS supp_nation, COUNT(*) AS n,
-        CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(12,2)))) AS DOUBLE) AS rev
+      Some(s"""SELECT n1.n_name AS cust_nation, n2.n_name AS supp_nation, COUNT(*) AS n,
+        CAST(SUM($decimalRevenue) AS DOUBLE) AS rev
         FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         JOIN customer ON o_custkey = c_custkey
         JOIN supplier ON l_suppkey = s_suppkey
@@ -77,8 +78,8 @@ object ExtendedQueries {
           .orderBy(col("rev").desc, col("c_custkey"))
           .limit(20)
       },
-      Some("""SELECT c_custkey, c_name,
-        CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(12,2)))) AS DOUBLE) AS rev
+      Some(s"""SELECT c_custkey, c_name,
+        CAST(SUM($decimalRevenue) AS DOUBLE) AS rev
         FROM customer JOIN orders ON c_custkey = o_custkey
         JOIN lineitem ON o_orderkey = l_orderkey
         WHERE l_returnflag = 'R'
@@ -246,8 +247,8 @@ object ExtendedQueries {
           .agg(count(lit(1)).as("n"),
             dsum(revenue(col("l_extendedprice"), col("l_discount"))).as("rev"))
       },
-      Some("""SELECT COUNT(*) AS n,
-        CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(12,2)))) AS DOUBLE) AS rev
+      Some(s"""SELECT COUNT(*) AS n,
+        CAST(SUM($decimalRevenue) AS DOUBLE) AS rev
         FROM lineitem JOIN part ON l_partkey = p_partkey
         WHERE (p_size <= 10 AND l_quantity >= 20 AND l_quantity <= 40)
            OR (p_type = 'small' AND l_discount >= 0.05)
@@ -460,9 +461,9 @@ object ExtendedQueries {
             dsum(revenue(col("l_extendedprice"), col("l_discount"))).as("profit"))
           .orderBy(col("nation"), col("o_year").desc)
       },
-      Some("""SELECT n_name AS nation,
+      Some(s"""SELECT n_name AS nation,
           CAST(EXTRACT(year FROM o_orderdate) AS INT) AS o_year, COUNT(*) AS n,
-          CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(12,2)))) AS DOUBLE) AS profit
+          CAST(SUM($decimalRevenue) AS DOUBLE) AS profit
         FROM lineitem
         JOIN part ON l_partkey = p_partkey
         JOIN supplier ON l_suppkey = s_suppkey
@@ -658,13 +659,11 @@ object ExtendedQueries {
           // keep both engines on exact integral division
           expr("(1000 * CAST(__promo * 10000 AS DECIMAL(38,0))) div " +
             "CAST(__tot * 10000 AS DECIMAL(38,0))").as("promo_permille")),
-      Some("""WITH a AS (SELECT
+      Some(s"""WITH a AS (SELECT
             SUM(CASE WHEN p_type = 'PROMO'
-              THEN CAST(l_extendedprice AS DECIMAL(12,2))
-                * (1 - CAST(l_discount AS DECIMAL(12,2)))
+              THEN $decimalRevenue
               ELSE 0 END) AS promo,
-            SUM(CAST(l_extendedprice AS DECIMAL(12,2))
-              * (1 - CAST(l_discount AS DECIMAL(12,2)))) AS tot
+            SUM($decimalRevenue) AS tot
           FROM lineitem JOIN part ON l_partkey = p_partkey
           WHERE l_shipdate >= TIMESTAMP '1996-09-01'
             AND l_shipdate < TIMESTAMP '1996-10-01')
@@ -695,9 +694,8 @@ object ExtendedQueries {
             col("__rev").cast("double").as("total_revenue"))
           .orderBy(col("s_suppkey"))
       },
-      Some("""WITH rev AS (SELECT l_suppkey,
-            SUM(CAST(l_extendedprice AS DECIMAL(12,2))
-              * (1 - CAST(l_discount AS DECIMAL(12,2)))) AS r
+      Some(s"""WITH rev AS (SELECT l_suppkey,
+            SUM($decimalRevenue) AS r
           FROM lineitem
           WHERE l_shipdate >= TIMESTAMP '1996-01-01'
             AND l_shipdate < TIMESTAMP '1996-04-01'
@@ -749,7 +747,7 @@ object ExtendedQueries {
               "CAST(__tot * 10000 AS DECIMAL(38,0))").as("mkt_share_permille"))
           .orderBy(col("o_year"))
       },
-      Some("""WITH amer AS (SELECT c_custkey FROM customer
+      Some(s"""WITH amer AS (SELECT c_custkey FROM customer
             JOIN nation ON c_nationkey = n_nationkey
             JOIN region ON n_regionkey = r_regionkey
             WHERE r_name = 'AMERICA'),
@@ -757,11 +755,9 @@ object ExtendedQueries {
                JOIN nation ON s_nationkey = n_nationkey),
         f AS (SELECT EXTRACT(year FROM o_orderdate) AS o_year,
                 CASE WHEN sn.sn_name = 'NATION_6'
-                  THEN CAST(l_extendedprice AS DECIMAL(12,2))
-                    * (1 - CAST(l_discount AS DECIMAL(12,2)))
+                  THEN $decimalRevenue
                   ELSE 0 END AS nat_v,
-                CAST(l_extendedprice AS DECIMAL(12,2))
-                  * (1 - CAST(l_discount AS DECIMAL(12,2))) AS tot_v
+                $decimalRevenue AS tot_v
               FROM lineitem
               JOIN part ON l_partkey = p_partkey AND p_type = 'ECONOMY'
               JOIN orders ON l_orderkey = o_orderkey

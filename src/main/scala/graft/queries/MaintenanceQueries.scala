@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import graft.relational.TableMaintenance
 import Dsl._
+import OracleSql._
 
 /** Lakehouse table-maintenance coverage: CDC MERGE/upsert with delete
   * markers, SCD2 effective-dated history, small-file compaction planning,
@@ -220,8 +221,7 @@ object MaintenanceQueries {
         .orderBy(col("shard_old"), col("shard_new")),
       Some {
         def shardExpr(n: Int): String = (0 until n).map { sh =>
-          s"((CAST(('0x' || substring(md5(k || ':$sh'), 1, 15)) AS BIGINT)" +
-            s" // 16) * 16 + $sh)"
+          s"((${md5Bits60(s"k || ':$sh'")} // 16) * 16 + $sh)"
         }.mkString("greatest(", ", ", ") % 16")
         s"""WITH k AS (SELECT DISTINCT CAST(o_orderkey AS VARCHAR) AS k
                FROM orders WHERE o_orderkey IS NOT NULL),
@@ -522,10 +522,8 @@ object MaintenanceQueries {
     DeclaredQuery("table_content_checksum",
       (s, dir) => graft.relational.Checksum.perGroup(
         tbl(s, dir, "documents"), "source", Seq("doc_id", "text")),
-      Some("""SELECT source, CAST(COUNT(*) AS BIGINT) AS n_rows,
-          CAST(SUM(CAST(CAST(('0x' || substring(md5(
-              concat_ws(chr(31), CAST(doc_id AS VARCHAR), text)), 1, 15))
-            AS BIGINT) AS HUGEINT)) AS VARCHAR) AS content_sum
+      Some(s"""SELECT source, CAST(COUNT(*) AS BIGINT) AS n_rows,
+          CAST(SUM(CAST(${md5Bits60("concat_ws(chr(31), CAST(doc_id AS VARCHAR), text)")} AS HUGEINT)) AS VARCHAR) AS content_sum
         FROM documents GROUP BY 1 ORDER BY 1""")),
 
     // ---- O141: functional-dependency audit -----------------------------------

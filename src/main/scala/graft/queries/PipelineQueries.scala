@@ -7,6 +7,7 @@ import graft.dedup.{Dedup, MinHash, SimHash}
 import graft.vector.Similarity
 import graft.multimodal.Multimodal
 import Dsl._
+import OracleSql._
 
 /** LLM-training-data pipeline surface (SURVEY.md §2.9): text analysis,
   * deduplication (exact / bag / MinHash / SimHash / n-gram Jaccard /
@@ -21,14 +22,6 @@ import Dsl._
 object PipelineQueries {
 
   private val stops = Seq("the", "a")
-
-  /** DuckDB oracle for the multi-probe LSH top-k, generated with the exact
-    * hyperplane double literals the Spark side uses (shortest-repr doubles
-    * round-trip, so both engines hold bit-identical planes; bucket bits and
-    * cosine re-ranking are then bitwise-portable folds).
-    */
-  private def sqlDot(vec: String, p: IndexedSeq[Double]): String =
-    s"list_reduce(list_transform(list_zip($vec, [${p.mkString(", ")}]), x -> x[1] * x[2]), (a, b) -> a + b)"
 
   /** Fixed query-term set for the BM25/hybrid retrieval queries (all in the
     * corpus vocabulary).
@@ -136,14 +129,14 @@ object PipelineQueries {
       "clip_scored")
   }
 
-  private def sqlCos(a: String, b: String): String =
-    s"""(list_reduce(list_transform(list_zip($a, $b), x -> x[1] * x[2]), (a, b) -> a + b)
-       | / (sqrt(list_reduce(list_transform(list_zip($a, $a), x -> x[1] * x[2]), (a, b) -> a + b))
-       |  * sqrt(list_reduce(list_transform(list_zip($b, $b), x -> x[1] * x[2]), (a, b) -> a + b))))""".stripMargin
-
+  /** DuckDB oracle for the multi-probe LSH top-k, generated with the exact
+    * hyperplane double literals the Spark side uses (shortest-repr doubles
+    * round-trip, so both engines hold bit-identical planes; bucket bits and
+    * cosine re-ranking are then bitwise-portable folds).
+    */
   private def sqlBucket(numPlanes: Int, dim: Int): String =
     graft.vector.Similarity.hyperplaneValues(numPlanes, dim).zipWithIndex.map {
-      case (p, i) => s"(CASE WHEN ${sqlDot("v", p)} > 0 THEN ${1L << i} ELSE 0 END)"
+      case (p, i) => s"(CASE WHEN ${dot("v", p.mkString("[", ", ", "]"))} > 0 THEN ${1L << i} ELSE 0 END)"
     }.mkString(" + ")
 
   private def sqlProbes(numPlanes: Int): String =
@@ -154,13 +147,11 @@ object PipelineQueries {
     * sums, single division per mean, final assignment profiled per cell.
     */
   private def kmeansOracleSql(k: Int): String = {
-    def dotE(a: String, b: String) =
-      s"list_reduce(list_transform(list_zip($a, $b), x -> x[1] * x[2]), (a, b) -> a + b)"
     def argmin(src: String, cents: String) =
       s"""SELECT vec_id, v, c AS cell FROM (
          |  SELECT $src.vec_id, $src.v, $cents.c, ROW_NUMBER() OVER (PARTITION BY $src.vec_id
-         |    ORDER BY (${dotE(s"$cents.cv", s"$cents.cv")}
-         |              - 2 * ${dotE(s"$src.v", s"$cents.cv")}) ASC, $cents.c) AS rn
+         |    ORDER BY (${dot(s"$cents.cv", s"$cents.cv")}
+         |              - 2 * ${dot(s"$src.v", s"$cents.cv")}) ASC, $cents.c) AS rn
          |  FROM $src CROSS JOIN $cents) t WHERE rn = 1""".stripMargin
     s"""WITH e AS (SELECT vec_id,
        |    list_transform(CAST(embedding AS DOUBLE[]),
@@ -185,24 +176,15 @@ object PipelineQueries {
     * within-cell pairs, recursive-CTE component closure, and the same
     * keep-the-centroid-outlier rule (csim ASC, id tie-break).
     */
-  private def semdedupOracleSql(nlistSql: String, threshold: Double): String =
+  private def semdedupOracleSql(threshold: Double): String =
     s"""WITH e AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |seeds AS (SELECT id AS sid, v AS sv FROM e ORDER BY id LIMIT $nlistSql),
+       |seeds AS (SELECT id AS sid, v AS sv FROM e ORDER BY id LIMIT $scaledNlist),
        |cass AS (SELECT id, v, sid AS cell, csim FROM (
-       |    SELECT e.id, e.v, s.sid, ${sqlCos("e.v", "s.sv")} AS csim,
+       |    SELECT e.id, e.v, s.sid, (${cosine("e.v", "s.sv")}) AS csim,
        |      ROW_NUMBER() OVER (PARTITION BY e.id
-       |        ORDER BY ${sqlCos("e.v", "s.sv")} DESC, s.sid) AS rn
+       |        ORDER BY (${cosine("e.v", "s.sv")}) DESC, s.sid) AS rn
        |    FROM e CROSS JOIN seeds s) t WHERE rn = 1),
-       |pairs AS (SELECT a.id AS id1, b.id AS id2
-       |          FROM cass a JOIN cass b ON a.cell = b.cell AND a.id < b.id
-       |          WHERE ${sqlCos("a.v", "b.v")} >= $threshold),
-       |edges AS (SELECT id1 AS src, id2 AS dst FROM pairs
-       |          UNION ALL SELECT id2, id1 FROM pairs),
-       |r AS (WITH RECURSIVE rr(id, reach) AS (
-       |        SELECT id, id FROM cass
-       |        UNION
-       |        SELECT rr.id, edges.dst FROM rr JOIN edges ON edges.src = rr.reach)
-       |      SELECT id, MIN(reach) AS comp FROM rr GROUP BY id),
+       |${semdedupComponents(threshold)},
        |k AS (SELECT cass.id, cass.cell, r.comp, cass.csim,
        |        ROW_NUMBER() OVER (PARTITION BY r.comp
        |          ORDER BY cass.csim ASC, cass.id) AS krn
@@ -219,8 +201,6 @@ object PipelineQueries {
     * centroid outlier).
     */
   private def semdedupTrainedOracleSql(k: Int, threshold: Double): String = {
-    def dotE(a: String, b: String) =
-      s"list_reduce(list_transform(list_zip($a, $b), x -> x[1] * x[2]), (a, b) -> a + b)"
     s"""WITH e AS (SELECT vec_id AS id,
        |    list_transform(CAST(embedding AS DOUBLE[]),
        |                   x -> CAST(floor(x * 1000000) AS DOUBLE)) AS v
@@ -229,8 +209,8 @@ object PipelineQueries {
        |        FROM e ORDER BY id LIMIT $k),
        |a1 AS (SELECT id, v, c AS cell FROM (
        |    SELECT e.id, e.v, cb0.c, ROW_NUMBER() OVER (PARTITION BY e.id
-       |      ORDER BY (${dotE("cb0.cv", "cb0.cv")}
-       |                - 2 * ${dotE("e.v", "cb0.cv")}) ASC, cb0.c) AS rn
+       |      ORDER BY (${dot("cb0.cv", "cb0.cv")}
+       |                - 2 * ${dot("e.v", "cb0.cv")}) ASC, cb0.c) AS rn
        |    FROM e CROSS JOIN cb0) t WHERE rn = 1),
        |u1 AS (SELECT cell, dim, SUM(x) AS s, COUNT(*) AS n FROM (
        |    SELECT cell, generate_subscripts(v, 1) AS dim, unnest(v) AS x FROM a1) t
@@ -238,20 +218,11 @@ object PipelineQueries {
        |c1 AS (SELECT cell AS sid, list(CAST(s AS DOUBLE) / n ORDER BY dim) AS sv
        |       FROM u1 GROUP BY 1),
        |cass AS (SELECT id, v, sid AS cell, csim FROM (
-       |    SELECT e.id, e.v, s.sid, ${sqlCos("e.v", "s.sv")} AS csim,
+       |    SELECT e.id, e.v, s.sid, (${cosine("e.v", "s.sv")}) AS csim,
        |      ROW_NUMBER() OVER (PARTITION BY e.id
-       |        ORDER BY ${sqlCos("e.v", "s.sv")} DESC, s.sid) AS rn
+       |        ORDER BY (${cosine("e.v", "s.sv")}) DESC, s.sid) AS rn
        |    FROM e CROSS JOIN c1 s) t WHERE rn = 1),
-       |pairs AS (SELECT a.id AS id1, b.id AS id2
-       |          FROM cass a JOIN cass b ON a.cell = b.cell AND a.id < b.id
-       |          WHERE ${sqlCos("a.v", "b.v")} >= $threshold),
-       |edges AS (SELECT id1 AS src, id2 AS dst FROM pairs
-       |          UNION ALL SELECT id2, id1 FROM pairs),
-       |r AS (WITH RECURSIVE rr(id, reach) AS (
-       |        SELECT id, id FROM cass
-       |        UNION
-       |        SELECT rr.id, edges.dst FROM rr JOIN edges ON edges.src = rr.reach)
-       |      SELECT id, MIN(reach) AS comp FROM rr GROUP BY id),
+       |${semdedupComponents(threshold)},
        |kk AS (SELECT cass.id, cass.cell, r.comp, cass.csim,
        |        ROW_NUMBER() OVER (PARTITION BY r.comp
        |          ORDER BY cass.csim ASC, cass.id) AS krn
@@ -266,41 +237,37 @@ object PipelineQueries {
     * probe `nprobe` cells per query, ADC-score only in-cell pairs. Every
     * stage reuses the already-proven ivf/pq oracle fragments.
     */
-  private def ivfPqOracleSql(nlistSql: String, nprobe: Int, m: Int, ncode: Int,
-                             dim: Int, k: Int, maxQid: Int): String = {
+  private def ivfPqOracleSql(nprobe: Int, m: Int, ncode: Int, dim: Int, k: Int,
+                             maxQid: Int): String = {
     val ds = dim / m
     def sl(v: String, j: Int) = s"list_slice($v, ${j * ds + 1}, ${(j + 1) * ds})"
-    def dotE(a: String, b: String) =
-      s"list_reduce(list_transform(list_zip($a, $b), x -> x[1] * x[2]), (a, b) -> a + b)"
     val encCtes = (0 until m).map { j =>
       s"""enc_$j AS (SELECT vec_id, c AS code_$j FROM (
          |  SELECT e.vec_id, cb.c, ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-         |    (${dotE(sl("cb.cv", j), sl("cb.cv", j))}
-         |     - 2 * ${dotE(sl("e.v", j), sl("cb.cv", j))}) ASC, cb.c) AS rn
+         |    (${dot(sl("cb.cv", j), sl("cb.cv", j))}
+         |     - 2 * ${dot(sl("e.v", j), sl("cb.cv", j))}) ASC, cb.c) AS rn
          |  FROM e CROSS JOIN cb) t WHERE rn = 1)""".stripMargin
     }.mkString(",\n")
     val encJoin = (1 until m).foldLeft("enc_0")((acc, j) => s"$acc JOIN enc_$j USING (vec_id)")
     val cbJoins = (0 until m).map(j => s"JOIN cb cb$j ON cb$j.c = x.code_$j").mkString(" ")
-    val scoreExpr = (0 until m).map(j => dotE(sl("q.qv", j), sl(s"cb$j.cv", j))).mkString(" + ")
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |seeds AS (SELECT vec_id AS sid, v AS sv FROM e ORDER BY vec_id LIMIT $nlistSql),
+    val scoreExpr = (0 until m).map(j => dot(sl("q.qv", j), sl(s"cb$j.cv", j))).mkString(" + ")
+    s"""WITH $embeddingsCte,
+       |$ivfSeeds,
        |cb AS (SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS c, v AS cv
        |       FROM e ORDER BY vec_id LIMIT $ncode),
        |cass AS (SELECT vec_id, sid AS cell FROM (
        |    SELECT e.vec_id, s.sid, ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-       |      ${sqlCos("e.v", "s.sv")} DESC, s.sid) AS rn
+       |      (${cosine("e.v", "s.sv")}) DESC, s.sid) AS rn
        |    FROM e CROSS JOIN seeds s) t WHERE rn = 1),
        |$encCtes,
        |x AS (SELECT * FROM cass JOIN ($encJoin) USING (vec_id)),
        |qass AS (SELECT qid, qv, sid AS cell FROM (
        |    SELECT e.vec_id AS qid, e.v AS qv, s.sid, ROW_NUMBER() OVER (PARTITION BY e.vec_id
-       |      ORDER BY ${sqlCos("e.v", "s.sv")} DESC, s.sid) AS rn
+       |      ORDER BY (${cosine("e.v", "s.sv")}) DESC, s.sid) AS rn
        |    FROM e CROSS JOIN seeds s WHERE e.vec_id < $maxQid) t WHERE rn <= $nprobe),
        |sc AS (SELECT q.qid, x.vec_id AS cid, $scoreExpr AS score
        |       FROM qass q JOIN x USING (cell) $cbJoins WHERE x.vec_id <> q.qid),
-       |r AS (SELECT qid, cid, score,
-       |        ROW_NUMBER() OVER (PARTITION BY qid ORDER BY score DESC, cid) AS rk FROM sc)
-       |SELECT qid, rk, cid, score FROM r WHERE rk <= $k ORDER BY qid, rk""".stripMargin
+       |${topK(k)}""".stripMargin
   }
 
   /** DuckDB oracle for PQ/ADC top-k: derives the same deterministic
@@ -312,19 +279,17 @@ object PipelineQueries {
   private def pqOracleSql(m: Int, ncode: Int, dim: Int, k: Int, maxQid: Int): String = {
     val ds = dim / m
     def sl(v: String, j: Int) = s"list_slice($v, ${j * ds + 1}, ${(j + 1) * ds})"
-    def dotE(a: String, b: String) =
-      s"list_reduce(list_transform(list_zip($a, $b), x -> x[1] * x[2]), (a, b) -> a + b)"
     val encCtes = (0 until m).map { j =>
       s"""enc_$j AS (SELECT vec_id, c AS code_$j FROM (
          |  SELECT e.vec_id, cb.c, ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-         |    (${dotE(sl("cb.cv", j), sl("cb.cv", j))}
-         |     - 2 * ${dotE(sl("e.v", j), sl("cb.cv", j))}) ASC, cb.c) AS rn
+         |    (${dot(sl("cb.cv", j), sl("cb.cv", j))}
+         |     - 2 * ${dot(sl("e.v", j), sl("cb.cv", j))}) ASC, cb.c) AS rn
          |  FROM e CROSS JOIN cb) t WHERE rn = 1)""".stripMargin
     }.mkString(",\n")
     val encJoin = (1 until m).foldLeft("enc_0")((acc, j) => s"$acc JOIN enc_$j USING (vec_id)")
     val cbJoins = (0 until m).map(j => s"JOIN cb cb$j ON cb$j.c = x.code_$j").mkString(" ")
-    val scoreExpr = (0 until m).map(j => dotE(sl("q.qv", j), sl(s"cb$j.cv", j))).mkString(" + ")
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+    val scoreExpr = (0 until m).map(j => dot(sl("q.qv", j), sl(s"cb$j.cv", j))).mkString(" + ")
+    s"""WITH $embeddingsCte,
        |cb AS (SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS c, v AS cv
        |       FROM e ORDER BY vec_id LIMIT $ncode),
        |$encCtes,
@@ -332,22 +297,17 @@ object PipelineQueries {
        |q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < $maxQid),
        |sc AS (SELECT q.qid, x.vec_id AS cid, $scoreExpr AS score
        |       FROM x CROSS JOIN q $cbJoins WHERE x.vec_id <> q.qid),
-       |r AS (SELECT qid, cid, score,
-       |        ROW_NUMBER() OVER (PARTITION BY qid ORDER BY score DESC, cid) AS rk FROM sc)
-       |SELECT qid, rk, cid, score FROM r WHERE rk <= $k ORDER BY qid, rk""".stripMargin
+       |${topK(k)}""".stripMargin
   }
 
   private def lshOracleSql(numPlanes: Int, dim: Int, k: Int, maxQid: Int): String =
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+    s"""WITH $embeddingsCte,
        |b AS (SELECT vec_id, v, ${sqlBucket(numPlanes, dim)} AS bucket FROM e),
        |q AS (SELECT vec_id AS qid, v AS qv, unnest([${sqlProbes(numPlanes)}]) AS bucket
        |      FROM b WHERE vec_id < $maxQid),
-       |sc AS (SELECT DISTINCT q.qid, c.vec_id AS cid, ${sqlCos("q.qv", "c.v")} AS score
+       |sc AS (SELECT DISTINCT q.qid, c.vec_id AS cid, (${cosine("q.qv", "c.v")}) AS score
        |       FROM q JOIN b c USING (bucket) WHERE c.vec_id <> q.qid),
-       |r AS (SELECT qid, cid, score,
-       |        ROW_NUMBER() OVER (PARTITION BY qid ORDER BY score DESC, cid) AS rk
-       |      FROM sc)
-       |SELECT qid, rk, cid, score FROM r WHERE rk <= $k ORDER BY qid, rk""".stripMargin
+       |${topK(k)}""".stripMargin
 
   /** DuckDB oracle for the binary-quantization two-stage path: identical
     * sign-bit packing (the same `1L << i` literals, bit 63 = Long.MinValue,
@@ -358,7 +318,7 @@ object PipelineQueries {
     val bits = (0 until dim).map { i =>
       s"(CASE WHEN v[${i + 1}] > 0 THEN CAST(${1L << i} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
     }.mkString(" + ")
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+    s"""WITH $embeddingsCte,
        |c AS (SELECT vec_id, $bits AS code FROM e),
        |q AS (SELECT c.vec_id AS qid, c.code AS qcode, e.v AS qv
        |      FROM c JOIN e USING (vec_id) WHERE c.vec_id < $maxQid),
@@ -367,7 +327,7 @@ object PipelineQueries {
        |        ROW_NUMBER() OVER (PARTITION BY q.qid
        |          ORDER BY bit_count(xor(c.code, q.qcode)), c.vec_id) AS hrk
        |      FROM c CROSS JOIN q WHERE c.vec_id <> q.qid),
-       |rr AS (SELECT h.qid, h.cid, h.ham, ${sqlCos("h.qv", "e.v")} AS score
+       |rr AS (SELECT h.qid, h.cid, h.ham, (${cosine("h.qv", "e.v")}) AS score
        |       FROM h JOIN e ON e.vec_id = h.cid WHERE h.hrk <= $rerank),
        |r AS (SELECT qid, cid, ham, score,
        |        ROW_NUMBER() OVER (PARTITION BY qid ORDER BY score DESC, cid) AS rk FROM rr)
@@ -385,7 +345,7 @@ object PipelineQueries {
       .mkString(" + ")
     s"""WITH tok AS (SELECT DISTINCT doc_id AS id, unnest(string_split(text, ' ')) AS t
        |             FROM documents WHERE doc_id < $maxId),
-       |h AS (SELECT id, CAST(('0x' || substring(md5(t), 1, 15)) AS BIGINT) AS h FROM tok),
+       |h AS (SELECT id, ${md5Bits60("t")} AS h FROM tok),
        |bits AS (SELECT id, COUNT(*) AS n, $sumsSql FROM h GROUP BY id),
        |fp AS (SELECT id, $fpSql AS fp FROM bits)
        |SELECT a.id AS id1, b.id AS id2,
@@ -395,59 +355,15 @@ object PipelineQueries {
        |ORDER BY id1, id2""".stripMargin
   }
 
-  /** DuckDB oracle replaying the PORTABLE MinHash pipeline: identical md5
-    * hex-prefix base hashes, seed mixes, band keys, candidate join, and
-    * inverted-index Jaccard verify (word-3-gram shingles).
-    */
   /** Full-graph component summary closure — shared by dedup_components AND
     * the incremental-merge gate (whose whole claim is that the incremental
     * path reproduces THIS full recompute row for row).
     */
-  /** CTE prefix ending in labels `r(id, comp)` for the 0.9-cosine dedup
-    * graph — shared by the component summary, the incremental-merge gate,
-    * and the cluster-cohesion audit so all replay IDENTICAL clustering.
-    */
-  private val ccLabelsCtes =
-    """WITH tf AS (
-        SELECT doc_id, t, COUNT(*) AS tf FROM (
-          SELECT doc_id, unnest(string_split(text, ' ')) AS t FROM documents)
-        GROUP BY 1, 2),
-      p AS (SELECT doc_id, CAST(('0x' || substring(md5(t), 1, 15)) AS BIGINT) AS tk, tf FROM tf),
-      dots AS (
-        SELECT a.doc_id AS id1, b.doc_id AS id2, SUM(a.tf * b.tf) AS dot
-        FROM p a JOIN p b USING (tk) WHERE a.doc_id < b.doc_id GROUP BY 1, 2),
-      norms AS (SELECT doc_id, CAST(SUM(tf * tf) AS BIGINT) AS s2 FROM tf GROUP BY 1),
-      pairs AS (
-        SELECT id1, id2 FROM dots
-        JOIN norms n1 ON n1.doc_id = id1
-        JOIN norms n2 ON n2.doc_id = id2
-        WHERE CAST(dot AS DOUBLE) / (sqrt(CAST(n1.s2 AS DOUBLE)) * sqrt(CAST(n2.s2 AS DOUBLE))) >= 0.9),
-      edges AS (SELECT id1 AS src, id2 AS dst FROM pairs
-                UNION ALL SELECT id2, id1 FROM pairs),
-      nodes AS (SELECT DISTINCT doc_id AS id FROM documents),
-      r AS (
-        WITH RECURSIVE rr(id, reach) AS (
-          SELECT id, id FROM nodes
-          UNION
-          SELECT rr.id, e.dst FROM rr JOIN edges e ON e.src = rr.reach)
-        SELECT id, MIN(reach) AS comp FROM rr GROUP BY id)"""
-
   private val fullCcSummaryOracleSql =
-    s"""$ccLabelsCtes
+    s"""WITH $dedupComponents
       SELECT comp, COUNT(*) AS n_members, CAST(SUM(id) AS BIGINT) AS id_checksum
       FROM r GROUP BY comp HAVING COUNT(*) > 1 ORDER BY comp"""
 
-  /** WITH-chain through the banded rows `bk(id, band, band_key)` — shared
-    * by the portable pair oracle and the band-diagnostics oracle so both
-    * replay the IDENTICAL md5-derived banding.
-    */
-  /** Deterministic 1-in-`den` doc sample predicate on the md5-60 of the id
-    * — the SAME rows in both engines at any scale, unlike rand()-style
-    * sampling. The audit family's scale path: exact-truth sides that are
-    * corpus-quadratic run on the sample with the predicate documented in
-    * the row, so the audit stays runnable at 100 TB as the audit it
-    * claims to be.
-    */
   /** DuckDB replay of the PerceptualHash stub chain: the 60-cell token grid,
     * aHash (exact 60·c > Σc cross-multiply) and dHash (neighbor gradient,
     * wrap at 59→0) as 0/1 bit LISTS — the oracle never needs the packed
@@ -471,7 +387,7 @@ object PipelineQueries {
       .mkString(", ")
     s"""${if (lead) "WITH " else ""}${q}tk AS (SELECT doc_id AS id, unnest(string_split(text, ' ')) AS t
        |        FROM documents${if (where.isEmpty) "" else s" WHERE $where"}),
-       |${q}h AS (SELECT id, CAST(('0x' || substring(md5(t), 1, 15)) AS BIGINT) % $n AS cell FROM ${q}tk),
+       |${q}h AS (SELECT id, ${md5Bits60("t")} % $n AS cell FROM ${q}tk),
        |${q}g AS (SELECT id, $sums FROM ${q}h GROUP BY id),
        |${q}tt AS (SELECT *, $tot AS tot FROM ${q}g),
        |${q}bits AS (SELECT id, [$dbits] AS db, [$abits] AS ab FROM ${q}tt),
@@ -481,9 +397,20 @@ object PipelineQueries {
        |      FROM ${q}bits x JOIN ${q}bits y ON x.id < y.id)""".stripMargin
   }
 
+  /** Deterministic 1-in-`den` doc sample predicate on the md5-60 of the id
+    * — the SAME rows in both engines at any scale, unlike rand()-style
+    * sampling. The audit family's scale path: exact-truth sides that are
+    * corpus-quadratic run on the sample with the predicate documented in
+    * the row, so the audit stays runnable at 100 TB as the audit it
+    * claims to be.
+    */
   private def sampleWhere(den: Int): String =
-    s"(CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % $den) = 0"
+    s"(${md5Bits60("CAST(doc_id AS VARCHAR)")} % $den) = 0"
 
+  /** WITH-chain through the banded rows `bk(id, band, band_key)` — shared
+    * by the portable pair oracle and the band-diagnostics oracle so both
+    * replay the IDENTICAL md5-derived banding.
+    */
   private def portableBandCtes(k: Int, b: Int, where: String = ""): String = {
     val r = k / b
     // mirrors the Spark side: digest g = md5("g:" || h), mins 2g and 2g+1
@@ -494,7 +421,7 @@ object PipelineQueries {
     }.mkString(",\n")
     val bandSql = (0 until b).map { j =>
       val cat = (j * r until (j + 1) * r).map(i => s"CAST(m$i AS VARCHAR)").mkString(" || ':' || ")
-      s"CAST(('0x' || substring(md5($cat), 1, 15)) AS BIGINT) AS b$j"
+      s"${md5Bits60(cat)} AS b$j"
     }.mkString(",\n")
     val bandUnion = (0 until b)
       .map(j => s"SELECT id, $j AS band, b$j AS band_key FROM bands").mkString(" UNION ALL ")
@@ -503,7 +430,7 @@ object PipelineQueries {
        |sh AS (SELECT id, unnest(list_distinct(list_transform(range(1, len(ts) - 1),
        |         i -> array_to_string(list_slice(ts, i, i + 2), ' ')))) AS s
        |       FROM tk WHERE len(ts) >= 3),
-       |hs AS (SELECT DISTINCT id, CAST(('0x' || substring(md5(s), 1, 15)) AS BIGINT) AS h FROM sh),
+       |hs AS (SELECT DISTINCT id, ${md5Bits60("s")} AS h FROM sh),
        |mins AS (SELECT id, $minsSql FROM hs GROUP BY id),
        |bands AS (SELECT id, $bandSql FROM mins),
        |bk AS ($bandUnion)""".stripMargin
@@ -515,13 +442,9 @@ object PipelineQueries {
     */
   private def nprobeSweepOracleSql(nprobes: Seq[Int], k: Int,
                                    maxQid: Int): String = {
-    def cos(a: String, b: String) =
-      s"""list_reduce(list_transform(list_zip($a, $b), x -> x[1] * x[2]), (a, b) -> a + b)
-         / (sqrt(list_reduce(list_transform(list_zip($a, $a), x -> x[1] * x[2]), (a, b) -> a + b))
-          * sqrt(list_reduce(list_transform(list_zip($b, $b), x -> x[1] * x[2]), (a, b) -> a + b)))"""
     val perNp = nprobes.map { np =>
       s"""sc$np AS (SELECT DISTINCT q.qid, c.vec_id AS cid,
-             ${cos("q.qv", "c.v")} AS score
+             ${cosine("q.qv", "c.v")} AS score
            FROM qass q JOIN cass c USING (sid)
            WHERE q.rn <= $np AND c.vec_id <> q.qid),
         kn$np AS (SELECT qid, cid FROM (
@@ -533,25 +456,20 @@ object PipelineQueries {
             WHERE n.qid = x.qid AND n.cid = x.cid))"""
     }.mkString(",\n        ")
     val union = nprobes.map(np => s"SELECT * FROM row$np").mkString(" UNION ALL ")
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      seeds AS (SELECT vec_id AS sid, v AS sv FROM e ORDER BY vec_id LIMIT ${Dsl.sqlScaledNlist}),
-      cass AS (
-        SELECT vec_id, v, sid FROM (
-          SELECT e.vec_id, e.v, s.sid,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-              ${cos("e.v", "s.sv")} DESC, s.sid) AS rn
-          FROM e CROSS JOIN seeds s) t WHERE rn = 1),
+    s"""WITH $embeddingsCte,
+      $ivfSeeds,
+      $ivfCass,
       qass AS (
         SELECT qid, qv, sid, rn FROM (
           SELECT e.vec_id AS qid, e.v AS qv, s.sid,
             ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-              ${cos("e.v", "s.sv")} DESC, s.sid) AS rn
+              ${cosine("e.v", "s.sv")} DESC, s.sid) AS rn
           FROM e CROSS JOIN seeds s WHERE e.vec_id < $maxQid) t
         WHERE rn <= ${nprobes.max}),
       exact AS MATERIALIZED (SELECT qid, cid FROM (
           SELECT a.vec_id AS qid, b.vec_id AS cid,
             ROW_NUMBER() OVER (PARTITION BY a.vec_id ORDER BY
-              ${cos("a.v", "b.v")} DESC, b.vec_id) AS rk
+              ${cosine("a.v", "b.v")} DESC, b.vec_id) AS rk
           FROM e a CROSS JOIN e b
           WHERE a.vec_id < $maxQid AND b.vec_id <> a.vec_id) t
         WHERE rk <= $k),
@@ -570,10 +488,6 @@ object PipelineQueries {
     * Spark side evaluates.
     */
   private def mmrOracleSql(poolK: Int, select: Int, maxQid: Int): String = {
-    def cos(a: String, b: String) =
-      s"""list_reduce(list_transform(list_zip($a, $b), x -> x[1] * x[2]), (a, b) -> a + b)
-         / (sqrt(list_reduce(list_transform(list_zip($a, $a), x -> x[1] * x[2]), (a, b) -> a + b))
-          * sqrt(list_reduce(list_transform(list_zip($b, $b), x -> x[1] * x[2]), (a, b) -> a + b)))"""
     val rounds = (2 to select).map { r =>
       s"""ms$r AS (SELECT s.qid, s.c1 AS cid, MAX(s.sim) AS ms
            FROM sims s JOIN sel${r - 1} t ON t.qid = s.qid AND t.cid = s.c2
@@ -589,23 +503,11 @@ object PipelineQueries {
           UNION ALL
           SELECT qid, CAST($r AS BIGINT), cid, score FROM pk$r)"""
     }.mkString(",\n        ")
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      seeds AS (SELECT vec_id AS sid, v AS sv FROM e ORDER BY vec_id LIMIT ${Dsl.sqlScaledNlist}),
-      cass AS (
-        SELECT vec_id, v, sid FROM (
-          SELECT e.vec_id, e.v, s.sid,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-              ${cos("e.v", "s.sv")} DESC, s.sid) AS rn
-          FROM e CROSS JOIN seeds s) t WHERE rn = 1),
-      qass AS (
-        SELECT qid, qv, sid FROM (
-          SELECT e.vec_id AS qid, e.v AS qv, s.sid,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-              ${cos("e.v", "s.sv")} DESC, s.sid) AS rn
-          FROM e CROSS JOIN seeds s WHERE e.vec_id < $maxQid) t WHERE rn <= 4),
-      scored AS MATERIALIZED (
-        SELECT DISTINCT q.qid, c.vec_id AS cid, ${cos("q.qv", "c.v")} AS score
-        FROM qass q JOIN cass c USING (sid) WHERE c.vec_id <> q.qid),
+    s"""WITH $embeddingsCte,
+      $ivfSeeds,
+      $ivfCass,
+      ${ivfQass("qv", maxQid)},
+      $ivfScored,
       rr AS (SELECT qid, cid, score,
           ROW_NUMBER() OVER (PARTITION BY qid ORDER BY score DESC, cid) AS rk
         FROM scored),
@@ -613,7 +515,7 @@ object PipelineQueries {
       pv AS (SELECT p.qid, p.cid, p.score, e.v FROM pool p
              JOIN e ON e.vec_id = p.cid),
       sims AS MATERIALIZED (SELECT a.qid, a.cid AS c1, b.cid AS c2,
-          ${cos("a.v", "b.v")} AS sim
+          ${cosine("a.v", "b.v")} AS sim
         FROM pv a JOIN pv b ON a.qid = b.qid AND a.cid <> b.cid),
       sel1 AS (SELECT qid, CAST(1 AS BIGINT) AS mmr_rank, cid, score FROM (
           SELECT qid, cid, score,
@@ -624,6 +526,10 @@ object PipelineQueries {
       ORDER BY qid, mmr_rank"""
   }
 
+  /** DuckDB oracle replaying the PORTABLE MinHash pipeline: identical md5
+    * hex-prefix base hashes, seed mixes, band keys, candidate join, and
+    * inverted-index Jaccard verify (word-3-gram shingles).
+    */
   private def portableMinhashOracleSql(k: Int, b: Int, minJaccard: Double): String = {
     s"""${portableBandCtes(k, b)},
        |cand AS (SELECT DISTINCT a.id AS id1, c.id AS id2
@@ -682,15 +588,15 @@ object PipelineQueries {
   private def lshPairsOracleSql(maxPlanes: Int, dim: Int, threshold: Double): String = {
     val bucketExpr = graft.vector.Similarity.hyperplaneValues(maxPlanes, dim)
       .zipWithIndex.map { case (pl, i) =>
-        s"(CASE WHEN $i < np.p AND ${sqlDot("v", pl)} > 0 THEN ${1L << i} ELSE 0 END)"
+        s"(CASE WHEN $i < np.p AND ${dot("v", pl.mkString("[", ", ", "]"))} > 0 THEN ${1L << i} ELSE 0 END)"
       }.mkString(" + ")
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+    s"""WITH $embeddingsCte,
        |np AS (SELECT least($maxPlanes, length(bin(CAST(COUNT(*) AS BIGINT) - 1)) // 2) AS p FROM e),
        |b AS (SELECT vec_id, v, $bucketExpr AS bucket FROM e CROSS JOIN np),
        |l AS (SELECT vec_id AS id1, v AS v1,
        |        unnest(list_concat([bucket], list_transform(range(0, (SELECT p FROM np)),
        |          i -> xor(bucket, 1 << CAST(i AS INTEGER))))) AS bucket FROM b),
-       |p2 AS (SELECT DISTINCT l.id1, c.vec_id AS id2, ${sqlCos("l.v1", "c.v")} AS score
+       |p2 AS (SELECT DISTINCT l.id1, c.vec_id AS id2, (${cosine("l.v1", "c.v")}) AS score
        |      FROM l JOIN b c USING (bucket) WHERE l.id1 < c.vec_id)
        |SELECT id1, id2, score FROM p2 WHERE score >= $threshold ORDER BY id1, id2""".stripMargin
   }
@@ -945,20 +851,11 @@ object PipelineQueries {
           col("doc_id"), col("lang"), langId(col("text")).as("pred"))
           .orderBy(col("doc_id"))
       },
-      Some("""WITH h AS (SELECT doc_id, lang,
-          len(list_filter(string_split(text, ' '), t -> t IN ('the', 'a', 'of', 'and', 'is'))) AS s_en,
-          len(list_filter(string_split(text, ' '), t -> t IN ('el', 'la', 'de', 'que', 'es'))) AS s_es,
-          len(list_filter(string_split(text, ' '), t -> t IN ('le', 'la', 'de', 'et', 'est'))) AS s_fr,
-          len(list_filter(string_split(text, ' '), t -> t IN ('der', 'die', 'das', 'und', 'ist'))) AS s_de,
-          len(list_filter(string_split(text, ' '), t -> t IN ('的', '是', '在', '了', '和'))) AS s_zh
+      Some(s"""WITH h AS (SELECT doc_id, lang,
+          $langScores
         FROM documents)
         SELECT doc_id, lang,
-          CASE WHEN greatest(s_en, s_es, s_fr, s_de, s_zh) <= 0 THEN 'und'
-               WHEN s_en = greatest(s_en, s_es, s_fr, s_de, s_zh) THEN 'en'
-               WHEN s_es = greatest(s_en, s_es, s_fr, s_de, s_zh) THEN 'es'
-               WHEN s_fr = greatest(s_en, s_es, s_fr, s_de, s_zh) THEN 'fr'
-               WHEN s_de = greatest(s_en, s_es, s_fr, s_de, s_zh) THEN 'de'
-               ELSE 'zh' END AS pred
+          $langPick
         FROM h ORDER BY doc_id""")),
 
     // ---- document fingerprinting: winnowing (rolling-hash selection) ------
@@ -1112,16 +1009,12 @@ object PipelineQueries {
       // the oracle derives the IDENTICAL 60-bit md5-prefix shingle key the
       // Spark index joins on (block cols fused with chr(31)), so the two
       // engines agree even under a hash collision — the portable-key rule
-      Some("""WITH tk AS (SELECT doc_id, source, lang, string_split(text, ' ') AS ts FROM documents),
+      Some(s"""WITH tk AS (SELECT doc_id, source, lang, string_split(text, ' ') AS ts FROM documents),
         sh AS (SELECT doc_id, source, lang,
             list_distinct(list_transform(range(1, len(ts) - 1),
-              i -> CAST(('0x' || substring(md5(source || chr(31) || lang || chr(31) ||
-                   array_to_string(list_slice(ts, i, i + 2), ' ')), 1, 15)) AS BIGINT))) AS sh
+              i -> ${md5Bits60("source || chr(31) || lang || chr(31) || array_to_string(list_slice(ts, i, i + 2), ' ')")})) AS sh
           FROM tk WHERE len(ts) >= 3),
-        p AS (SELECT a.doc_id AS id1, b.doc_id AS id2,
-            CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) AS inter,
-            CAST(len(a.sh) AS DOUBLE) AS na, CAST(len(b.sh) AS DOUBLE) AS nb
-          FROM sh a JOIN sh b ON a.source = b.source AND a.lang = b.lang AND a.doc_id < b.doc_id)
+        $blockedShinglePairs
         SELECT id1, id2, inter / (na + nb - inter) AS jaccard
         FROM p WHERE inter / (na + nb - inter) >= 0.1 ORDER BY id1, id2""")),
 
@@ -1134,16 +1027,12 @@ object PipelineQueries {
       (s, dir) => Dedup.ngramContainmentPairs(tbl(s, dir, "documents"), "doc_id", "text",
         shingleN = 3, blockCols = Seq("source", "lang"), minContainment = 0.3)
         .orderBy(col("id1"), col("id2")),
-      Some("""WITH tk AS (SELECT doc_id, source, lang, string_split(text, ' ') AS ts FROM documents),
+      Some(s"""WITH tk AS (SELECT doc_id, source, lang, string_split(text, ' ') AS ts FROM documents),
         sh AS (SELECT doc_id, source, lang,
             list_distinct(list_transform(range(1, len(ts) - 1),
-              i -> CAST(('0x' || substring(md5(source || chr(31) || lang || chr(31) ||
-                   array_to_string(list_slice(ts, i, i + 2), ' ')), 1, 15)) AS BIGINT))) AS sh
+              i -> ${md5Bits60("source || chr(31) || lang || chr(31) || array_to_string(list_slice(ts, i, i + 2), ' ')")})) AS sh
           FROM tk WHERE len(ts) >= 3),
-        p AS (SELECT a.doc_id AS id1, b.doc_id AS id2,
-            CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) AS inter,
-            CAST(len(a.sh) AS DOUBLE) AS na, CAST(len(b.sh) AS DOUBLE) AS nb
-          FROM sh a JOIN sh b ON a.source = b.source AND a.lang = b.lang AND a.doc_id < b.doc_id)
+        $blockedShinglePairs
         SELECT id1, id2, inter / na AS c12, inter / nb AS c21
         FROM p WHERE GREATEST(inter / na, inter / nb) >= 0.3 ORDER BY id1, id2""")),
 
@@ -1174,11 +1063,10 @@ object PipelineQueries {
             max(col("jaccard")).as("max_jaccard"))
           .orderBy(col("source_a"), col("source_b"))
       },
-      Some("""WITH tk AS (SELECT doc_id, source, lang, string_split(text, ' ') AS ts FROM documents),
+      Some(s"""WITH tk AS (SELECT doc_id, source, lang, string_split(text, ' ') AS ts FROM documents),
         sh AS (SELECT doc_id, source, lang,
             list_distinct(list_transform(range(1, len(ts) - 1),
-              i -> CAST(('0x' || substring(md5(lang || chr(31) ||
-                   array_to_string(list_slice(ts, i, i + 2), ' ')), 1, 15)) AS BIGINT))) AS sh
+              i -> ${md5Bits60("lang || chr(31) || array_to_string(list_slice(ts, i, i + 2), ' ')")})) AS sh
           FROM tk WHERE len(ts) >= 3),
         p AS (SELECT a.source AS sa, b.source AS sb,
             CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) AS inter,
@@ -1215,9 +1103,9 @@ object PipelineQueries {
           .select(col("id1"), col("id2"), col("lang1"), col("lang2"), col("n_shared"))
           .orderBy(col("id1"), col("id2"))
       },
-      Some("""WITH tk AS (SELECT doc_id, lang, string_split(text, ' ') AS ts FROM documents),
+      Some(s"""WITH tk AS (SELECT doc_id, lang, string_split(text, ' ') AS ts FROM documents),
         sh AS (SELECT doc_id, lang, list_distinct(list_transform(range(1, len(ts) - 1),
-            i -> CAST(('0x' || substring(md5(array_to_string(list_slice(ts, i, i + 2), ' ')), 1, 15)) AS BIGINT))) AS sh
+            i -> ${md5Bits60("array_to_string(list_slice(ts, i, i + 2), ' ')")})) AS sh
           FROM tk WHERE len(ts) >= 3),
         p AS (SELECT a.doc_id AS id1, b.doc_id AS id2, a.lang AS lang1, b.lang AS lang2,
             CAST(len(list_intersect(a.sh, b.sh)) AS BIGINT) AS n_shared
@@ -1236,14 +1124,9 @@ object PipelineQueries {
         Dedup.prefixJaccardPairs(tbl(s, dir, "documents"), "doc_id", "text",
           shingleN = 3, minJaccard = 0.5), "sweep_pairs")
         .orderBy(col("id1"), col("id2")),
-      Some("""WITH tk AS (SELECT doc_id, string_split(text, ' ') AS ts FROM documents),
-        sh AS (SELECT doc_id,
-            list_distinct(list_transform(range(1, len(ts) - 1), i -> array_to_string(list_slice(ts, i, i + 2), ' '))) AS sh
-          FROM tk WHERE len(ts) >= 3),
-        p AS (SELECT a.doc_id AS id1, b.doc_id AS id2,
-            CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) AS inter,
-            CAST(len(a.sh) AS DOUBLE) AS na, CAST(len(b.sh) AS DOUBLE) AS nb
-          FROM sh a JOIN sh b ON a.doc_id < b.doc_id)
+      Some(s"""WITH tk AS (SELECT doc_id, string_split(text, ' ') AS ts FROM documents),
+        $shingleSets,
+        $shinglePairs
         SELECT id1, id2, inter / (na + nb - inter) AS jaccard
         FROM p WHERE inter / (na + nb - inter) >= 0.5 ORDER BY id1, id2""")),
 
@@ -1257,17 +1140,10 @@ object PipelineQueries {
           .select(col("qid"), col("rk"), col("cid"), col("score"))
           .orderBy(col("qid"), col("rk"))
       },
-      Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      Some(s"""WITH $embeddingsCte,
         q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 10),
-        sc AS (SELECT qid, e.vec_id AS cid,
-            list_reduce(list_transform(list_zip(qv, v), x -> x[1] * x[2]), (a, b) -> a + b)
-            / (sqrt(list_reduce(list_transform(list_zip(qv, qv), x -> x[1] * x[2]), (a, b) -> a + b))
-             * sqrt(list_reduce(list_transform(list_zip(v, v), x -> x[1] * x[2]), (a, b) -> a + b))) AS score
-          FROM e CROSS JOIN q WHERE e.vec_id <> qid),
-        r AS (SELECT qid, cid, score,
-            ROW_NUMBER() OVER (PARTITION BY qid ORDER BY score DESC, cid) AS rk
-          FROM sc)
-        SELECT qid, rk, cid, score FROM r WHERE rk <= 3 ORDER BY qid, rk""")),
+        ${exactScores("sc")},
+        ${topK(3)}""")),
 
     // ---- O35: Johnson–Lindenstrauss projection + recall ledger ------------
     // The dimensionality cut a 100 TB ANN pipeline makes BEFORE indexing:
@@ -1302,25 +1178,19 @@ object PipelineQueries {
       Some {
         val signs = graft.vector.Projection.rademacherSigns(64, 16, "jl-v1")
         val m = graft.vector.Projection.signsSqlLiteral(signs)
-        s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+        s"""WITH $embeddingsCte,
         p AS (SELECT vec_id, v,
             list_transform($m, row ->
-              list_reduce(list_transform(list_zip(v, row), x -> x[1] * x[2]), (a, b) -> a + b)) AS pv
+              ${dot("v", "row")}) AS pv
           FROM e),
         q AS (SELECT vec_id AS qid, pv AS qp, v AS qv FROM p WHERE vec_id < 10),
         psc AS (SELECT qid, p.vec_id AS cid,
-            list_reduce(list_transform(list_zip(qp, pv), x -> x[1] * x[2]), (a, b) -> a + b)
-            / (sqrt(list_reduce(list_transform(list_zip(qp, qp), x -> x[1] * x[2]), (a, b) -> a + b))
-             * sqrt(list_reduce(list_transform(list_zip(pv, pv), x -> x[1] * x[2]), (a, b) -> a + b))) AS score
+            ${cosine("qp", "pv")} AS score
           FROM p CROSS JOIN q WHERE p.vec_id <> qid),
         pr AS (SELECT qid, cid, score,
             ROW_NUMBER() OVER (PARTITION BY qid ORDER BY score DESC, cid) AS rk
           FROM psc),
-        esc AS (SELECT qid, e.vec_id AS cid,
-            list_reduce(list_transform(list_zip(qv, v), x -> x[1] * x[2]), (a, b) -> a + b)
-            / (sqrt(list_reduce(list_transform(list_zip(qv, qv), x -> x[1] * x[2]), (a, b) -> a + b))
-             * sqrt(list_reduce(list_transform(list_zip(v, v), x -> x[1] * x[2]), (a, b) -> a + b))) AS score
-          FROM e CROSS JOIN q WHERE e.vec_id <> qid),
+        ${exactScores("esc")},
         er AS (SELECT qid, cid,
             ROW_NUMBER() OVER (PARTITION BY qid ORDER BY score DESC, cid) AS rk
           FROM esc),
@@ -1367,35 +1237,7 @@ object PipelineQueries {
         }
         ranks.orderBy(col("id"))
       },
-      Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        seeds AS (SELECT vec_id AS sid, v AS sv FROM e ORDER BY vec_id LIMIT (SELECT 1 << least(16, length(bin(CAST(COUNT(*) AS BIGINT) - 1)) // 2) FROM e)),
-        cass AS (
-          SELECT vec_id, v, sid FROM (
-            SELECT e.vec_id, e.v, s.sid,
-              ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-                list_reduce(list_transform(list_zip(e.v, s.sv), x -> x[1] * x[2]), (a, b) -> a + b)
-                / (sqrt(list_reduce(list_transform(list_zip(e.v, e.v), x -> x[1] * x[2]), (a, b) -> a + b))
-                 * sqrt(list_reduce(list_transform(list_zip(s.sv, s.sv), x -> x[1] * x[2]), (a, b) -> a + b)))
-                DESC, s.sid) AS rn
-            FROM e CROSS JOIN seeds s) t WHERE rn = 1),
-        qass AS (
-          SELECT qid, qv, sid FROM (
-            SELECT e.vec_id AS qid, e.v AS qv, s.sid,
-              ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-                list_reduce(list_transform(list_zip(e.v, s.sv), x -> x[1] * x[2]), (a, b) -> a + b)
-                / (sqrt(list_reduce(list_transform(list_zip(e.v, e.v), x -> x[1] * x[2]), (a, b) -> a + b))
-                 * sqrt(list_reduce(list_transform(list_zip(s.sv, s.sv), x -> x[1] * x[2]), (a, b) -> a + b)))
-                DESC, s.sid) AS rn
-            FROM e CROSS JOIN seeds s) t WHERE rn <= 4),
-        scored AS MATERIALIZED (
-          SELECT DISTINCT q.qid, c.vec_id AS cid,
-            list_reduce(list_transform(list_zip(q.qv, c.v), x -> x[1] * x[2]), (a, b) -> a + b)
-            / (sqrt(list_reduce(list_transform(list_zip(q.qv, q.qv), x -> x[1] * x[2]), (a, b) -> a + b))
-             * sqrt(list_reduce(list_transform(list_zip(c.v, c.v), x -> x[1] * x[2]), (a, b) -> a + b))) AS score
-          FROM qass q JOIN cass c USING (sid) WHERE c.vec_id <> q.qid),
-        knn AS MATERIALIZED (SELECT qid, cid FROM (
-            SELECT qid, cid, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY score DESC, cid) AS rk
-            FROM scored) t WHERE rk <= 3),
+      Some(s"""WITH $knnCte,
         n AS (SELECT vec_id AS id FROM e),
         r0 AS (SELECT id, CAST(1000000 AS BIGINT) AS r FROM n),
         c1 AS (SELECT cid AS id, SUM(r // 3) AS cs FROM knn JOIN r0 ON r0.id = knn.qid GROUP BY 1),
@@ -1446,13 +1288,11 @@ object PipelineQueries {
           .select(col("qid"), col("kind"), col("rk"), col("cid"), col("score"))
           .orderBy(col("qid"), col("kind"), col("rk"))
       },
-      Some("""WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      Some(s"""WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         q AS (SELECT vec_id AS qid, label AS qlab, v AS qv FROM e WHERE vec_id < 8),
         sc AS (SELECT qid, e.vec_id AS cid,
             CASE WHEN e.label = qlab THEN 'pos' ELSE 'neg' END AS kind,
-            list_reduce(list_transform(list_zip(qv, v), x -> x[1] * x[2]), (a, b) -> a + b)
-            / (sqrt(list_reduce(list_transform(list_zip(qv, qv), x -> x[1] * x[2]), (a, b) -> a + b))
-             * sqrt(list_reduce(list_transform(list_zip(v, v), x -> x[1] * x[2]), (a, b) -> a + b))) AS score
+            ${cosine("qv", "v")} AS score
           FROM e CROSS JOIN q WHERE e.vec_id <> qid),
         r AS (SELECT qid, kind, cid, score,
             ROW_NUMBER() OVER (PARTITION BY qid, kind ORDER BY score DESC, cid) AS rk
@@ -1490,7 +1330,7 @@ object PipelineQueries {
           .select(col("qid"), col("rk"), col("vec_id").as("cid"), col("qscore"))
           .orderBy(col("qid"), col("rk"))
       },
-      Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      Some(s"""WITH $embeddingsCte,
         m AS (SELECT vec_id, v, list_max(list_transform(v, x -> abs(x))) AS ma FROM e),
         z AS (SELECT vec_id,
                 list_transform(v, x -> CAST(floor(x / ma * 127) AS DOUBLE)) AS q,
@@ -1498,7 +1338,7 @@ object PipelineQueries {
               FROM m WHERE ma > 0),
         qq AS (SELECT vec_id AS qid, q AS qv, s AS qs FROM z WHERE vec_id < 10),
         sc AS (SELECT qid, z.vec_id AS cid,
-            list_reduce(list_transform(list_zip(qv, q), x -> x[1] * x[2]), (a, b) -> a + b)
+            ${dot("qv", "q")}
               * qs * s AS qscore
           FROM z CROSS JOIN qq WHERE z.vec_id <> qid),
         r AS (SELECT qid, cid, qscore,
@@ -1588,13 +1428,11 @@ object PipelineQueries {
             (col("score") >= 0.9).as("contaminated"))
           .orderBy(col("eval_id"))
       },
-      Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      Some(s"""WITH $embeddingsCte,
         q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 50),
         c AS (SELECT vec_id AS cid, v FROM e WHERE vec_id >= 50),
         sc AS (SELECT qid, cid,
-            list_reduce(list_transform(list_zip(qv, v), x -> x[1] * x[2]), (a, b) -> a + b)
-            / (sqrt(list_reduce(list_transform(list_zip(qv, qv), x -> x[1] * x[2]), (a, b) -> a + b))
-             * sqrt(list_reduce(list_transform(list_zip(v, v), x -> x[1] * x[2]), (a, b) -> a + b))) AS score
+            ${cosine("qv", "v")} AS score
           FROM c CROSS JOIN q),
         r AS (SELECT qid, cid, score,
             ROW_NUMBER() OVER (PARTITION BY qid ORDER BY score DESC, cid) AS rk
@@ -1621,10 +1459,9 @@ object PipelineQueries {
           k = 3, loBand = 0.30, hiBand = 0.45)
           .orderBy(col("qid"), col("rank"))
       },
-      Some(s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-               FROM embeddings),
+      Some(s"""WITH $embeddingsCte,
         q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 20),
-        sc AS (SELECT qid, vec_id AS cid, ${sqlCos("qv", "v")} AS score
+        sc AS (SELECT qid, vec_id AS cid, (${cosine("qv", "v")}) AS score
                FROM e CROSS JOIN q WHERE vec_id <> qid),
         b AS (SELECT qid, cid, score FROM sc
               WHERE score >= 0.30 AND score < 0.45),
@@ -1653,8 +1490,7 @@ object PipelineQueries {
           minAlignMilli = 900L)
           .orderBy(col("source"))
       },
-      Some(s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-               FROM embeddings),
+      Some(s"""WITH $embeddingsCte,
         nn AS (SELECT COUNT(*) AS n FROM e),
         src AS (SELECT vec_id AS id,
                   CASE WHEN vec_id % 10 = 3 THEN (vec_id + 7) % n
@@ -1663,7 +1499,7 @@ object PipelineQueries {
         img AS (SELECT src.id, e2.v AS iv
                 FROM src JOIN e e2 ON e2.vec_id = src.s),
         p AS (SELECT d.source, e.vec_id AS id,
-                CAST(floor(${sqlCos("e.v", "img.iv")} * 1000.0) AS BIGINT)
+                CAST(floor((${cosine("e.v", "img.iv")}) * 1000.0) AS BIGINT)
                   AS a
               FROM e JOIN img ON img.id = e.vec_id
               JOIN documents d ON d.doc_id = e.vec_id)
@@ -1703,8 +1539,7 @@ object PipelineQueries {
             col("flagged_checksum"))
           .orderBy(col("threshold_milli"))
       },
-      Some(s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-               FROM embeddings),
+      Some(s"""WITH $embeddingsCte,
         nn AS (SELECT COUNT(*) AS n FROM e),
         src AS (SELECT vec_id AS id,
                   CASE WHEN vec_id % 10 = 3 THEN (vec_id + 7) % n
@@ -1713,7 +1548,7 @@ object PipelineQueries {
         img AS (SELECT src.id, e2.v AS iv
                 FROM src JOIN e e2 ON e2.vec_id = src.s),
         p AS (SELECT e.vec_id AS id,
-                CAST(floor(${sqlCos("e.v", "img.iv")} * 1000.0) AS BIGINT)
+                CAST(floor((${cosine("e.v", "img.iv")}) * 1000.0) AS BIGINT)
                   AS a
               FROM e JOIN img ON img.id = e.vec_id
               JOIN documents d ON d.doc_id = e.vec_id),
@@ -1742,11 +1577,11 @@ object PipelineQueries {
         Multimodal.attachBinary(tbl(s, dir, "documents"), "text"), "doc_id")
         .withColumnRenamed("id", "doc_id")
         .orderBy(col("doc_id")),
-      Some("""WITH tk AS (SELECT doc_id AS id, unnest(string_split(text, ' ')) AS t,
+      Some(s"""WITH tk AS (SELECT doc_id AS id, unnest(string_split(text, ' ')) AS t,
                generate_subscripts(string_split(text, ' '), 1) - 1 AS pos
              FROM documents),
         a AS (SELECT id, pos // 8 AS w,
-                CAST(('0x' || substring(md5(t), 1, 15)) AS BIGINT) % 100 AS amp
+                ${md5Bits60("t")} % 100 AS amp
               FROM tk),
         wn AS (SELECT id, w, SUM(amp) AS s, COUNT(*) AS n FROM a GROUP BY 1, 2),
         f AS (SELECT id, w, s < 30 * n AS silent FROM wn),
@@ -1778,13 +1613,12 @@ object PipelineQueries {
           Multimodal.attachBinary(tbl(s, dir, "documents"), "text"), "doc_id"))
         .withColumnRenamed("id", "doc_id")
         .orderBy(col("doc_id")),
-      Some("""WITH m AS (SELECT doc_id, CAST(strlen(text) AS BIGINT) AS b
+      Some(s"""WITH m AS (SELECT doc_id, CAST(strlen(text) AS BIGINT) AS b
                FROM documents),
         d AS (SELECT doc_id, b % 30 + 1 AS nf, b % 7 + 3 AS sl FROM m),
         fr AS (SELECT doc_id, unnest(range(nf)) AS f, sl FROM d),
         sg AS (SELECT doc_id, f,
-                CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR) || ':' ||
-                  CAST(f // sl AS VARCHAR)), 1, 15)) AS BIGINT) AS sig
+                ${md5Bits60("CAST(doc_id AS VARCHAR) || ':' || CAST(f // sl AS VARCHAR)")} AS sig
               FROM fr),
         lg AS (SELECT doc_id, f, sig,
                 LAG(sig) OVER (PARTITION BY doc_id ORDER BY f) AS prev
@@ -1964,10 +1798,8 @@ object PipelineQueries {
             col("top_unigram_frac") <= 0.12 && col("top_bigram_frac") <= 0.05)
           .orderBy(col("doc_id"))
       },
-      Some("""WITH tok AS (
-          SELECT doc_id, unnest(string_split(text, ' ')) AS t,
-                 generate_subscripts(string_split(text, ' '), 1) AS pos
-          FROM documents),
+      Some(s"""WITH tok AS (
+          ${tokenPositions("t")}),
         uc AS (SELECT doc_id, t, COUNT(*) AS c FROM tok GROUP BY 1, 2),
         u AS (SELECT doc_id, MAX(c) AS max_uc, SUM(c) AS n_tok FROM uc GROUP BY 1),
         bg AS (SELECT doc_id, t || ' ' || LEAD(t) OVER (PARTITION BY doc_id ORDER BY pos) AS b
@@ -2006,10 +1838,8 @@ object PipelineQueries {
               col("n_distinct_bigrams").cast("double")).as("shared_frac"))
           .orderBy(col("doc_id"))
       },
-      Some("""WITH tok AS (
-          SELECT doc_id, unnest(string_split(text, ' ')) AS t,
-                 generate_subscripts(string_split(text, ' '), 1) AS pos
-          FROM documents),
+      Some(s"""WITH tok AS (
+          ${tokenPositions("t")}),
         bg AS (SELECT DISTINCT doc_id,
                  t || ' ' || LEAD(t) OVER (PARTITION BY doc_id ORDER BY pos) AS b
                FROM tok),
@@ -2031,10 +1861,10 @@ object PipelineQueries {
         .groupBy(col("doc_id"), hashedTfIndex(col("t"), 64).as("dim"))
         .agg(count(lit(1)).as("weight"))
         .orderBy(col("doc_id"), col("dim")),
-      Some("""SELECT doc_id,
+      Some(s"""SELECT doc_id,
           CAST(('0x' || substring(md5(t), 1, 8)) AS BIGINT) % 64 AS dim,
           COUNT(*) AS weight
-        FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS t FROM documents)
+        FROM ($tokenize)
         GROUP BY 1, 2 ORDER BY 1, 2""")),
 
     // ---- TF-IDF top terms per document ------------------------------------
@@ -2170,9 +2000,7 @@ object PipelineQueries {
         qv AS (SELECT v AS q FROM ev WHERE vec_id = 0),
         cs AS (SELECT vec_id, rc FROM (
             SELECT vec_id, ROW_NUMBER() OVER (ORDER BY
-              (list_reduce(list_transform(list_zip(v, q), x -> x[1] * x[2]), (a, b) -> a + b)
-               / (sqrt(list_reduce(list_transform(list_zip(v, v), x -> x[1] * x[2]), (a, b) -> a + b))
-                * sqrt(list_reduce(list_transform(list_zip(q, q), x -> x[1] * x[2]), (a, b) -> a + b))))
+              (${cosine("v", "q")})
               DESC, vec_id) AS rc
             FROM ev CROSS JOIN qv) t WHERE rc <= 100),
         f AS (SELECT COALESCE(bm.doc_id, cs.vec_id) AS doc_id, bm.rb, cs.rc,
@@ -2377,16 +2205,12 @@ object PipelineQueries {
             sum(tokenCount(col("text")).cast("long")).as("tokens_kept"))
           .orderBy(col("source"))
       },
-      Some("""WITH scored AS (
+      Some(s"""WITH scored AS (
           SELECT doc_id, source, text,
             len(string_split(text, ' ')) AS nt,
             len(list_distinct(string_split(text, ' '))) AS nd,
             len(list_filter(string_split(text, ' '), t -> t IN ('the', 'a'))) AS nstop,
-            len(list_filter(string_split(text, ' '), t -> t IN ('the', 'a', 'of', 'and', 'is'))) AS s_en,
-            len(list_filter(string_split(text, ' '), t -> t IN ('el', 'la', 'de', 'que', 'es'))) AS s_es,
-            len(list_filter(string_split(text, ' '), t -> t IN ('le', 'la', 'de', 'et', 'est'))) AS s_fr,
-            len(list_filter(string_split(text, ' '), t -> t IN ('der', 'die', 'das', 'und', 'ist'))) AS s_de,
-            len(list_filter(string_split(text, ' '), t -> t IN ('的', '是', '在', '了', '和'))) AS s_zh,
+            $langScores,
             md5(array_to_string(list_sort(list_distinct(string_split(text, ' '))), ' ')) AS bag
           FROM documents),
         gated AS (
@@ -2882,7 +2706,7 @@ object PipelineQueries {
           .select(col("qid"), col("rk"), col("cid"), col("score"))
           .orderBy(col("qid"), col("rk"))
       },
-      Some(ivfPqOracleSql(nlistSql = Dsl.sqlScaledNlist, nprobe = 4, m = 8,
+      Some(ivfPqOracleSql(nprobe = 4, m = 8,
         ncode = 16, dim = 64, k = 3, maxQid = 10))),
 
     // Sparse-cosine similarity join: inverted postings index, integer dot /
@@ -2896,11 +2720,7 @@ object PipelineQueries {
       (s, dir) => Dedup.cosinePairs(tbl(s, dir, "documents"), "doc_id", "text",
           threshold = 0.9)
         .orderBy(col("id1"), col("id2")),
-      Some("""WITH tf AS (
-          SELECT doc_id, t, COUNT(*) AS tf FROM (
-            SELECT doc_id, unnest(string_split(text, ' ')) AS t FROM documents)
-          GROUP BY 1, 2),
-        p AS (SELECT doc_id, CAST(('0x' || substring(md5(t), 1, 15)) AS BIGINT) AS tk, tf FROM tf),
+      Some(s"""WITH $termCounts,
         dots AS (
           SELECT a.doc_id AS id1, b.doc_id AS id2,
             CAST(SUM(a.tf * b.tf) AS BIGINT) AS dot
@@ -2964,11 +2784,7 @@ object PipelineQueries {
               .otherwise(expr("(1000L * n_closed) div n_wedges"))
               .as("closure_permille"))
       },
-      Some("""WITH tf AS (
-          SELECT doc_id, t, COUNT(*) AS tf FROM (
-            SELECT doc_id, unnest(string_split(text, ' ')) AS t FROM documents)
-          GROUP BY 1, 2),
-        p AS (SELECT doc_id, CAST(('0x' || substring(md5(t), 1, 15)) AS BIGINT) AS tk, tf FROM tf),
+      Some(s"""WITH $termCounts,
         dots AS (
           SELECT a.doc_id AS id1, b.doc_id AS id2,
             CAST(SUM(a.tf * b.tf) AS BIGINT) AS dot
@@ -3009,7 +2825,7 @@ object PipelineQueries {
         graft.dedup.EditVerify.clusterCohesion(labels, docs, "doc_id", "text")
           .orderBy(col("comp"))
       },
-      Some(s"""$ccLabelsCtes,
+      Some(s"""WITH $dedupComponents,
         tx AS (SELECT doc_id, substring(text, 1, 2000) AS t FROM documents),
         ip AS (SELECT a.comp, a.id AS id1, b.id AS id2
                FROM r a JOIN r b ON a.comp = b.comp AND a.id < b.id),
@@ -3086,29 +2902,7 @@ object PipelineQueries {
           .crossJoin(violations)
           .orderBy(col("split"))
       },
-      Some(s"""WITH tf AS (
-          SELECT doc_id, t, COUNT(*) AS tf FROM (
-            SELECT doc_id, unnest(string_split(text, ' ')) AS t FROM documents)
-          GROUP BY 1, 2),
-        p AS (SELECT doc_id, CAST(('0x' || substring(md5(t), 1, 15)) AS BIGINT) AS tk, tf FROM tf),
-        dots AS (
-          SELECT a.doc_id AS id1, b.doc_id AS id2, SUM(a.tf * b.tf) AS dot
-          FROM p a JOIN p b USING (tk) WHERE a.doc_id < b.doc_id GROUP BY 1, 2),
-        norms AS (SELECT doc_id, CAST(SUM(tf * tf) AS BIGINT) AS s2 FROM tf GROUP BY 1),
-        pairs AS (
-          SELECT id1, id2 FROM dots
-          JOIN norms n1 ON n1.doc_id = id1
-          JOIN norms n2 ON n2.doc_id = id2
-          WHERE CAST(dot AS DOUBLE) / (sqrt(CAST(n1.s2 AS DOUBLE)) * sqrt(CAST(n2.s2 AS DOUBLE))) >= 0.9),
-        edges AS (SELECT id1 AS src, id2 AS dst FROM pairs
-                  UNION ALL SELECT id2, id1 FROM pairs),
-        nodes AS (SELECT DISTINCT doc_id AS id FROM documents),
-        r AS (
-          WITH RECURSIVE rr(id, reach) AS (
-            SELECT id, id FROM nodes
-            UNION
-            SELECT rr.id, e.dst FROM rr JOIN edges e ON e.src = rr.reach)
-          SELECT id, MIN(reach) AS comp FROM rr GROUP BY id),
+      Some(s"""WITH $dedupComponents,
         s AS (
           SELECT id, comp,
             CASE WHEN CAST(('0x' || substring(md5(CAST(comp AS VARCHAR)), 1, 8)) AS BIGINT)
@@ -3134,7 +2928,7 @@ object PipelineQueries {
           nlist = graft.vector.Similarity.scaledNlist(
             tbl(s, dir, "embeddings"), "vec_id"), threshold = 0.4)
         .orderBy(col("id")),
-      Some(semdedupOracleSql(nlistSql = Dsl.sqlScaledNlist, threshold = 0.4))),
+      Some(semdedupOracleSql(threshold = 0.4))),
 
     // The TRAINED pipeline composition a production SemDeDup actually runs:
     // deterministic k-means centroids (one Lloyd iteration, integer-exact
@@ -3186,32 +2980,11 @@ object PipelineQueries {
           .select(col("qid"), col("rk"), col("cid"), col("score"))
           .orderBy(col("qid"), col("rk"))
       },
-      Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        seeds AS (SELECT vec_id AS sid, v AS sv FROM e ORDER BY vec_id LIMIT (SELECT 1 << least(16, length(bin(CAST(COUNT(*) AS BIGINT) - 1)) // 2) FROM e)),
-        cass AS (
-          SELECT vec_id, v, sid FROM (
-            SELECT e.vec_id, e.v, s.sid,
-              ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-                list_reduce(list_transform(list_zip(e.v, s.sv), x -> x[1] * x[2]), (a, b) -> a + b)
-                / (sqrt(list_reduce(list_transform(list_zip(e.v, e.v), x -> x[1] * x[2]), (a, b) -> a + b))
-                 * sqrt(list_reduce(list_transform(list_zip(s.sv, s.sv), x -> x[1] * x[2]), (a, b) -> a + b)))
-                DESC, s.sid) AS rn
-            FROM e CROSS JOIN seeds s) t WHERE rn = 1),
-        qass AS (
-          SELECT qid, qv, sid FROM (
-            SELECT e.vec_id AS qid, e.v AS qv, s.sid,
-              ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-                list_reduce(list_transform(list_zip(e.v, s.sv), x -> x[1] * x[2]), (a, b) -> a + b)
-                / (sqrt(list_reduce(list_transform(list_zip(e.v, e.v), x -> x[1] * x[2]), (a, b) -> a + b))
-                 * sqrt(list_reduce(list_transform(list_zip(s.sv, s.sv), x -> x[1] * x[2]), (a, b) -> a + b)))
-                DESC, s.sid) AS rn
-            FROM e CROSS JOIN seeds s WHERE e.vec_id < 10) t WHERE rn <= 4),
-        scored AS MATERIALIZED (
-          SELECT DISTINCT q.qid, c.vec_id AS cid,
-            list_reduce(list_transform(list_zip(q.qv, c.v), x -> x[1] * x[2]), (a, b) -> a + b)
-            / (sqrt(list_reduce(list_transform(list_zip(q.qv, q.qv), x -> x[1] * x[2]), (a, b) -> a + b))
-             * sqrt(list_reduce(list_transform(list_zip(c.v, c.v), x -> x[1] * x[2]), (a, b) -> a + b))) AS score
-          FROM qass q JOIN cass c USING (sid) WHERE c.vec_id <> q.qid),
+      Some(s"""WITH $embeddingsCte,
+        $ivfSeeds,
+        $ivfCass,
+        ${ivfQass("qv", 10)},
+        $ivfScored,
         r AS (SELECT qid, cid, score,
             ROW_NUMBER() OVER (PARTITION BY qid ORDER BY score DESC, cid) AS rk
           FROM scored)
@@ -3291,40 +3064,18 @@ object PipelineQueries {
           .withColumn("recall_permille", expr("(1000L * n_hits) div k"))
           .orderBy(col("qid"))
       },
-      Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      Some(s"""WITH $embeddingsCte,
         q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 10),
-        xsc AS (SELECT qid, e.vec_id AS cid,
-            list_reduce(list_transform(list_zip(qv, v), x -> x[1] * x[2]), (a, b) -> a + b)
-            / (sqrt(list_reduce(list_transform(list_zip(qv, qv), x -> x[1] * x[2]), (a, b) -> a + b))
-             * sqrt(list_reduce(list_transform(list_zip(v, v), x -> x[1] * x[2]), (a, b) -> a + b))) AS score
-          FROM e CROSS JOIN q WHERE e.vec_id <> qid),
+        ${exactScores("xsc")},
         xt AS (SELECT qid, cid FROM (
             SELECT qid, cid, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY score DESC, cid) AS rk
             FROM xsc) t WHERE rk <= 3),
-        seeds AS (SELECT vec_id AS sid, v AS sv FROM e ORDER BY vec_id LIMIT (SELECT 1 << least(16, length(bin(CAST(COUNT(*) AS BIGINT) - 1)) // 2) FROM e)),
-        cass AS (
-          SELECT vec_id, v, sid FROM (
-            SELECT e.vec_id, e.v, s.sid,
-              ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-                list_reduce(list_transform(list_zip(e.v, s.sv), x -> x[1] * x[2]), (a, b) -> a + b)
-                / (sqrt(list_reduce(list_transform(list_zip(e.v, e.v), x -> x[1] * x[2]), (a, b) -> a + b))
-                 * sqrt(list_reduce(list_transform(list_zip(s.sv, s.sv), x -> x[1] * x[2]), (a, b) -> a + b)))
-                DESC, s.sid) AS rn
-            FROM e CROSS JOIN seeds s) t WHERE rn = 1),
-        qass AS (
-          SELECT qid, qv2, sid FROM (
-            SELECT e.vec_id AS qid, e.v AS qv2, s.sid,
-              ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-                list_reduce(list_transform(list_zip(e.v, s.sv), x -> x[1] * x[2]), (a, b) -> a + b)
-                / (sqrt(list_reduce(list_transform(list_zip(e.v, e.v), x -> x[1] * x[2]), (a, b) -> a + b))
-                 * sqrt(list_reduce(list_transform(list_zip(s.sv, s.sv), x -> x[1] * x[2]), (a, b) -> a + b)))
-                DESC, s.sid) AS rn
-            FROM e CROSS JOIN seeds s WHERE e.vec_id < 10) t WHERE rn <= 4),
+        $ivfSeeds,
+        $ivfCass,
+        ${ivfQass("qv2", 10)},
         isc AS (
           SELECT DISTINCT q2.qid, c.vec_id AS cid,
-            list_reduce(list_transform(list_zip(q2.qv2, c.v), x -> x[1] * x[2]), (a, b) -> a + b)
-            / (sqrt(list_reduce(list_transform(list_zip(q2.qv2, q2.qv2), x -> x[1] * x[2]), (a, b) -> a + b))
-             * sqrt(list_reduce(list_transform(list_zip(c.v, c.v), x -> x[1] * x[2]), (a, b) -> a + b))) AS score
+            ${cosine("q2.qv2", "c.v")} AS score
           FROM qass q2 JOIN cass c USING (sid) WHERE c.vec_id <> q2.qid),
         it AS (SELECT qid, cid FROM (
             SELECT qid, cid, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY score DESC, cid) AS rk
@@ -3389,8 +3140,7 @@ object PipelineQueries {
                 AS BIGINT) AS n_hits
             FROM xt LEFT JOIN t$w ON t$w.qid = xt.qid AND t$w.cid = xt.cid
             GROUP BY 1"""
-        s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-               FROM embeddings),
+        s"""WITH $embeddingsCte,
           q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 10),
           xt AS (${top3(None)}),
           t8 AS (${top3(Some(8))}),

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import Dsl._
+import OracleSql._
 
 /** Round-7 operator families: the pre-flight / planning diagnostics a
   * 100 TB pipeline runs before committing compute — key-skew profiling
@@ -53,8 +54,8 @@ object ProfilingQueries {
 
   /** Shared oracle CTEs computing the three LF votes per doc. */
   private val lfVoteCtes =
-    """WITH tf AS (SELECT doc_id, t, COUNT(*) AS c FROM (
-          SELECT doc_id, unnest(string_split(text, ' ')) AS t FROM documents)
+    s"""WITH tf AS (SELECT doc_id, t, COUNT(*) AS c FROM (
+          $tokenize)
         GROUP BY 1, 2),
       tot AS (SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n_tokens FROM tf GROUP BY 1),
       en AS (SELECT tf.doc_id,
@@ -76,42 +77,6 @@ object ProfilingQueries {
                CASE WHEN en.mbt >= 3000 THEN 1 WHEN en.mbt < 1500 THEN -1 ELSE 0 END AS lf_entropy
              FROM documents d JOIN qs USING (doc_id) JOIN en USING (doc_id))"""
 
-  /** Shared oracle prefix: the IVF-built k=3 kNN graph over embeddings —
-    * identical cells to `Similarity.ivfTopK(nlist=scaledNlist(n), nprobe=4)` (the same
-    * CTE chain the O26/O48 oracles replay).
-    */
-  private val ivfKnnCtes =
-    """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      seeds AS (SELECT vec_id AS sid, v AS sv FROM e ORDER BY vec_id LIMIT (SELECT 1 << least(16, length(bin(CAST(COUNT(*) AS BIGINT) - 1)) // 2) FROM e)),
-      cass AS (
-        SELECT vec_id, v, sid FROM (
-          SELECT e.vec_id, e.v, s.sid,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-              list_reduce(list_transform(list_zip(e.v, s.sv), x -> x[1] * x[2]), (a, b) -> a + b)
-              / (sqrt(list_reduce(list_transform(list_zip(e.v, e.v), x -> x[1] * x[2]), (a, b) -> a + b))
-               * sqrt(list_reduce(list_transform(list_zip(s.sv, s.sv), x -> x[1] * x[2]), (a, b) -> a + b)))
-              DESC, s.sid) AS rn
-          FROM e CROSS JOIN seeds s) t WHERE rn = 1),
-      qass AS (
-        SELECT qid, qv, sid FROM (
-          SELECT e.vec_id AS qid, e.v AS qv, s.sid,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-              list_reduce(list_transform(list_zip(e.v, s.sv), x -> x[1] * x[2]), (a, b) -> a + b)
-              / (sqrt(list_reduce(list_transform(list_zip(e.v, e.v), x -> x[1] * x[2]), (a, b) -> a + b))
-               * sqrt(list_reduce(list_transform(list_zip(s.sv, s.sv), x -> x[1] * x[2]), (a, b) -> a + b)))
-              DESC, s.sid) AS rn
-          FROM e CROSS JOIN seeds s) t WHERE rn <= 4),
-      scored AS MATERIALIZED (
-        SELECT DISTINCT q.qid, c.vec_id AS cid,
-          list_reduce(list_transform(list_zip(q.qv, c.v), x -> x[1] * x[2]), (a, b) -> a + b)
-          / (sqrt(list_reduce(list_transform(list_zip(q.qv, q.qv), x -> x[1] * x[2]), (a, b) -> a + b))
-           * sqrt(list_reduce(list_transform(list_zip(c.v, c.v), x -> x[1] * x[2]), (a, b) -> a + b))) AS score
-        FROM qass q JOIN cass c USING (sid) WHERE c.vec_id <> q.qid),
-      knn AS MATERIALIZED (SELECT qid, cid FROM (
-          SELECT qid, cid, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY score DESC, cid) AS rk
-          FROM scored) t WHERE rk <= 3),
-      und AS MATERIALIZED (SELECT DISTINCT LEAST(qid, cid) AS a, GREATEST(qid, cid) AS b FROM knn)"""
-
   /** IVF kNN chain + symmetrized edges + the 4 deterministic LPA rounds
     * through `l4(id, lab)` — shared by the communities oracle and the
     * modularity oracle so both replay the IDENTICAL partition.
@@ -127,7 +92,7 @@ object ProfilingQueries {
       l$r AS (SELECT $prev.id, COALESCE(b$r.lab, $prev.lab) AS lab
            FROM $prev LEFT JOIN b$r USING (id))"""
     }.mkString(",\n        ")
-    s"""$ivfKnnCtes,
+    s"""WITH $knnUndCte,
         sym AS MATERIALIZED (SELECT a AS u, b AS v FROM und UNION ALL SELECT b, a FROM und),
         l0 AS (SELECT vec_id AS id, vec_id AS lab FROM e),
         $roundCtes"""
@@ -245,7 +210,7 @@ object ProfilingQueries {
           p$r AS (SELECT $prev.id FROM $prev LEFT JOIN dg$r USING (id) WHERE COALESCE(d, 0) < 2),
           a$r AS (SELECT $prev.id FROM $prev LEFT JOIN dg$r USING (id) WHERE COALESCE(d, 0) >= 2)"""
         }.mkString(",\n        ")
-        s"""$ivfKnnCtes,
+        s"""WITH $knnUndCte,
         sym AS MATERIALIZED (SELECT a AS u, b AS v FROM und UNION ALL SELECT b, a FROM und),
         a0 AS (SELECT vec_id AS id FROM e),
         $roundCtes,
@@ -334,7 +299,7 @@ object ProfilingQueries {
     DeclaredQuery("knn_link_prediction",
       (s, dir) => graft.dedup.GraphMetrics
         .linkPrediction(knnUndirected(s, dir), "a", "b", topK = 20),
-      Some(s"""$ivfKnnCtes,
+      Some(s"""WITH $knnUndCte,
         sym AS MATERIALIZED (SELECT a AS u, b AS v FROM und UNION ALL SELECT b, a FROM und),
         deg AS (SELECT u AS id, COUNT(*) AS d FROM sym GROUP BY 1),
         wedge AS (SELECT s1.u AS x, s2.v AS y, s1.v AS z
@@ -496,13 +461,12 @@ object ProfilingQueries {
         .plan(tbl(s, dir, "documents"), "doc_id", "text",
           spanLen = 3, rate = 10)
         .orderBy(col("doc_id")),
-      Some("""WITH tk AS (
+      Some(s"""WITH tk AS (
           SELECT doc_id, generate_subscripts(string_split(text, ' '), 1) - 1 AS pos
           FROM documents),
         tot AS (SELECT doc_id, COUNT(*) AS n_tokens FROM tk GROUP BY 1),
         st AS (SELECT doc_id, CAST(pos AS BIGINT) AS pos FROM tk
-               WHERE CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR) || ':' ||
-                 CAST(pos AS VARCHAR)), 1, 15)) AS BIGINT) % 10 = 0),
+               WHERE ${md5Bits60("CAST(doc_id AS VARCHAR) || ':' || CAST(pos AS VARCHAR)")} % 10 = 0),
         brk AS (SELECT doc_id, pos,
                  CASE WHEN pos - LAG(pos) OVER (PARTITION BY doc_id ORDER BY pos) <= 2
                       THEN 0 ELSE 1 END AS b
@@ -594,7 +558,7 @@ object ProfilingQueries {
                  CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
                FROM documents CROSS JOIN cuts GROUP BY 1),
         fd AS (SELECT t, MIN(doc_id) AS fd FROM (
-                 SELECT doc_id, unnest(string_split(text, ' ')) AS t FROM documents)
+                 $tokenize)
                GROUP BY 1),
         nt AS (SELECT CAST(${b("fd")} AS BIGINT) AS bucket, COUNT(*) AS new_terms
                FROM fd CROSS JOIN cuts GROUP BY 1),
@@ -618,8 +582,7 @@ object ProfilingQueries {
         .burstiness(tbl(s, dir, "documents"), "doc_id", "text",
           minTf = 20L, topK = 20)
         .orderBy(desc("burst_permille"), col("term")),
-      Some("""WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS t
-               FROM documents),
+      Some(s"""WITH toks AS ($tokenize),
         st AS (SELECT t, COUNT(*) AS tf, COUNT(DISTINCT doc_id) AS df
                FROM toks GROUP BY 1 HAVING COUNT(*) >= 20),
         n AS (SELECT COUNT(*) AS nd FROM documents)
@@ -643,22 +606,8 @@ object ProfilingQueries {
           .permilleRank(scored, "margin_bits", "rank_permille")
           .orderBy(col("doc_id"))
       },
-      Some("""WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS t
-               FROM documents),
-        lab AS (SELECT doc_id, lang = 'en' AS pos FROM documents),
-        tf AS (SELECT doc_id, t, COUNT(*) AS cnt FROM tok GROUP BY 1, 2),
-        cc AS (SELECT t,
-                 CAST(SUM(CASE WHEN l.pos THEN cnt ELSE 0 END) AS BIGINT) AS cpos,
-                 CAST(SUM(CASE WHEN l.pos THEN 0 ELSE cnt END) AS BIGINT) AS cneg
-               FROM tf JOIN lab l USING (doc_id) GROUP BY t),
-        tot AS (SELECT CAST(SUM(cpos) AS BIGINT) AS tp, CAST(SUM(cneg) AS BIGINT) AS tn,
-                 COUNT(*) AS v FROM cc),
-        wt AS (SELECT t, length(bin((tp + v) // (cpos + 1))) - 1 AS bp,
-                 length(bin((tn + v) // (cneg + 1))) - 1 AS bn
-               FROM cc CROSS JOIN tot),
-        sc AS (SELECT tf.doc_id, CAST(SUM(cnt * bn) AS BIGINT) - CAST(SUM(cnt * bp) AS BIGINT)
-                 AS margin_bits
-               FROM tf JOIN wt USING (t) GROUP BY 1),
+      Some(s"""WITH $nbWeights,
+        $nbMargin,
         n AS (SELECT COUNT(*) AS total FROM sc),
         cdf AS (SELECT margin_bits,
                  CAST(COALESCE(SUM(COUNT(*)) OVER (ORDER BY margin_bits
@@ -754,29 +703,10 @@ object ProfilingQueries {
           col("predicted") === "pos",
           graft.text.TextFunctions.langId(col("text")) === "en")
       },
-      Some("""WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS t
-               FROM documents),
-        lab AS (SELECT doc_id, lang = 'en' AS pos FROM documents),
-        tf AS (SELECT doc_id, t, COUNT(*) AS cnt FROM tok GROUP BY 1, 2),
-        cc AS (SELECT t,
-                 CAST(SUM(CASE WHEN l.pos THEN cnt ELSE 0 END) AS BIGINT) AS cpos,
-                 CAST(SUM(CASE WHEN l.pos THEN 0 ELSE cnt END) AS BIGINT) AS cneg
-               FROM tf JOIN lab l USING (doc_id) GROUP BY t),
-        tot AS (SELECT CAST(SUM(cpos) AS BIGINT) AS tp, CAST(SUM(cneg) AS BIGINT) AS tn,
-                 COUNT(*) AS v FROM cc),
-        wt AS (SELECT t, length(bin((tp + v) // (cpos + 1))) - 1 AS bp,
-                 length(bin((tn + v) // (cneg + 1))) - 1 AS bn
-               FROM cc CROSS JOIN tot),
-        sc AS (SELECT tf.doc_id,
-                 CAST(SUM(cnt * bp) AS BIGINT) AS bits_pos,
-                 CAST(SUM(cnt * bn) AS BIGINT) AS bits_neg
-               FROM tf JOIN wt USING (t) GROUP BY 1),
+      Some(s"""WITH $nbWeights,
+        $nbBits,
         lid AS (SELECT doc_id,
-                 len(list_filter(string_split(text, ' '), t -> t IN ('the', 'a', 'of', 'and', 'is'))) AS s_en,
-                 len(list_filter(string_split(text, ' '), t -> t IN ('el', 'la', 'de', 'que', 'es'))) AS s_es,
-                 len(list_filter(string_split(text, ' '), t -> t IN ('le', 'la', 'de', 'et', 'est'))) AS s_fr,
-                 len(list_filter(string_split(text, ' '), t -> t IN ('der', 'die', 'das', 'und', 'ist'))) AS s_de,
-                 len(list_filter(string_split(text, ' '), t -> t IN ('的', '是', '在', '了', '和'))) AS s_zh
+                 $langScores
                FROM documents),
         r AS (SELECT sc.doc_id,
                 sc.bits_pos < sc.bits_neg AS ra,
@@ -929,8 +859,8 @@ object ProfilingQueries {
       (s, dir) => graft.text.Entropy
         .unigramEntropy(tbl(s, dir, "documents"), "doc_id", "text")
         .orderBy(col("doc_id")),
-      Some("""WITH tf AS (SELECT doc_id, t, COUNT(*) AS c FROM (
-            SELECT doc_id, unnest(string_split(text, ' ')) AS t FROM documents)
+      Some(s"""WITH tf AS (SELECT doc_id, t, COUNT(*) AS c FROM (
+            $tokenize)
           GROUP BY 1, 2),
         tot AS (SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n_tokens,
                  COUNT(*) AS n_distinct FROM tf GROUP BY 1),
@@ -1138,11 +1068,10 @@ object ProfilingQueries {
         expr("(1000L * size(array_distinct(split(text, ' ')))) div " +
           "size(split(text, ' '))"),
         alphaPermille = 100L, salt = "conf"),
-      Some("""WITH sc AS (SELECT doc_id AS id,
+      Some(s"""WITH sc AS (SELECT doc_id AS id,
                  (1000 * len(list_distinct(string_split(text, ' ')))) //
                    len(string_split(text, ' ')) AS s,
-                 CAST(('0x' || substring(md5('conf:' || CAST(doc_id AS VARCHAR)), 1, 15))
-                   AS BIGINT) % 2 AS arm
+                 ${md5Bits60("'conf:' || CAST(doc_id AS VARCHAR)")} % 2 AS arm
                FROM documents),
         cal AS (SELECT * FROM sc WHERE arm = 0),
         tst AS (SELECT * FROM sc WHERE arm = 1),

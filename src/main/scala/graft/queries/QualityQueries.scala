@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import Dsl._
+import OracleSql._
 
 /** Final round-5 additions to the training-data-pipeline surface: exact
   * duplicated-substring spans (the ExactSubstr dedup signal of Lee et al.
@@ -37,9 +38,7 @@ object QualityQueries {
         .select(col("doc_id"), col("total_tokens"), col("n_spans"),
           col("n_anchors"), col("covered_tokens"), col("dup_permille"))
         .orderBy(col("doc_id")),
-      Some(s"""WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS t,
-                 generate_subscripts(string_split(text, ' '), 1) AS pos
-               FROM documents),
+      Some(s"""WITH tok AS (${tokenPositions("t")}),
         g0 AS (SELECT doc_id, pos, t, $substrLeads
                FROM tok WINDOW w AS (PARTITION BY doc_id ORDER BY pos)),
         g AS (SELECT doc_id, pos, substring(md5($substrGram), 1, 16) AS fp
@@ -86,19 +85,7 @@ object QualityQueries {
             col("bits_pos"), col("bits_neg"), col("margin_bits"), col("predicted"))
           .orderBy(col("doc_id"))
       },
-      Some("""WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS t
-               FROM documents),
-        lab AS (SELECT doc_id, lang = 'en' AS pos FROM documents),
-        tf AS (SELECT doc_id, t, COUNT(*) AS cnt FROM tok GROUP BY 1, 2),
-        cc AS (SELECT t,
-                 CAST(SUM(CASE WHEN l.pos THEN cnt ELSE 0 END) AS BIGINT) AS cpos,
-                 CAST(SUM(CASE WHEN l.pos THEN 0 ELSE cnt END) AS BIGINT) AS cneg
-               FROM tf JOIN lab l USING (doc_id) GROUP BY t),
-        tot AS (SELECT CAST(SUM(cpos) AS BIGINT) AS tp, CAST(SUM(cneg) AS BIGINT) AS tn,
-                 COUNT(*) AS v FROM cc),
-        wt AS (SELECT t, length(bin((tp + v) // (cpos + 1))) - 1 AS bp,
-                 length(bin((tn + v) // (cneg + 1))) - 1 AS bn
-               FROM cc CROSS JOIN tot),
+      Some(s"""WITH $nbWeights,
         sc AS (SELECT tf.doc_id, CAST(SUM(cnt) AS BIGINT) AS n_tokens,
                  CAST(SUM(cnt * bp) AS BIGINT) AS bits_pos,
                  CAST(SUM(cnt * bn) AS BIGINT) AS bits_neg
@@ -126,22 +113,8 @@ object QualityQueries {
             col("margin_min"), col("margin_max"))
           .orderBy(col("bin"))
       },
-      Some("""WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS t
-               FROM documents),
-        lab AS (SELECT doc_id, lang = 'en' AS pos FROM documents),
-        tf AS (SELECT doc_id, t, COUNT(*) AS cnt FROM tok GROUP BY 1, 2),
-        cc AS (SELECT t,
-                 CAST(SUM(CASE WHEN l.pos THEN cnt ELSE 0 END) AS BIGINT) AS cpos,
-                 CAST(SUM(CASE WHEN l.pos THEN 0 ELSE cnt END) AS BIGINT) AS cneg
-               FROM tf JOIN lab l USING (doc_id) GROUP BY t),
-        tot AS (SELECT CAST(SUM(cpos) AS BIGINT) AS tp, CAST(SUM(cneg) AS BIGINT) AS tn,
-                 COUNT(*) AS v FROM cc),
-        wt AS (SELECT t, length(bin((tp + v) // (cpos + 1))) - 1 AS bp,
-                 length(bin((tn + v) // (cneg + 1))) - 1 AS bn
-               FROM cc CROSS JOIN tot),
-        sc AS (SELECT tf.doc_id, CAST(SUM(cnt * bn) AS BIGINT) - CAST(SUM(cnt * bp) AS BIGINT)
-                 AS margin_bits
-               FROM tf JOIN wt USING (t) GROUP BY 1),
+      Some(s"""WITH $nbWeights,
+        $nbMargin,
         m AS (SELECT sc.doc_id, sc.margin_bits, l.pos
               FROM sc JOIN lab l USING (doc_id)),
         cuts AS (SELECT quantile_cont(margin_bits,
@@ -181,22 +154,8 @@ object QualityQueries {
           .prSweep(scored, col("lang") === "en")
           .orderBy(desc("threshold"))
       },
-      Some("""WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS t
-               FROM documents),
-        lab AS (SELECT doc_id, lang = 'en' AS pos FROM documents),
-        tf AS (SELECT doc_id, t, COUNT(*) AS cnt FROM tok GROUP BY 1, 2),
-        cc AS (SELECT t,
-                 CAST(SUM(CASE WHEN l.pos THEN cnt ELSE 0 END) AS BIGINT) AS cpos,
-                 CAST(SUM(CASE WHEN l.pos THEN 0 ELSE cnt END) AS BIGINT) AS cneg
-               FROM tf JOIN lab l USING (doc_id) GROUP BY t),
-        tot AS (SELECT CAST(SUM(cpos) AS BIGINT) AS tp, CAST(SUM(cneg) AS BIGINT) AS tn,
-                 COUNT(*) AS v FROM cc),
-        wt AS (SELECT t, length(bin((tp + v) // (cpos + 1))) - 1 AS bp,
-                 length(bin((tn + v) // (cneg + 1))) - 1 AS bn
-               FROM cc CROSS JOIN tot),
-        sc AS (SELECT tf.doc_id, CAST(SUM(cnt * bn) AS BIGINT) - CAST(SUM(cnt * bp) AS BIGINT)
-                 AS margin_bits
-               FROM tf JOIN wt USING (t) GROUP BY 1),
+      Some(s"""WITH $nbWeights,
+        $nbMargin,
         m AS (SELECT sc.doc_id, sc.margin_bits, l.pos
               FROM sc JOIN lab l USING (doc_id)),
         pm AS (SELECT margin_bits, COUNT(*) AS n,
@@ -260,19 +219,7 @@ object QualityQueries {
             expr("(1000L * n_docs) div class_total").as("share_permille"))
           .orderBy(col("noisy_label"), col("confident_pred"))
       },
-      Some("""WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS t
-               FROM documents),
-        lab AS (SELECT doc_id, lang = 'en' AS pos FROM documents),
-        tf AS (SELECT doc_id, t, COUNT(*) AS cnt FROM tok GROUP BY 1, 2),
-        cc AS (SELECT t,
-                 CAST(SUM(CASE WHEN l.pos THEN cnt ELSE 0 END) AS BIGINT) AS cpos,
-                 CAST(SUM(CASE WHEN l.pos THEN 0 ELSE cnt END) AS BIGINT) AS cneg
-               FROM tf JOIN lab l USING (doc_id) GROUP BY t),
-        tot AS (SELECT CAST(SUM(cpos) AS BIGINT) AS tp, CAST(SUM(cneg) AS BIGINT) AS tn,
-                 COUNT(*) AS v FROM cc),
-        wt AS (SELECT t, length(bin((tp + v) // (cpos + 1))) - 1 AS bp,
-                 length(bin((tn + v) // (cneg + 1))) - 1 AS bn
-               FROM cc CROSS JOIN tot),
+      Some(s"""WITH $nbWeights,
         sc AS (SELECT tf.doc_id,
                  CAST(SUM(cnt * bn) AS BIGINT) - CAST(SUM(cnt * bp) AS BIGINT)
                    AS margin
@@ -315,19 +262,7 @@ object QualityQueries {
         graft.relational.Isotonic.pavCalibration(
           scored, "margin_bits", col("lang") === "en")
       },
-      Some("""WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS t
-               FROM documents),
-        lab AS (SELECT doc_id, lang = 'en' AS pos FROM documents),
-        tf AS (SELECT doc_id, t, COUNT(*) AS cnt FROM tok GROUP BY 1, 2),
-        cc AS (SELECT t,
-                 CAST(SUM(CASE WHEN l.pos THEN cnt ELSE 0 END) AS BIGINT) AS cpos,
-                 CAST(SUM(CASE WHEN l.pos THEN 0 ELSE cnt END) AS BIGINT) AS cneg
-               FROM tf JOIN lab l USING (doc_id) GROUP BY t),
-        tot AS (SELECT CAST(SUM(cpos) AS BIGINT) AS tp, CAST(SUM(cneg) AS BIGINT) AS tn,
-                 COUNT(*) AS v FROM cc),
-        wt AS (SELECT t, length(bin((tp + v) // (cpos + 1))) - 1 AS bp,
-                 length(bin((tn + v) // (cneg + 1))) - 1 AS bn
-               FROM cc CROSS JOIN tot),
+      Some(s"""WITH $nbWeights,
         sc AS (SELECT tf.doc_id,
                  CAST(SUM(cnt * bn) AS BIGINT) - CAST(SUM(cnt * bp) AS BIGINT)
                    AS margin

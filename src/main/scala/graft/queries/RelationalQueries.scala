@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import Dsl._
+import OracleSql._
 
 /** Relational surface over the TPC-H-ish star schema (SURVEY.md §2.3–§2.7):
   * joins (inner/outer/semi/anti/range/cross-ish), grouped and multi-level
@@ -36,11 +37,11 @@ object RelationalQueries {
             count(lit(1)).as("count_order"))
           .orderBy(col("l_returnflag"), col("l_linestatus"))
       },
-      Some("""SELECT l_returnflag, l_linestatus,
+      Some(s"""SELECT l_returnflag, l_linestatus,
         SUM(l_quantity) AS sum_qty,
         CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) AS sum_base,
-        CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(12,2)))) AS DOUBLE) AS sum_disc_price,
-        CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(12,2))) * (1 + CAST(l_tax AS DECIMAL(12,2)))) AS DOUBLE) AS sum_charge,
+        CAST(SUM($decimalRevenue) AS DOUBLE) AS sum_disc_price,
+        CAST(SUM($decimalRevenue * (1 + CAST(l_tax AS DECIMAL(12,2)))) AS DOUBLE) AS sum_charge,
         SUM(l_quantity) / COUNT(*) AS avg_qty,
         CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) / COUNT(*) AS avg_price,
         CAST(SUM(CAST(l_discount AS DECIMAL(12,2))) AS DOUBLE) / COUNT(*) AS avg_disc,
@@ -61,8 +62,8 @@ object RelationalQueries {
           .orderBy(col("rev").desc, col("l_orderkey"))
           .limit(10)
       },
-      Some("""SELECT l_orderkey, o_orderdate,
-        CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(12,2)))) AS DOUBLE) AS rev
+      Some(s"""SELECT l_orderkey, o_orderdate,
+        CAST(SUM($decimalRevenue) AS DOUBLE) AS rev
         FROM customer JOIN orders ON c_custkey = o_custkey JOIN lineitem ON l_orderkey = o_orderkey
         WHERE c_mktsegment = 'BUILDING' AND o_orderdate < TIMESTAMP '1998-01-01'
           AND l_shipdate > TIMESTAMP '1998-01-01'
@@ -89,8 +90,8 @@ object RelationalQueries {
           .agg(dsum(revenue(col("l_extendedprice"), col("l_discount"))).as("rev"))
           .orderBy(col("rev").desc, col("n_name"))
       },
-      Some("""SELECT n_name,
-        CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(12,2)))) AS DOUBLE) AS rev
+      Some(s"""SELECT n_name,
+        CAST(SUM($decimalRevenue) AS DOUBLE) AS rev
         FROM customer JOIN orders ON c_custkey = o_custkey JOIN lineitem ON l_orderkey = o_orderkey
         JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
         JOIN nation ON s_nationkey = n_nationkey JOIN region ON n_regionkey = r_regionkey

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.text.Bpe
 import Dsl._
+import OracleSql._
 
 /** Tokenizer-and-language-model surface of the training-data pipeline:
   * distributed BPE vocabulary induction (Sennrich et al. 2016) and
@@ -130,9 +131,7 @@ object TokenizerQueries {
     * (Laplace ratio ≥ 1 always, since ca ≥ cab and v ≥ 1).
     */
   private val sqlLmScoreCtes: String =
-    """WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS t,
-               generate_subscripts(string_split(text, ' '), 1) AS pos
-             FROM documents),
+    s"""WITH tok AS (${tokenPositions("t")}),
       bg AS (SELECT doc_id, t AS a,
                LEAD(t) OVER (PARTITION BY doc_id ORDER BY pos) AS b FROM tok),
       b2 AS (SELECT doc_id, a, b FROM bg WHERE b IS NOT NULL),
@@ -405,7 +404,7 @@ object TokenizerQueries {
       },
       Some(s"""$sqlBpeCtes
         SELECT d.doc_id, COUNT(*) AS ws_tokens, CAST(SUM(s.n_sub) AS BIGINT) AS bpe_tokens
-        FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS t FROM documents) d
+        FROM ($tokenize) d
         JOIN (SELECT w, len(string_split(sym, ' ')) AS n_sub FROM w$bpeRounds) s
           ON d.t = s.w
         GROUP BY 1 ORDER BY 1""")),

@@ -45,12 +45,6 @@ object StreamingRouter {
       .groupBy(session_window(col(tsCol), gap) +: keyCols.map(col): _*)
       .agg(count(lit(1)).as("n"))
 
-  /** Start a memory-sink query for tests/smoke (synchronous drain via
-    * `processAllAvailable`).
-    */
-  def startMemorySink(df: DataFrame, name: String, outputMode: OutputMode): StreamingQuery =
-    df.writeStream.format("memory").queryName(name).outputMode(outputMode).start()
-
   /** Drain a BOUNDED stream through the routed path into a parquet sink and
     * block until done (`Trigger.AvailableNow`): the reference's whole job
     * shape — decode → validate → route → ack/quarantine per micro-batch,

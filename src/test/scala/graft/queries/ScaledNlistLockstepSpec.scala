@@ -2,48 +2,45 @@ package graft.queries
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Lockstep armor for the scaled-nlist SQL twin (r14 review finding):
-  * several oracle strings are plain (non-interpolated) Scala literals, so
-  * they carry verbatim COPIES of `Dsl.sqlScaledNlist` instead of
-  * interpolating it. A future edit to the formula or its 16-clamp that
-  * misses a copy would break oracle parity ONLY at non-gate scale factors
-  * — invisible to every sf0.01 gate. This spec makes that drift loud: it
-  * scans the query sources for any seeds-CTE LIMIT derived from a
-  * COUNT(*) bit-length and asserts each one is byte-identical to the
-  * canonical snippet (full-table or snapshot-filtered form).
+/** Lockstep armor for the scaled-nlist SQL twin (r14 review finding): the
+  * IVF oracles must derive their cell count from the same COUNT(*) the
+  * Spark side counts. A divergent copy of the formula, or an oracle that
+  * reverted to a literal LIMIT, would break oracle parity ONLY at non-gate
+  * scale factors — invisible to every sf0.01 gate. So the formula is
+  * written once, in `OracleSql`, and every IVF oracle string must carry it.
   */
 class ScaledNlistLockstepSpec extends AnyFunSuite {
-
-  private val canonical = Dsl.sqlScaledNlist
-  // the ivf_incremental_assign snapshot variant counts the id<250 snapshot
-  private val snapshotVariant = canonical.stripSuffix(" FROM e)") +
-    " FROM e WHERE vec_id < 250)"
 
   test("every inline scaled-nlist SQL copy equals the canonical snippet") {
     val root = new java.io.File("src/main/scala/graft/queries")
     assert(root.isDirectory, s"run from the repo root: $root missing")
     val marker = "SELECT 1 << least("
-    var found = 0
-    for (f <- root.listFiles().filter(_.getName.endsWith(".scala"))) {
-      val src = new String(
-        java.nio.file.Files.readAllBytes(f.toPath),
-        java.nio.charset.StandardCharsets.UTF_8)
-      var i = src.indexOf(marker)
-      while (i >= 0) {
-        found += 1
-        val start = src.lastIndexOf("(", i)
-        val ok = src.startsWith(canonical, start) ||
-          src.startsWith(snapshotVariant, start)
-        assert(ok, s"${f.getName} offset $i: scaled-nlist SQL diverges " +
-          s"from Dsl.sqlScaledNlist — edit all copies in lockstep " +
-          s"(context: ${src.slice(start, start + 100)})")
-        i = src.indexOf(marker, i + 1)
+    val hits = root.listFiles().filter(_.getName.endsWith(".scala")).toSeq
+      .flatMap { f =>
+        val src = new String(java.nio.file.Files.readAllBytes(f.toPath),
+          java.nio.charset.StandardCharsets.UTF_8)
+        Iterator.iterate(src.indexOf(marker))(i => src.indexOf(marker, i + 1))
+          .takeWhile(_ >= 0).map(_ => f.getName)
       }
+    assert(hits === Seq("OracleSql.scala"), "the scaled-nlist SQL must be " +
+      "written once, in OracleSql — interpolate OracleSql.scaledNlist instead " +
+      s"of copying it (marker found in: $hits)")
+  }
+
+  test("each IVF oracle string derives its cell count from OracleSql.scaledNlist") {
+    val ivfOracles = Seq("ann_ndcg_audit", "ivf_incremental_assign",
+      "ivf_nprobe_sweep", "ivf_pq_topk", "ivf_recall_audit", "ivf_topk",
+      "knn_degree_assortativity", "knn_kcore_peeling", "knn_link_prediction",
+      "knn_lpa_communities", "knn_pagerank_centrality", "knn_triangle_count",
+      "knn_two_hop_reach", "lpa_modularity", "mmr_diverse_topk",
+      "semdedup_keep")
+    val oracle = graft.SparkEntry.oracleSql
+    for (name <- ivfOracles) {
+      val sql = oracle.getOrElse(name, fail(s"$name has no oracle SQL"))
+      assert(sql.contains(OracleSql.scaledNlist) ||
+        sql.contains(OracleSql.scaledNlistSnapshot),
+        s"$name no longer derives its IVF cell count from " +
+          "OracleSql.scaledNlist — did its seeds LIMIT revert to a literal?")
     }
-    // the canonical definition itself + >= 8 oracle copies must exist: a
-    // refactor that silently DELETED the dynamic LIMITs (reverting to a
-    // literal) would otherwise pass
-    assert(found >= 9, s"expected the canonical snippet plus >= 8 oracle " +
-      s"copies, found $found — did the dynamic seeds LIMITs get reverted?")
   }
 }

@@ -33,24 +33,19 @@ class StreamStreamJoinSpec extends SparkSpec {
               buy_ts >= click_ts AND
               buy_ts <= click_ts + interval 30 minutes"""))
 
-    val q = StreamingRouter.startMemorySink(joined, "ss_join",
-      org.apache.spark.sql.streaming.OutputMode.Append())
-    try {
-      clickIn.addData((1L, t(0)), (1L, t(10)), (2L, t(5)))
-      buyIn.addData(
-        (1L, t(20)),  // within 30min of both user-1 clicks → 2 matches
-        (1L, t(35)),  // within 30min of the t=10 click only → 1 match
-        (2L, t(50)),  // 45min after user-2's only click → no match
-        (3L, t(10)))  // user with no clicks → no match
-      q.processAllAvailable()
+    clickIn.addData((1L, t(0)), (1L, t(10)), (2L, t(5)))
+    buyIn.addData(
+      (1L, t(20)),  // within 30min of both user-1 clicks → 2 matches
+      (1L, t(35)),  // within 30min of the t=10 click only → 1 match
+      (2L, t(50)),  // 45min after user-2's only click → no match
+      (3L, t(10)))  // user with no clicks → no match
 
-      val rows = spark.table("ss_join")
-        .select(col("user_id"), col("click_ts"), col("buy_ts"))
-        .as[(Long, Timestamp, Timestamp)].collect().toSet
-      assert(rows === Set(
-        (1L, t(0), t(20)),
-        (1L, t(10), t(20)),
-        (1L, t(10), t(35))))
-    } finally q.stop()
+    val rows = StreamingRouter.drainToParquet(joined, "ss_join")
+      .select(col("user_id"), col("click_ts"), col("buy_ts"))
+      .as[(Long, Timestamp, Timestamp)].collect().toSet
+    assert(rows === Set(
+      (1L, t(0), t(20)),
+      (1L, t(10), t(20)),
+      (1L, t(10), t(35))))
   }
 }

@@ -129,16 +129,13 @@ class StreamingRouterSpec extends SparkSpec {
     val counts = StreamingRouter.windowedCounts(
       input.toDF().toDF("ts", "kind"), "ts", "10 minutes", "5 minutes", "5 minutes", "kind")
 
-    val q = StreamingRouter.startMemorySink(counts, "win_counts", OutputMode.Complete())
     input.addData(
       (Timestamp.valueOf("2024-01-01 00:01:00"), "a"),
       (Timestamp.valueOf("2024-01-01 00:02:00"), "a"),
       (Timestamp.valueOf("2024-01-01 00:07:00"), "b"))
-    q.processAllAvailable()
-    val got = spark.table("win_counts")
+    val got = StreamingRouter.drainComplete(counts, "win_counts")
       .select(col("window.start").cast("string"), col("kind"), col("n"))
       .as[(String, String, Long)].collect().toSet
-    q.stop()
     assert(got === Set(
       ("2024-01-01 00:00:00", "a", 2L),
       ("2024-01-01 00:05:00", "b", 1L)))
@@ -190,15 +187,12 @@ class StreamingRouterSpec extends SparkSpec {
     val input = MemoryStream[(Timestamp, String)]
     val sessions = StreamingRouter.sessionCounts(
       input.toDF().toDF("ts", "user"), "ts", "1 hour", "30 minutes", "user")
-    val q = StreamingRouter.startMemorySink(sessions, "sess_counts", OutputMode.Complete())
     input.addData(
       (Timestamp.valueOf("2024-01-01 00:00:00"), "u1"),
       (Timestamp.valueOf("2024-01-01 00:10:00"), "u1"),   // same session
       (Timestamp.valueOf("2024-01-01 02:00:00"), "u1"))   // new session
-    q.processAllAvailable()
-    val got = spark.table("sess_counts").select("user", "n")
-      .as[(String, Long)].collect().sorted
-    q.stop()
+    val got = StreamingRouter.drainComplete(sessions, "sess_counts")
+      .select("user", "n").as[(String, Long)].collect().sorted
     assert(got === Array(("u1", 1L), ("u1", 2L)))
   }
 }
