@@ -4,7 +4,10 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.{ExplainMode, FileSourceScanExec}
+import org.apache.spark.sql.execution.adaptive.ShuffleQueryStageExec
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.apache.spark.sql.graftbridge.GraftBridge
 import graft.streaming.StreamCapture
 
@@ -16,7 +19,7 @@ import graft.streaming.StreamCapture
   *    input tables cached as Bench caches them;
   *  - `plan`: execute once, write the formatted final plan to
   *    `$SPARK_GRAFT_PLAN_DIR/<name>$SPARK_GRAFT_PLAN_SUFFIX.txt` and print
-  *    the exchange-reuse stats of that final plan;
+  *    the exchange-reuse stats of that final plan's [[PlanAudit.nodes]];
   *  - `phases`: per-trigger phase durations and state-operator totals of
   *    every streaming query the declared query drains.
   * An exact query name selects itself; any other argument selects every
@@ -87,14 +90,14 @@ object Probe {
       val out = Paths.get(outDir, s"$n$suffix.txt")
       Files.write(out, qe.explainString(ExplainMode.fromString("formatted"))
         .getBytes(StandardCharsets.UTF_8))
-      // a finalized AQE plan prints "== Final Plan ==" then "== Initial Plan
-      // =="; count only the executed (final) section
-      val fin = qe.executedPlan.toString.split("== Initial Plan ==")(0)
-      val stageIds = "ShuffleQueryStage (\\d+)".r.findAllMatchIn(fin).map(_.group(1)).toSeq
+      val fin = PlanAudit.nodes(qe.executedPlan)
+      val stageIds = fin.collect { case s: ShuffleQueryStageExec => s.id }
+      val parquetScans = fin.collect { case f: FileSourceScanExec => f.relation.fileFormat }
+        .count(_.isInstanceOf[ParquetFileFormat])
       println(s"[reuse] $n stages=${stageIds.distinct.size} " +
         s"dupStageRefs=${stageIds.size - stageIds.distinct.size} " +
-        s"reusedExchange=${"ReusedExchange".r.findAllIn(fin).size} " +
-        s"parquetScans=${"FileScan parquet".r.findAllIn(fin).size} plan=$out")
+        s"reusedExchange=${fin.count(_.isInstanceOf[ReusedExchangeExec])} " +
+        s"parquetScans=$parquetScans plan=$out")
     }
   }
 
@@ -138,8 +141,8 @@ object Probe {
     } catch { case e: UsageError => System.err.println(e.getMessage); sys.exit(2) }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val builder = GraftSession.builder(s"local[$cpus]", cpus)
-    // full Location/PushedFilters detail in the plan dump (the default 100
-    // characters truncates scan metadata mid-path)
+    // full Location/PushedFilters detail in the human-readable plan dump
+    // (the default 100 characters truncates scan metadata mid-path)
     if (a.mode == "plan") builder.config("spark.sql.maxMetadataStringLength", "8192")
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

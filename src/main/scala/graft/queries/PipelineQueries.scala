@@ -142,34 +142,44 @@ object PipelineQueries {
   private def sqlProbes(numPlanes: Int): String =
     ("bucket" +: (0 until numPlanes).map(i => s"xor(bucket, ${1L << i})")).mkString(", ")
 
+  /** Nearest centroid of `cents` (`c`, `cv`) per vector of `src` (`id`,
+    * `v`) by the reduced argmin key |c|² − 2·v·c, tie by centroid index.
+    */
+  private def lloydArgmin(id: String, src: String, cents: String): String =
+    s"""SELECT $id, v, c AS cell FROM (
+       |  SELECT $src.$id, $src.v, $cents.c, ROW_NUMBER() OVER (PARTITION BY $src.$id
+       |    ORDER BY (${dot(s"$cents.cv", s"$cents.cv")}
+       |              - 2 * ${dot(s"$src.v", s"$cents.cv")}) ASC, $cents.c) AS rn
+       |  FROM $src CROSS JOIN $cents) t WHERE rn = 1""".stripMargin
+
+  /** The first half of one deterministic Lloyd iteration, with `id` naming
+    * the vector id: quantized embeddings `e`, the k lowest-id seeds `cb0`,
+    * the assignment `a1` and its exact integer per-cell sums `u1`.
+    */
+  private def lloydCtes(k: Int, id: String): String =
+    s"""e AS (SELECT ${if (id == "vec_id") id else s"vec_id AS $id"},
+       |    list_transform(CAST(embedding AS DOUBLE[]),
+       |                   x -> CAST(floor(x * 1000000) AS DOUBLE)) AS v
+       |  FROM embeddings),
+       |cb0 AS (SELECT ROW_NUMBER() OVER (ORDER BY $id) - 1 AS c, v AS cv
+       |        FROM e ORDER BY $id LIMIT $k),
+       |a1 AS (${lloydArgmin(id, "e", "cb0")}),
+       |u1 AS (SELECT cell, dim, SUM(x) AS s, COUNT(*) AS n FROM (
+       |    SELECT cell, generate_subscripts(v, 1) AS dim, unnest(v) AS x FROM a1) t
+       |  GROUP BY 1, 2)""".stripMargin
+
   /** DuckDB oracle replaying one deterministic Lloyd iteration: same init
     * (k lowest-id vectors), same reduced argmin key, exact integer cell
     * sums, single division per mean, final assignment profiled per cell.
     */
-  private def kmeansOracleSql(k: Int): String = {
-    def argmin(src: String, cents: String) =
-      s"""SELECT vec_id, v, c AS cell FROM (
-         |  SELECT $src.vec_id, $src.v, $cents.c, ROW_NUMBER() OVER (PARTITION BY $src.vec_id
-         |    ORDER BY (${dot(s"$cents.cv", s"$cents.cv")}
-         |              - 2 * ${dot(s"$src.v", s"$cents.cv")}) ASC, $cents.c) AS rn
-         |  FROM $src CROSS JOIN $cents) t WHERE rn = 1""".stripMargin
-    s"""WITH e AS (SELECT vec_id,
-       |    list_transform(CAST(embedding AS DOUBLE[]),
-       |                   x -> CAST(floor(x * 1000000) AS DOUBLE)) AS v
-       |  FROM embeddings),
-       |cb0 AS (SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS c, v AS cv
-       |        FROM e ORDER BY vec_id LIMIT $k),
-       |a1 AS (${argmin("e", "cb0")}),
-       |u1 AS (SELECT cell, dim, SUM(x) AS s, COUNT(*) AS n FROM (
-       |    SELECT cell, generate_subscripts(v, 1) AS dim, unnest(v) AS x FROM a1) t
-       |  GROUP BY 1, 2),
+  private def kmeansOracleSql(k: Int): String =
+    s"""WITH ${lloydCtes(k, "vec_id")},
        |c1 AS (SELECT cell AS c, list(CAST(s AS DOUBLE) / n ORDER BY dim) AS cv
        |       FROM u1 GROUP BY 1),
-       |a2 AS (${argmin("e", "c1")})
+       |a2 AS (${lloydArgmin("vec_id", "e", "c1")})
        |SELECT CAST(cell AS BIGINT) AS cell, COUNT(*) AS n,
        |  CAST(SUM(vec_id) AS BIGINT) AS id_checksum
        |FROM a2 GROUP BY 1 ORDER BY 1""".stripMargin
-  }
 
   /** DuckDB oracle replaying SemDeDup end to end: same seed cells (lowest-id
     * vectors), same argmax assignment (cosine DESC, sid tie-break), same
@@ -201,20 +211,7 @@ object PipelineQueries {
     * centroid outlier).
     */
   private def semdedupTrainedOracleSql(k: Int, threshold: Double): String = {
-    s"""WITH e AS (SELECT vec_id AS id,
-       |    list_transform(CAST(embedding AS DOUBLE[]),
-       |                   x -> CAST(floor(x * 1000000) AS DOUBLE)) AS v
-       |  FROM embeddings),
-       |cb0 AS (SELECT ROW_NUMBER() OVER (ORDER BY id) - 1 AS c, v AS cv
-       |        FROM e ORDER BY id LIMIT $k),
-       |a1 AS (SELECT id, v, c AS cell FROM (
-       |    SELECT e.id, e.v, cb0.c, ROW_NUMBER() OVER (PARTITION BY e.id
-       |      ORDER BY (${dot("cb0.cv", "cb0.cv")}
-       |                - 2 * ${dot("e.v", "cb0.cv")}) ASC, cb0.c) AS rn
-       |    FROM e CROSS JOIN cb0) t WHERE rn = 1),
-       |u1 AS (SELECT cell, dim, SUM(x) AS s, COUNT(*) AS n FROM (
-       |    SELECT cell, generate_subscripts(v, 1) AS dim, unnest(v) AS x FROM a1) t
-       |  GROUP BY 1, 2),
+    s"""WITH ${lloydCtes(k, "id")},
        |c1 AS (SELECT cell AS sid, list(CAST(s AS DOUBLE) / n ORDER BY dim) AS sv
        |       FROM u1 GROUP BY 1),
        |cass AS (SELECT id, v, sid AS cell, csim FROM (
@@ -232,51 +229,18 @@ object PipelineQueries {
        |FROM kk ORDER BY id""".stripMargin
   }
 
-  /** DuckDB oracle for the combined IVF+PQ serving path: IVF cells by
-    * cosine argmax (tie by seed id), PQ codes by the reduced argmin key,
-    * probe `nprobe` cells per query, ADC-score only in-cell pairs. Every
-    * stage reuses the already-proven ivf/pq oracle fragments.
-    */
-  private def ivfPqOracleSql(nprobe: Int, m: Int, ncode: Int, dim: Int, k: Int,
-                             maxQid: Int): String = {
-    val ds = dim / m
-    def sl(v: String, j: Int) = s"list_slice($v, ${j * ds + 1}, ${(j + 1) * ds})"
-    val encCtes = (0 until m).map { j =>
-      s"""enc_$j AS (SELECT vec_id, c AS code_$j FROM (
-         |  SELECT e.vec_id, cb.c, ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-         |    (${dot(sl("cb.cv", j), sl("cb.cv", j))}
-         |     - 2 * ${dot(sl("e.v", j), sl("cb.cv", j))}) ASC, cb.c) AS rn
-         |  FROM e CROSS JOIN cb) t WHERE rn = 1)""".stripMargin
-    }.mkString(",\n")
-    val encJoin = (1 until m).foldLeft("enc_0")((acc, j) => s"$acc JOIN enc_$j USING (vec_id)")
-    val cbJoins = (0 until m).map(j => s"JOIN cb cb$j ON cb$j.c = x.code_$j").mkString(" ")
-    val scoreExpr = (0 until m).map(j => dot(sl("q.qv", j), sl(s"cb$j.cv", j))).mkString(" + ")
-    s"""WITH $embeddingsCte,
-       |$ivfSeeds,
-       |cb AS (SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS c, v AS cv
-       |       FROM e ORDER BY vec_id LIMIT $ncode),
-       |cass AS (SELECT vec_id, sid AS cell FROM (
-       |    SELECT e.vec_id, s.sid, ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-       |      (${cosine("e.v", "s.sv")}) DESC, s.sid) AS rn
-       |    FROM e CROSS JOIN seeds s) t WHERE rn = 1),
-       |$encCtes,
-       |x AS (SELECT * FROM cass JOIN ($encJoin) USING (vec_id)),
-       |qass AS (SELECT qid, qv, sid AS cell FROM (
-       |    SELECT e.vec_id AS qid, e.v AS qv, s.sid, ROW_NUMBER() OVER (PARTITION BY e.vec_id
-       |      ORDER BY (${cosine("e.v", "s.sv")}) DESC, s.sid) AS rn
-       |    FROM e CROSS JOIN seeds s WHERE e.vec_id < $maxQid) t WHERE rn <= $nprobe),
-       |sc AS (SELECT q.qid, x.vec_id AS cid, $scoreExpr AS score
-       |       FROM qass q JOIN x USING (cell) $cbJoins WHERE x.vec_id <> q.qid),
-       |${topK(k)}""".stripMargin
-  }
-
   /** DuckDB oracle for PQ/ADC top-k: derives the same deterministic
     * codebooks in SQL (subvectors of the ncode lowest-id vectors, codeword
     * index = rank by vec_id), encodes every vector with the same
     * argmin(dist², codeword-index tie-break), and scores with the same
     * left-assoc sum of per-subspace dots — every term a portable fold.
+    *
+    * With `nprobe` it is the oracle for the combined IVF+PQ serving path:
+    * IVF cells by cosine argmax (tie by seed id), each query probes its
+    * `nprobe` best cells (`qass`), and only in-cell pairs are ADC-scored.
     */
-  private def pqOracleSql(m: Int, ncode: Int, dim: Int, k: Int, maxQid: Int): String = {
+  private def pqOracleSql(m: Int, ncode: Int, dim: Int, k: Int, maxQid: Int,
+                          nprobe: Option[Int] = None): String = {
     val ds = dim / m
     def sl(v: String, j: Int) = s"list_slice($v, ${j * ds + 1}, ${(j + 1) * ds})"
     val encCtes = (0 until m).map { j =>
@@ -289,14 +253,33 @@ object PipelineQueries {
     val encJoin = (1 until m).foldLeft("enc_0")((acc, j) => s"$acc JOIN enc_$j USING (vec_id)")
     val cbJoins = (0 until m).map(j => s"JOIN cb cb$j ON cb$j.c = x.code_$j").mkString(" ")
     val scoreExpr = (0 until m).map(j => dot(sl("q.qv", j), sl(s"cb$j.cv", j))).mkString(" + ")
+    val cb = s"""cb AS (SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS c, v AS cv
+       |       FROM e ORDER BY vec_id LIMIT $ncode)""".stripMargin
+    val (head, x, query, pairs) = nprobe match {
+      case None => (cb, encJoin,
+        s"q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < $maxQid)",
+        "x CROSS JOIN q")
+      case Some(np) => (
+        s"""$ivfSeeds,
+           |$cb,
+           |cass AS (SELECT vec_id, sid AS cell FROM (
+           |    SELECT e.vec_id, s.sid, ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
+           |      (${cosine("e.v", "s.sv")}) DESC, s.sid) AS rn
+           |    FROM e CROSS JOIN seeds s) t WHERE rn = 1)""".stripMargin,
+        s"cass JOIN ($encJoin) USING (vec_id)",
+        s"""qass AS (SELECT qid, qv, sid AS cell FROM (
+           |    SELECT e.vec_id AS qid, e.v AS qv, s.sid, ROW_NUMBER() OVER (PARTITION BY e.vec_id
+           |      ORDER BY (${cosine("e.v", "s.sv")}) DESC, s.sid) AS rn
+           |    FROM e CROSS JOIN seeds s WHERE e.vec_id < $maxQid) t WHERE rn <= $np)""".stripMargin,
+        "qass q JOIN x USING (cell)")
+    }
     s"""WITH $embeddingsCte,
-       |cb AS (SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS c, v AS cv
-       |       FROM e ORDER BY vec_id LIMIT $ncode),
+       |$head,
        |$encCtes,
-       |x AS (SELECT * FROM $encJoin),
-       |q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < $maxQid),
+       |x AS (SELECT * FROM $x),
+       |$query,
        |sc AS (SELECT q.qid, x.vec_id AS cid, $scoreExpr AS score
-       |       FROM x CROSS JOIN q $cbJoins WHERE x.vec_id <> q.qid),
+       |       FROM $pairs $cbJoins WHERE x.vec_id <> q.qid),
        |${topK(k)}""".stripMargin
   }
 
@@ -2706,8 +2689,8 @@ object PipelineQueries {
           .select(col("qid"), col("rk"), col("cid"), col("score"))
           .orderBy(col("qid"), col("rk"))
       },
-      Some(ivfPqOracleSql(nprobe = 4, m = 8,
-        ncode = 16, dim = 64, k = 3, maxQid = 10))),
+      Some(pqOracleSql(m = 8, ncode = 16, dim = 64, k = 3, maxQid = 10,
+        nprobe = Some(4)))),
 
     // Sparse-cosine similarity join: inverted postings index, integer dot /
     // norm sums, one IEEE sqrt-divide at the end — the exact bag-of-words

@@ -45,14 +45,8 @@ object StreamCapture {
     (startCount.get, qs)
   }
 
-  /** Register the capture listener on `ss`'s own query manager. Also
-    * raises the session's metadata string length: scan counting parses
-    * `Location:` path lists out of the trigger plan, and the default 100
-    * truncates them (the same belt PlanAudit wears on its root session;
-    * the locbad cross-check refuses if truncation ever slips through).
-    */
+  /** Register the capture listener on `ss`'s own query manager. */
   def attach(ss: SparkSession): Unit = {
-    ss.conf.set("spark.sql.maxMetadataStringLength", "65536")
     ss.streams.addListener(new StreamingQueryListener {
       import StreamingQueryListener._
       override def onQueryStarted(e: QueryStartedEvent): Unit = if (on) {

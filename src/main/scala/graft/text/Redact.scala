@@ -33,10 +33,6 @@ object Redact {
   def redactIPv4(c: Column): Column = regexp_replace(c, IPv4Pattern, "<IP>")
   def redactPhones(c: Column): Column = regexp_replace(c, PhonePattern, "<PHONE>")
 
-  /** Mask any custom pattern (credentials, ids, internal hostnames). */
-  def redactPattern(c: Column, pattern: String, token: String): Column =
-    regexp_replace(c, pattern, token)
-
   /** Full scrub. Order matters and is fixed: emails first (their local part
     * can contain digit runs a later pass would half-match), then IPs (dotted
     * digit groups would otherwise partially match the phone pattern), then

@@ -2,12 +2,15 @@ package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.execution.SparkStrategy
+import org.apache.spark.sql.execution.{QueryExecution, SparkStrategy}
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Minimal accessors for the `private[sql]`/`private[spark]` seams an
   * extension library needs: materializing a DataFrame over a custom
   * LogicalPlan (`Dataset.ofRows`), injecting a planner strategy at runtime
-  * (`experimental.extraStrategies`) and draining the listener bus. Lives
+  * (`experimental.extraStrategies`), draining the listener bus and reading
+  * a stream's last trigger plan. Lives
   * under `org.apache.spark.sql` only to satisfy the access qualifiers;
   * contains no engine logic.
   */
@@ -37,6 +40,15 @@ object GraftBridge {
     */
   def drainListeners(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** The last trigger's `IncrementalExecution` of a started streaming query;
+    * None when no trigger has run. Throws a MatchError on a query that is
+    * not a local `StreamingQueryWrapper`, so an audit never passes a stream
+    * whose plan it could not read.
+    */
+  def lastExecution(q: StreamingQuery): Option[QueryExecution] = q match {
+    case w: StreamingQueryWrapper => Option(w.streamingQuery.lastExecution)
+  }
 
   /** Idempotently append a planner strategy to the session. */
   def addStrategy(spark: SparkSession, strategy: SparkStrategy): Unit = {

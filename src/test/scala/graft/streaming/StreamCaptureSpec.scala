@@ -2,12 +2,13 @@ package graft.streaming
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftBridge
 
 /** Locks the per-trigger capture contract the streaming scan gate rides on
   * (r12 verdict What's-wrong #2): a drained clone-session query is captured
   * synchronously, its last trigger's IncrementalExecution is reachable via
-  * the reflection chain PlanAudit uses, and a static parquet join side
-  * shows up as a parseable `Location:` scan in that plan.
+  * `GraftBridge.lastExecution` as PlanAudit reads it, and a static parquet
+  * join side shows up as a named scan in that plan's tree.
   */
 class StreamCaptureSpec extends SparkSpec {
 
@@ -32,16 +33,10 @@ class StreamCaptureSpec extends SparkSpec {
     val (started, captured) = StreamCapture.snapshot
     assert(started === 1 && captured.size === 1,
       "onQueryStarted must deliver synchronously and capture the query")
-    // the exact reflection chain PlanAudit.main walks
-    val w = captured.head
-    val se = w.getClass.getMethod("streamingQuery").invoke(w)
-    val le = se.getClass.getMethod("lastExecution").invoke(se)
-    assert(le != null, "a drained bounded query must expose lastExecution")
-    val plan = le.asInstanceOf[org.apache.spark.sql.execution.QueryExecution]
-      .executedPlan.toString
-    assert(graft.PlanAudit.tableScans(plan) === Map("customer" -> 1),
-      "the static join side must surface as one parseable per-trigger scan")
-    assert(graft.PlanAudit.locationMismatch(plan) === 0,
-      "the clone session must carry the raised metadata string length")
+    // the bridge PlanAudit.main reads trigger plans through
+    val le = GraftBridge.lastExecution(captured.head)
+    assert(le.isDefined, "a drained bounded query must expose lastExecution")
+    assert(graft.PlanAudit.tableScans(graft.PlanAudit.nodes(le.get.executedPlan)) ===
+      Map("customer" -> 1), "the static join side must surface as one per-trigger scan")
   }
 }

@@ -94,10 +94,11 @@ if grep -E " sbad=[1-9-]" "${AUDIT}"; then
 if grep -E " strigsrc=unknown" "${AUDIT}"; then
   echo "CLOSE FAILED: a captured trigger plan has no recognizable source (capture drift)"
   exit 1; fi
-# locbad>0 = a Location: entry the scan-count regex failed to parse
-# (metadata truncation or plan-format drift) — scan counts untrustworthy
+# locbad>0 = a scan leaf the plan-tree walk (PlanAudit.nodes) cannot name:
+# a file scan without a root path, or a v2 scan over a file table — scan
+# counts are untrustworthy
 if grep -E " locbad=[1-9]" "${AUDIT}"; then
-  echo "CLOSE FAILED: unparsed Location entries — scan counting is untrustworthy"
+  echo "CLOSE FAILED: unnamed scan leaves — scan counting is untrustworthy"
   exit 1; fi
 if grep -q "FAILED" "${AUDIT}"; then
   echo "CLOSE FAILED: a declared query failed to plan/execute"; exit 1; fi
