@@ -1,6 +1,6 @@
 package graft.routing
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row}
 import org.apache.spark.sql.functions._
 
 /** Ordered processing — the reference's `KinesisSynchronousHandler`
@@ -44,21 +44,4 @@ object OrderedRouter {
       Encoders.row(if (outSchema == null) arranged.schema else outSchema)
     arranged.mapPartitions(handler)
   }
-
-  /** Typed variant: per-key sequential handling via groupByKey — same
-    * single-consumer-per-key guarantee, with the group materialized and
-    * sorted locally (fine for bounded per-key batches; the untyped
-    * `processOrdered` streams and is preferred for very large key groups).
-    *
-    * The sequence key is ordered by its own `Ordering[K]` — numeric ids
-    * order numerically (a lexicographic String contract would silently
-    * mis-sort unpadded ids).
-    */
-  def processOrderedTyped[T, K: Ordering, U: Encoder](ds: Dataset[T])(
-      key: T => String, seq: T => K)(
-      handler: Iterator[T] => Iterator[U]): Dataset[U] =
-    ds.groupByKey(key)(Encoders.STRING)
-      .flatMapGroups { (_: String, it: Iterator[T]) =>
-        handler(it.toSeq.sortBy(seq).iterator)
-      }
 }

@@ -3,29 +3,26 @@ package graft.sources
 import java.util
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.io.ColumnIOFactory
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows, SupportsAdmissionControl, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 import scala.jdk.CollectionConverters._
 
 /** DataSource V2 micro-batch source that REPLAYS a bounded parquet dataset
-  * (e.g. the events fixture) as a stream of fixed-size micro-batches — the
-  * test/backfill stand-in for the production Kinesis source (SURVEY.md §2.1
-  * S1: one Lambda invoke = one batch ⇒ one trigger = one batch here).
-  *
-  * Usage:
+  * as a stream of fixed-size micro-batches — the test/backfill stand-in for
+  * the production Kinesis source (SURVEY.md §2.1 S1: one Lambda invoke =
+  * one batch ⇒ one trigger = one batch here). Any schema Spark's parquet
+  * reader reads replays, nested types included:
   * {{{
   *   spark.readStream
   *     .format("graft.sources.ReplayStreamSource")
@@ -39,17 +36,16 @@ import scala.jdk.CollectionConverters._
   * trigger advances by `batchSize` rows, so a bounded input produces
   * ⌈n/batchSize⌉ micro-batches and then idles. Offsets are replayable
   * (restart from checkpoint re-serves the same rows) — the at-least-once
-  * contract of the reference. Alternatively `numBatches` fixes the batch
-  * COUNT (batch size becomes ⌈n/numBatches⌉): use it when the multi-batch
-  * SEMANTICS matter but the input size varies by scale factor, so drain
-  * cost doesn't grow with per-batch bookkeeping.
+  * contract of the reference. `numBatches` instead fixes the batch COUNT
+  * (batch size ⌈n/numBatches⌉) whatever the input size.
   *
-  * Scale shape: the driver reads ONLY parquet footers (file list + per-file
-  * row counts — no data rows); `planInputPartitions` maps an offset range to
-  * per-file row ranges, and each partition reader opens its file ON THE
-  * EXECUTOR, skipping whole row groups that precede its range. Driver memory
-  * is O(#files), not O(rows), so the source survives inputs that never fit
-  * on the driver.
+  * Scale shape: the driver reads ONLY parquet footers — file list, row
+  * counts and each row group's first row, byte offset and compressed size.
+  * `planInputPartitions` maps an offset range to per-file row ranges, each
+  * carrying the byte range of the row groups it overlaps; on the executor,
+  * Spark's own parquet reader decodes just those groups, and the partition
+  * drops the rows before its range in the first one. Driver memory is
+  * O(#row groups), not O(rows).
   */
 class ReplayStreamSource extends TableProvider {
 
@@ -85,8 +81,11 @@ final case class ReplayOffset(rows: Long) extends Offset {
   override def json(): String = rows.toString
 }
 
-/** One file of the snapshot: global row offset of its first row + row count. */
-private[sources] final case class ReplayFile(path: String, start: Long, rows: Long)
+/** One row group of a file: file-local first row, byte offset, compressed size. */
+private[sources] final case class ReplayGroup(firstRow: Long, pos: Long, bytes: Long)
+
+/** One file of the snapshot: global offset of its first row, row count, row groups. */
+private[sources] final case class ReplayFile(path: String, start: Long, rows: Long, groups: Array[ReplayGroup])
 
 final class ReplayMicroBatchStream(path: String, batchSize: Int,
                                    numBatches: Option[Int], schema: StructType)
@@ -94,7 +93,7 @@ final class ReplayMicroBatchStream(path: String, batchSize: Int,
     with SupportsTriggerAvailableNow {
 
   // Deterministic snapshot at stream start: parquet files sorted by name,
-  // row counts from footers only — no data reaches the driver.
+  // row counts and row groups from footers only — no data reaches the driver.
   private lazy val files: Array[ReplayFile] = {
     val conf = new Configuration()
     val root = new Path(path)
@@ -108,9 +107,11 @@ final class ReplayMicroBatchStream(path: String, batchSize: Int,
     var off = 0L
     statuses.map { st =>
       val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
-      val n = try reader.getRecordCount finally reader.close()
-      val f = ReplayFile(st.getPath.toString, off, n)
-      off += n
+      val blocks = try reader.getFooter.getBlocks.asScala.toArray finally reader.close()
+      val firstRows = blocks.scanLeft(0L)(_ + _.getRowCount)
+      val f = ReplayFile(st.getPath.toString, off, firstRows.last, blocks.zip(firstRows).map {
+        case (b, first) => ReplayGroup(first, b.getStartingPos, b.getCompressedSize) })
+      off += f.rows
       f
     }
   }
@@ -143,13 +144,9 @@ final class ReplayMicroBatchStream(path: String, batchSize: Int,
   }
 
   override def reportLatestOffset(): Offset = ReplayOffset(totalRows)
-
   override def prepareForTriggerAvailableNow(): Unit = ()
-
-  override def latestOffset(): Offset =
-    throw new UnsupportedOperationException(
-      "admission-control latestOffset(start, limit) is used")
-
+  override def latestOffset(): Offset = throw new UnsupportedOperationException(
+    "admission-control latestOffset(start, limit) is used")
   override def deserializeOffset(json: String): Offset = ReplayOffset(json.toLong)
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
@@ -165,131 +162,56 @@ final class ReplayMicroBatchStream(path: String, batchSize: Int,
         val nSplits = math.max(1L, math.min(4L, take))
         val chunk = math.max(1L, (take + nSplits - 1) / nSplits)
         (s until e by chunk).iterator.map { cs =>
-          ReplayInputPartition(f.path, cs - f.start,
-            math.min(chunk, e - cs), schema): InputPartition
+          val (from, until) = (cs - f.start, math.min(cs + chunk, e) - f.start)
+          // row groups g0..g1 hold [from, until): the last one starting at or
+          // before `from` through the last one starting before `until`
+          val g0 = f.groups(f.groups.lastIndexWhere(_.firstRow <= from))
+          val g1 = f.groups(f.groups.lastIndexWhere(_.firstRow < until))
+          ReplayInputPartition(f.path, g0.pos, g1.pos + g1.bytes - g0.pos,
+            from - g0.firstRow, until - from): InputPartition
         }
       }
     }.toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    (partition: InputPartition) =>
-      new ReplayPartitionReader(partition.asInstanceOf[ReplayInputPartition])
+  // One Spark parquet reader per micro-batch on the stream's own session, so
+  // its parquet and time-zone settings apply as in a batch scan. The builder
+  // writes its schema keys into the conf it gets: a copy, never the live one.
+  override def createReaderFactory(): PartitionReaderFactory = {
+    val spark = SparkSession.active
+    val read = new ParquetFileFormat().buildReaderWithPartitionValues(
+      spark, schema, new StructType(), schema, Nil,
+      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+      new Configuration(spark.sparkContext.hadoopConfiguration))
+    (partition: InputPartition) => {
+      val p = partition.asInstanceOf[ReplayInputPartition]
+      new ReplayPartitionReader(read(PartitionedFile(InternalRow.empty,
+        SparkPath.fromPathString(p.path), p.start, p.length)), p.skip, p.take)
+    }
+  }
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 }
 
-/** `skip`/`take` are row positions WITHIN the file. */
-final case class ReplayInputPartition(path: String, skip: Long, take: Long,
-                                      schema: StructType) extends InputPartition
+/** Byte range `start`/`length` of the overlapped row groups; rows `skip`/`take` from the first. */
+final case class ReplayInputPartition(path: String, start: Long, length: Long,
+                                      skip: Long, take: Long) extends InputPartition
 
-/** Executor-side parquet reader: opens the file locally, skips whole row
-  * groups preceding `skip` (footer metadata — no decode), then decodes
-  * records via the parquet-hadoop example Group API and converts to
-  * InternalRow by the Spark schema. Supports the flat primitive schemas this
-  * source replays (long/int/double/float/boolean/string/binary/date,
-  * timestamps surfaced as their physical int64).
-  */
-final class ReplayPartitionReader(p: ReplayInputPartition)
+/** Serves `take` rows of Spark's parquet reader after dropping `skip`. */
+final class ReplayPartitionReader(rows: Iterator[InternalRow], skip: Long, take: Long)
     extends PartitionReader[InternalRow] {
-
-  private val reader =
-    ParquetFileReader.open(HadoopInputFile.fromPath(new Path(p.path), new Configuration()))
-  // post-open initialization closes the file handle on failure (e.g. a
-  // mixed-schema directory where this file lacks a query column) — task
-  // retries must not leak open streams
-  private val (fileSchema, columnIO, fieldIdx, tsScale) =
-    try {
-      val fs = reader.getFooter.getFileMetaData.getSchema
-      val io = new ColumnIOFactory().getColumnIO(fs)
-      // parquet field index for each Spark field (by name — file order may differ)
-      val idx = p.schema.fields.map(f => fs.getFieldIndex(f.name))
-      // Spark timestamps are internally MICROSECONDS; the file's int64 may be
-      // annotated millis/micros/nanos — precompute the per-field scale
-      // (positive = multiply, negative = divide).
-      val scale: Array[Long] = p.schema.fields.map { f =>
-        f.dataType match {
-          case TimestampType | TimestampNTZType =>
-            import org.apache.parquet.schema.LogicalTypeAnnotation
-            fs.getType(fs.getFieldIndex(f.name)).asPrimitiveType()
-              .getLogicalTypeAnnotation match {
-              case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-                t.getUnit match {
-                  case LogicalTypeAnnotation.TimeUnit.MILLIS => 1000L
-                  case LogicalTypeAnnotation.TimeUnit.MICROS => 1L
-                  case LogicalTypeAnnotation.TimeUnit.NANOS => -1000L
-                }
-              case _ => 1L
-            }
-          case _ => 1L
-        }
-      }
-      (fs, io, idx, scale)
-    } catch { case e: Throwable => reader.close(); throw e }
-
-  private var remainingToSkip = p.skip
-  private var remainingToTake = p.take
-  private var groupReader: org.apache.parquet.io.RecordReader[Group] = _
-  private var groupRowsLeft = 0L
+  private var toSkip = skip
+  private var left = take
   private var current: InternalRow = _
 
-  private def advanceRowGroup(): Boolean = {
-    // skip whole row groups that end before our range starts — metadata only
-    var pages = reader.readNextRowGroup()
-    while (pages != null && remainingToSkip >= pages.getRowCount) {
-      remainingToSkip -= pages.getRowCount
-      pages = reader.readNextRowGroup()
-    }
-    if (pages == null) false
-    else {
-      groupReader = columnIO.getRecordReader(pages, new GroupRecordConverter(fileSchema))
-      groupRowsLeft = pages.getRowCount
-      true
-    }
-  }
-
   override def next(): Boolean = {
-    if (remainingToTake <= 0) return false
-    while (groupRowsLeft == 0) if (!advanceRowGroup()) return false
-    // decode-skip leading rows inside the first row group of the range
-    while (remainingToSkip > 0 && groupRowsLeft > 0) {
-      groupReader.read(); groupRowsLeft -= 1; remainingToSkip -= 1
-      while (groupRowsLeft == 0) if (!advanceRowGroup()) return false
-    }
-    val g = groupReader.read()
-    groupRowsLeft -= 1
-    remainingToTake -= 1
-    current = convert(g)
-    true
-  }
-
-  private def convert(g: Group): InternalRow = {
-    val row = new GenericInternalRow(p.schema.length)
-    var i = 0
-    while (i < p.schema.length) {
-      val idx = fieldIdx(i)
-      if (g.getFieldRepetitionCount(idx) == 0) row.setNullAt(i)
-      else p.schema.fields(i).dataType match {
-        case LongType => row.setLong(i, g.getLong(idx, 0))
-        case TimestampType | TimestampNTZType =>
-          val raw = g.getLong(idx, 0)
-          row.setLong(i, if (tsScale(i) > 0) raw * tsScale(i) else raw / -tsScale(i))
-        case IntegerType | DateType => row.setInt(i, g.getInteger(idx, 0))
-        case DoubleType => row.setDouble(i, g.getDouble(idx, 0))
-        case FloatType => row.setFloat(i, g.getFloat(idx, 0))
-        case BooleanType => row.setBoolean(i, g.getBoolean(idx, 0))
-        case StringType =>
-          row.update(i, UTF8String.fromBytes(g.getBinary(idx, 0).getBytes))
-        case BinaryType => row.update(i, g.getBinary(idx, 0).getBytes)
-        case dt => throw new UnsupportedOperationException(
-          s"replay source: unsupported column type $dt for field ${p.schema.fields(i).name}")
-      }
-      i += 1
-    }
-    row
+    while (toSkip > 0 && rows.hasNext) { rows.next(); toSkip -= 1 }
+    if (left <= 0 || !rows.hasNext) false
+    else { current = rows.next(); left -= 1; true }
   }
 
   override def get(): InternalRow = current
-  override def close(): Unit = reader.close()
+  override def close(): Unit =
+    rows match { case c: java.io.Closeable => c.close(); case _ => () }
 }

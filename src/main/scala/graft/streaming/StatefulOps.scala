@@ -25,11 +25,11 @@ object StatefulOps {
     * grows with the DISTINCT key count, unboundedly — it is only safe on
     * bounded replays (the correctness-gate shape) or key domains that are
     * themselves bounded (enum-like keys). For an unbounded key domain — doc
-    * fingerprints, event ids — use [[firstOccurrencesWithTtl]], which ages
-    * seen-markers out with the dedup horizon: re-deliveries in real systems
-    * (Kinesis re-polls, overlapping backfills) arrive within a bounded
-    * window, so a TTL at that window keeps the guarantee AND the state
-    * bound.
+    * fingerprints, event ids — use Spark's built-in
+    * `dropDuplicatesWithinWatermark`, which ages seen-markers out with the
+    * watermark: re-deliveries in real systems (Kinesis re-polls, overlapping
+    * backfills) arrive within a bounded window, so a watermark delay at that
+    * window keeps the guarantee AND the state bound.
     */
   def firstOccurrences[T: Encoder](ds: Dataset[T])(key: T => String): Dataset[T] =
     firstOccurrenceBy(ds)(key, (a, _) => a)
@@ -45,7 +45,7 @@ object StatefulOps {
     * equals the GLOBAL minimum — oracle-expressible as min-per-group.
     *
     * Same state caveat as [[firstOccurrences]]: no TTL, so production use on
-    * unbounded key domains needs [[firstOccurrencesWithTtl]]'s horizon.
+    * unbounded key domains needs `dropDuplicatesWithinWatermark`'s horizon.
     */
   def firstOccurrenceBy[T: Encoder](ds: Dataset[T])(
       key: T => String, better: (T, T) => T): Dataset[T] =
@@ -55,25 +55,6 @@ object StatefulOps {
         (_: String, rows: Iterator[T], state: GroupState[Boolean]) =>
           if (state.exists) Iterator.empty
           else { state.update(true); Iterator.single(rows.reduce(better)) }
-      }
-
-  /** TTL'd first-occurrence filter: seen-markers expire after `ttlMs` of
-    * processing time, bounding state for unbounded key domains (the standard
-    * corpus-dedup horizon trade-off).
-    */
-  def firstOccurrencesWithTtl[T: Encoder](ds: Dataset[T], ttlMs: Long)(
-      key: T => String): Dataset[T] =
-    ds.groupByKey(key)(Encoders.STRING)
-      .flatMapGroupsWithState[Boolean, T](
-        OutputMode.Append(), GroupStateTimeout.ProcessingTimeTimeout()) {
-        (_: String, rows: Iterator[T], state: GroupState[Boolean]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else if (state.exists) Iterator.empty
-          else {
-            state.update(true)
-            state.setTimeoutDuration(ttlMs)
-            rows.take(1)
-          }
       }
 
   /** Per-key streaming dyadic EWMA over micro-batch volumes — the

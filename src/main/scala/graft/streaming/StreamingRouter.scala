@@ -57,16 +57,14 @@ object StreamingRouter {
     */
   def drainRoutedToParquet(stream: DataFrame, config: Router.Config,
                            keepCols: Seq[String], outDir: String,
-                           checkpointDir: String,
-                           filesPerBatch: Int = 1): Unit = {
+                           checkpointDir: String): Unit = {
     val q = foreachRoutedBatch(stream, config) { (routed, _) =>
       routed.tagged
         .select((Seq(Router.TagCol, Router.ReasonCol) ++ keepCols).map(col): _*)
-        // micro-batch size is bounded by the source's batch config, so a
-        // fixed small file count per batch is the correct sink layout —
-        // without it every batch fans out to shuffle-partition-many tiny
-        // files and downstream reads pay the listing
-        .coalesce(filesPerBatch)
+        // one file per micro-batch: the batch is bounded by the source's
+        // batch config. No shuffle sits below this coalesce, so it also folds
+        // the batch's decode, validation and write into a single task.
+        .coalesce(1)
         .write.mode("append").parquet(outDir)
     }
       .trigger(Trigger.AvailableNow())

@@ -176,6 +176,23 @@ object Similarity {
       .orderBy(col("sid")).limit(nlist).collect()
       .toSeq.map(r => (r.getLong(0), r.getSeq[Double](1)))
 
+  /** The seeds sorted nearest first for each row: `struct(-cosine, sid)`
+    * ascending, i.e. cosine desc with sid tiebreak — one bounded array_sort
+    * over nlist codegen'd cosines, shuffle-free.
+    */
+  private def nearestSeeds(vec: Column, seeds: Seq[(Long, Seq[Double])]): Column =
+    array_sort(array(seeds.map { case (sid, svec) =>
+      struct((-VectorFunctions.cosine(vec, array(svec.map(lit): _*))).as("nscore"),
+        lit(sid).as("sid"))
+    }: _*))
+
+  /** One row per (row, nearest-`nCells` seed), the seed's id in `cell`. */
+  private def withNearestCells(df: DataFrame, vecC: String,
+                               seeds: Seq[(Long, Seq[Double])], nCells: Int): DataFrame =
+    df.withColumn("__cell_s", explode(slice(nearestSeeds(col(vecC), seeds), 1, nCells)))
+      .withColumn("cell", col("__cell_s").getField("sid"))
+      .drop("__cell_s")
+
   /** Standalone nearest-cell assignment against literal seeds — the IVF
     * coarse quantizer as its own operator, for incremental index
     * maintenance: assign a new ingest batch to an EXISTING snapshot's
@@ -184,14 +201,8 @@ object Similarity {
     * [[ivfTopK]]'s assignment exactly (cosine desc, sid asc tiebreak).
     */
   def assignCells(df: DataFrame, vecCol: String,
-                  seeds: Seq[(Long, Seq[Double])]): DataFrame = {
-    val perSeed = seeds.map { case (sid, svec) =>
-      struct((-VectorFunctions.cosine(col(vecCol), array(svec.map(lit): _*))).as("nscore"),
-        lit(sid).as("sid"))
-    }
-    df.withColumn("cell",
-      element_at(array_sort(array(perSeed: _*)), 1).getField("sid"))
-  }
+                  seeds: Seq[(Long, Seq[Double])]): DataFrame =
+    df.withColumn("cell", element_at(nearestSeeds(col(vecCol), seeds), 1).getField("sid"))
 
   def ivfTopK(queries: DataFrame, qidCol: String,
               candidates: DataFrame, cidCol: String,
@@ -210,18 +221,6 @@ object Similarity {
     val seeds: Seq[(Long, Seq[Double])] =
       trainedSeeds.getOrElse(seedVectors(candidates, cidCol, vecCol, nlist))
 
-    // Nearest-nCells cell ids for each row: sort struct(-cosine, sid) asc ==
-    // cosine desc with sid tiebreak — identical ordering to the old window.
-    def assign(df: DataFrame, vecC: String, nCells: Int, outCol: String): DataFrame = {
-      val perSeed = seeds.map { case (sid, svec) =>
-        struct((-VectorFunctions.cosine(col(vecC), array(svec.map(lit): _*))).as("nscore"),
-          lit(sid).as("sid"))
-      }
-      df.withColumn("__cell_s", explode(slice(array_sort(array(perSeed: _*)), 1, nCells)))
-        .withColumn(outCol, col("__cell_s").getField("sid"))
-        .drop("__cell_s")
-    }
-
     // The assignment IS the IVF index — nprobe-independent, so it LANDS
     // once per (corpus plan, quantizer literals) per session, exactly like
     // the persisted index file a production ANN deployment serves from: an
@@ -229,10 +228,10 @@ object Similarity {
     // consumer) read the one landed assignment instead of re-running the
     // nlist-cosine encode pass over the corpus per call.
     val cells = graft.relational.Stages.materialize(
-      assign(candidates.select(col(cidCol).as("cid"), col(vecCol).as("cvec")),
-        "cvec", 1, "cell"), "ivf_cells")
-    val probed = assign(queries.select(col(qidCol).as("qid"), col(vecCol).as("qvec")),
-      "qvec", nprobe, "cell")
+      withNearestCells(candidates.select(col(cidCol).as("cid"), col(vecCol).as("cvec")),
+        "cvec", seeds, 1), "ivf_cells")
+    val probed = withNearestCells(queries.select(col(qidCol).as("qid"), col(vecCol).as("qvec")),
+      "qvec", seeds, nprobe)
 
     val scored = cells.join(probed, "cell")
       .filter(col("qid") =!= col("cid"))
@@ -369,15 +368,6 @@ object Similarity {
 
     def sub(vec: Column, j: Int): Column = slice(vec, j * ds + 1, ds)
 
-    def cells(df: DataFrame, vecC: String, nCells: Int): DataFrame = {
-      val perSeed = seeds.map { case (sid, svec) =>
-        struct((-VectorFunctions.cosine(col(vecC), array(svec.map(lit): _*))).as("nscore"),
-          lit(sid).as("sid"))
-      }
-      df.withColumn("__c", explode(slice(array_sort(array(perSeed: _*)), 1, nCells)))
-        .withColumn("cell", col("__c").getField("sid")).drop("__c")
-    }
-
     // index side: cell + m codes per candidate, vectors dropped after encode
     val cw2 = codebook.map(_.map(_.foldLeft(0.0)((a, x) => a + x * x)))
     // the encoded index (cell + m codes, floats dropped) is the PQ index
@@ -385,8 +375,8 @@ object Similarity {
     // codebook) per session like the ivfTopK assignment
     val coded = graft.relational.Stages.materialize(
       (0 until m).foldLeft(
-        cells(candidates.select(col(cidCol).as("cid"),
-          col(vecCol).cast("array<double>").as("cvec")), "cvec", 1)) { (d, j) =>
+        withNearestCells(candidates.select(col(cidCol).as("cid"),
+          col(vecCol).cast("array<double>").as("cvec")), "cvec", seeds, 1)) { (d, j) =>
         val scored = codebook(j).indices.map { c =>
           struct((lit(cw2(j)(c)) - lit(2.0) * VectorFunctions.dot(sub(col("cvec"), j),
             array(codebook(j)(c).map(lit): _*))).as("d2"), lit(c).as("c"))
@@ -396,8 +386,8 @@ object Similarity {
 
     // query side: nprobe cells + per-subspace LUTs
     val q = (0 until m).foldLeft(
-      cells(queries.select(col(qidCol).as("qid"),
-        col(vecCol).cast("array<double>").as("qvec")), "qvec", nprobe)) { (d, j) =>
+      withNearestCells(queries.select(col(qidCol).as("qid"),
+        col(vecCol).cast("array<double>").as("qvec")), "qvec", seeds, nprobe)) { (d, j) =>
       d.withColumn(s"lut_$j", array(codebook(j).indices.map { c =>
         VectorFunctions.dot(sub(col("qvec"), j), array(codebook(j)(c).map(lit): _*))
       }: _*))

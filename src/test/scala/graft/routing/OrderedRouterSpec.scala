@@ -33,12 +33,18 @@ class OrderedRouterSpec extends SparkSpec {
   }
 
   test("typed ordered processing computes per-key running state") {
-    val ds = Seq(("u1", "3", 30.0), ("u1", "1", 10.0), ("u1", "2", 20.0),
-      ("u2", "1", 5.0)).toDS()
-    val out = OrderedRouter.processOrderedTyped(ds)(_._1, _._2) { it =>
+    val df = Seq(("u1", "3", 30.0), ("u1", "1", 10.0), ("u1", "2", 20.0),
+      ("u2", "1", 5.0)).toDF("k", "seq", "v")
+    val out = OrderedRouter.processOrdered(df, "k", "seq") { it =>
+      // the handler sees whole key groups in seq order: reset on key change
+      var key: String = null
       var acc = 0.0
-      it.map { case (k, seq, v) => acc += v; (k, seq, acc) }
-    }.collect().toSet
+      it.map { r =>
+        if (r.getString(0) != key) { key = r.getString(0); acc = 0.0 }
+        acc += r.getDouble(2)
+        Row(key, r.getString(1), acc)
+      }
+    }.as[(String, String, Double)].collect().toSet
     assert(out === Set(("u1", "1", 10.0), ("u1", "2", 30.0), ("u1", "3", 60.0),
       ("u2", "1", 5.0)))
   }

@@ -1,6 +1,7 @@
 package graft.routing
 
 import graft.SparkSpec
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -80,9 +81,12 @@ class ReferenceFixtureSpec extends SparkSpec {
 
   test("ordered mode preserves the batch's sequence-number order per key") {
     val rows = records.reverse.map { case (seq, _, json) => ("undefined", seq, json) }
-    val out = OrderedRouter.processOrderedTyped(rows.toDS())(_._1, _._2) { it =>
-      it.zipWithIndex.map { case ((k, seq, _), i) => (k, seq, i) }
-    }.collect().sortBy(_._2)
+    val outSchema = StructType(Seq(StructField("k", StringType),
+      StructField("seq", StringType), StructField("pos", IntegerType)))
+    val out = OrderedRouter.processOrdered(rows.toDF("k", "seq", "json"), "k", "seq",
+      outSchema) { it =>
+      it.zipWithIndex.map { case (r, i) => Row(r.getString(0), r.getString(1), i) }
+    }.as[(String, String, Int)].collect().sortBy(_._2)
     // lower sequence number must be processed first (position 0)
     assert(out.head._3 === 0 && out.last._3 === 1)
   }

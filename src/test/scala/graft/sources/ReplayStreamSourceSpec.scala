@@ -2,8 +2,15 @@ package graft.sources
 
 import graft.SparkSpec
 import graft.routing._
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import scala.jdk.CollectionConverters._
 
 class ReplayStreamSourceSpec extends SparkSpec {
   import spark.implicits._
@@ -173,5 +180,76 @@ class ReplayStreamSourceSpec extends SparkSpec {
     q.awaitTermination(60000)
 
     assert(streamCounts === batchCounts)
+  }
+
+  /** Footer of the one part file a `coalesce(1)` write left under `dir`. */
+  private def footer(dir: String): ParquetMetadata = {
+    val part = new java.io.File(dir).listFiles().find(_.getName.endsWith(".parquet")).get
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromPath(new Path(part.getPath), new Configuration()))
+    try reader.getFooter finally reader.close()
+  }
+
+  /** Every row of a `batchSize`-row replay of `path`, one Seq per micro-batch. */
+  private def replayBatches(path: String, batchSize: Int): Vector[Seq[Row]] = {
+    var batches = Vector.empty[Seq[Row]]
+    val q = spark.readStream
+      .format(classOf[ReplayStreamSource].getName)
+      .option("path", path)
+      .option("batchSize", batchSize.toString)
+      .load()
+      .writeStream
+      .foreachBatch { (b: DataFrame, _: Long) => batches :+= b.collect().toSeq }
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination(60000)
+    batches
+  }
+
+  test("batches crossing row-group seams replay exactly the batch read's rows") {
+    val path = java.nio.file.Files.createTempDirectory("replay_groups").toString + "/t"
+    spark.range(0, 3000).selectExpr("id", "concat('v', id) AS s")
+      .coalesce(1).write.option("parquet.block.size", "4096").parquet(path)
+    val groups = footer(path).getBlocks.asScala.map(_.getRowCount)
+    assert(groups.size > 1, s"the fixture file needs several row groups: $groups")
+
+    // 700-row batches, each split into up to 4 partitions of 175 rows: the
+    // ranges start and end inside row groups
+    val batches = replayBatches(path, 700)
+    assert(batches.forall(_.size <= 700), s"batchSize respected: ${batches.map(_.size)}")
+    assert(batches.flatten === spark.read.parquet(path).collect().toSeq,
+      "the batches, in order, are the file's rows in file order")
+  }
+
+  test("nested, decimal, date and millis-timestamp columns replay as the batch read") {
+    val path = java.nio.file.Files.createTempDirectory("replay_types").toString + "/t"
+    val millis = spark.newSession()
+    millis.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MILLIS")
+    millis.range(0, 50).selectExpr("id",
+      "CASE WHEN id % 7 = 0 THEN NULL ELSE array(CAST(id AS float), CAST(id / 4 AS float)) END AS emb",
+      "CASE WHEN id % 5 = 0 THEN NULL ELSE named_struct('a', id * 2, 's', concat('s', id)) END AS st",
+      "CAST(id * 1.25 AS decimal(12,2)) AS price",
+      "date_add(DATE'2024-01-01', CAST(id AS int)) AS d",
+      "timestamp_millis(1700000000123 + id * 1001) AS ts")
+      .coalesce(1).write.parquet(path)
+    val fileSchema = footer(path).getFileMetaData.getSchema
+    assert(fileSchema.getType(fileSchema.getFieldIndex("ts")).toString.contains("MILLIS"))
+
+    val batch = spark.read.parquet(path)
+    val streamed = replayBatches(path, 20)
+    assert(streamed.size === 3)
+    assert(streamed.flatten.sortBy(_.getLong(0)) === batch.collect().toSeq.sortBy(_.getLong(0)))
+  }
+
+  test("replay leaves the context's Hadoop conf untouched") {
+    def entries(): Map[String, String] =
+      spark.sparkContext.hadoopConfiguration.iterator().asScala
+        .map(e => e.getKey -> e.getValue).toMap
+    // a schema no other case reads, so a write into the live conf shows
+    val path = java.nio.file.Files.createTempDirectory("replay_conf").toString + "/t"
+    Seq((1L, "a"), (2L, "b")).toDF("conf_probe_id", "conf_probe_s").write.parquet(path)
+    val before = entries()
+    assert(replayBatches(path, 1).map(_.size).sum === 2)
+    assert(entries() === before)
   }
 }
