@@ -370,12 +370,13 @@ object EventQueries {
 
     // ---- T1/T6 under the oracle: the streaming skin end-to-end -----------
     // The reference's ACTUAL job shape, hash-checked: a DSv2 replay stream
-    // over the events table drains through foreachRoutedBatch
-    // (Trigger.AvailableNow, numBatches 4 → multi-batch at EVERY SF with
-    // constant trigger overhead) into a parquet sink carrying tag + reason, and the query
-    // returns hourly per-route windowed counts over the SINK — so the
-    // verdict covers the micro-batch source, the per-batch routing, the
-    // append sink, AND the window, against the same batch SQL oracle the
+    // over the events table is tagged by Router.tag and drains through
+    // Spark's parquet file sink (drainToParquet: Trigger.AvailableNow,
+    // numBatches 2 → multi-batch at EVERY SF with constant trigger
+    // overhead) carrying tag + ts, and the query returns hourly per-route
+    // windowed counts over the SINK — so the verdict covers the
+    // micro-batch source, the per-batch routing, the append sink, AND the
+    // window, against the same batch SQL oracle the
     // batch analogue uses. Batches partition the replayed rows disjointly,
     // so sink-level aggregation equals the all-at-once batch answer.
     DeclaredQuery("stream_windowed_route_counts",
@@ -387,9 +388,8 @@ object EventQueries {
               col("event_type").as("schema"),
               get_json_object(col("props"), "$.k").cast("long").as("k")).as("data")))
         val config = Router.Config(envelopeId, RegisteredSchema(envelopeId, Nil), registry)
-        val sink = graft.streaming.StreamingRouter.drainRoutedToTemp(
-          evs, config, keepCols = Seq("ts"), "route")
-        s.read.parquet(sink)
+        graft.streaming.StreamingRouter.drainToParquet(
+            Router.tag(evs, config).select(col(Router.TagCol), col("ts")), "route")
           .groupBy(col(Router.TagCol).as("route"),
             date_trunc("hour", col("ts")).cast("timestamp_ntz").as("hour"))
           .agg(count(lit(1)).as("n"))

@@ -22,7 +22,9 @@ import org.apache.spark.sql.expressions.Window
   *
   * Tie rule: a right row with time == left time IS visible (backward-
   * inclusive), matching DuckDB/pandas `ASOF JOIN ... ON l.t >= r.t` — the
-  * right marker sorts before the left marker on equal timestamps.
+  * right marker sorts before the left marker on equal timestamps. NULL
+  * times follow DuckDB too: a null-time right row never matches, and a
+  * null-time left row is kept unmatched (as [[graft.plans.NativeAsOf]]).
   */
 object AsOfJoin {
 
@@ -97,7 +99,7 @@ object AsOfJoin {
         leftCols.filterNot(keyCols.contains).map(col) :+
         lit(null).cast(rStructType).as(rs): _*)
 
-    val r = right
+    val r = right.filter(col(rightTime).isNotNull)
       .withColumn(t, col(rightTime))
       .withColumn(side, lit(rightMark))
       .select((keyCols ++ Seq(t, side)).map(col) ++
@@ -114,8 +116,10 @@ object AsOfJoin {
         last(col(rs), ignoreNulls = true)
           .over(base.rowsBetween(Window.unboundedPreceding, Window.currentRow))
 
+    // a null-time left row stays unmatched even though forward's FOLLOWING
+    // frame would reach the key's later right rows
     l.unionByName(r)
-      .withColumn(rs, carried)
+      .withColumn(rs, when(col(t).isNotNull, carried))
       .filter(col(side) === lit(leftMark))
       .select(leftCols.map(col) ++
         rightVals.map(c => col(rs).getField(c).as(s"asof_$c")): _*)

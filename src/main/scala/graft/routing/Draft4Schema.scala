@@ -60,10 +60,9 @@ object Draft4Schema {
       throw new IllegalArgumentException(
         "schema document needs self {vendor, name, version} — the " +
           "reference's makeSchemaId contract (lib/kinesisHandler.js:15-17)"))
-    val id = Seq("vendor", "name", "version").map { f =>
-      Option(self.get(f)).map(_.asText).getOrElse(
-        throw new IllegalArgumentException(s"self.$f missing"))
-    }.mkString("/")
+    def field(f: String): String = Option(self.get(f)).map(_.asText).getOrElse(
+      throw new IllegalArgumentException(s"self.$f missing"))
+    val id = SchemaId(field("vendor"), field("name"), field("version")).render
     // definitions compile first into the $ref registry (by-name closure, so
     // in-document ref ordering doesn't matter)
     var defs = Map.empty[String, Seq[Constraint]]

@@ -390,20 +390,6 @@ object StatefulOps {
       }
   }
 
-  /** Per-key running counters across micro-batches (`mapGroupsWithState`):
-    * emits (key, totalSoFar) once per batch per active key.
-    */
-  def runningCounts[T](ds: Dataset[T])(key: T => String): Dataset[(String, Long)] = {
-    implicit val enc: Encoder[(String, Long)] = Encoders.tuple(Encoders.STRING, Encoders.scalaLong)
-    ds.groupByKey(key)(Encoders.STRING)
-      .mapGroupsWithState[Long, (String, Long)](GroupStateTimeout.NoTimeout()) {
-        (k: String, rows: Iterator[T], state: GroupState[Long]) =>
-          val total = state.getOption.getOrElse(0L) + rows.size
-          state.update(total)
-          (k, total)
-      }
-  }
-
   /** Streaming KMV distinct-count sketch — [[graft.relational.Kmv]]'s
     * streaming twin (the O124s row): per key, state is EXACTLY the sketch
     * (the k smallest distinct 60-bit hashes, ascending) — O(k) forever,

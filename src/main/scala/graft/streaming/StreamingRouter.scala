@@ -10,11 +10,13 @@ import graft.routing.Router
   *
   * The reference's execution unit is "one Lambda invoke = one Kinesis batch"
   * (reference: lib/kinesisHandler.js:132-192); Structured Streaming's
-  * micro-batch + `foreachBatch` is the exact same contract, so the batch
+  * micro-batch is the exact same contract, so the batch
   * [[Router]] is reused unchanged — identical semantics in both modes by
-  * construction, and the at-least-once + quarantine behavior carries over
-  * (checkpointed offsets give the re-poll; bad messages land in the
-  * dead-letter branch instead of failing the batch, ref :145-149).
+  * construction, and the quarantine behavior carries over (bad messages
+  * land in the dead-letter branch instead of failing the batch, ref
+  * :145-149). Checkpointed offsets give the re-poll; the bounded drains
+  * write through Spark's parquet file sink, whose commit log makes them
+  * exactly-once for readers of the sink.
   */
 object StreamingRouter {
 
@@ -48,30 +50,20 @@ object StreamingRouter {
   /** Drain a BOUNDED stream through the routed path into a parquet sink and
     * block until done (`Trigger.AvailableNow`): the reference's whole job
     * shape — decode → validate → route → ack/quarantine per micro-batch,
-    * every batch appended with its tag + reason columns so branches,
-    * dead letters, and skips all land in one downstream-queryable dataset
+    * every row landing with its tag + reason columns so branches, dead
+    * letters, and skips all land in one downstream-queryable dataset
     * (ref lib/kinesisHandler.js:132-192). Checkpointed offsets make a
-    * restart resume instead of re-reading (at-least-once; the parquet
-    * append is the idempotency boundary, exactly the reference's re-poll
-    * contract).
+    * restart resume instead of re-reading, and the file sink's commit log
+    * (`_spark_metadata`) makes the drain exactly-once for readers: a batch
+    * replayed after a lost commit is skipped by the sink, and a reader of
+    * `outDir` sees only committed files.
     */
   def drainRoutedToParquet(stream: DataFrame, config: Router.Config,
                            keepCols: Seq[String], outDir: String,
-                           checkpointDir: String): Unit = {
-    val q = foreachRoutedBatch(stream, config) { (routed, _) =>
-      routed.tagged
-        .select((Seq(Router.TagCol, Router.ReasonCol) ++ keepCols).map(col): _*)
-        // one file per micro-batch: the batch is bounded by the source's
-        // batch config. No shuffle sits below this coalesce, so it also folds
-        // the batch's decode, validation and write into a single task.
-        .coalesce(1)
-        .write.mode("append").parquet(outDir)
-    }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .start()
-    awaitBounded(q)
-  }
+                           checkpointDir: String): Unit =
+    drainFileSink(Router.tag(stream, config)
+      .select((Seq(Router.TagCol, Router.ReasonCol) ++ keepCols).map(col): _*),
+      outDir, checkpointDir)
 
   /** Drain a bounded Append-mode stream into a parquet sink and return a
     * reader over the landed files. This is the ONLY scale-safe shape for a
@@ -81,39 +73,29 @@ object StreamingRouter {
     * sink would collect the full pre-aggregation set into the driver
     * catalog, which dies at 100× gate scale. Downstream aggregation is then
     * ordinary batch SQL over the sink, the same pattern as
-    * [[drainRoutedToParquet]].
+    * [[drainRoutedToParquet]]. The sink lives under a fresh temp root;
+    * frames over it read it lazily, so the only safe delete point is JVM
+    * exit (deleteOnExit runs in reverse registration order, so the
+    * top-down walk removes files before their dirs).
     */
-  def drainToParquet(df: DataFrame, tag: String): DataFrame =
-    df.sparkSession.read.parquet(drainToTemp(tag) { (sinkDir, ckpt) =>
-      awaitBounded(df.writeStream.format("parquet")
-        .option("path", sinkDir)
-        .option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .start())
-    })
-
-  /** [[drainRoutedToParquet]] into a fresh temp sink; returns the sink
-    * directory for the caller to read back in whichever session it runs
-    * its batch SQL.
-    */
-  def drainRoutedToTemp(stream: DataFrame, config: Router.Config,
-                        keepCols: Seq[String], tag: String): String =
-    drainToTemp(tag)(drainRoutedToParquet(stream, config, keepCols, _, _))
-
-  /** Run `drain(sinkDir, checkpointDir)` under a fresh temp root and return
-    * the sink directory. Frames over the sink read it lazily, so the only
-    * safe delete point is JVM exit (deleteOnExit runs in reverse
-    * registration order, so the top-down walk removes files before their
-    * dirs).
-    */
-  private def drainToTemp(tag: String)(drain: (String, String) => Unit): String = {
+  def drainToParquet(df: DataFrame, tag: String): DataFrame = {
     val root = java.nio.file.Files.createTempDirectory(s"graft_stream_$tag")
     val sinkDir = root.resolve("sink").toString
-    drain(sinkDir, root.resolve("ckpt").toString)
+    drainFileSink(df, sinkDir, root.resolve("ckpt").toString)
     java.nio.file.Files.walk(root).forEach(p => p.toFile.deleteOnExit())
-    sinkDir
+    df.sparkSession.read.parquet(sinkDir)
   }
+
+  /** Start `df` on Spark's parquet file sink (Append, AvailableNow) and
+    * block until the bounded input is drained.
+    */
+  private def drainFileSink(df: DataFrame, outDir: String, checkpointDir: String): Unit =
+    awaitBounded(df.writeStream.format("parquet")
+      .option("path", outDir)
+      .option("checkpointLocation", checkpointDir)
+      .outputMode(OutputMode.Append())
+      .trigger(Trigger.AvailableNow())
+      .start())
 
   /** Drain an answer-sized aggregate through a Complete-mode memory sink
     * under a query name unique to this call (Verify, Bench and the specs

@@ -71,6 +71,23 @@ class AsOfJoinSpec extends SparkSpec {
     assert(got === Seq(("k", 12L, None, 100L)))
   }
 
+  test("NULL time columns follow DuckDB ASOF: nulls never match, lefts kept") {
+    // DuckDB's l.t >= r.t is NULL on NULL ⇒ no match: a null-time right row
+    // must never be picked (even by a null-time left), and a null-time left
+    // row is emitted unmatched — in both directions
+    val l = Seq((1L, Some(10L), "lt"), (1L, None, "ln"), (2L, None, "ln2"))
+      .toDF("k", "t", "v")
+    val r = Seq((1L, Some(5L), "rt"), (1L, None, "rn"), (2L, None, "rn2"))
+      .toDF("k", "rt", "w")
+    val back = AsOfJoin.backward(l, r, Seq("k"), "t", "rt", Seq("w"))
+      .select("v", "asof_w").as[(String, Option[String])].collect().toMap
+    assert(back === Map("lt" -> Some("rt"), "ln" -> None, "ln2" -> None))
+    val fwd = AsOfJoin.forward(l, r, Seq("k"), "t", "rt", Seq("w"))
+      .select("v", "asof_w").as[(String, Option[String])].collect().toMap
+    // forward from t=10 finds nothing at-or-after (only right is at 5)
+    assert(fwd === Map("lt" -> None, "ln" -> None, "ln2" -> None))
+  }
+
   test("plan is union+window: no nested-loop join node") {
     val left = Seq(("k", 1L, "a")).toDF("key", "t", "lv")
     val right = Seq(("k", 1L, "b")).toDF("key", "t", "rv")

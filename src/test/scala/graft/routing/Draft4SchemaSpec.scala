@@ -43,6 +43,13 @@ class Draft4SchemaSpec extends SparkSpec {
     assert(c.id === "com.nordstrom/product/create/1-0-0")
   }
 
+  test("a slashed name round-trips through SchemaId.parse") {
+    val c = Draft4Schema.compile(productSchema)
+    assert(SchemaId.parse(c.id) ===
+      Some(SchemaId("com.nordstrom", "product/create", "1-0-0")))
+    assert(SchemaId.parse(c.id).map(_.render) === Some(c.id))
+  }
+
   test("compiled bundle enforces the document's keywords") {
     val compiled = Draft4Schema.compile(productSchema)
     val rows = Seq(

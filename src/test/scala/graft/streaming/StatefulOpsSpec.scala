@@ -112,26 +112,6 @@ class StatefulOpsSpec extends SparkSpec {
       (2L, 150L, 50L, 50000000L, true)))
   }
 
-  test("running counts accumulate state across micro-batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(String, Int)]
-    val counts = StatefulOps.runningCounts(input.toDS())(_._1)
-
-    val q = counts.writeStream.format("memory").queryName("counts_out")
-      .outputMode(OutputMode.Update()).start()
-
-    input.addData(("u1", 1), ("u1", 2), ("u2", 3))
-    q.processAllAvailable()
-    input.addData(("u1", 4))
-    q.processAllAvailable()
-    // Update mode: latest row per key wins
-    val got = spark.table("counts_out").as[(String, Long)].collect()
-      .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).max }
-    q.stop()
-
-    assert(got === Map("u1" -> 3L, "u2" -> 1L))
-  }
-
   test("streaming coverage merges across batches and snapshots equal the batch answer") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, Long)]

@@ -74,6 +74,39 @@ class StreamingRouterSpec extends SparkSpec {
       "rerun re-appended rows despite committed offsets")
   }
 
+  test("drainRoutedToParquet: a batch replayed after a lost commit lands once") {
+    val root = java.nio.file.Files.createTempDirectory("drain_lost_commit")
+    val outDir = root.resolve("sink").toString
+    val ckpt = root.resolve("ckpt")
+    val config = Router.Config("env/1", RegisteredSchema("env/1", Nil),
+      Map("click" -> Router.Registration(RegisteredSchema("click", Nil),
+        identity[org.apache.spark.sql.DataFrame])))
+    def drain(): Unit = {
+      val stream = spark.readStream
+        .format(classOf[graft.sources.ReplayStreamSource].getName)
+        .option("path", s"$sf0001/events.parquet")
+        .option("batchSize", "300")
+        .load()
+        .withColumn("event", struct(
+          lit("env/1").as("schema"),
+          struct(col("event_type").as("schema")).as("data")))
+      StreamingRouter.drainRoutedToParquet(stream, config,
+        keepCols = Seq("event_id"), outDir, ckpt.toString)
+    }
+    drain()
+    // a crash after the sink write and before the commit: the last batch's
+    // offsets are logged but its commit marker is not, so a restart re-runs it
+    val commits = ckpt.resolve("commits")
+    val last = commits.toFile.list().filter(_.forall(_.isDigit)).map(_.toLong).max
+    assert(last === 3L, "1000 rows in 300-row batches commit batches 0..3")
+    java.nio.file.Files.delete(commits.resolve(last.toString))
+    java.nio.file.Files.deleteIfExists(commits.resolve(s".$last.crc"))
+    drain()
+    val landed = spark.read.parquet(outDir)
+    assert(landed.count() === 1000L, "the replayed batch landed twice")
+    assert(landed.select("event_id").distinct().count() === 1000L)
+  }
+
   test("batch Observation metrics ride the query without a second pass") {
     val obs = new org.apache.spark.sql.Observation("route_obs")
     val df = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
