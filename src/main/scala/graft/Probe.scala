@@ -2,6 +2,7 @@ package graft
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{ExplainMode, FileSourceScanExec}
@@ -15,8 +16,8 @@ import graft.streaming.StreamCapture
   * run under Bench's session shape.
   *
   * Usage: runMain graft.Probe <time|plan|phases> <query|substring>... [reps]
-  *  - `time`: wall seconds and Spark job count per query and rep, with the
-  *    input tables cached as Bench caches them;
+  *  - `time`: wall seconds, Spark job count and generated classes compiled
+  *    per query and rep, with the input tables cached as Bench caches them;
   *  - `plan`: execute once, write the formatted final plan to
   *    `$SPARK_GRAFT_PLAN_DIR/<name>$SPARK_GRAFT_PLAN_SUFFIX.txt` and print
   *    the exchange-reuse stats of that final plan's [[PlanAudit.nodes]];
@@ -72,11 +73,13 @@ object Probe {
     try for (r <- 1 to reps; n <- names) {
       GraftBridge.drainListeners(spark)
       jobs.set(0)
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val t0 = System.nanoTime()
       queries(n)(spark, sfDir).count()
       val sec = (System.nanoTime() - t0) / 1e9
       GraftBridge.drainListeners(spark)
-      println(f"[time] r$r $n%-34s $sec%7.2f s  jobs=${jobs.get}")
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+      println(f"[time] r$r $n%-34s $sec%7.2f s  jobs=${jobs.get}  compiles=$compiles")
     } finally spark.sparkContext.removeSparkListener(counter)
   }
 

@@ -91,7 +91,10 @@ object Stages {
       java.nio.file.Files.walk(dir).forEach(f => f.toFile.deleteOnExit())
       p
     }
-    df.sparkSession.read.parquet(path)
+    // read with the schema just landed: inferring it would run a footer
+    // job on every memo hit (the file source makes it nullable, as
+    // inference does)
+    df.sparkSession.read.schema(df.schema).parquet(path)
   }
 
   private val landed =

@@ -67,9 +67,11 @@ class ProbeSpec extends SparkSpec {
 
   test("time prints wall seconds and the job count of each rep") {
     val text = out(Probe.time(spark, sf0001, Seq("q1_pricing_summary"), 2))
-    val jobs = "\\[time\\] r(\\d) q1_pricing_summary +[0-9.]+ s  jobs=(\\d+)".r
-      .findAllMatchIn(text).map(m => m.group(1) -> m.group(2).toInt).toSeq
-    assert(jobs.map(_._1) === Seq("1", "2"), text)
-    assert(jobs.forall(_._2 > 0), text)
+    val reps = ("\\[time\\] r(\\d) q1_pricing_summary +[0-9.]+ s  jobs=(\\d+)  " +
+      "compiles=(\\d+)").r.findAllMatchIn(text)
+      .map(m => (m.group(1), m.group(2).toInt, m.group(3).toLong)).toSeq
+    assert(reps.map(_._1) === Seq("1", "2"), text)
+    assert(reps.forall(_._2 > 0), text)
+    assert(reps(1)._3 === 0L, s"a warm rep reuses its generated classes: $text")
   }
 }

@@ -8,7 +8,9 @@ Compares the per-query maps of two Bench runs (the FULL bench_out.json
 lines, not the short headline subset) and fails (exit 1) if any query
 regressed by more than --ratio AND by more than --floor seconds absolute —
 the floor keeps sub-second jitter from tripping the wire. New and removed
-queries are reported informationally.
+queries are reported informationally, and so are the two pass totals
+(`pass1_total`, `pass2_total`) of each file that has them, so a change that
+only moves the second pass shows too.
 
 Round-5 lesson: only totals were compared round-over-round, so a 6.7x
 regression on sparse_cosine_pairs shipped unnoticed inside a total that
@@ -18,12 +20,15 @@ need a SCALE.md note; unexplained ones fail the round's local close-out.
 import json
 import sys
 
+PASS_TOTALS = ("pass1_total", "pass2_total")
+
 
 def load(path):
     with open(path) as f:
         d = json.load(f)
     q = d.get("queries", d)
-    return {k: float(v) for k, v in q.items() if isinstance(v, (int, float))}
+    passes = {k: d[k] for k in PASS_TOTALS if isinstance(d.get(k), (int, float))}
+    return {k: float(v) for k, v in q.items() if isinstance(v, (int, float))}, passes
 
 
 def main(argv):
@@ -32,7 +37,7 @@ def main(argv):
             for a in argv if a.startswith("--") and "=" in a}
     ratio = opts.get("ratio", 1.5)
     floor = opts.get("floor", 0.3)
-    prev, new = load(args[0]), load(args[1])
+    (prev, prev_passes), (new, new_passes) = load(args[0]), load(args[1])
 
     added = sorted(set(new) - set(prev))
     removed = sorted(set(prev) - set(new))
@@ -61,6 +66,10 @@ def main(argv):
     sp = sum(v for k, v in prev.items() if k.startswith("stream_"))
     sc = sum(v for k, v in new.items() if k.startswith("stream_"))
     print(f"  streaming: {sp:.1f} -> {sc:.1f} s | batch: {tp - sp:.1f} -> {tc - sc:.1f} s")
+    for k in PASS_TOTALS:
+        if k in prev_passes or k in new_passes:
+            p, c = (f"{x[k]:.1f}" if k in x else "-" for x in (prev_passes, new_passes))
+            print(f"  {k}: {p} -> {c} s")
     if regressions:
         print(f"{len(regressions)} regression(s) beyond {ratio}x + {floor}s "
               "— add a SCALE.md note or fix before round close-out")
