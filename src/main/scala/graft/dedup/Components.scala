@@ -329,34 +329,6 @@ object Components {
   private val overflowMemo =
     new graft.PlanMemo[Long, Unit]("components.overflow", _ => 16L)
 
-  /** Incremental connected components: fold a batch of NEW edges/nodes into
-    * an existing labeling without recomputing history. The previous labels
-    * are themselves the transitive closure of all past edges, so replaying
-    * them as shortcut edges (id → old comp root) preserves old connectivity
-    * exactly; only the new edges add information, and because every old
-    * member is at distance 1 from its root, convergence needs rounds
-    * proportional to the NEW bridges' depth, not the accumulated graph's.
-    * This is the incremental-clustering step a streaming near-dup pipeline
-    * runs per micro-batch (see StreamingNearDup for the band-index analog).
-    *
-    * @param prevLabels (id, comp) from the previous run — its ids are
-    *                   implicitly nodes
-    * @param newNodes   newly-arrived node ids (`idCol`)
-    * @param newEdges   newly-arrived undirected pairs
-    */
-  def incrementalComponents(prevLabels: DataFrame, newNodes: DataFrame,
-                            idCol: String, newEdges: DataFrame,
-                            srcCol: String, dstCol: String,
-                            maxIters: Int = 25): DataFrame = {
-    val allNodes = prevLabels.select(col("id").as(idCol))
-      .union(newNodes.select(col(idCol))).distinct()
-    val shortcutEdges = prevLabels
-      .filter(col("id") =!= col("comp"))
-      .select(col("id").as(srcCol), col("comp").as(dstCol))
-    val allEdges = newEdges.select(col(srcCol), col(dstCol)).union(shortcutEdges)
-    connectedComponents(allNodes, idCol, allEdges, srcCol, dstCol, maxIters)
-  }
-
   /** INCREMENTAL component maintenance: merge a new ingest batch into an
     * EXISTING labeling without touching the old edge graph — the
     * daily-snapshot shape of a 100 TB dedup pipeline, where yesterday's

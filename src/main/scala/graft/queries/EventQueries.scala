@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
@@ -22,13 +23,32 @@ object EventQueries {
     */
   private val registeredTypes = Seq("click", "purchase", "signup")
   private def registry: Map[String, Router.Registration] =
+    registryOf(Seq(Required("k"), NumRange("k", None, Some(90.0))))
+
+  /** Every registered type under the same payload `constraints`; a type in
+    * `handlers` gets that handler, the rest the identity. */
+  private def registryOf(constraints: Seq[Constraint],
+      handlers: Map[String, DataFrame => DataFrame] = Map.empty)
+      : Map[String, Router.Registration] =
     registeredTypes.map { t =>
-      t -> Router.Registration(
-        RegisteredSchema(t, Seq(Required("k"), NumRange("k", None, Some(90.0)))),
-        identity[org.apache.spark.sql.DataFrame])
+      t -> Router.Registration(RegisteredSchema(t, constraints),
+        handlers.getOrElse(t, identity[DataFrame]))
     }.toMap
 
   private val envelopeId = "com.graft/stream/1-0-0"
+
+  /** The routing config every row uses: the stream's envelope schema (no
+    * envelope constraints) over `registry`. */
+  private def routeConfig(registry: Map[String, Router.Registration]): Router.Config =
+    Router.Config(envelopeId, RegisteredSchema(envelopeId, Nil), registry)
+
+  /** Tag `evs` under `registry` and count rows per verdict: (route, n). */
+  private def routeCounts(evs: DataFrame,
+      registry: Map[String, Router.Registration]): DataFrame =
+    Router.tag(evs, routeConfig(registry))
+      .groupBy(col(Router.TagCol).as("route"))
+      .agg(count(lit(1)).as("n"))
+      .orderBy(col("route"))
 
   /** CASE-expression oracle for the routing verdict, mirroring the reference
     * short-circuit order: skip-unknown-schema BEFORE payload validation
@@ -51,8 +71,7 @@ object EventQueries {
             struct(
               col("event_type").as("schema"),
               get_json_object(col("props"), "$.k").cast("long").as("k")).as("data")))
-        val config = Router.Config(envelopeId, RegisteredSchema(envelopeId, Nil), registry)
-        Router.tag(evs, config)
+        Router.tag(evs, routeConfig(registry))
           .groupBy(col(Router.TagCol).as("route"))
           .agg(count(lit(1)).as("n"), dsum(dec2(col("value"))).as("sum_value"))
           .orderBy(col("route"))
@@ -83,17 +102,8 @@ object EventQueries {
               col("event_type").as("schema"),
               col("k").as("k"),
               col("raw").as("raw")).as("data")))
-        val strictRegistry = registeredTypes.map { t =>
-          t -> Router.Registration(
-            RegisteredSchema(t, Seq(Required("k"), NumRange("k", None, Some(90.0)),
-              NoAdditionalProps("raw", Seq("k")))),
-            identity[org.apache.spark.sql.DataFrame])
-        }.toMap
-        val config = Router.Config(envelopeId, RegisteredSchema(envelopeId, Nil), strictRegistry)
-        Router.tag(evs, config)
-          .groupBy(col(Router.TagCol).as("route"))
-          .agg(count(lit(1)).as("n"))
-          .orderBy(col("route"))
+        routeCounts(evs, registryOf(Seq(Required("k"),
+          NumRange("k", None, Some(90.0)), NoAdditionalProps("raw", Seq("k")))))
       },
       Some("""SELECT CASE
           WHEN event_type NOT IN ('click', 'purchase', 'signup') THEN 'skipped'
@@ -121,17 +131,8 @@ object EventQueries {
               array(k, pmod(k, lit(10))).as("tags"),
               when(pmod(k, lit(5)) === 0, k).as("extra"),
               when(pmod(k, lit(10)) === 0, k).as("extra2")).as("data")))
-        val gauntlet = registeredTypes.map { t =>
-          t -> Router.Registration(
-            RegisteredSchema(t, Seq(Required("k"), UniqueItems("tags"),
-              Dependencies("extra", Seq("extra2")))),
-            identity[org.apache.spark.sql.DataFrame])
-        }.toMap
-        val config = Router.Config(envelopeId, RegisteredSchema(envelopeId, Nil), gauntlet)
-        Router.tag(evs, config)
-          .groupBy(col(Router.TagCol).as("route"))
-          .agg(count(lit(1)).as("n"))
-          .orderBy(col("route"))
+        routeCounts(evs, registryOf(Seq(Required("k"), UniqueItems("tags"),
+          Dependencies("extra", Seq("extra2")))))
       },
       Some("""SELECT CASE
           WHEN event_type NOT IN ('click', 'purchase', 'signup') THEN 'skipped'
@@ -156,21 +157,12 @@ object EventQueries {
             struct(col("event_type").as("schema"), k.as("k")).as("data")))
         val defs = () => Map(
           "common/k-multiple-of-3" -> Seq(Required("k"), MultipleOf("k", 3.0)))
-        val gauntlet = registeredTypes.map { t =>
-          t -> Router.Registration(
-            RegisteredSchema(t, Seq(
-              Ref("common/k-multiple-of-3", defs),
-              OneOf(Seq(
-                Seq(NumRange("k", Some(10), Some(40))),
-                Seq(NumRange("k", Some(30), Some(90))))),
-              Not(MultipleOf("k", 7.0)))),
-            identity[org.apache.spark.sql.DataFrame])
-        }.toMap
-        val config = Router.Config(envelopeId, RegisteredSchema(envelopeId, Nil), gauntlet)
-        Router.tag(evs, config)
-          .groupBy(col(Router.TagCol).as("route"))
-          .agg(count(lit(1)).as("n"))
-          .orderBy(col("route"))
+        routeCounts(evs, registryOf(Seq(
+          Ref("common/k-multiple-of-3", defs),
+          OneOf(Seq(
+            Seq(NumRange("k", Some(10), Some(40))),
+            Seq(NumRange("k", Some(30), Some(90))))),
+          Not(MultipleOf("k", 7.0)))))
       },
       Some("""SELECT CASE
           WHEN event_type NOT IN ('click', 'purchase', 'signup') THEN 'skipped'
@@ -213,22 +205,13 @@ object EventQueries {
               col("event_type").as("schema"),
               col("k").as("k"),
               col("raw").as("raw")).as("data")))
-        val tail = registeredTypes.map { t =>
-          t -> Router.Registration(
-            RegisteredSchema(t, Seq(
-              Required("k"),
-              NumRange("k", Some(0), Some(95), exclusiveMax = true),
-              PropsCount("raw", Some(1), Some(3)),
-              PatternProps("raw", "^x-", "^\\d+$"),
-              TypeUnion("raw", "$.v", Seq("string", "integer")),
-              NoAdditionalProps("raw", Seq("k", "v", "y"), Seq("^x-")))),
-            identity[org.apache.spark.sql.DataFrame])
-        }.toMap
-        val config = Router.Config(envelopeId, RegisteredSchema(envelopeId, Nil), tail)
-        Router.tag(evs, config)
-          .groupBy(col(Router.TagCol).as("route"))
-          .agg(count(lit(1)).as("n"))
-          .orderBy(col("route"))
+        routeCounts(evs, registryOf(Seq(
+          Required("k"),
+          NumRange("k", Some(0), Some(95), exclusiveMax = true),
+          PropsCount("raw", Some(1), Some(3)),
+          PatternProps("raw", "^x-", "^\\d+$"),
+          TypeUnion("raw", "$.v", Seq("string", "integer")),
+          NoAdditionalProps("raw", Seq("k", "v", "y"), Seq("^x-")))))
       },
       Some("""SELECT CASE
           WHEN event_type NOT IN ('click', 'purchase', 'signup') THEN 'skipped'
@@ -267,8 +250,7 @@ object EventQueries {
           }"""
         val compiledRegistry = registeredTypes.map { t =>
           val c = Draft4Schema.compile(doc(t))
-          c.id -> Router.Registration(c.registeredSchema,
-            identity[org.apache.spark.sql.DataFrame])
+          c.id -> Router.Registration(c.registeredSchema, identity[DataFrame])
         }.toMap
         val k = get_json_object(col("props"), "$.k").cast("long")
         val evs = events(s, dir)
@@ -280,12 +262,7 @@ object EventQueries {
               k.as("k"),
               when(pmod(k, lit(19)) === 0, concat(lit("x"), k))
                 .otherwise(concat(lit("t"), k)).as("tag")).as("data")))
-        val config = Router.Config(envelopeId,
-          RegisteredSchema(envelopeId, Nil), compiledRegistry)
-        Router.tag(evs, config)
-          .groupBy(col(Router.TagCol).as("route"))
-          .agg(count(lit(1)).as("n"))
-          .orderBy(col("route"))
+        routeCounts(evs, compiledRegistry)
       },
       Some("""SELECT CASE
           WHEN event_type NOT IN ('click', 'purchase', 'signup') THEN 'skipped'
@@ -358,11 +335,7 @@ object EventQueries {
             unix_timestamp(col("ts")).cast("double").as("approximateArrivalTimestamp"),
             lit("1.0").as("kinesisSchemaVersion")))
         val decoded = EventCodec.withDecodedEvent(wire, payloadType)
-        val config = Router.Config(envelopeId, RegisteredSchema(envelopeId, Nil), registry)
-        Router.tag(decoded, config)
-          .groupBy(col(Router.TagCol).as("route"))
-          .agg(count(lit(1)).as("n"))
-          .orderBy(col("route"))
+        routeCounts(decoded, registry)
       },
       Some(s"""SELECT $routeOracleCase AS route, COUNT(*) AS n
         FROM (SELECT *, CAST(json_extract(props, '$$.k') AS BIGINT) AS k FROM events) e
@@ -387,9 +360,9 @@ object EventQueries {
             struct(
               col("event_type").as("schema"),
               get_json_object(col("props"), "$.k").cast("long").as("k")).as("data")))
-        val config = Router.Config(envelopeId, RegisteredSchema(envelopeId, Nil), registry)
         graft.streaming.StreamingRouter.drainToParquet(
-            Router.tag(evs, config).select(col(Router.TagCol), col("ts")), "route")
+            Router.tag(evs, routeConfig(registry))
+              .select(col(Router.TagCol), col("ts")), "route")
           .groupBy(col(Router.TagCol).as("route"),
             date_trunc("hour", col("ts")).cast("timestamp_ntz").as("hour"))
           .agg(count(lit(1)).as("n"))
@@ -497,13 +470,10 @@ object EventQueries {
             struct(
               col("event_type").as("schema"),
               get_json_object(col("props"), "$.k").cast("long").as("k")).as("data")))
-        def reg(maxK: Double) = registeredTypes.map { t =>
-          t -> Router.Registration(
-            RegisteredSchema(t, Seq(Required("k"), NumRange("k", None, Some(maxK)))),
-            identity[org.apache.spark.sql.DataFrame])
-        }.toMap
-        val strict = Router.Config(envelopeId, RegisteredSchema(envelopeId, Nil), reg(50.0))
-        val relaxed = Router.Config(envelopeId, RegisteredSchema(envelopeId, Nil), reg(90.0))
+        def reg(maxK: Double) = routeConfig(
+          registryOf(Seq(Required("k"), NumRange("k", None, Some(maxK)))))
+        val strict = reg(50.0)
+        val relaxed = reg(90.0)
         val firstPass = Router.tag(evs, strict)
         val redriven = Router.tag(
           firstPass.filter(col(Router.TagCol) === Router.BadMessage)
@@ -1080,7 +1050,7 @@ object EventQueries {
               get_json_object(col("props"), "$.k").cast("long").as("k")).as("data"),
             lit("graft-test").as("origin"),
             date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss").as("timestamp")))
-        val purchaseHandler: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
+        val purchaseHandler: DataFrame => DataFrame =
           df => df.select(
             col("event").getField("origin").as("origin"),
             substring(col("event").getField("timestamp"), 1, 10).as("day"),
@@ -1089,12 +1059,9 @@ object EventQueries {
               .as("k_decade"),
             (dec2(col("value")) * 100).cast("long").as("cents"),
             col("user_id"))
-        val registry = registeredTypes.map { t =>
-          t -> Router.Registration(
-            RegisteredSchema(t, Seq(Required("k"), NumRange("k", None, Some(90.0)))),
-            if (t == "purchase") purchaseHandler else identity[org.apache.spark.sql.DataFrame])
-        }.toMap
-        val config = Router.Config(envelopeId, RegisteredSchema(envelopeId, Nil), registry)
+        val config = routeConfig(registryOf(
+          Seq(Required("k"), NumRange("k", None, Some(90.0))),
+          Map("purchase" -> purchaseHandler)))
         Router.route(evs, config).branches("purchase")
           .groupBy(col("origin"), col("day"), col("k_decade"))
           .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"),

@@ -1,6 +1,7 @@
 package graft.relational
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Portable relative-error quantile sketch with its own accuracy audit —
@@ -36,88 +37,13 @@ object DdSketch {
   def quantileAudit(df: DataFrame, groupCol: String, valueCol: String,
                     qsPermille: Seq[Int] = Seq(500, 990),
                     maxDistinct: Int = 200000): DataFrame = {
-    require(qsPermille.nonEmpty &&
-      qsPermille.forall(q => q >= 1 && q <= 1000),
-      s"quantileAudit: quantiles $qsPermille outside 1..1000 permille")
-    val spark = df.sparkSession
-    val v = col(valueCol).cast("long")
-    val base = df.select(col(groupCol).as("g"), v.as("v"))
-
-    // ONE eager guard probe (r15, guide §1.2): the bounded distinct-value
-    // probe doubles as the negative check — a negative value is by
-    // definition a distinct value, and the domain-size refusal fires FIRST,
-    // so the truncated probe can never hide one. The r14 shape ran a
-    // separate full-scan limit(1) job just for the sign check.
-    val probe = base.select(col("v")).distinct().limit(maxDistinct + 1).collect()
-    require(probe.length <= maxDistinct,
-      s"quantileAudit: > $maxDistinct distinct values — the exact audit " +
-        "side needs a bounded domain (the QuantileRank contract); run the " +
-        "sketch without the audit or bucketize first")
-    // negatives would silently map to garbage buckets (bin() of a negative
-    // long is its two's-complement, 64 chars) — refuse loudly
-    require(!probe.exists(r => !r.isNullAt(0) && r.getLong(0) < 0L),
-      s"quantileAudit: negative $valueCol — the geometric bucket mapping " +
-        "is defined for non-negative values; shift or split the domain")
-
-    val keyed = base.withColumn("k",
-      when(col("v") < 16L, col("v"))
-        .otherwise(expr(
-          "16L * length(bin(v)) + (v div shiftleft(1L, length(bin(v)) - 5) - 16L)")))
-    val cells = keyed.groupBy(col("g"), col("k"))
-      .agg(count(lit(1)).as("c"))
-    // per-group cumulative over the ≤ 16·64-cell sketch — bounded window.
-    // The group total rides the SAME window pass as a partition-frame sum
-    // (r15, guide §2.4): the r14 shape aggregated `totals` separately and
-    // joined it back, which executed the cells subtree twice and paid a
-    // join per side; one exchange now feeds both window columns.
-    val wCum = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("g")).orderBy(col("k"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-    val wAll = org.apache.spark.sql.expressions.Window.partitionBy(col("g"))
-    val sketchSide = cells.withColumn("cum", sum(col("c")).over(wCum))
-      .withColumn("n", sum(col("c")).over(wAll))
-
-    // exact side: per-group distinct-value CDF (domain bounded by the probe)
-    val gv = base.groupBy(col("g"), col("v")).agg(count(lit(1)).as("c"))
-    val wVal = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("g")).orderBy(col("v"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-    val exactCum = gv.withColumn("cum", sum(col("c")).over(wVal))
-      .withColumn("n", sum(col("c")).over(wAll))
-
-    import scala.jdk.CollectionConverters._
-    val qDf = broadcast(spark.createDataFrame(
-      qsPermille.sorted.map(q =>
-        org.apache.spark.sql.Row(q.toLong)).asJava,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("q_permille",
-          org.apache.spark.sql.types.LongType)))))
-
-    def pick(cumFrame: DataFrame, outCol: String, fromKey: Boolean) = {
-      val target = expr("(n * q_permille + 999) div 1000")
-      val hit = cumFrame.crossJoin(qDf)
-        .filter(col("cum") >= target)
-        .groupBy(col("g"), col("q_permille"), col("n"))
-        .agg(min(if (fromKey) col("k") else col("v")).as("__pick"))
-      if (fromKey)
-        hit.withColumn(outCol,
-          when(col("__pick") < 16L, col("__pick"))
-            .otherwise(expr(
-              "(16L + __pick % 16L) * " +
-                "shiftleft(1L, CAST(__pick div 16L - 5L AS INT))")))
-          .drop("__pick")
-      else hit.withColumnRenamed("__pick", outCol)
+    val base = df.select(col(groupCol).as("g"), col(valueCol).cast("long").as("v"))
+    audit("quantileAudit", valueCol, base, Seq("g" -> groupCol), qsPermille,
+      maxDistinct, " (the QuantileRank contract); run the sketch without " +
+        "the audit or bucketize first") {
+      base.withColumn("k", bucketKey).groupBy(col("g"), col("k"))
+        .agg(count(lit(1)).as("c"))
     }
-    pick(sketchSide, "sketch_estimate", fromKey = true)
-      .join(pick(exactCum, "exact_value", fromKey = false),
-        Seq("g", "q_permille", "n"))
-      .select(col("g").as(groupCol), col("q_permille"), col("n"),
-        col("sketch_estimate"), col("exact_value"),
-        when(col("exact_value") === 0L, lit(null).cast("long"))
-          .otherwise(expr(
-            "(1000L * (sketch_estimate - exact_value)) div exact_value"))
-          .as("err_permille"))
-      .orderBy(col(groupCol), col("q_permille"))
   }
 
   /** Pre-aggregated rollup audit — the sketch's PRODUCTION pattern under
@@ -139,84 +65,98 @@ object DdSketch {
   def rollupAudit(df: DataFrame, groupCol: String, dayCol: String,
                   valueCol: String, qsPermille: Seq[Int] = Seq(500, 990),
                   maxDistinct: Int = 200000): DataFrame = {
-    require(qsPermille.nonEmpty &&
-      qsPermille.forall(q => q >= 1 && q <= 1000),
-      s"rollupAudit: quantiles $qsPermille outside 1..1000 permille")
-    val spark = df.sparkSession
     val base = df.select(col(groupCol).as("g"),
       expr(s"datediff($dayCol, DATE '1970-01-01')").cast("long").as("d"),
       col(valueCol).cast("long").as("v"))
-    // ONE eager guard probe — the bounded distinct probe doubles as the
-    // sign check (see quantileAudit; the size refusal fires first, so the
-    // truncated probe can never hide a negative)
+    audit("rollupAudit", valueCol, base.withColumn("wk", expr("d div 7")),
+      Seq("g" -> groupCol, "wk" -> "week"), qsPermille, maxDistinct,
+      "; run the rollup without the audit") {
+      // the landed daily sketch table: ≤ 16·64 cells per (group, day)
+      val daily = Stages.materialize(
+        base.withColumn("k", bucketKey)
+          .groupBy(col("g"), col("d"), col("k"))
+          .agg(count(lit(1)).as("c")), "ddsketch_daily")
+      // weekly rollup IN CELL SPACE — merge is count addition, no raw rows
+      daily.withColumn("wk", expr("d div 7"))
+        .groupBy(col("g"), col("wk"), col("k"))
+        .agg(sum(col("c")).as("c"))
+    }
+  }
+
+  private val bucketKey = when(col("v") < 16L, col("v"))
+    .otherwise(expr(
+      "16L * length(bin(v)) + (v div shiftleft(1L, length(bin(v)) - 5) - 16L)"))
+
+  /** A bucket key's lower bound L — the sketch's quantile read. */
+  private val pickedLowerBound = when(col("__pick") < 16L, col("__pick"))
+    .otherwise(expr(
+      "(16L + __pick % 16L) * shiftleft(1L, CAST(__pick div 16L - 5L AS INT))"))
+
+  /** The audit under both entry points, partitioned by `keys` (internal
+    * name → output name). `base` holds the keys and `v`; `cells`, built
+    * only once the guard probe has passed, holds the sketch's (keys, k, c)
+    * cells. */
+  private def audit(fn: String, valueCol: String, base: DataFrame,
+                    keys: Seq[(String, String)], qsPermille: Seq[Int],
+                    maxDistinct: Int, domainHint: String)(
+      cells: => DataFrame): DataFrame = {
+    require(qsPermille.nonEmpty &&
+      qsPermille.forall(q => q >= 1 && q <= 1000),
+      s"$fn: quantiles $qsPermille outside 1..1000 permille")
+    // ONE eager guard probe (r15, guide §1.2): the bounded distinct-value
+    // probe doubles as the negative check — a negative value is by
+    // definition a distinct value, and the domain-size refusal fires FIRST,
+    // so the truncated probe can never hide one. The r14 shape ran a
+    // separate full-scan limit(1) job just for the sign check.
     val probe = base.select(col("v")).distinct().limit(maxDistinct + 1).collect()
     require(probe.length <= maxDistinct,
-      s"rollupAudit: > $maxDistinct distinct values — the exact audit " +
-        "side needs a bounded domain; run the rollup without the audit")
+      s"$fn: > $maxDistinct distinct values — the exact audit " +
+        s"side needs a bounded domain$domainHint")
+    // negatives would silently map to garbage buckets (bin() of a negative
+    // long is its two's-complement, 64 chars) — refuse loudly
     require(!probe.exists(r => !r.isNullAt(0) && r.getLong(0) < 0L),
-      s"rollupAudit: negative $valueCol — the geometric bucket mapping " +
+      s"$fn: negative $valueCol — the geometric bucket mapping " +
         "is defined for non-negative values; shift or split the domain")
-    // the landed daily sketch table: ≤ 16·64 cells per (group, day)
-    val daily = Stages.materialize(
-      base.withColumn("k",
-        when(col("v") < 16L, col("v"))
-          .otherwise(expr(
-            "16L * length(bin(v)) + (v div shiftleft(1L, length(bin(v)) - 5) - 16L)")))
-        .groupBy(col("g"), col("d"), col("k"))
-        .agg(count(lit(1)).as("c")), "ddsketch_daily")
-    // weekly rollup IN CELL SPACE — merge is count addition, no raw rows
-    val weekly = daily.withColumn("wk", expr("d div 7"))
-      .groupBy(col("g"), col("wk"), col("k"))
-      .agg(sum(col("c")).as("c"))
-    // the weekly total rides the same window pass as a partition-frame sum
-    // (r15, guide §2.4) — the r14 `totals` aggregate + join executed the
-    // weekly subtree twice and paid a join per side
-    val wCum = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("g"), col("wk")).orderBy(col("k"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-    val wAll = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("g"), col("wk"))
-    val sketchCum = weekly.withColumn("cum", sum(col("c")).over(wCum))
-      .withColumn("n", sum(col("c")).over(wAll))
-    val gv = base.withColumn("wk", expr("d div 7"))
-      .groupBy(col("g"), col("wk"), col("v"))
-      .agg(count(lit(1)).as("c"))
-    val wVal = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("g"), col("wk")).orderBy(col("v"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-    val exactCum = gv.withColumn("cum", sum(col("c")).over(wVal))
-      .withColumn("n", sum(col("c")).over(wAll))
+
+    // per-partition cumulative over the ≤ 16·64-cell sketch — bounded
+    // window. The partition total rides the SAME window pass as a
+    // partition-frame sum (r15, guide §2.4): the r14 shape aggregated
+    // `totals` separately and joined it back, which executed the cells
+    // subtree twice and paid a join per side; one exchange now feeds both
+    // window columns.
+    val parts = keys.map(k => col(k._1))
+    val wAll = Window.partitionBy(parts: _*)
+    def cumulative(frame: DataFrame, orderCol: String): DataFrame =
+      frame.withColumn("cum", sum(col("c")).over(wAll.orderBy(col(orderCol))
+          .rowsBetween(Window.unboundedPreceding, 0)))
+        .withColumn("n", sum(col("c")).over(wAll))
+    // exact side: per-partition distinct-value CDF (domain bounded by the
+    // probe)
+    val exactCum = cumulative(
+      base.groupBy(parts :+ col("v"): _*).agg(count(lit(1)).as("c")), "v")
+
     import scala.jdk.CollectionConverters._
-    val qDf = broadcast(spark.createDataFrame(
+    val qDf = broadcast(base.sparkSession.createDataFrame(
       qsPermille.sorted.map(q =>
         org.apache.spark.sql.Row(q.toLong)).asJava,
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("q_permille",
           org.apache.spark.sql.types.LongType)))))
-    def pick(cumFrame: DataFrame, outCol: String, fromKey: Boolean) = {
-      val target = expr("(n * q_permille + 999) div 1000")
-      val hit = cumFrame.crossJoin(qDf)
-        .filter(col("cum") >= target)
-        .groupBy(col("g"), col("wk"), col("q_permille"), col("n"))
-        .agg(min(if (fromKey) col("k") else col("v")).as("__pick"))
-      if (fromKey)
-        hit.withColumn(outCol,
-          when(col("__pick") < 16L, col("__pick"))
-            .otherwise(expr(
-              "(16L + __pick % 16L) * " +
-                "shiftleft(1L, CAST(__pick div 16L - 5L AS INT))")))
-          .drop("__pick")
-      else hit.withColumnRenamed("__pick", outCol)
-    }
-    pick(sketchCum, "sketch_estimate", fromKey = true)
-      .join(pick(exactCum, "exact_value", fromKey = false),
-        Seq("g", "wk", "q_permille", "n"))
-      .select(col("g").as(groupCol), col("wk").as("week"), col("q_permille"),
-        col("n"), col("sketch_estimate"), col("exact_value"),
+    def pick(cumFrame: DataFrame, from: String): DataFrame =
+      cumFrame.crossJoin(qDf)
+        .filter(col("cum") >= expr("(n * q_permille + 999) div 1000"))
+        .groupBy(parts ++ Seq(col("q_permille"), col("n")): _*)
+        .agg(min(col(from)).as("__pick"))
+    pick(cumulative(cells, "k"), "k")
+      .withColumn("sketch_estimate", pickedLowerBound).drop("__pick")
+      .join(pick(exactCum, "v").withColumnRenamed("__pick", "exact_value"),
+        keys.map(_._1) ++ Seq("q_permille", "n"))
+      .select(keys.map { case (k, out) => col(k).as(out) } ++ Seq(
+        col("q_permille"), col("n"), col("sketch_estimate"), col("exact_value"),
         when(col("exact_value") === 0L, lit(null).cast("long"))
           .otherwise(expr(
             "(1000L * (sketch_estimate - exact_value)) div exact_value"))
-          .as("err_permille"))
-      .orderBy(col(groupCol), col("week"), col("q_permille"))
+          .as("err_permille")): _*)
+      .orderBy(keys.map(k => col(k._2)) :+ col("q_permille"): _*)
   }
 }

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import scala.reflect.runtime.universe.TypeTag
 
 /** Custom per-key streaming state via `KeyValueGroupedDataset` state APIs —
   * the scalable analogue of the reference's ordered single-consumer handler
@@ -14,8 +15,30 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object StatefulOps {
 
+  private implicit val stringEnc: Encoder[String] = Encoders.STRING
   private implicit val booleanEnc: Encoder[Boolean] = Encoders.scalaBoolean
   private implicit val longEnc: Encoder[Long] = Encoders.scalaLong
+  // every state and output row below is a tuple. A state schema is part of
+  // each checkpoint; `Encoders.product` gives the same schema as
+  // `Encoders.tuple`, nullability included, so existing checkpoints read back
+  private implicit def tupleEnc[P <: Product: TypeTag]: Encoder[P] =
+    Encoders.product[P]
+
+  /** The one per-key fold under every operator here: each micro-batch hands
+    * `step` the key, its rows and its state (`init` for a key not seen
+    * before); `step` returns the state to keep — `None` leaves it as it
+    * was — and the rows to emit.
+    */
+  private def perKey[T, K: Encoder, S: Encoder, U: Encoder](
+      ds: Dataset[T], key: T => K, init: S)(
+      step: (K, Iterator[T], S) => (Option[S], Iterator[U])): Dataset[U] =
+    ds.groupByKey(key).flatMapGroupsWithState[S, U](
+      OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
+      (k: K, rows: Iterator[T], state: GroupState[S]) =>
+        val (next, out) = step(k, rows, state.getOption.getOrElse(init))
+        next.foreach(state.update)
+        out
+    }
 
   /** Streaming first-occurrence filter (exact dedup across micro-batches):
     * emits each key's first row only, ever — later occurrences in the same
@@ -49,13 +72,10 @@ object StatefulOps {
     */
   def firstOccurrenceBy[T: Encoder](ds: Dataset[T])(
       key: T => String, better: (T, T) => T): Dataset[T] =
-    ds.groupByKey(key)(Encoders.STRING)
-      .flatMapGroupsWithState[Boolean, T](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (_: String, rows: Iterator[T], state: GroupState[Boolean]) =>
-          if (state.exists) Iterator.empty
-          else { state.update(true); Iterator.single(rows.reduce(better)) }
-      }
+    perKey(ds, key, false) { (_, rows, seen) =>
+      if (seen) (None, Iterator.empty)
+      else (Some(true), Iterator.single(rows.reduce(better)))
+    }
 
   /** Per-key streaming dyadic EWMA over micro-batch volumes — the
     * [[graft.relational.Ewma]] control chart running INSIDE the stream:
@@ -69,35 +89,26 @@ object StatefulOps {
     * period belongs in the key, e.g. key = type‖week).
     */
   def ewmaPerBatch[T](ds: Dataset[T])(
-      key: T => String): Dataset[(String, Long, Long, Long, Long)] = {
-    implicit val outEnc: Encoder[(String, Long, Long, Long, Long)] =
-      Encoders.tuple(Encoders.STRING, Encoders.scalaLong,
-        Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong)
-    implicit val stEnc: Encoder[(Long, Long)] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
-    ds.groupByKey(key)(Encoders.STRING)
-      .flatMapGroupsWithState[(Long, Long), (String, Long, Long, Long, Long)](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (k: String, rows: Iterator[T], state: GroupState[(Long, Long)]) =>
-          val x = rows.size.toLong
-          val (seq0, s0) = state.getOption.getOrElse((0L, 0L))
-          val seq = seq0 + 1L
-          if (seq > 55L) throw new ArithmeticException(
-            s"ewmaPerBatch: key '$k' past 55 batches — dyadic weights " +
-              "overflow the exact scale; re-window the series")
-          val wt = if (seq == 1L) 1L else 1L << (seq - 2)
-          val s = math.addExact(s0, math.multiplyExact(x, wt))
-          state.update((seq, s))
-          // read-outs checked too: the state fold is addExact/multiplyExact,
-          // and an unchecked 1000·s here would silently wrap past s ≈ 9.2e15
-          // — reachable inside the 55-batch bound at large per-batch volumes
-          val ewmaMilli = math.multiplyExact(1000L, s) / (1L << (seq - 1))
-          val dev = if (seq == 1L) 0L
-            else math.multiplyExact(1000L,
-              math.subtractExact(math.multiplyExact(x, wt), s0)) / s0
-          Iterator.single((k, seq, x, ewmaMilli, dev))
-      }
-  }
+      key: T => String): Dataset[(String, Long, Long, Long, Long)] =
+    perKey(ds, key, (0L, 0L)) { case (k, rows, (seq0, s0)) =>
+      val x = rows.size.toLong
+      val seq = seq0 + 1L
+      if (seq > 55L) throw new ArithmeticException(
+        s"ewmaPerBatch: key '$k' past 55 batches — dyadic weights " +
+          "overflow the exact scale; re-window the series")
+      val wt = if (seq == 1L) 1L else 1L << (seq - 2)
+      val s = math.addExact(s0, math.multiplyExact(x, wt))
+      // read-outs in BigInt: 1000·s leaves long range past s ≈ 9.2e15, and
+      // every series gets there at batch 55 (s ≥ 2^54 once each batch
+      // holds a row), so long read-outs would fail a batch the bound
+      // admits; the read values themselves are ≤ 1000·x and convert exactly
+      val ewmaMilli =
+        (BigInt(1000L) * s / (BigInt(1) << (seq - 1).toInt)).bigInteger.longValueExact
+      val dev = if (seq == 1L) 0L
+        else (BigInt(1000L) * math.subtractExact(math.multiplyExact(x, wt), s0) /
+          s0).bigInteger.longValueExact
+      (Some((seq, s)), Iterator.single((k, seq, x, ewmaMilli, dev)))
+    }
 
   /** Streaming SRM guard — [[graft.relational.Experiment]]'s sample-ratio
     * check running INSIDE the stream: cumulative per-arm ROW counts (the
@@ -112,28 +123,18 @@ object StatefulOps {
     * replay is batch-SQL-replayable via the standard row-range slicing.
     */
   def srmPerBatch[T](ds: Dataset[T])(
-      arm: T => Long): Dataset[(Long, Long, Long, Long, Boolean)] = {
-    implicit val outEnc: Encoder[(Long, Long, Long, Long, Boolean)] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong,
-        Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaBoolean)
-    implicit val stEnc: Encoder[(Long, Long, Long)] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong)
-    ds.groupByKey(_ => "all")(Encoders.STRING)
-      .flatMapGroupsWithState[(Long, Long, Long), (Long, Long, Long, Long, Boolean)](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (_: String, rows: Iterator[T], state: GroupState[(Long, Long, Long)]) =>
-          var ba = 0L; var bb = 0L
-          rows.foreach { r => if (arm(r) == 0L) ba += 1L else bb += 1L }
-          val (seq0, a0, b0) = state.getOption.getOrElse((0L, 0L, 0L))
-          val na = math.addExact(a0, ba); val nb = math.addExact(b0, bb)
-          state.update((seq0 + 1L, na, nb))
-          val d = na - nb
-          val chi2 = math.multiplyExact(
-            math.multiplyExact(1000000L, d), d) / (na + nb)
-          Iterator.single((seq0 + 1L, na, nb, chi2,
-            chi2 > graft.relational.Experiment.SrmChi2CritMicro))
-      }
-  }
+      arm: T => Long): Dataset[(Long, Long, Long, Long, Boolean)] =
+    perKey(ds, (_: T) => "all", (0L, 0L, 0L)) {
+      case (_, rows, (seq0, a0, b0)) =>
+        var ba = 0L; var bb = 0L
+        rows.foreach { r => if (arm(r) == 0L) ba += 1L else bb += 1L }
+        val na = math.addExact(a0, ba); val nb = math.addExact(b0, bb)
+        val d = na - nb
+        val chi2 = math.multiplyExact(
+          math.multiplyExact(1000000L, d), d) / (na + nb)
+        (Some((seq0 + 1L, na, nb)), Iterator.single((seq0 + 1L, na, nb, chi2,
+          chi2 > graft.relational.Experiment.SrmChi2CritMicro)))
+    }
 
   /** Streaming growth accounting — [[graft.relational.Growth]]'s live twin:
     * each user's activity days classified new / retained / resurrected as
@@ -159,47 +160,36 @@ object StatefulOps {
     * would need the full day set to reclassify and is refused loudly.
     */
   def growthPerBatch(ds: Dataset[(Long, Long)])
-      : Dataset[(Long, Long, Long, String)] = {
-    implicit val outEnc: Encoder[(Long, Long, Long, String)] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong,
-        Encoders.scalaLong, Encoders.STRING)
-    implicit val stEnc: Encoder[(Long, Long)] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
-    ds.groupByKey(_._1)(Encoders.scalaLong)
-      .flatMapGroupsWithState[(Long, Long), (Long, Long, Long, String)](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (user: Long, rows: Iterator[(Long, Long)],
-         state: GroupState[(Long, Long)]) =>
-          // distinct-sort the batch's days: the shuffle into groupByKey
-          // drops intra-batch order; per user per batch this is bounded by
-          // the user's distinct active days in one trigger
-          val days = rows.map(_._2).toArray.distinct.sorted
-          val (last0, seq0) = state.getOption.getOrElse((Long.MinValue, 0L))
-          if (days.nonEmpty && last0 != Long.MinValue && days.head < last0)
-            throw new IllegalStateException(
-              s"growthPerBatch: user $user day ${days.head} arrived after " +
-                s"state day $last0 — out-of-order replay; this operator's " +
-                "O(1) state cannot reclassify the past")
-          val fresh = days.filter(_ > last0)
-          if (fresh.isEmpty) Iterator.empty
-          else {
-            val seq = seq0 + 1L
-            val out = Array.newBuilder[(Long, Long, Long, String)]
-            var prev = last0
-            fresh.foreach { d =>
-              if (prev == Long.MinValue) out += ((user, seq, d, "new"))
-              else if (d == prev + 1L) out += ((user, seq, d, "retained"))
-              else {
-                out += ((user, seq, prev + 1L, "churned"))
-                out += ((user, seq, d, "resurrected"))
-              }
-              prev = d
+      : Dataset[(Long, Long, Long, String)] =
+    perKey(ds, (_: (Long, Long))._1, (Long.MinValue, 0L)) {
+      case (user, rows, (last0, seq0)) =>
+        // distinct-sort the batch's days: the shuffle into groupByKey
+        // drops intra-batch order; per user per batch this is bounded by
+        // the user's distinct active days in one trigger
+        val days = rows.map(_._2).toArray.distinct.sorted
+        if (days.nonEmpty && last0 != Long.MinValue && days.head < last0)
+          throw new IllegalStateException(
+            s"growthPerBatch: user $user day ${days.head} arrived after " +
+              s"state day $last0 — out-of-order replay; this operator's " +
+              "O(1) state cannot reclassify the past")
+        val fresh = days.filter(_ > last0)
+        if (fresh.isEmpty) (None, Iterator.empty)
+        else {
+          val seq = seq0 + 1L
+          val out = Array.newBuilder[(Long, Long, Long, String)]
+          var prev = last0
+          fresh.foreach { d =>
+            if (prev == Long.MinValue) out += ((user, seq, d, "new"))
+            else if (d == prev + 1L) out += ((user, seq, d, "retained"))
+            else {
+              out += ((user, seq, prev + 1L, "churned"))
+              out += ((user, seq, d, "resurrected"))
             }
-            state.update((prev, seq))
-            out.result().iterator
+            prev = d
           }
-      }
-  }
+          (Some((prev, seq)), out.result().iterator)
+        }
+    }
 
   /** Streaming Holt linear forecast (double exponential smoothing) at
     * α = β = 1/2 — the EWMA family's trend-aware member: per key, level and
@@ -220,40 +210,30 @@ object StatefulOps {
     * milli division.
     */
   def holtPerBatch[T](ds: Dataset[T])(
-      key: T => String): Dataset[(String, Long, Long, Long, Long, Long)] = {
-    implicit val outEnc: Encoder[(String, Long, Long, Long, Long, Long)] =
-      Encoders.product[(String, Long, Long, Long, Long, Long)]
-    implicit val stEnc: Encoder[(Long, Long, Long)] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong)
-    ds.groupByKey(key)(Encoders.STRING)
-      .flatMapGroupsWithState[(Long, Long, Long), (String, Long, Long, Long, Long, Long)](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (k: String, rows: Iterator[T], state: GroupState[(Long, Long, Long)]) =>
-          val x = rows.size.toLong
-          val (seq0, l0, b0) = state.getOption.getOrElse((0L, 0L, 0L))
-          val seq = seq0 + 1L
-          if (seq > 20L) throw new ArithmeticException(
-            s"holtPerBatch: key '$k' past 20 batches — the 4^t exact scale " +
-              "leaves long range; re-window the series")
-          val (lt, bt) =
-            if (seq == 1L) (x, 0L)
-            else {
-              val l = math.addExact(
-                math.multiplyExact(math.multiplyExact(2L, x),
-                  1L << (2 * (seq - 2))),
-                math.multiplyExact(2L, math.addExact(l0, b0)))
-              val b = math.addExact(math.multiplyExact(2L, b0),
-                math.subtractExact(l, math.multiplyExact(4L, l0)) / 2L)
-              (l, b)
-            }
-          state.update((seq, lt, bt))
-          val den = 1L << (2 * (seq - 1))
-          Iterator.single((k, seq, x,
-            math.multiplyExact(1000L, lt) / den,
-            math.multiplyExact(1000L, bt) / den,
-            math.multiplyExact(1000L, math.addExact(lt, bt)) / den))
-      }
-  }
+      key: T => String): Dataset[(String, Long, Long, Long, Long, Long)] =
+    perKey(ds, key, (0L, 0L, 0L)) { case (k, rows, (seq0, l0, b0)) =>
+      val x = rows.size.toLong
+      val seq = seq0 + 1L
+      if (seq > 20L) throw new ArithmeticException(
+        s"holtPerBatch: key '$k' past 20 batches — the 4^t exact scale " +
+          "leaves long range; re-window the series")
+      val (lt, bt) =
+        if (seq == 1L) (x, 0L)
+        else {
+          val l = math.addExact(
+            math.multiplyExact(math.multiplyExact(2L, x),
+              1L << (2 * (seq - 2))),
+            math.multiplyExact(2L, math.addExact(l0, b0)))
+          val b = math.addExact(math.multiplyExact(2L, b0),
+            math.subtractExact(l, math.multiplyExact(4L, l0)) / 2L)
+          (l, b)
+        }
+      val den = 1L << (2 * (seq - 1))
+      (Some((seq, lt, bt)), Iterator.single((k, seq, x,
+        math.multiplyExact(1000L, lt) / den,
+        math.multiplyExact(1000L, bt) / den,
+        math.multiplyExact(1000L, math.addExact(lt, bt)) / den)))
+    }
 
   /** Streaming per-domain cap ledger — [[graft.text.DomainCuration]]'s live
     * twin (O181s): host-level flood detection as a production ingest runs
@@ -272,26 +252,14 @@ object StatefulOps {
   def domainCapsPerBatch(ds: Dataset[(String, Long)], cap: Long)
       : Dataset[(String, Long, Long, Long, Long, Boolean, Boolean)] = {
     require(cap > 0, s"domainCapsPerBatch: cap must be positive, got $cap")
-    implicit val outEnc: Encoder[(String, Long, Long, Long, Long, Boolean, Boolean)] =
-      Encoders.product[(String, Long, Long, Long, Long, Boolean, Boolean)]
-    implicit val stEnc: Encoder[(Long, Long)] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
-    ds.groupByKey(_._1)(Encoders.STRING)
-      .flatMapGroupsWithState[(Long, Long), (String, Long, Long, Long, Long, Boolean, Boolean)](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (dom: String, rows: Iterator[(String, Long)],
-         state: GroupState[(Long, Long)]) =>
-          val n = rows.size.toLong
-          if (n == 0L) Iterator.empty
-          else {
-            val (tot0, seq0) = state.getOption.getOrElse((0L, 0L))
-            val tot = math.addExact(tot0, n)
-            val seq = seq0 + 1L
-            state.update((tot, seq))
-            Iterator.single((dom, seq, n, tot,
-              math.max(0L, tot - cap), tot > cap, tot0 <= cap && tot > cap))
-          }
-      }
+    perKey(ds, (_: (String, Long))._1, (0L, 0L)) {
+      case (dom, rows, (tot0, seq0)) =>
+        val n = rows.size.toLong
+        val tot = math.addExact(tot0, n)
+        val seq = seq0 + 1L
+        (Some((tot, seq)), Iterator.single((dom, seq, n, tot,
+          math.max(0L, tot - cap), tot > cap, tot0 <= cap && tot > cap)))
+    }
   }
 
   /** Per-key streaming CUSUM over micro-batch volumes — the
@@ -309,24 +277,14 @@ object StatefulOps {
     * routing types in the gated use.
     */
   def cusumPerBatch[T](ds: Dataset[T], allowance: Long)(
-      key: T => String): Dataset[(String, Long, Long, Long)] = {
-    implicit val outEnc: Encoder[(String, Long, Long, Long)] =
-      Encoders.tuple(Encoders.STRING, Encoders.scalaLong,
-        Encoders.scalaLong, Encoders.scalaLong)
-    implicit val stEnc: Encoder[(Long, Long, Long)] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong)
-    ds.groupByKey(key)(Encoders.STRING)
-      .flatMapGroupsWithState[(Long, Long, Long), (String, Long, Long, Long)](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (k: String, rows: Iterator[T], state: GroupState[(Long, Long, Long)]) =>
-          val x = rows.size.toLong
-          val (seq0, p0, m0) = state.getOption.getOrElse((0L, 0L, 0L))
-          val p = p0 + x - allowance
-          val m = math.min(m0, p)
-          state.update((seq0 + 1L, p, m))
-          Iterator.single((k, seq0 + 1L, x, p - math.min(m, 0L)))
-      }
-  }
+      key: T => String): Dataset[(String, Long, Long, Long)] =
+    perKey(ds, key, (0L, 0L, 0L)) { case (k, rows, (seq0, p0, m0)) =>
+      val x = rows.size.toLong
+      val p = p0 + x - allowance
+      val m = math.min(m0, p)
+      (Some((seq0 + 1L, p, m)),
+        Iterator.single((k, seq0 + 1L, x, p - math.min(m, 0L))))
+    }
 
   /** Streaming interval-union coverage — the O103 sweep-line operator's
     * streaming twin: per key, the running union of [sec, sec+lenSec)
@@ -351,43 +309,30 @@ object StatefulOps {
   def coveragePerBatch(ds: Dataset[(Long, Long)], lenSec: Long)
       : Dataset[(Long, Long, Long, Long, Long)] = {
     require(lenSec > 0, s"interval length must be positive, got $lenSec")
-    implicit val outEnc: Encoder[(Long, Long, Long, Long, Long)] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong,
-        Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong)
-    implicit val stEnc: Encoder[(Long, Long, Long, Long, (Long, Long))] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong,
-        Encoders.scalaLong, Encoders.scalaLong,
-        Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
-    ds.groupByKey(_._1)
-      .flatMapGroupsWithState[(Long, Long, Long, Long, (Long, Long)),
-        (Long, Long, Long, Long, Long)](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (k: Long, rows: Iterator[(Long, Long)],
-         state: GroupState[(Long, Long, Long, Long, (Long, Long))]) =>
-          val xs = rows.map(_._2).toArray
-          java.util.Arrays.sort(xs)
-          var (seq, n, nSeg, cov, open) =
-            state.getOption.getOrElse((0L, 0L, 0L, 0L, (0L, Long.MinValue)))
-          var (s0, e0) = open
-          xs.foreach { sec =>
-            n += 1
-            if (e0 == Long.MinValue) { nSeg += 1; s0 = sec; e0 = sec + lenSec }
-            else if (sec > e0) {
-              cov += e0 - s0; nSeg += 1; s0 = sec; e0 = sec + lenSec
-            } else {
-              require(sec >= s0,
-                s"out-of-order instant $sec before open segment start $s0 " +
-                  s"for key $k — the O(1)-state contract needs per-key " +
-                  "arrival order (use the batch IntervalUnion for " +
-                  "unordered history)")
-              if (sec + lenSec > e0) e0 = sec + lenSec
-            }
+    perKey(ds, (_: (Long, Long))._1, (0L, 0L, 0L, 0L, (0L, Long.MinValue))) {
+      (k, rows, st) =>
+        val xs = rows.map(_._2).toArray
+        java.util.Arrays.sort(xs)
+        var (seq, n, nSeg, cov, open) = st
+        var (s0, e0) = open
+        xs.foreach { sec =>
+          n += 1
+          if (e0 == Long.MinValue) { nSeg += 1; s0 = sec; e0 = sec + lenSec }
+          else if (sec > e0) {
+            cov += e0 - s0; nSeg += 1; s0 = sec; e0 = sec + lenSec
+          } else {
+            require(sec >= s0,
+              s"out-of-order instant $sec before open segment start $s0 " +
+                s"for key $k — the O(1)-state contract needs per-key " +
+                "arrival order (use the batch IntervalUnion for " +
+                "unordered history)")
+            if (sec + lenSec > e0) e0 = sec + lenSec
           }
-          seq += 1
-          state.update((seq, n, nSeg, cov, (s0, e0)))
-          Iterator.single((k, seq, n, nSeg,
-            cov + (if (e0 == Long.MinValue) 0L else e0 - s0)))
-      }
+        }
+        seq += 1
+        (Some((seq, n, nSeg, cov, (s0, e0))), Iterator.single((k, seq, n, nSeg,
+          cov + (if (e0 == Long.MinValue) 0L else e0 - s0))))
+    }
   }
 
   /** Streaming KMV distinct-count sketch — [[graft.relational.Kmv]]'s
@@ -406,28 +351,17 @@ object StatefulOps {
       : Dataset[(String, Long, Long, Long, Long)] = {
     require(k >= 16 && k <= 4096,
       s"kmvPerBatch: k=$k outside 16..4096 (the Kmv contract)")
-    implicit val outEnc: Encoder[(String, Long, Long, Long, Long)] =
-      Encoders.tuple(Encoders.STRING, Encoders.scalaLong,
-        Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong)
-    implicit val stEnc: Encoder[(Long, Array[Long])] =
-      Encoders.product[(Long, Array[Long])]
     val est2p60 = BigInt(1) << 60
-    ds.groupByKey(_._1)(Encoders.STRING)
-      .flatMapGroupsWithState[(Long, Array[Long]),
-        (String, Long, Long, Long, Long)](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: String, rows: Iterator[(String, Long)],
-         state: GroupState[(Long, Array[Long])]) =>
-          val (seq0, arr0) = state.getOption.getOrElse((0L, Array.empty[Long]))
-          val merged = (arr0 ++ rows.map(_._2)).distinct.sorted.take(k)
-          val m = merged.length.toLong
-          val kth = if (m > 0) merged.last else 0L
-          val est =
-            if (m < k) m
-            else ((BigInt(k - 1) * est2p60) / BigInt(kth)).toLong
-          state.update((seq0 + 1L, merged))
-          Iterator.single((key, seq0 + 1L, m, kth, est))
-      }
+    perKey(ds, (_: (String, Long))._1, (0L, Array.empty[Long])) {
+      case (key, rows, (seq0, arr0)) =>
+        val merged = (arr0 ++ rows.map(_._2)).distinct.sorted.take(k)
+        val m = merged.length.toLong
+        val kth = if (m > 0) merged.last else 0L
+        val est =
+          if (m < k) m
+          else ((BigInt(k - 1) * est2p60) / BigInt(kth)).toLong
+        (Some((seq0 + 1L, merged)), Iterator.single((key, seq0 + 1L, m, kth, est)))
+    }
   }
 
   /** Streaming out-of-order audit — the measurement watermark sizing
@@ -445,28 +379,17 @@ object StatefulOps {
     * batch the key appears in; `ts` values are epoch seconds.
     */
   def latenessPerBatch(ds: Dataset[(String, Long)])
-      : Dataset[(String, Long, Long, Long, Long, Long)] = {
-    implicit val outEnc: Encoder[(String, Long, Long, Long, Long, Long)] =
-      Encoders.product[(String, Long, Long, Long, Long, Long)]
-    implicit val stEnc: Encoder[(Long, Long)] =
-      Encoders.product[(Long, Long)]
-    ds.groupByKey(_._1)(Encoders.STRING)
-      .flatMapGroupsWithState[(Long, Long),
-        (String, Long, Long, Long, Long, Long)](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: String, rows: Iterator[(String, Long)],
-         state: GroupState[(Long, Long)]) =>
-          val (seq0, mx0) = state.getOption.getOrElse((0L, Long.MinValue))
-          val ts = rows.map(_._2).toArray
-          val late = if (seq0 == 0L) Array.empty[Long]
-            else ts.filter(_ < mx0)
-          val maxLate = if (late.isEmpty) 0L else mx0 - late.min
-          val newMax = math.max(mx0, ts.max)
-          state.update((seq0 + 1L, newMax))
-          Iterator.single((key, seq0 + 1L, ts.length.toLong,
-            late.length.toLong, maxLate, newMax))
-      }
-  }
+      : Dataset[(String, Long, Long, Long, Long, Long)] =
+    perKey(ds, (_: (String, Long))._1, (0L, Long.MinValue)) {
+      case (key, rows, (seq0, mx0)) =>
+        val ts = rows.map(_._2).toArray
+        val late = if (seq0 == 0L) Array.empty[Long]
+          else ts.filter(_ < mx0)
+        val maxLate = if (late.isEmpty) 0L else mx0 - late.min
+        val newMax = math.max(mx0, ts.max)
+        (Some((seq0 + 1L, newMax)), Iterator.single((key, seq0 + 1L,
+          ts.length.toLong, late.length.toLong, maxLate, newMax)))
+    }
 
   /** Streaming quantiles at bounded state — [[graft.relational.DdSketch]]'s
     * streaming twin: per key, state is the sketch itself (sorted bucket
@@ -482,10 +405,6 @@ object StatefulOps {
     */
   def ddsketchPerBatch(ds: Dataset[(String, Long)])
       : Dataset[(String, Long, Long, Long, Long)] = {
-    implicit val outEnc: Encoder[(String, Long, Long, Long, Long)] =
-      Encoders.product[(String, Long, Long, Long, Long)]
-    implicit val stEnc: Encoder[(Long, Array[Long], Array[Long])] =
-      Encoders.product[(Long, Array[Long], Array[Long])]
     def bucket(v: Long): Long =
       if (v < 16L) v
       else {
@@ -494,38 +413,33 @@ object StatefulOps {
       }
     def lowerBound(k: Long): Long =
       if (k < 16L) k else (16L + k % 16L) << ((k / 16L).toInt - 5)
-    ds.groupByKey(_._1)(Encoders.STRING)
-      .flatMapGroupsWithState[(Long, Array[Long], Array[Long]),
-        (String, Long, Long, Long, Long)](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: String, rows: Iterator[(String, Long)],
-         state: GroupState[(Long, Array[Long], Array[Long])]) =>
-          val (seq0, ks0, cs0) = state.getOption
-            .getOrElse((0L, Array.empty[Long], Array.empty[Long]))
-          val acc = scala.collection.mutable.TreeMap.empty[Long, Long]
-          ks0.indices.foreach(i => acc(ks0(i)) = cs0(i))
-          rows.foreach { case (_, v) =>
-            require(v >= 0L,
-              s"ddsketchPerBatch: negative value $v for key $key — the " +
-                "geometric bucket mapping is defined for non-negative values")
-            val b = bucket(v)
-            acc(b) = acc.getOrElse(b, 0L) + 1L
+    perKey(ds, (_: (String, Long))._1,
+        (0L, Array.empty[Long], Array.empty[Long])) {
+      case (key, rows, (seq0, ks0, cs0)) =>
+        val acc = scala.collection.mutable.TreeMap.empty[Long, Long]
+        ks0.indices.foreach(i => acc(ks0(i)) = cs0(i))
+        rows.foreach { case (_, v) =>
+          require(v >= 0L,
+            s"ddsketchPerBatch: negative value $v for key $key — the " +
+              "geometric bucket mapping is defined for non-negative values")
+          val b = bucket(v)
+          acc(b) = acc.getOrElse(b, 0L) + 1L
+        }
+        val n = acc.valuesIterator.sum
+        def pick(qPermille: Long): Long = {
+          val target = (n * qPermille + 999L) / 1000L
+          var cum = 0L
+          var ans = 0L
+          val it = acc.iterator
+          var found = false
+          while (it.hasNext && !found) {
+            val (k, c) = it.next(); cum += c
+            if (cum >= target) { ans = lowerBound(k); found = true }
           }
-          val n = acc.valuesIterator.sum
-          def pick(qPermille: Long): Long = {
-            val target = (n * qPermille + 999L) / 1000L
-            var cum = 0L
-            var ans = 0L
-            val it = acc.iterator
-            var found = false
-            while (it.hasNext && !found) {
-              val (k, c) = it.next(); cum += c
-              if (cum >= target) { ans = lowerBound(k); found = true }
-            }
-            ans
-          }
-          state.update((seq0 + 1L, acc.keys.toArray, acc.values.toArray))
-          Iterator.single((key, seq0 + 1L, n, pick(500L), pick(990L)))
-      }
+          ans
+        }
+        (Some((seq0 + 1L, acc.keys.toArray, acc.values.toArray)),
+          Iterator.single((key, seq0 + 1L, n, pick(500L), pick(990L))))
+    }
   }
 }

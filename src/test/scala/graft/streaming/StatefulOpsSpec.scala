@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
@@ -279,18 +280,23 @@ class StatefulOpsSpec extends SparkSpec {
 
   test("streaming Holt forecast refuses past the 20-batch exact scale") {
     implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[String]
-    val out = StatefulOps.holtPerBatch(input.toDS())(identity)
-    val q = out.writeStream.format("memory").queryName("holt_cap")
-      .outputMode(OutputMode.Append()).start()
-    val e = intercept[Exception] {
-      (1 to 21).foreach { _ => input.addData("a"); q.processAllAvailable() }
+    // the dyadic EWMA refuses the same way past its own 55-batch scale
+    val capped = Seq[(String, Dataset[String] => Dataset[_], Int)](
+      ("holt_cap", StatefulOps.holtPerBatch(_)(identity), 20),
+      ("ewma_cap", StatefulOps.ewmaPerBatch(_)(identity), 55))
+    for ((name, op, cap) <- capped) {
+      val input = MemoryStream[String]
+      val q = op(input.toDS()).writeStream.format("memory").queryName(name)
+        .outputMode(OutputMode.Append()).start()
+      val e = intercept[Exception] {
+        (0 to cap).foreach { _ => input.addData("a"); q.processAllAvailable() }
+      }
+      q.stop()
+      def hasMsg(t: Throwable): Boolean = t != null &&
+        (Option(t.getMessage).exists(_.contains(s"past $cap batches")) ||
+          hasMsg(t.getCause))
+      assert(hasMsg(e), s"$name unexpected: ${e.getMessage}")
     }
-    q.stop()
-    def hasMsg(t: Throwable): Boolean = t != null &&
-      (Option(t.getMessage).exists(_.contains("past 20 batches")) ||
-        hasMsg(t.getCause))
-    assert(hasMsg(e), s"unexpected: ${e.getMessage}")
   }
 
   test("streaming growth accounting classifies new/retained/resurrected and lazy churn") {

@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 
 /** Incremental connected components as the per-micro-batch clustering step:
   * each batch folds its new near-dup edges into the running labels via
-  * [[Components.incrementalComponents]] — old labels replay as shortcut
-  * edges, so history is never recomputed. The invariant proven here is the
+  * [[Components.incrementalComponents]] — old components contract to one
+  * supernode each, so history is never recomputed. The invariant proven here is the
   * one a streaming dedup pipeline needs: after any batch split, incremental
   * labels == full recompute over all edges seen so far.
   */
@@ -40,15 +40,15 @@ class StreamingComponentsSpec extends SparkSpec {
 
   test("incremental convergence is shallow: shortcut edges compress history") {
     // a 32-node path built over one big batch needs ~log2 rounds; adding one
-    // edge to its end afterwards must converge in very few rounds because
-    // every old node is at distance 1 from the root
+    // edge to its end afterwards clusters only that edge, because the whole
+    // old path contracts to its one supernode (comp id 1)
     val n = 32L
     val nodes = (1L to n).toDF("id")
     val path = (1L until n).map(i => (i, i + 1)).toDF("a", "b")
     val l1 = Components.connectedComponents(nodes, "id", path, "a", "b")
 
     val l2 = Components.incrementalComponents(l1, Seq(n + 1).toDF("id"), "id",
-      Seq((n, n + 1)).toDF("a", "b"), "a", "b", maxIters = 3)
+      Seq((n, n + 1)).toDF("a", "b"), "a", "b")
     assert(labels(l2).values.toSet === Set(1L))
   }
 
