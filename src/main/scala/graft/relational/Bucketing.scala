@@ -23,9 +23,12 @@ object Bucketing {
   private val written = java.util.Collections.newSetFromMap(
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]())
 
+  // a key is `<context identity hash>:<table>`; the hash is charged at its
+  // widest (10 digits), so two runs of one commit charge the same bytes
   graft.MemoLedger.register("bucketing.written", planKeyed = false) { () =>
     import scala.jdk.CollectionConverters._
-    (written.size.toLong, written.asScala.map(2L * _.length).sum)
+    (written.size.toLong,
+      written.asScala.map(k => 2L * (10 + k.length - k.indexOf(':'))).sum)
   }
 
   /** The tag-qualified physical table name: distinct source dirs get

@@ -84,19 +84,28 @@ object Stages {
     // first job of the day and scanned by every downstream job. The value is
     // just a path (files clean up at JVM exit).
     val path = landed(df, ()) {
-      val dir = java.nio.file.Files.createTempDirectory(s"graft_stage_$tag")
+      val prefix = s"graft_stage_$tag"
+      val dir = java.nio.file.Files.createTempDirectory(prefix)
       dir.toFile.deleteOnExit()
       val p = dir.resolve("data.parquet").toString
       df.write.mode("overwrite").parquet(p)
       java.nio.file.Files.walk(dir).forEach(f => f.toFile.deleteOnExit())
-      p
-    }
+      Landed(p, dir.getFileName.toString.length - prefix.length)
+    }.path
     // read with the schema just landed: inferring it would run a footer
     // job on every memo hit (the file source makes it nullable, as
     // inference does)
     df.sparkSession.read.schema(df.schema).parquet(path)
   }
 
-  private val landed =
-    new graft.PlanMemo[Unit, String]("stages.landed", p => 48L + 2L * p.length)
+  /** A landed stage's path and the length of the random suffix
+    * `createTempDirectory` gave its directory.
+    */
+  private final case class Landed(path: String, randomChars: Int)
+
+  /** Charged without the random suffix, so two runs of one commit charge
+    * the same bytes.
+    */
+  private val landed = new graft.PlanMemo[Unit, Landed]("stages.landed",
+    l => 48L + 2L * (l.path.length - l.randomChars))
 }

@@ -23,7 +23,7 @@ import scala.jdk.CollectionConverters._
   * discipline): AJV would silently enforce them at runtime, so dropping one
   * would silently weaken validation relative to the reference. Structural
   * `type` keywords are the one deliberate skip — typed parsing via
-  * `from_json` already enforces types of present fields (see
+  * the typed JSON decode already enforces types of present fields (see
   * [[SchemaValidator]] scaladoc), and draft-04 keyword independence makes
   * `type` on absent fields vacuous.
   */
@@ -105,7 +105,7 @@ object Draft4Schema {
     def opt(k: String): Option[JsonNode] = Option(node.get(k))
     def needRaw(kw: String): String = rawPath.getOrElse(
       throw new IllegalArgumentException(
-        s"'$kw' validates the RAW object ('from_json' already dropped " +
+        s"'$kw' validates the RAW object (the typed decode already dropped " +
           "unknown fields / fixed the key set) — pass rawPath pointing at " +
           "the raw JSON string column"))
 

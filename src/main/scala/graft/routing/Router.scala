@@ -2,6 +2,7 @@ package graft.routing
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftBridge
 
 /** The reference's core capability — schema-keyed event routing — as a
   * single-pass, declarative Spark transformation.
@@ -31,8 +32,8 @@ import org.apache.spark.sql.functions._
   * passes over the input. Branch views are filters on the tag, so when the
   * caller materializes the tagged frame once (or uses `foreachBatch` in
   * streaming), the source is scanned once regardless of how many schemas are
-  * registered. All predicates are built-in codegen'd expressions inside one
-  * WholeStageCodegen stage; nothing here shuffles.
+  * registered. The verdict is one native expression ([[RouteVerdict]]);
+  * nothing here shuffles.
   */
 object Router {
 
@@ -43,8 +44,17 @@ object Router {
   val Skipped = "skipped"
   def branch(schemaId: String): String = s"branch:$schemaId"
 
+  /** Name prefix reserved for [[tag]]'s working columns. */
+  private val WorkingPrefix = "__graft_route"
   /** Per-row branch index [[tag]] computes and drops. */
-  private val BranchCol = "__graft_route_branch"
+  private val BranchCol = s"${WorkingPrefix}_branch"
+  /** Reason of each non-zero [[RouteVerdict]] index, in ladder order;
+    * index 5 (unregistered schema) is the skip branch.
+    */
+  private val Reasons = Seq("undecodable", "missing schema",
+    "wrong event schema", "invalid envelope", "unregistered schema",
+    "invalid payload")
+  private val SkipIdx = 5
 
   /** A handler registration: payload constraints + the transformation to
     * apply to that branch (the reference's `registerSchemaMethodPair`,
@@ -69,27 +79,22 @@ object Router {
 
   /** Compute the routing tag for each row (single pass, no shuffle).
     *
-    * Evaluation shape (r16, guide §1.2 "per-task work" / §4 expression
-    * choice): the condition chain — including the full payload-validator
-    * expression tree, the expensive half of every draft-04 routing row —
-    * is evaluated ONCE per row into the reason, and the tag is a cheap
-    * verdict map over the reason (the reason strings are in 1:1
-    * correspondence with the when-branches, so the mapping loses nothing).
-    * The r15 shape evaluated the identical chain twice (verdict + reason).
-    * Repeated JSON-derivation subexpressions inside the chain (raw-object
-    * key listings, variant parses — conditional contexts, which whole-stage
-    * codegen's subexpression elimination does not dedupe) are hoisted into
-    * per-row columns first, so each distinct parse of the raw payload runs
-    * at most once per row. Still one projection pipeline: no shuffle, one
-    * source scan regardless of registry size (spec-pinned).
+    * The whole ladder — envelope checks, registry lookup and the selected
+    * document's validator — is ONE native expression, [[RouteVerdict]],
+    * evaluated once per row into a small branch index; tag and reason are
+    * integer CASE maps over it. Each raw JSON object a validator reads is
+    * parsed at most once per row, and the registry lookup is one hash
+    * probe whatever the registry size. Still one projection pipeline: no
+    * shuffle, one source scan regardless of registry size (spec-pinned).
     */
   def tag(df: DataFrame, config: Config): DataFrame = {
     // the working columns below are added and dropped by name: an input
     // column of the same name (case-insensitively, as Spark resolves it)
-    // would be silently overwritten, then dropped
+    // would be silently overwritten, then dropped; the whole
+    // `__graft_route` prefix is reserved for them
     val clashes = df.columns.filter { c =>
       val n = c.toLowerCase
-      n == TagCol || n == ReasonCol || n == BranchCol || n.startsWith(JsonCse.ColPrefix)
+      n == TagCol || n == ReasonCol || n.startsWith(WorkingPrefix)
     }
     require(clashes.isEmpty,
       s"Router.tag: input already has routing working column(s) " +
@@ -97,67 +102,23 @@ object Router {
         s"(re-tagging a tagged frame: drop $TagCol and $ReasonCol first)")
     val ev = col(config.eventCol)
     val dataSchema = ev.getField("data").getField("schema")
-    val registeredIds = config.registry.keys.toSeq
-
-    // The short-circuit ladder, in the reference's order. Branch 5 (skip)
-    // maps to Skipped; every other firing branch is a bad message.
-    val pre: Seq[(Column, String)] = Seq(
-      ev.isNull -> "undecodable",
-      ev.getField("schema").isNull -> "missing schema",
-      (ev.getField("schema") =!= config.eventSchemaId) -> "wrong event schema",
-      (!config.envelope.valid(ev)) -> "invalid envelope",
-      (dataSchema.isNull || !dataSchema.isin(registeredIds: _*)) -> "unregistered schema")
-    val skipIdx = 5 // 1-based position of the skip branch in the ladder
-
-    // Payload parses run only on rows no earlier branch claimed — the same
-    // rows whose CASE branch would have evaluated them, so the hoisted
-    // columns cost nothing on undecodable/unregistered rows. A CASE
-    // condition fires only when TRUE (null falls through), hence the
-    // null-safe negation. The envelope-validity term is deliberately
-    // omitted from the gate: the gate may only OVER-approximate the rows
-    // whose payload branch evaluates (an under-approximation would feed a
-    // NULL parse into a live branch condition), and re-running a heavy
-    // envelope validator inside the gate would double-pay it. Cost: rows
-    // with an invalid envelope parse their payload for nothing — rare by
-    // the quarantine contract.
-    val reachesPayload = pre.collect {
-      case (c, r) if r != "invalid envelope" => !c.eqNullSafe(lit(true))
-    }.foldLeft(lit(true))(_ && _)
-
-    // Hoisting is restricted to the payload condition: envelope-constraint
-    // parses (if any) must stay inline, because the gate cannot know
-    // whether the envelope branch itself needs them.
-    val (prepped, payloadBadCse, cseCols) =
-      JsonCse.hoist(df, !payloadValid(ev, config), reachesPayload)
-
-    // ONE evaluation of the whole ladder into a small branch index; tag and
-    // reason are integer CASE maps over it.
-    val idxCse = pre.zipWithIndex
-      .foldLeft(Option.empty[Column]) { case (acc, ((c, _), i)) =>
-        Some(acc.fold(when(c, lit(i + 1)))(_.when(c, lit(i + 1))))
-      }.get
-      .when(payloadBadCse, lit(pre.size + 1))
-      .otherwise(lit(0))
-    val reasons = pre.map(_._2) :+ "invalid payload"
-    prepped.withColumn(BranchCol, idxCse)
+    val verdict = RouteVerdict(GraftBridge.expression(ev), config.eventSchemaId,
+      SchemaValidator.inlineRefs(config.envelope.constraints),
+      config.registry.toSeq.sortBy(_._1).map { case (id, reg) =>
+        id -> SchemaValidator.inlineRefs(reg.schema.constraints)
+      })
+    df.withColumn(BranchCol, GraftBridge.column(verdict))
       .withColumn(TagCol,
         when(col(BranchCol) === 0, concat(lit("branch:"), dataSchema))
-          .when(col(BranchCol) === skipIdx, lit(Skipped))
+          .when(col(BranchCol) === SkipIdx, lit(Skipped))
           .otherwise(lit(BadMessage)))
       .withColumn(ReasonCol,
-        reasons.zipWithIndex.foldLeft(Option.empty[Column]) {
+        Reasons.zipWithIndex.foldLeft(Option.empty[Column]) {
           case (acc, (r, i)) =>
             Some(acc.fold(when(col(BranchCol) === (i + 1), lit(r)))(
               _.when(col(BranchCol) === (i + 1), lit(r))))
         }.get.otherwise(lit(null).cast("string")))
-      .drop((BranchCol +: cseCols): _*)
-  }
-
-  private def payloadValid(ev: Column, config: Config): Column = {
-    val dataSchema = ev.getField("data").getField("schema")
-    config.registry.foldLeft(lit(true)) { case (acc, (id, reg)) =>
-      acc && (dataSchema =!= id || reg.schema.valid(ev.getField("data")))
-    }
+      .drop(BranchCol)
   }
 
   /** Single-pass routed sink: tag once and write every branch plus the

@@ -1,125 +1,79 @@
 package graft.routing
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.{get_json_object, struct}
+import org.apache.spark.sql.graftbridge.GraftBridge
 
-/** JSON-Schema-style validation compiled to boolean Column expressions.
+/** JSON-Schema-style validation constraints.
   *
   * The reference validates with AJV (draft-04) at two levels: the envelope
   * (`ajv.validate(eventSchemaId, event)`, reference lib/kinesisHandler.js:112)
   * and the selected payload (`ajv.validate(event.data.schema, event.data)`,
-  * :115). We model the commonly used draft-04 constraint subset (required,
-  * enum, numeric bounds, pattern, string length) as predicates over a struct
-  * column, so validation is a single codegen'd filter — no per-row
-  * interpretation, no UDFs, and Catalyst can reorder/push the conjuncts.
+  * :115). We model the commonly used draft-04 constraint subset as plain data
+  * over a struct column; [[NativeValidator]] compiles a constraint list once,
+  * bound to the root's data type, and evaluates it in one pass per row (one
+  * read of each raw JSON object), so every validation surface —
+  * [[RegisteredSchema.valid]], [[Draft4Schema.validateJsonSchema]] and
+  * [[Router.tag]] — runs the same evaluator.
   *
-  * Typed parsing via `from_json` already enforces the *structural* part
-  * (types of present fields; corrupt JSON → NULL struct), so constraints
-  * here are the value-level extras.
+  * Typed parsing (the JSON decode of [[EventCodec]]) already enforces the
+  * *structural* part (types of present fields; corrupt JSON → NULL struct),
+  * so constraints here are the value-level extras. Paths are dotted struct-field paths
+  * relative to the validated root; "" is the root itself, so element
+  * constraints can apply to array elements directly (see [[ArrayAll]]).
+  * Leaf constraints on an absent (NULL) value hold (AJV keyword
+  * independence); only [[Required]] and [[Dependencies]] test presence.
   */
-sealed trait Constraint {
-  /** Predicate over the event root struct column; true = valid. */
-  def predicate(root: Column): Column
-
-  /** Dotted-path field access; "" resolves to the root itself, so element
-    * constraints can apply to array elements directly (see [[ArrayAll]]).
-    */
-  protected def at(root: Column, path: String): Column =
-    if (path.isEmpty) root else path.split('.').foldLeft(root)(_ getField _)
-}
+sealed trait Constraint extends Serializable
 
 /** draft-04 `required` — the field must be present (non-null after parse). */
-final case class Required(path: String) extends Constraint {
-  def predicate(root: Column): Column =
-    at(root, path).isNotNull
-}
+final case class Required(path: String) extends Constraint
 
-/** draft-04 `enum` for string fields. */
-final case class EnumIn(path: String, values: Seq[String]) extends Constraint {
-  def predicate(root: Column): Column = {
-    val f = at(root, path)
-    f.isNull || f.isin(values: _*)
-  }
-}
+/** draft-04 `enum`: the value equals one of `values`, each cast to the
+  * field's type the way Spark's `IN` coerces a string literal.
+  */
+final case class EnumIn(path: String, values: Seq[String]) extends Constraint
 
 /** draft-04 `minimum`/`maximum` for numeric fields, with the draft-04
   * boolean `exclusiveMinimum`/`exclusiveMaximum` modifiers (in draft-04
   * these are FLAGS changing the adjacent bound to strict — the standalone
   * numeric form arrived in draft-06, which the reference's AJV setup does
-  * not use).
+  * not use). Compared as doubles with Spark's ordering (NaN above all).
   */
 final case class NumRange(path: String, min: Option[Double], max: Option[Double],
                           exclusiveMin: Boolean = false,
-                          exclusiveMax: Boolean = false) extends Constraint {
-  def predicate(root: Column): Column = {
-    val f = at(root, path)
-    val lo = min.map(m => if (exclusiveMin) f > m else f >= m).getOrElse(lit(true))
-    val hi = max.map(m => if (exclusiveMax) f < m else f <= m).getOrElse(lit(true))
-    f.isNull || (lo && hi)
-  }
-}
+                          exclusiveMax: Boolean = false) extends Constraint
 
 /** draft-04 `pattern` for string fields (Java regex, un-anchored like AJV). */
-final case class Pattern(path: String, regex: String) extends Constraint {
-  def predicate(root: Column): Column = {
-    val f = at(root, path)
-    f.isNull || f.rlike(regex)
-  }
-}
+final case class Pattern(path: String, regex: String) extends Constraint
 
-/** draft-04 `minLength`/`maxLength` for string fields. */
-final case class StrLength(path: String, min: Option[Int], max: Option[Int]) extends Constraint {
-  def predicate(root: Column): Column = {
-    val f = at(root, path)
-    val lo = min.map(m => length(f) >= m).getOrElse(lit(true))
-    val hi = max.map(m => length(f) <= m).getOrElse(lit(true))
-    f.isNull || (lo && hi)
-  }
-}
+/** draft-04 `minLength`/`maxLength` for string fields, in code points. */
+final case class StrLength(path: String, min: Option[Int], max: Option[Int]) extends Constraint
 
 /** draft-04 `anyOf` — at least one alternative constraint set fully holds.
   * Each alternative is a conjunction; the whole is their disjunction (an
   * empty alternative list is vacuously invalid, matching AJV's anyOf:[]).
   */
-final case class AnyOf(alternatives: Seq[Seq[Constraint]]) extends Constraint {
-  def predicate(root: Column): Column =
-    alternatives
-      .map(_.foldLeft(lit(true))((acc, c) => acc && c.predicate(root)))
-      .foldLeft(lit(false))(_ || _)
-}
+final case class AnyOf(alternatives: Seq[Seq[Constraint]]) extends Constraint
 
 /** draft-04 `allOf` — every subschema holds. Distinct from listing the
   * constraints flat only when nested under combinators (`Not(AllOf(...))`,
   * a `oneOf` alternative that is itself an allOf), which is exactly where
   * AJV schemas use it.
   */
-final case class AllOf(all: Seq[Constraint]) extends Constraint {
-  def predicate(root: Column): Column =
-    all.foldLeft(lit(true))((acc, c) => acc && c.predicate(root))
-}
+final case class AllOf(all: Seq[Constraint]) extends Constraint
 
 /** draft-04 `oneOf` — EXACTLY one alternative holds. AJV counts matching
-  * subschemas and fails on 0 or ≥2; the match count is a sum of 0/1 terms
-  * so the whole keyword stays one codegen'd expression.
+  * subschemas and fails on 0 or ≥2 (`oneOf:[]` is invalid).
   */
-final case class OneOf(alternatives: Seq[Seq[Constraint]]) extends Constraint {
-  def predicate(root: Column): Column =
-    alternatives
-      .map(_.foldLeft(lit(true))((acc, c) => acc && c.predicate(root)))
-      .map(m => when(m, lit(1)).otherwise(lit(0)))
-      .reduceOption(_ + _)
-      .map(_ === 1)
-      .getOrElse(lit(false)) // oneOf:[] matches zero subschemas → invalid
-}
+final case class OneOf(alternatives: Seq[Seq[Constraint]]) extends Constraint
 
 /** draft-04 `not` — the subschema must NOT validate. Negates the COMPILED
   * verdict, exactly AJV's semantics: because leaves treat absent as valid,
   * `Not(Pattern(...))` rejects absent values (the subschema would have
   * validated) — same verdict AJV gives, surprising or not.
   */
-final case class Not(c: Constraint) extends Constraint {
-  def predicate(root: Column): Column = !c.predicate(root)
-}
+final case class Not(c: Constraint) extends Constraint
 
 /** draft-04 `multipleOf` — value divided by n is an integer. Mirrors AJV's
   * check (`division % 1 == 0` on IEEE doubles), so fractional factors
@@ -127,25 +81,17 @@ final case class Not(c: Constraint) extends Constraint {
   */
 final case class MultipleOf(path: String, n: Double) extends Constraint {
   require(n > 0, "multipleOf must be > 0")
-  def predicate(root: Column): Column = {
-    val f = at(root, path)
-    f.isNull || (f.cast("double") / lit(n)) % lit(1.0) === lit(0.0)
-  }
 }
 
 /** draft-04 `$ref` — resolved against a definitions registry (AJV's
-  * `addSchema` map) at predicate-compile time. The by-name `defs` lets
-  * definitions be assembled after the referring schema is declared;
-  * RECURSIVE refs are unsupported (compilation to a static Column must
-  * terminate — AJV compiles lazily and has no such limit; a recursive
-  * payload schema has unbounded depth and no columnar shape anyway).
+  * `addSchema` map) when a validator is built: the reference is inlined
+  * there, so the compiled validator holds no closure. The by-name `defs`
+  * lets definitions be assembled after the referring schema is declared;
+  * RECURSIVE refs are unsupported (inlining must terminate — AJV compiles
+  * lazily and has no such limit; a recursive payload schema has unbounded
+  * depth and no columnar shape anyway).
   */
-final case class Ref(id: String, defs: () => Map[String, Seq[Constraint]]) extends Constraint {
-  def predicate(root: Column): Column =
-    defs().getOrElse(id,
-      throw new IllegalArgumentException(s"unresolved $$ref: $id"))
-      .foldLeft(lit(true))((acc, c) => acc && c.predicate(root))
-}
+final case class Ref(id: String, defs: () => Map[String, Seq[Constraint]]) extends Constraint
 
 /** Apply a constraint with its paths rebased under `path` — the
   * $ref-at-a-property adapter: a `definitions` entry is written relative to
@@ -153,67 +99,38 @@ final case class Ref(id: String, defs: () => Map[String, Seq[Constraint]]) exten
   * against that property's subtree ("" inside the definition = the
   * referenced field itself).
   */
-final case class Rebase(path: String, c: Constraint) extends Constraint {
-  def predicate(root: Column): Column = c.predicate(at(root, path))
-}
+final case class Rebase(path: String, c: Constraint) extends Constraint
 
-/** draft-04 `uniqueItems` for array fields — no two equal elements.
-  * Absent arrays are valid (AJV keyword independence).
+/** draft-04 `uniqueItems` for array fields — no two equal elements, with
+  * Spark's `array_distinct` equality (NaN equals NaN, nulls equal).
   */
-final case class UniqueItems(path: String) extends Constraint {
-  def predicate(root: Column): Column = {
-    val f = at(root, path)
-    f.isNull || size(f) === size(array_distinct(f))
-  }
-}
+final case class UniqueItems(path: String) extends Constraint
 
 /** draft-04 property `dependencies` — if `ifPresent` is present, every path
   * in `requires` must be present too (the {"a": ["b", "c"]} form; the
   * schema-dependency form is `AnyOf(Seq(Seq(Not(Required(ifPresent))), deps))`
   * with an arbitrary subschema).
   */
-final case class Dependencies(ifPresent: String, requires: Seq[String]) extends Constraint {
-  def predicate(root: Column): Column =
-    at(root, ifPresent).isNull ||
-      requires.foldLeft(lit(true))((acc, p) => acc && at(root, p).isNotNull)
-}
+final case class Dependencies(ifPresent: String, requires: Seq[String]) extends Constraint
 
 /** draft-04 `minItems`/`maxItems` for array fields. */
-final case class ArrayItems(path: String, min: Option[Int], max: Option[Int]) extends Constraint {
-  def predicate(root: Column): Column = {
-    val f = at(root, path)
-    val lo = min.map(m => size(f) >= m).getOrElse(lit(true))
-    val hi = max.map(m => size(f) <= m).getOrElse(lit(true))
-    f.isNull || (lo && hi)
-  }
-}
+final case class ArrayItems(path: String, min: Option[Int], max: Option[Int]) extends Constraint
 
 /** draft-04 array `items` — every element satisfies the element constraint.
   * The element constraint's path is RELATIVE to the element ("" = the
   * element itself, "f" = struct field f of the element), so nested
   * object-array schemas compose: `ArrayAll("lines", NumRange("qty", ...))`.
-  *
-  * Validation runs per record over small arrays, so the interpreted `forall`
-  * lambda is fine here — this is not the per-token hot path the HOF rule in
-  * MinHash/SimHash is about.
   */
-final case class ArrayAll(path: String, elem: Constraint) extends Constraint {
-  def predicate(root: Column): Column = {
-    val f = at(root, path)
-    f.isNull || forall(f, x => elem.predicate(x))
-  }
-}
+final case class ArrayAll(path: String, elem: Constraint) extends Constraint
 
 /** draft-04 `format` for string fields — the commonly used formats, modeled
-  * as unanchored-free full-match regexes (AJV semantics: format applies only
-  * to present string values, absent ⇒ valid).
+  * as anchored full-match regexes (AJV semantics: format applies only to
+  * present string values, absent ⇒ valid). An unknown format name fails
+  * at construction.
   */
 final case class Format(path: String, format: String) extends Constraint {
-  def predicate(root: Column): Column = {
-    val f = at(root, path)
-    f.isNull || f.rlike(Format.patterns.getOrElse(format,
-      throw new IllegalArgumentException(s"unknown format: $format")))
-  }
+  require(Format.patterns.contains(format), s"unknown format: $format")
+  def regex: String = Format.patterns(format)
 }
 
 object Format {
@@ -231,7 +148,7 @@ object Format {
 }
 
 /** draft-04 `additionalProperties: false` as a payload constraint. The
-  * keyword cannot be checked on the parsed struct — `from_json` drops
+  * keyword cannot be checked on the parsed struct — the typed decode drops
   * unknown fields before constraints run — so the routing config carries
   * the RAW JSON string alongside the parsed fields (at `rawPath`, relative
   * to the validated struct) and this constraint keys over it. Absent or
@@ -239,94 +156,66 @@ object Format {
   * `required`/parse checks (AJV's per-keyword independence).
   */
 final case class NoAdditionalProps(rawPath: String, allowed: Seq[String],
-                                   allowedPatterns: Seq[String] = Nil) extends Constraint {
-  def predicate(root: Column): Column =
-    SchemaValidator.noAdditionalProps(at(root, rawPath), "$", allowed, allowedPatterns)
-}
+                                   allowedPatterns: Seq[String] = Nil) extends Constraint
 
-/** draft-04 `minProperties`/`maxProperties` — bounds on the RAW object's key
-  * count (like `additionalProperties`, uncheckable on the parsed struct:
-  * `from_json` fixes the field set). Absent/corrupt raw objects are valid
-  * here (keyword independence).
+/** draft-04 `minProperties`/`maxProperties` — bounds on the RAW object's
+  * count of distinct keys (like `additionalProperties`, uncheckable on the
+  * parsed struct: the typed decode fixes the field set). A repeated key counts
+  * once, as in the reference's `JSON.parse`. Absent/corrupt raw objects are
+  * valid here (keyword independence).
   */
-final case class PropsCount(rawPath: String, min: Option[Int], max: Option[Int]) extends Constraint {
-  def predicate(root: Column): Column = {
-    val keys = json_object_keys(at(root, rawPath))
-    val lo = min.map(m => size(keys) >= m).getOrElse(lit(true))
-    val hi = max.map(m => size(keys) <= m).getOrElse(lit(true))
-    keys.isNull || (lo && hi)
-  }
-}
+final case class PropsCount(rawPath: String, min: Option[Int], max: Option[Int]) extends Constraint
 
 /** draft-04 `patternProperties` value checks: every RAW-object key matching
-  * `keyRegex` has a scalar value whose TEXT matches `valueRegex`. The raw
-  * object parses once to `map<string,string>` (Spark's JSON reader yields
-  * each scalar's token text under a string target type), then a
-  * `map_filter` + `forall` pair — still one codegen'd expression, no UDF.
-  * Nested object/array values carry their JSON text, so a structural
-  * `valueRegex` (e.g. `^\[.*\]$`) can gate shape. Key-set RESTRICTION via
-  * patternProperties (+ additionalProperties: false) is
+  * `keyRegex` has a value whose TEXT matches `valueRegex` — a string's own
+  * text, any other value's compact JSON text as Spark's JSON reader renders
+  * it under a string target type (so a structural `valueRegex`, e.g.
+  * `^\[.*\]$`, can gate shape); JSON null passes. A repeated key is checked
+  * on its LAST value, as in the reference's `JSON.parse`. Key-set
+  * RESTRICTION via patternProperties (+ additionalProperties: false) is
   * [[NoAdditionalProps]]'s `allowedPatterns`.
   */
 final case class PatternProps(rawPath: String, keyRegex: String,
-                              valueRegex: String) extends Constraint {
-  def predicate(root: Column): Column = {
-    val m = from_json(at(root, rawPath),
-      org.apache.spark.sql.types.MapType(
-        org.apache.spark.sql.types.StringType,
-        org.apache.spark.sql.types.StringType))
-    m.isNull || forall(
-      map_values(map_filter(m, (k, _) => k.rlike(keyRegex))),
-      v => v.isNull || v.rlike(valueRegex))
-  }
-}
+                              valueRegex: String) extends Constraint
 
 /** draft-04 union `type` arrays (`"type": ["string", "integer"]`) — checked
-  * on the RAW JSON, where the value still HAS a JSON type (`from_json` into
-  * a typed struct coerces or nulls it). The value extracts as a VARIANT and
-  * `schema_of_variant` names its runtime type; each draft-04 type name maps
-  * to the variant type(s) JSON parsing can produce. Missing values are
-  * valid (keyword independence — pair with [[Required]] to force presence).
+  * on the RAW JSON, where the value still HAS a JSON type (the decode into
+  * a typed struct coerces or nulls it). The value's runtime type is what
+  * Spark's variant parser gives it (`schema_of_variant`): an integer is
+  * BIGINT or DECIMAL(p,0), `4.5` is a DECIMAL, `1e3` a DOUBLE. Missing
+  * values are valid (keyword independence — pair with [[Required]] to
+  * force presence).
   *
-  * @param jsonPath `$.field` path into the raw object ("$" = whole value)
+  * @param jsonPath `$.a.b` path of object keys into the raw value ("$" =
+  *                 the whole value)
   */
 final case class TypeUnion(rawPath: String, jsonPath: String,
                            types: Seq[String]) extends Constraint {
-  def predicate(root: Column): Column = {
-    val v =
-      if (jsonPath == "$") try_parse_json(at(root, rawPath))
-      else try_variant_get(try_parse_json(at(root, rawPath)), jsonPath, "variant")
-    val ty = schema_of_variant(v)
-    val ok = types.map {
-      case "string"  => ty === "STRING"
-      case "boolean" => ty === "BOOLEAN"
-      case "integer" => ty === "BIGINT" || ty.rlike("^DECIMAL\\(\\d+,0\\)$")
-      case "number"  => ty === "BIGINT" || ty === "DOUBLE" || ty === "FLOAT" ||
-        ty.startsWith("DECIMAL")
-      case "object"  => ty.startsWith("OBJECT") || ty.startsWith("STRUCT")
-      case "array"   => ty.startsWith("ARRAY")
-      case "null"    => ty === "VOID"
-      case other => throw new IllegalArgumentException(s"unknown type: $other")
-    }.foldLeft(lit(false))(_ || _)
-    v.isNull || ok
-  }
+  types.foreach(t => require(TypeUnion.names(t), s"unknown type: $t"))
+}
+
+object TypeUnion {
+  val names: Set[String] =
+    Set("string", "boolean", "integer", "number", "object", "array", "null")
 }
 
 /** A registered schema: id + value constraints (structure enforced by the
-  * `from_json` StructType in [[EventCodec]]).
+  * decode StructType in [[EventCodec]]).
   *
   * draft-04 `additionalProperties: false` needs the RAW JSON column —
-  * `from_json` drops unknown fields before constraints run — via
+  * the typed decode drops unknown fields before constraints run — via
   * [[NoAdditionalProps]] (struct-relative) or
   * [[SchemaValidator.noAdditionalProps]] (free-standing).
   */
 final case class RegisteredSchema(id: String, constraints: Seq[Constraint]) {
-  /** Conjunction of all constraints; vacuously true when none. */
+  /** Conjunction of all constraints over `root`, as one native expression;
+    * vacuously true when none. Never NULL.
+    */
   def valid(root: Column): Column =
-    constraints.foldLeft(lit(true))((acc, c) => acc && c.predicate(root))
+    GraftBridge.column(SchemaValid(GraftBridge.expression(root),
+      SchemaValidator.inlineRefs(constraints)))
 }
 
-/** Raw-JSON-level checks that the parsed-struct constraints cannot express. */
 object SchemaValidator {
 
   /** draft-04 `additionalProperties: false`: the object at `jsonPath` (a
@@ -339,9 +228,25 @@ object SchemaValidator {
   def noAdditionalProps(raw: Column, jsonPath: String, allowed: Seq[String],
                         allowedPatterns: Seq[String] = Nil): Column = {
     val obj = if (jsonPath == "$") raw else get_json_object(raw, jsonPath)
-    val keys = json_object_keys(obj)
-    keys.isNull || forall(keys, k =>
-      allowedPatterns.foldLeft(k.isin(allowed.map(_.asInstanceOf[Any]): _*))(
-        (acc, p) => acc || k.rlike(p)))
+    RegisteredSchema("", Seq(NoAdditionalProps("raw", allowed, allowedPatterns)))
+      .valid(struct(obj.as("raw")))
+  }
+
+  /** Replace every [[Ref]] by the conjunction it names, so a validator
+    * holds plain data only. Throws on an unresolved reference.
+    */
+  def inlineRefs(cs: Seq[Constraint]): Seq[Constraint] = cs.map(inline)
+
+  private def inline(c: Constraint): Constraint = c match {
+    case Ref(id, defs) =>
+      AllOf(inlineRefs(defs().getOrElse(id,
+        throw new IllegalArgumentException(s"unresolved $$ref: $id"))))
+    case AnyOf(alts) => AnyOf(alts.map(inlineRefs))
+    case OneOf(alts) => OneOf(alts.map(inlineRefs))
+    case AllOf(all) => AllOf(inlineRefs(all))
+    case Not(x) => Not(inline(x))
+    case Rebase(p, x) => Rebase(p, inline(x))
+    case ArrayAll(p, x) => ArrayAll(p, inline(x))
+    case leaf => leaf
   }
 }

@@ -127,9 +127,8 @@ class RouterSpec extends SparkSpec {
   test("r16 parse-once: repeated raw-JSON derivations hoist to one per row") {
     // The tag kernel must evaluate each distinct JSON derivation of the raw
     // payload at most once per row: PropsCount and NoAdditionalProps both
-    // call json_object_keys(raw), and before the r16 hoist the optimized
-    // plan carried one copy per occurrence (conditional contexts, which
-    // codegen subexpression elimination does not dedupe).
+    // read the raw object's keys, which the native verdict expression
+    // reads once per row (no json_object_keys copy in the plan at all).
     val schema = StructType(Seq(
       StructField("schema", StringType),
       StructField("data", StructType(Seq(
@@ -191,6 +190,53 @@ class RouterSpec extends SparkSpec {
     assert(got("envelope bad") === (Router.BadMessage, "invalid envelope"))
     assert(got("payload bad") === (Router.BadMessage, "invalid payload"))
     assert(got("both fine") === ("branch:t/1", null))
+  }
+
+  test("repeated raw keys follow JSON.parse: one key, last value wins") {
+    // perfbench's s5 document (patternProperties ^x- → ^[0-9]+$,
+    // additionalProperties false, maxProperties 3 over the raw attrs
+    // object); the reference's JSON.parse keeps a repeated key once, with
+    // its last value, so both payloads route
+    val doc =
+      """{
+        "$schema": "http://json-schema.org/draft-04/schema#",
+        "self": {"vendor": "com.graft.bench", "name": "s5", "version": "1-0-0"},
+        "type": "object",
+        "required": ["k", "tag"],
+        "properties": {
+          "k": {"type": "integer", "minimum": 0, "maximum": 50},
+          "tag": {"type": "string", "pattern": "^t[0-9]+$"}
+        },
+        "patternProperties": {"^x-": {"pattern": "^[0-9]+$"}},
+        "additionalProperties": false,
+        "maxProperties": 3
+      }"""
+    val c = Draft4Schema.compile(doc, Some("attrs"))
+    val cfg = Router.Config("env/1", RegisteredSchema("env/1", Nil),
+      Map(c.id -> Router.Registration(c.registeredSchema,
+        identity[org.apache.spark.sql.DataFrame])))
+    val schema = StructType(Seq(
+      StructField("schema", StringType),
+      StructField("data", StructType(Seq(
+        StructField("schema", StringType),
+        StructField("k", LongType),
+        StructField("tag", StringType),
+        StructField("attrs", StringType))))))
+    def event(attrs: String) =
+      s"""{"schema":"env/1","data":{"schema":"${c.id}","k":3,"tag":"t1","attrs":$attrs}}"""
+    val df = Seq(
+      ("last value wins", event("""{"k":3,"x-a":"abc","x-a":"9"}""")),
+      ("repeated key counts once", event("""{"k":3,"x-a":"1","x-a":"2","x-a":"3"}""")),
+      ("last value decides a failure", event("""{"k":3,"x-a":"9","x-a":"abc"}""")))
+      .toDF("name", "json")
+      .withColumn("event", from_json(col("json"), schema))
+    val got = Router.tag(df, cfg)
+      .select(col("name"), col(Router.TagCol), col(Router.ReasonCol))
+      .as[(String, String, String)].collect()
+      .map(r => r._1 -> (r._2, r._3)).toMap
+    assert(got("last value wins") === (s"branch:${c.id}", null))
+    assert(got("repeated key counts once") === (s"branch:${c.id}", null))
+    assert(got("last value decides a failure") === (Router.BadMessage, "invalid payload"))
   }
 
   test("tag refuses input columns that collide with its working columns") {
