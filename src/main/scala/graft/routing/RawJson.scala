@@ -15,7 +15,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * Each raw constraint keeps the verdict of the Spark function it was first
   * written over, and those functions read JSON with different leniency:
   * the key set as Spark's key listing (`JsonObjectKeys`) reads it (single
-  * quotes and raw control characters allowed, NaN not), values as Spark's
+  * quotes and raw control characters allowed, NaN not, values skipped
+  * undecoded), values as Spark's
   * JSON decode (`JsonToStructs`) reads them into a string map (single
   * quotes and NaN allowed, raw control characters not), and types as
   * `try_parse_json` reads them (strict). All three ignore text after the
@@ -55,7 +56,7 @@ private[routing] final class RawJson(probes: IndexedSeq[Array[String]],
   def read(raw: UTF8String): Unit = {
     clear()
     val ok = try {
-      walkRoot(byteParser(raw))
+      walkRoot(byteParser(raw), keysOnly = false)
       true
     } catch { case _: java.io.IOException => false }
     val rootObject = ok && rootIsObject
@@ -64,14 +65,26 @@ private[routing] final class RawJson(probes: IndexedSeq[Array[String]],
       mapOk = rootObject
       variantOk = true
     } else {
-      keysOk = parses(CreateJacksonParser.utf8String(keysFactory, raw), objectRoot = true)
-      mapOk = parses(CreateJacksonParser.utf8String(mapFactory, raw), objectRoot = true)
-      variantOk = parses(variantFactory.createParser(raw.toString), objectRoot = false)
+      keysOk = parses(CreateJacksonParser.utf8String(keysFactory, raw),
+        objectRoot = true, decode = false)
+      mapOk = parses(CreateJacksonParser.utf8String(mapFactory, raw),
+        objectRoot = true, decode = true)
+      variantOk = parses(variantFactory.createParser(raw.toString),
+        objectRoot = false, decode = true)
       if (!ok && (keysOk || mapOk || variantOk)) {
-        // the byte-level parser refused text the reader-based ones accept
-        // (malformed UTF-8, which they decode to U+FFFD): walk that text
+        // the byte-level parser refused text a reader-based one accepts
+        // (malformed UTF-8, which they decode to U+FFFD; a string past the
+        // length limit, which the key listing skips undecoded): walk that
+        // text, decoding values only when a value reading needs them.
+        // Should that walk fail too, the row reads as unreadable rather
+        // than failing its task.
+        val readings = (keysOk, mapOk, variantOk)
         clear()
-        walkRoot(CreateJacksonParser.utf8String(lenientFactory, raw))
+        try {
+          walkRoot(CreateJacksonParser.utf8String(lenientFactory, raw),
+            keysOnly = !readings._2 && !readings._3)
+          keysOk = readings._1; mapOk = readings._2; variantOk = readings._3
+        } catch { case _: java.io.IOException => clear() }
       }
     }
   }
@@ -84,39 +97,49 @@ private[routing] final class RawJson(probes: IndexedSeq[Array[String]],
     rootIsObject = false
   }
 
-  private def walkRoot(p: JsonParser): Unit = try {
+  /** Read the root value; with `keysOnly`, only a root object's key set,
+    * skipping each value undecoded as the key listing does.
+    */
+  private def walkRoot(p: JsonParser, keysOnly: Boolean): Unit = try {
     val t = p.nextToken()
     if (t == null) throw new java.io.EOFException("empty JSON text")
     rootIsObject = t == JsonToken.START_OBJECT
-    var i = 0
-    while (i < probeTypes.length) {
-      if (probes(i).isEmpty) probeTypes(i) = typeName(p)
-      i += 1
-    }
-    if (!rootIsObject) walk(p, Nil, 0, null)
-    else {
-      val cands = probes.indices.filter(probes(_).nonEmpty).toList
-      var f = p.nextToken()
-      while (f != JsonToken.END_OBJECT) {
-        val key = p.currentName()
-        val v = p.nextToken()
-        val text = v match {
-          case JsonToken.VALUE_STRING => p.getText
-          case JsonToken.VALUE_NULL => null
-          case _ if wantText(key) =>
-            buf.reset()
-            val g = mapFactory.createGenerator(buf)
-            walk(p, keyed(cands, key, 0), 1, g)
-            g.close()
-            buf.toString("UTF-8")
-          case _ =>
+    if (keysOnly) {
+      if (rootIsObject) while (p.nextValue() != JsonToken.END_OBJECT) {
+        values.put(p.currentName(), NotCaptured)
+        p.skipChildren()
+      }
+    } else {
+      var i = 0
+      while (i < probeTypes.length) {
+        if (probes(i).isEmpty) probeTypes(i) = typeName(p)
+        i += 1
+      }
+      if (!rootIsObject) walk(p, Nil, 0, null)
+      else {
+        val cands = probes.indices.filter(probes(_).nonEmpty).toList
+        var f = p.nextToken()
+        while (f != JsonToken.END_OBJECT) {
+          val key = p.currentName()
+          val v = p.nextToken()
+          val text = v match {
+            case JsonToken.VALUE_STRING => p.getText
+            case JsonToken.VALUE_NULL => null
+            case _ if wantText(key) =>
+              buf.reset()
+              val g = mapFactory.createGenerator(buf)
+              walk(p, keyed(cands, key, 0), 1, g)
+              g.close()
+              buf.toString("UTF-8")
+            case _ =>
+              walk(p, keyed(cands, key, 0), 1, null)
+              NotCaptured
+          }
+          if (v == JsonToken.VALUE_STRING || v == JsonToken.VALUE_NULL)
             walk(p, keyed(cands, key, 0), 1, null)
-            NotCaptured
+          values.put(key, text)
+          f = p.nextToken()
         }
-        if (v == JsonToken.VALUE_STRING || v == JsonToken.VALUE_NULL)
-          walk(p, keyed(cands, key, 0), 1, null)
-        values.put(key, text)
-        f = p.nextToken()
       }
     }
   } finally p.close()
@@ -201,11 +224,15 @@ private[routing] object RawJson {
   /** `try_parse_json`'s parser settings. */
   private val variantFactory: JsonFactory = new JsonFactory()
 
-  /** The union of the three. */
+  /** The union of the three, under the JSON decode's read limits (number
+    * and string length, nesting depth; the same as Jackson's defaults,
+    * which the other two use).
+    */
   private val lenientFactory: JsonFactory = new JsonFactoryBuilder()
     .enable(JsonReadFeature.ALLOW_UNESCAPED_CONTROL_CHARS)
     .enable(JsonReadFeature.ALLOW_SINGLE_QUOTES)
     .enable(JsonReadFeature.ALLOW_NON_NUMERIC_NUMBERS)
+    .streamReadConstraints(mapFactory.streamReadConstraints())
     .build()
 
   private def byteParser(raw: UTF8String): JsonParser = raw.getBaseObject match {
@@ -240,9 +267,11 @@ private[routing] object RawJson {
   }
 
   /** Whether `p` reads one whole root value (an object when `objectRoot`),
-    * decoding every string, as the reading it stands for does.
+    * decoding every string when `decode`, as the reading it stands for does
+    * (the key listing skips values undecoded, so it never meets the string
+    * length limit).
     */
-  private def parses(p: JsonParser, objectRoot: Boolean): Boolean =
+  private def parses(p: JsonParser, objectRoot: Boolean, decode: Boolean): Boolean =
     try {
       val t = p.nextToken()
       if (t == null || (objectRoot && t != JsonToken.START_OBJECT)) false
@@ -253,7 +282,7 @@ private[routing] object RawJson {
           cur match {
             case JsonToken.START_OBJECT | JsonToken.START_ARRAY => depth += 1
             case JsonToken.END_OBJECT | JsonToken.END_ARRAY => depth -= 1
-            case JsonToken.VALUE_STRING => p.getText
+            case JsonToken.VALUE_STRING => if (decode) p.getText
             case _ =>
           }
           if (depth > 0) cur = p.nextToken()

@@ -217,4 +217,38 @@ class NativeValidatorDiffSpec extends SparkSpec {
     assert(verdicts === Set(true, false), "the generated cases must both pass and fail")
     docs.unpersist()
   }
+
+  test("raw text past Jackson's read limits gets the reference verdict, failing no task") {
+    val texts = Seq(
+      s"""{"k":1,"v":${"9" * 1001}}""", // number past maxNumberLength
+      s"""{"k":1,"v":${"9" * 1000}}""", // number at the limit
+      s"""{"k":1,"v":"${"a" * 20000001}"}""", // string past maxStringLength
+      s"""{"k":1,"${"x" * 50001}":2}""", // name past maxNameLength
+      s"""{"k":${"[" * 1001}${"]" * 1001}}""", // deeper than maxNestingDepth
+      // a lone 0xFF byte: malformed UTF-8, which only the reader-based
+      // parsers read (as U+FFFD)
+      """{"k":"#","x-a":"12","v":1}""",
+      s"""{"k":"#","v":${"9" * 1001}}""")
+    val rows = texts.zipWithIndex.map { case (t, i) =>
+      Row(i.toLong, t.getBytes("UTF-8").map(b => if (b == '#') 0xFF.toByte else b))
+    }
+    val raws = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2),
+        StructType(Seq(StructField("id", LongType), StructField("bin", BinaryType))))
+      .select(col("id"), struct(col("bin").cast("string").as("raw")).as("doc"))
+    val schemas = Seq(
+      PropsCount("raw", Some(1), Some(1)), NoAdditionalProps("raw", Seq("k")),
+      PatternProps("raw", ".", "^\\d+$"), TypeUnion("raw", "$.v", Seq("string")),
+      TypeUnion("raw", "$", Seq("array")))
+    val cols = schemas.zipWithIndex.flatMap { case (c, i) =>
+      val s = RegisteredSchema(s"t/$i", Seq(c))
+      Seq(s.valid(col("doc")).as(s"n$i"), s.referenceValid(col("doc")).as(s"r$i"))
+    }
+    val got = raws.select(col("id") +: cols: _*).orderBy("id").collect()
+    for (r <- got; i <- schemas.indices)
+      assert(r.get(1 + 2 * i) == r.get(2 + 2 * i),
+        s"native vs reference differ for ${schemas(i)} on text ${r.getLong(0)}")
+    // the key listing reads the over-long string's object (it skips values
+    // undecoded), so its two keys break minProperties/maxProperties 1..1
+    assert(!got(2).getBoolean(1))
+  }
 }

@@ -121,7 +121,7 @@ class SchemaValidatorSpec extends SparkSpec {
 
   test("unknown format name fails fast at schema construction") {
     intercept[IllegalArgumentException] {
-      Format("kind", "no-such-format").predicate(col("doc"))
+      RegisteredSchema("t", Seq(Format("kind", "no-such-format"))).valid(col("doc"))
     }
   }
 
@@ -208,7 +208,7 @@ class SchemaValidatorSpec extends SparkSpec {
       ("ref'd range fails", """{"qty":0}""", false),
       ("ref'd pattern fails", """{"qty":2,"tags":["AB"]}""", false)))
     intercept[IllegalArgumentException] {
-      Ref("defs#missing", () => defs).predicate(col("doc"))
+      RegisteredSchema("t", Seq(Ref("defs#missing", () => defs))).valid(col("doc"))
     }
   }
 
@@ -272,7 +272,7 @@ class SchemaValidatorSpec extends SparkSpec {
   test("minProperties/maxProperties bound the raw object's key count") {
     val schema = StructType(Seq(StructField("raw", StringType)))
     val c = PropsCount("raw", Some(1), Some(2))
-    rawVerdicts(raw => c.predicate(struct(raw.as("raw"))), Seq(
+    rawVerdicts(raw => RegisteredSchema("t", Seq(c)).valid(struct(raw.as("raw"))), Seq(
       ("one key", """{"a":1}""", true),
       ("two keys", """{"a":1,"b":2}""", true),
       ("empty under min", """{}""", false),
@@ -282,7 +282,7 @@ class SchemaValidatorSpec extends SparkSpec {
 
   test("patternProperties: matching keys' values must match the value regex") {
     val c = PatternProps("raw", "^x-", "^\\d+$")
-    rawVerdicts(raw => c.predicate(struct(raw.as("raw"))), Seq(
+    rawVerdicts(raw => RegisteredSchema("t", Seq(c)).valid(struct(raw.as("raw"))), Seq(
       ("numeric ext values", """{"k":1,"x-a":12,"x-b":"34"}""", true),
       ("non-numeric ext value", """{"k":1,"x-a":"oops"}""", false),
       ("no matching keys", """{"k":"whatever"}""", true),
@@ -298,7 +298,7 @@ class SchemaValidatorSpec extends SparkSpec {
 
   test("union type arrays validate the raw JSON value's runtime type") {
     val c = TypeUnion("raw", "$.v", Seq("string", "integer"))
-    rawVerdicts(raw => c.predicate(struct(raw.as("raw"))), Seq(
+    rawVerdicts(raw => RegisteredSchema("t", Seq(c)).valid(struct(raw.as("raw"))), Seq(
       ("string ok", """{"v":"s"}""", true),
       ("integer ok", """{"v":42}""", true),
       ("float rejected", """{"v":4.5}""", false),
@@ -307,12 +307,12 @@ class SchemaValidatorSpec extends SparkSpec {
       ("absent valid", """{"k":1}""", true),
       ("corrupt json don't-care", """nope""", true)))
     val num = TypeUnion("raw", "$.v", Seq("number"))
-    rawVerdicts(raw => num.predicate(struct(raw.as("raw"))), Seq(
+    rawVerdicts(raw => RegisteredSchema("t", Seq(num)).valid(struct(raw.as("raw"))), Seq(
       ("float is number", """{"v":4.5}""", true),
       ("int is number", """{"v":4}""", true),
       ("string not number", """{"v":"4"}""", false)))
     val obj = TypeUnion("raw", "$.v", Seq("object", "null"))
-    rawVerdicts(raw => obj.predicate(struct(raw.as("raw"))), Seq(
+    rawVerdicts(raw => RegisteredSchema("t", Seq(obj)).valid(struct(raw.as("raw"))), Seq(
       ("object ok", """{"v":{"a":1}}""", true),
       ("explicit null ok", """{"v":null}""", true),
       ("scalar rejected", """{"v":3}""", false)))

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** The reference model of the routing validators: each [[routing.Constraint]]
   * as the built-in Column predicate it compiled to before the native
   * evaluator ([[routing.NativeValidator]]) replaced it. Specs call
-  * `c.predicate(root)` to get the reference verdict; the differential spec
+  * `c.referencePredicate(root)` to get the reference verdict; the differential spec
   * compares it with `RegisteredSchema.valid` over generated documents.
   *
   * Two readings differ on purpose: for a raw object with a repeated key the
@@ -18,13 +18,13 @@ package object routing {
 
   implicit class ReferencePredicate(private val c: Constraint) extends AnyVal {
     /** Predicate over the root struct column; true = valid. */
-    def predicate(root: Column): Column = ReferenceModel.predicate(c, root)
+    def referencePredicate(root: Column): Column = ReferenceModel.predicate(c, root)
   }
 
   implicit class ReferenceSchema(private val s: RegisteredSchema) extends AnyVal {
     /** Conjunction of the reference predicates; vacuously true when none. */
     def referenceValid(root: Column): Column =
-      s.constraints.foldLeft(lit(true))((acc, c) => acc && c.predicate(root))
+      s.constraints.foldLeft(lit(true))((acc, c) => acc && c.referencePredicate(root))
   }
 }
 

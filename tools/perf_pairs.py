@@ -18,7 +18,8 @@ quartiles, how many pairs the change won (ties count for neither side;
 
   gain      the change won at least 9 of every 10 pairs AND the medians
             differ, in the better direction, by more than the parent's
-            interquartile range;
+            interquartile range AND the change failed no more operations
+            in total than the parent;
   worse     the change's median is worse than the parent's by more than
             the metric's end-to-end bound (end-to-end metrics only);
   no claim  anything else.
@@ -66,13 +67,15 @@ def metric_specs(checkout):
     return specs
 
 
-def judge(parent, change, better, bound):
-    """(wins, verdict) of one metric over paired runs."""
+def judge(parent, change, better, bound, parent_failed=0, change_failed=0):
+    """(wins, verdict) of one metric over paired runs; a gain is void when
+    the change failed more operations in total than the parent."""
     sign = 1 if better == "higher" else -1
     wins = sum(1 for p, c in zip(parent, change) if sign * (c - p) > 0)
     pq1, pmed, pq3 = quartiles(parent)
     _, cmed, _ = quartiles(change)
-    if wins * 10 >= 9 * len(parent) and sign * (cmed - pmed) > (pq3 - pq1):
+    if (wins * 10 >= 9 * len(parent) and sign * (cmed - pmed) > (pq3 - pq1)
+            and change_failed <= parent_failed):
         return wins, "gain"
     if bound is not None and pmed and sign * (cmed - pmed) / abs(pmed) < -bound:
         return wins, "worse"
@@ -99,6 +102,7 @@ def main():
             err = f" error: {res['error']}" if "error" in res else ""
             print(f"pair {i + 1} seed {seed} {side}: failed {res['failed']} "
                   f"of {res['attempted']}{err}", flush=True)
+    failed = {side: sum(r["failed"] for r in rs) for side, rs in runs.items()}
     specs = metric_specs(sides["change"])
     names = sorted(set().union(*(r["metrics"].keys() for s in runs.values() for r in s)))
     print(f"\n== {a.workload}, {len(a.seeds)} pairs, seeds {a.seeds}, "
@@ -114,15 +118,15 @@ def main():
         parent = [p for p, _ in both]
         change = [c for _, c in both]
         better, bound = specs.get(name, ("lower", None))
-        wins, verdict = judge(parent, change, better, bound)
+        wins, verdict = judge(parent, change, better, bound,
+                              failed["parent"], failed["change"])
         pq1, pmed, pq3 = quartiles(parent)
         cq1, cmed, cq3 = quartiles(change)
         print(f"{name:42s} {pmed:12.6g} [{pq1:9.5g}, {pq3:9.5g}] "
               f"{cmed:12.6g} [{cq1:9.5g}, {cq3:9.5g}] {wins:3d}/{len(both):<2d}  {verdict}")
     for side, rs in runs.items():
-        failed = sum(r["failed"] for r in rs)
         attempted = sum(r["attempted"] for r in rs)
-        print(f"{side}: failed {failed} of {attempted} attempted "
+        print(f"{side}: failed {failed[side]} of {attempted} attempted "
               f"(per run: {[r['failed'] for r in rs]})")
     if a.out:
         with open(a.out, "w") as f:
